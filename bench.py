@@ -213,16 +213,9 @@ def run_noop(df) -> None:
 
 
 def cc_cache_reset(textops) -> None:
-    """Drop the shared cluster-table cache AND free its localCheckpoint
-    blocks.  Safe here (unlike inside `_clusters_materialized`'s eviction)
-    because the bench holds no outside handles to the cached frames — so
-    unpersisting now, instead of waiting for GC + ContextCleaner, keeps
-    executor storage flat across the cold best-of-3 repeats."""
-    for df in textops._CC_CACHE.values():
-        try:  # best-effort: cache reset must never fail the bench
-            df.rdd.unpersist(False)
-        except Exception:  # noqa: BLE001
-            pass
+    """Drop the shared cluster-table cache so the next consumer recomputes
+    it (a cold repeat).  The dropped frames' localCheckpoint blocks are
+    freed later, once GC collects them and ContextCleaner runs."""
     textops._CC_CACHE.clear()
 
 

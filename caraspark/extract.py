@@ -24,199 +24,37 @@ from __future__ import annotations
 
 import functools
 import os
+from operator import attrgetter
 from typing import Iterator
 
 import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from caraspark.schemas import EXTRACTED
 
 OUTPUT_BATCH_BYTES = 64 * 1024 * 1024
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("url", pa.string(), False),
-        pa.field("warc_ts", pa.timestamp("us"), True),
-        pa.field("text", pa.large_binary(), True),
-        pa.field(
-            "spans",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("start", pa.int64()),
-                        ("end", pa.int64()),
-                        ("label", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field("outlinks", pa.list_(pa.string()), True),
-        pa.field("title", pa.string(), True),
-        pa.field("canonical", pa.string(), True),
-        pa.field("description", pa.string(), True),
-        pa.field(
-            "headings",
-            pa.list_(
-                pa.struct([("block", pa.int32()), ("level", pa.int32())])
-            ),
-            True,
-        ),
-        pa.field("og_title", pa.string(), True),
-        pa.field("og_description", pa.string(), True),
-        pa.field("og_image", pa.string(), True),
-        pa.field("anchors", pa.list_(pa.string()), True),
-        pa.field(
-            "tables",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("table", pa.int32()),
-                        ("row", pa.int32()),
-                        ("col", pa.int32()),
-                        ("header", pa.bool_()),
-                        ("cell", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field(
-            "lists",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("list", pa.int32()),
-                        ("item", pa.int32()),
-                        ("depth", pa.int32()),
-                        ("ordered", pa.bool_()),
-                        ("item_text", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field(
-            "images",
-            pa.list_(
-                pa.struct([("src", pa.string()), ("alt", pa.string())])
-            ),
-            True,
-        ),
-        pa.field("jsonld", pa.list_(pa.string()), True),
-        pa.field("robots_meta", pa.string(), True),
-        pa.field("refresh_meta", pa.string(), True),
-        pa.field("base_href", pa.string(), True),
-        pa.field("next_href", pa.string(), True),
-        pa.field("prev_href", pa.string(), True),
-        pa.field(
-            "forms",
-            pa.list_(
-                pa.struct([("method", pa.string()), ("action", pa.string())])
-            ),
-            True,
-        ),
-        pa.field(
-            "alternates",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("hreflang", pa.string()),
-                        ("type", pa.string()),
-                        ("href", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field(
-            "microdata",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("item", pa.int32()),
-                        ("itemtype", pa.string()),
-                        ("prop", pa.string()),
-                        ("value", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field(
-            "rdfa",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("item", pa.int32()),
-                        ("vocab", pa.string()),
-                        ("typeof", pa.string()),
-                        ("prop", pa.string()),
-                        ("value", pa.string()),
-                    ]
-                )
-            ),
-            True,
-        ),
-        pa.field(
-            "verdict",
-            pa.struct([("valid", pa.bool_()), ("strict", pa.bool_())]),
-        ),
-        pa.field("kind", pa.string()),
-        pa.field(
-            "errors",
-            pa.list_(
-                pa.struct(
-                    [
-                        ("code", pa.string()),
-                        ("pos", pa.int64()),
-                        ("obj_num", pa.int32()),
-                        ("obj_gen", pa.int32()),
-                        ("path", pa.string()),
-                        ("msg", pa.string()),
-                    ]
-                )
-            ),
-        ),
-        pa.field(
-            "metrics",
-            pa.struct(
-                [
-                    ("n_objects", pa.int32()),
-                    ("n_updates", pa.int32()),
-                    ("n_streams", pa.int32()),
-                    ("n_holes", pa.int32()),
-                    ("bytes_in", pa.int64()),
-                    ("bytes_decoded", pa.int64()),
-                    ("parse_ms", pa.float64()),
-                ]
-            ),
-        ),
-        pa.field(
-            "flags",
-            pa.struct(
-                [
-                    ("encrypted", pa.bool_()),
-                    ("hybrid", pa.bool_()),
-                    ("linearized", pa.bool_()),
-                ]
-            ),
-        ),
-        pa.field("version", pa.string(), True),
-        pa.field(
-            "lineage",
-            pa.struct(
-                [
-                    ("partition_id", pa.int32()),
-                    ("salt", pa.int32()),
-                    ("attempt", pa.int32()),
-                    ("snapshot", pa.string()),
-                ]
-            ),
-        ),
-    ]
+_ARROW_SCHEMA = to_arrow_schema(EXTRACTED, timestamp_utc=False)
+# text stays large_binary (64-bit offsets): decoded text is not bounded by
+# the input blob's size, so one batch may pass binary's 2 GiB limit
+_ARROW_SCHEMA = _ARROW_SCHEMA.set(
+    _ARROW_SCHEMA.get_field_index("text"),
+    _ARROW_SCHEMA.field("text").with_type(pa.large_binary()),
 )
+# Output columns the UDF fills itself; every other one is read off the
+# ExtractResult by ``_result_getter``.
+_UDF_COLUMNS = ("url", "warc_ts", "errors", "lineage")
+
+
+def _result_getter(f: pa.Field):
+    """Reads output column ``f`` off an ExtractResult: the same-named
+    attribute, or for a struct column the tuple of its fields'
+    same-named attributes."""
+    if pa.types.is_struct(f.type):
+        return attrgetter(*(c.name for c in f.type))
+    return attrgetter(f.name)
 
 
 def _extract_batches(
@@ -226,9 +64,10 @@ def _extract_batches(
     """The Arrow batch UDF: C2–C27 per blob, byte-budgeted output.
 
     Hot-loop discipline: columns in (one C-level ``to_pylist`` per column),
-    columns out (one ``pa.array`` per field) — never per-row Arrow scalars
-    or row dicts; with ~0.4 ms of real work per document, per-row
-    conversion overhead would otherwise dominate the profile.
+    columns out (one ``pa.array`` per field, structs as tuples) — never
+    per-row Arrow scalars or row dicts; with ~0.4 ms of real work per
+    document, per-row conversion overhead would otherwise dominate the
+    profile.
     """
     # import inside the worker so the closure pickles only the module name
     from caraspark.pdfengine import process_document as _pd
@@ -242,6 +81,11 @@ def _extract_batches(
     snapshot = os.environ.get("CARASPARK_SNAPSHOT")
 
     cols: dict[str, list] = {f.name: [] for f in _ARROW_SCHEMA}
+    from_result = [
+        (cols[f.name].append, _result_getter(f))
+        for f in _ARROW_SCHEMA
+        if f.name not in _UDF_COLUMNS
+    ]
     pending = 0
 
     def flush():
@@ -267,61 +111,13 @@ def _extract_batches(
         for i in range(batch.num_rows):
             blob = blobs[i]
             r = process_document(blob if blob is not None else b"")
+            for append, get in from_result:
+                append(get(r))
             cols["url"].append(urls[i])
             cols["warc_ts"].append(tss[i])
-            cols["text"].append(r.text)
-            cols["spans"].append(r.spans_as_rows())
-            cols["outlinks"].append(r.outlinks)
-            cols["title"].append(r.title)
-            cols["canonical"].append(r.canonical)
-            cols["description"].append(r.description)
-            cols["headings"].append(r.headings_as_rows())
-            cols["og_title"].append(r.og_title)
-            cols["og_description"].append(r.og_description)
-            cols["og_image"].append(r.og_image)
-            cols["anchors"].append(r.anchors)
-            cols["tables"].append(r.tables_as_rows())
-            cols["lists"].append(r.lists_as_rows())
-            cols["images"].append(r.images_as_rows())
-            cols["jsonld"].append(r.jsonld)
-            cols["robots_meta"].append(r.robots_meta)
-            cols["refresh_meta"].append(r.refresh_meta)
-            cols["base_href"].append(r.base_href)
-            cols["next_href"].append(r.next_href)
-            cols["prev_href"].append(r.prev_href)
-            cols["forms"].append(r.forms_as_rows())
-            cols["alternates"].append(r.alternates_as_rows())
-            cols["microdata"].append(r.microdata_as_rows())
-            cols["rdfa"].append(r.rdfa_as_rows())
-            cols["verdict"].append({"valid": r.valid, "strict": r.strict})
-            cols["kind"].append(r.kind)
             cols["errors"].append(r.errors_as_rows())
-            cols["metrics"].append(
-                {
-                    "n_objects": r.n_objects,
-                    "n_updates": r.n_updates,
-                    "n_streams": r.n_streams,
-                    "n_holes": r.n_holes,
-                    "bytes_in": r.bytes_in,
-                    "bytes_decoded": r.bytes_decoded,
-                    "parse_ms": r.parse_ms,
-                }
-            )
-            cols["flags"].append(
-                {
-                    "encrypted": r.encrypted,
-                    "hybrid": r.hybrid,
-                    "linearized": r.linearized,
-                }
-            )
-            cols["version"].append(r.version)
             cols["lineage"].append(
-                {
-                    "partition_id": pid,
-                    "salt": salts[i] if salts is not None else -1,
-                    "attempt": attempt,
-                    "snapshot": snapshot,
-                }
+                (pid, salts[i] if salts is not None else -1, attempt, snapshot)
             )
             pending += len(r.text or b"") + r.bytes_in // 4
             if pending >= OUTPUT_BATCH_BYTES:
@@ -335,7 +131,6 @@ def extract(
     n_salts: int = 64,
     salt: bool | str = False,
     giant_threshold: int = 4 << 20,
-    want_text: bool = True,
     want=None,
     nbytes_col: str | None = None,
     giant_fanout: int = 4,
@@ -343,11 +138,11 @@ def extract(
     """documents_raw → extracted (EXTRACTED schema).
 
     ``want`` pushes the OUTPUT projection into the UDF: pass an iterable of
-    surface names (``caraspark.pdfengine.api.SURFACES``, plus the
+    surface names (``caraspark.schemas.SURFACE_COLUMNS``, plus the
     "headmeta" alias) and only those surfaces are assembled per document —
     the rest are NULL columns that never cross the Arrow boundary as data.
-    ``want=None`` keeps the legacy boolean: ``want_text=True`` computes all
-    ten surfaces, ``False`` the stats-only mode. Spark prunes INPUT
+    ``want=None`` computes all 21 surfaces, ``want=()`` none (the
+    stats-only mode, Caradoc's validate). Spark prunes INPUT
     columns at the scan for free; this is the matching engine-side prune
     for the computed surfaces, which Catalyst cannot see inside the UDF —
     a metadata-only consumer at 100 TB should not pay for text assembly,
@@ -395,9 +190,7 @@ def extract(
     """
     from caraspark.pdfengine.api import normalize_want
 
-    udf = functools.partial(
-        _extract_batches, want=normalize_want(want, want_text)
-    )
+    udf = functools.partial(_extract_batches, want=normalize_want(want))
     spark = df.sparkSession
     if num_partitions is None:
         num_partitions = int(

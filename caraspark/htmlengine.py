@@ -50,7 +50,7 @@ and compared byte-for-byte per url):
   property of text blocks, while outlinks are structural — for the same
   reason a page whose text comes out empty STILL reports its outlinks
   (a contentless hub page is exactly a crawl-frontier source). PDFs
-  yield []; stats mode (want_text=False) yields None.
+  yield []; stats mode (want=()) yields None.
 * TITLE (v5, page metadata): the character data of the FIRST <title>
   element outside boilerplate attr-regions, normalized with
   " ".join(split); empty after normalization (or no <title>) -> None.
@@ -62,7 +62,7 @@ and compared byte-for-byte per url):
   parallel pass, not a detour), keeping the two witnesses' independent
   state machines equivalent.
   PDFs take the trailer /Info /Title string instead (decode_pdf_string,
-  same normalization); stats mode (want_text=False) yields None.
+  same normalization); stats mode (want=()) yields None.
 * HEADMETA (v6, dedup/index metadata): canonical = the trimmed href of
   the FIRST <link> whose rel list (lowercased, whitespace-split)
   contains "canonical" and whose href is non-empty; description = the
@@ -118,7 +118,7 @@ and compared byte-for-byte per url):
   cell emits exactly one tuple in cell-CLOSE order, empty text included
   (grid position is the payload); link-density discard does NOT apply
   (structural surface, same stance as OUTLINKS).  PDFs yield []; stats
-  mode (want_text=False) yields None.
+  mode (want=()) yields None.
 * LISTS (v11, document-structure surface): one (list, item, depth,
   ordered, item_text) tuple per <li> OPENED outside drop/boilerplate
   regions while a list element is open.  ``list`` is the 0-based count
@@ -138,7 +138,7 @@ and compared byte-for-byte per url):
   <li> outside any open list emits nothing.  EVERY opened item emits
   exactly one tuple in item-CLOSE order, empty text included;
   link-density discard does NOT apply (structural surface, same stance
-  as OUTLINKS/TABLES).  PDFs yield []; stats mode (want_text=False)
+  as OUTLINKS/TABLES).  PDFs yield []; stats mode (want=())
   yields None.
 * IMAGES (v12, multimodal-mining surface): one (src, alt) pair per
   <img> tag OPENED (open or self-closing) outside drop/boilerplate
@@ -153,7 +153,7 @@ and compared byte-for-byte per url):
   as OUTLINKS/TABLES/LISTS).  A boiler-classed <img> opens an
   attr-drop region like any other tag (checked BEFORE collection, the
   shared v2 ordering) and therefore emits nothing.  PDFs yield [];
-  stats mode (want_text=False) yields None.
+  stats mode (want=()) yields None.
 * ROBOTSMETA (v14, crawl-compliance signal): the content of the FIRST
   ``<meta name="robots">`` (name compared trimmed + lowercased) with
   non-empty content, lowercased and whitespace-normalized (directive
@@ -175,7 +175,7 @@ and compared byte-for-byte per url):
   (last attribute occurrence wins).  No dedup, no first-wins, document
   order.  Collection placement is identical to HEADMETA: despite
   tag-drop regions, opaque inside boilerplate attr-drop regions.  PDFs
-  yield []; stats mode (want_text=False) yields None.
+  yield []; stats mode (want=()) yields None.
 * PAGINATION (v19, crawl-sequencing signal): the trimmed,
   CASE-PRESERVED href of the FIRST ``<link>`` element (open or
   self-closing) whose ``rel`` token list (lowercased,
@@ -236,7 +236,7 @@ and compared byte-for-byte per url):
   tuple still emits; per token, the v12 stance) are final at open.
   EMISSION ORDER: element-OPEN document order, token order within an
   element (captures fill in place at close; EOF closes innermost
-  first).  PDFs yield []; stats mode (want_text=False) yields None.
+  first).  PDFs yield []; stats mode (want=()) yields None.
 * RDFA (v21, structured-data surface): one (item, vocab, typeof, prop,
   value) tuple per ``property`` TOKEN of each element bearing a
   ``property`` attribute — the RDFa-Lite counterpart of v20 MICRODATA
@@ -281,7 +281,7 @@ and compared byte-for-byte per url):
   (a valueless void property emits "", a void typeof consumes its
   index without opening a subject).
   EMISSION ORDER: element-OPEN document order, token order within an
-  element.  PDFs yield []; stats mode (want_text=False) yields None.
+  element.  PDFs yield []; stats mode (want=()) yields None.
 * JSONLD (v13, structured-data surface): one string per
   ``<script type="application/ld+json">`` element — the element's raw
   character data, stripped of leading/trailing whitespace (INTERNAL
@@ -295,7 +295,7 @@ and compared byte-for-byte per url):
   payload is "" — html.parser never flushes unterminated CDATA content,
   in both witnesses by construction.  Self-closing matching scripts
   emit "".  Non-matching scripts collect nothing.
-  PDFs yield []; stats mode (want_text=False) yields None.
+  PDFs yield []; stats mode (want=()) yields None.
 * SPANS (v3, north_rule "extracted text/spans per document"): alongside
   the text payload, one span per kept block: (start, end, label) with
   start/end BYTE (octet) offsets into the UTF-8 payload, end exclusive,
@@ -1163,7 +1163,7 @@ class _Prober(_Extractor):
 def html_has_content(html: bytes) -> bool:
     """Exactly ``bool(extract_html_text(html))`` but stops parsing at the
     FIRST block the SPEC would emit — the cheap emptiness probe the
-    want_text=False stats mode uses so it never pays full extraction just
+    stats mode (want=()) uses so it never pays full extraction just
     to keep its error taxonomy aligned with the full run."""
     src = decode_html(html)
     p = _Prober()

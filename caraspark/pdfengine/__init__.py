@@ -1,4 +1,5 @@
-"""Pure-Python byte-level PDF engine (no Spark imports).
+"""Pure-Python byte-level PDF engine (no Spark session; it reads only the
+output column declaration from ``caraspark.schemas``).
 
 Implements the computations of caradoc-org/caradoc — strict/relaxed COS
 lexing and parsing, xref resolution, stream filters, object-stream explode,

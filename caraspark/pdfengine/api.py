@@ -10,7 +10,8 @@ never an exception. Verdict semantics:
            full type check stance [LangSec16 §III–IV]). Extraction-phase
            ``extract.*`` warnings are excluded: caradoc validates in one
            command and extracts in another, and excluding them keeps the
-           verdict identical between full and want_text=False runs.
+           verdict identical between full and stats-only (``want=()``)
+           runs.
 
 Errors are sorted by (pos, code, path, msg) — deterministic output under any
 partitioning (SURVEY.md §5.2-5 distribution invariance).
@@ -19,13 +20,16 @@ partitioning (SURVEY.md §5.2-5 distribution invariance).
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, make_dataclass
+
+from pyspark.sql.types import ArrayType
 
 from caraspark.htmlengine import extract_html
 from caraspark.pdfengine.document import Document, load_document
 from caraspark.pdfengine.model import PdfError, Stream, canonical_json
 from caraspark.pdfengine.textextract import extract_text_spans
 from caraspark.pdfengine.typecheck import check_types
+from caraspark.schemas import EXTRACTED, SURFACE_COLUMNS
 
 FATAL_CODES = frozenset(
     {
@@ -64,78 +68,24 @@ FATAL_CODES = frozenset(
 )
 
 
+# The extraction surfaces a consumer can request; "headmeta" is accepted
+# as an alias for {title, canonical, description}.
+SURFACES = frozenset(SURFACE_COLUMNS)
+# (surface, ExtractResult field, field is an array column), in
+# SURFACE_COLUMNS order.
+_SURFACE_SLOTS = tuple(
+    (s, c, isinstance(EXTRACTED[c].dataType, ArrayType))
+    for s, cols in SURFACE_COLUMNS.items()
+    for c in cols
+)
+_SURFACE_FIELDS = tuple(c for _, c, _ in _SURFACE_SLOTS)
+
+
 @dataclass(slots=True)
-class ExtractResult:
+class _DocumentResult:
+    """The ExtractResult fields computed for every document."""
+
     kind: str  # 'pdf' | 'html'
-    text: bytes = b""
-    # v3 SPANS: (start, end, label) octet offsets into ``text`` — one per
-    # PDF page ("page:<i>", page-tree order) or kept HTML block
-    # ("block:<i>"); [] when text is b""; None in want_text=False mode.
-    spans: list | None = None
-    # v4 OUTLINKS: href targets of <a> tags outside drop/boiler regions,
-    # document order, first-occurrence deduped; [] for PDFs; None in
-    # want_text=False mode (link harvest rides the text parse).
-    outlinks: list | None = None
-    # v5 TITLE: first <title> text (HTML) / trailer /Info /Title string
-    # (PDF), whitespace-normalized; None if absent/empty or in stats mode.
-    title: str | None = None
-    # v6 HEADMETA: first canonical <link> href (HTML; PDFs have none) and
-    # first <meta name=description> content / PDF /Info /Subject.
-    canonical: str | None = None
-    description: str | None = None
-    # v7 HEADINGS: (block, level) per kept h1–h6 block (HTML; block is the
-    # spans index) / (preorder pos, level+1) over the outline tree (PDF).
-    headings: list | None = None
-    # v8 OGMETA: first non-empty <meta property="og:{title,description,
-    # image}"> content (HTML); PDFs have none. None when not requested.
-    og_title: str | None = None
-    og_description: str | None = None
-    og_image: str | None = None
-    # v9 ANCHORS: visible text of the first anchor element per outlink,
-    # parallel to ``outlinks`` (HTML); [] for PDFs. None when not
-    # requested / stats mode.
-    anchors: list | None = None
-    # v10 TABLES: (table, row, col, header, cell) per opened table cell
-    # (HTML); [] for PDFs. None when not requested / stats mode.
-    tables: list | None = None
-    # v11 LISTS: (list, item, depth, ordered, item_text) per opened <li>
-    # (HTML); [] for PDFs. None when not requested / stats mode.
-    lists: list | None = None
-    # v12 IMAGES: (src, alt) per <img> element in document order (HTML);
-    # [] for PDFs. None when not requested / stats mode.
-    images: list | None = None
-    # v13 JSONLD: raw stripped ld+json script payloads in document order
-    # (HTML); [] for PDFs. None when not requested / stats mode.
-    jsonld: list | None = None
-    # v14 ROBOTSMETA: first <meta name=robots> content, lowercased +
-    # normalized (HTML); None for PDFs / absent / stats mode.
-    robots_meta: str | None = None
-    # v15 ALTERNATES: (hreflang, type, href) per rel=alternate link
-    # element in document order (HTML); [] for PDFs. None when not
-    # requested / stats mode.
-    alternates: list | None = None
-    # v16 REFRESH: first <meta http-equiv=refresh> content, lowercased +
-    # normalized — the soft-redirect signal (HTML); None for PDFs /
-    # absent / stats mode.
-    refresh_meta: str | None = None
-    # v17 BASEHREF: first non-empty <base href>, trimmed, case-preserved
-    # — the page's URL-resolution base (HTML); None for PDFs / absent /
-    # stats mode.
-    base_href: str | None = None
-    # v18 FORMS: (method, action) per <form> element outside drop/boiler
-    # contexts (HTML); [] for PDFs. None when not requested / stats mode.
-    forms: list | None = None
-    # v19 PAGINATION: first non-empty rel=next / rel=prev(|previous)
-    # link hrefs, trimmed, case-preserved — the paginated-series walk
-    # order (HTML); None for PDFs / absent / stats mode.
-    next_href: str | None = None
-    prev_href: str | None = None
-    # v20 MICRODATA: (item, itemtype, prop, value) per itemprop token
-    # (HTML); [] for PDFs. None when not requested / stats mode.
-    microdata: list | None = None
-    # v21 RDFA: (item, vocab, typeof, prop, value) per property token
-    # (HTML); [] for PDFs. None when not requested / stats mode.
-    rdfa: list | None = None
     valid: bool = True
     strict: bool = True
     errors: list = field(default_factory=list)  # PdfError, sorted
@@ -166,67 +116,29 @@ class ExtractResult:
             for e in self.errors
         ]
 
-    def headings_as_rows(self) -> list[dict] | None:
-        if self.headings is None:
-            return None
-        return [{"block": b, "level": lv} for b, lv in self.headings]
 
-    def tables_as_rows(self) -> list[dict] | None:
-        if self.tables is None:
-            return None
-        return [
-            {"table": t, "row": r, "col": c, "header": h, "cell": s}
-            for t, r, c, h, s in self.tables
-        ]
+# Plus one field per surface column (schemas.EXTRACTED documents each),
+# holding the value the Arrow column takes: a list of tuples for an array
+# of structs. None when the surface was not requested.
+ExtractResult = make_dataclass(
+    "ExtractResult",
+    [(c, object, None) for c in _SURFACE_FIELDS],
+    bases=(_DocumentResult,),
+    namespace={"__module__": __name__},
+    slots=True,
+)
 
-    def lists_as_rows(self) -> list[dict] | None:
-        if self.lists is None:
-            return None
-        return [
-            {"list": l, "item": i, "depth": d, "ordered": o, "item_text": s}
-            for l, i, d, o, s in self.lists
-        ]
 
-    def images_as_rows(self) -> list[dict] | None:
-        if self.images is None:
-            return None
-        return [{"src": s, "alt": a} for s, a in self.images]
-
-    def alternates_as_rows(self) -> list[dict] | None:
-        if self.alternates is None:
-            return None
-        return [
-            {"hreflang": hl, "type": t, "href": h}
-            for hl, t, h in self.alternates
-        ]
-
-    def forms_as_rows(self) -> list[dict] | None:
-        if self.forms is None:
-            return None
-        return [{"method": m, "action": a} for m, a in self.forms]
-
-    def microdata_as_rows(self) -> list[dict] | None:
-        if self.microdata is None:
-            return None
-        return [
-            {"item": i, "itemtype": t, "prop": p, "value": v}
-            for i, t, p, v in self.microdata
-        ]
-
-    def rdfa_as_rows(self) -> list[dict] | None:
-        if self.rdfa is None:
-            return None
-        return [
-            {"item": i, "vocab": vo, "typeof": t, "prop": p, "value": v}
-            for i, vo, t, p, v in self.rdfa
-        ]
-
-    def spans_as_rows(self) -> list[dict] | None:
-        if self.spans is None:
-            return None
-        return [
-            {"start": s, "end": e, "label": lbl} for s, e, lbl in self.spans
-        ]
+def _surfaces(want: frozenset, computed: dict) -> dict:
+    """The surface fields of one result: ``computed[c]`` for each column of
+    a wanted surface; an unwanted one keeps its default, None. A wanted
+    surface this kind of document does not have is [] in an array column,
+    else None."""
+    out = {}
+    for s, c, is_array in _SURFACE_SLOTS:
+        if s in want:
+            out[c] = computed.get(c, [] if is_array else None)
+    return out
 
 
 def _pdf_info_text(doc, key: str) -> str | None:
@@ -256,27 +168,13 @@ def is_pdf(blob: bytes) -> bool:
 
 DEFAULT_TIME_BUDGET_S = 60.0  # straggler guard; parse degrades, never hangs
 
-# The extraction surfaces a consumer can request (SPEC v1–v15).
-# "headmeta" is accepted as an alias for {title, canonical, description}.
-SURFACES = frozenset(
-    {"text", "spans", "outlinks", "title", "canonical", "description",
-     "headings", "ogmeta", "anchors", "tables", "lists", "images",
-     "jsonld", "robots", "alternates", "refresh", "base", "forms",
-     "pagination", "microdata", "rdfa"}
-)
-
-
-def normalize_want(
-    want=None, want_text: bool = True
-) -> frozenset:
-    """Resolve the (want, want_text) pair to the surface set to compute.
-
-    ``want=None`` keeps the legacy switch: want_text=True → all surfaces,
-    want_text=False → none (stats-only). An explicit ``want`` wins and
-    may use the "headmeta" alias. Unknown names raise — a typo'd surface
-    silently computing nothing would look like a data bug downstream."""
+def normalize_want(want=None) -> frozenset:
+    """Resolve ``want`` to the surface set to compute: None → all surfaces,
+    () → none (stats only). It may use the "headmeta" alias. Unknown names
+    raise — a typo'd surface silently computing nothing would look like a
+    data bug downstream."""
     if want is None:
-        return SURFACES if want_text else frozenset()
+        return SURFACES
     w = set(want)
     if "headmeta" in w:
         w.discard("headmeta")
@@ -296,11 +194,10 @@ def process_document(
     want_objects: bool = False,
     max_objects: int = 100_000,
     time_budget_s: float = DEFAULT_TIME_BUDGET_S,
-    want_text: bool = True,
     want=None,
 ) -> ExtractResult:
-    """``want`` (an iterable of SURFACES names, or the legacy boolean
-    ``want_text``) is the projection-pushdown control: parsing, xref
+    """``want`` (an iterable of SURFACES names; None = all, () = stats
+    only) is the projection-pushdown control: parsing, xref
     resolution, decryption and type checking ALWAYS run, but each content
     surface is assembled only when requested, and unrequested surfaces are
     None in the result — so a stats-only or title-only consumer never pays
@@ -309,7 +206,7 @@ def process_document(
     (``content.*`` and text-side ``filter.*``) are then not collected, so
     the verdict covers document STRUCTURE only (the strict verdict already
     excludes ``extract.*`` codes, making it want-invariant)."""
-    wanted = normalize_want(want, want_text)
+    wanted = normalize_want(want)
     t0 = time.perf_counter()
     if is_pdf(blob):
         res = _process_pdf(
@@ -324,7 +221,7 @@ def process_document(
     # strict is a VALIDATION verdict (caradoc validates structure/types;
     # text extraction is a separate command whose warnings don't change
     # validation). Excluding extraction-phase ``extract.*`` codes also makes
-    # the verdict invariant under want_text on/off, so stats-mode and full
+    # the verdict invariant under ``want``, so stats-mode and full
     # runs can never disagree on it.
     res.strict = all(e.code.startswith("extract.") for e in res.errors)
     return res
@@ -346,34 +243,18 @@ def _process_pdf(
     errors.extend(tres.errors)
 
     # text and spans share one content-stream assembly pass; run it when
-    # either is requested, then drop the unrequested half.
+    # either is requested (``_surfaces`` drops an unrequested half).
+    computed = {}
     if want & {"text", "spans"}:
-        text, spans = extract_text_spans(doc, errors)
-        if "text" not in want:
-            text = None
-        if "spans" not in want:
-            spans = None
-    else:
-        text, spans = None, None
-    outlinks: list | None = [] if "outlinks" in want else None
-    anchors: list | None = [] if "anchors" in want else None
-    tables: list | None = [] if "tables" in want else None
-    lists: list | None = [] if "lists" in want else None
-    images: list | None = [] if "images" in want else None
-    jsonld: list | None = [] if "jsonld" in want else None
-    alternates: list | None = [] if "alternates" in want else None
-    forms: list | None = [] if "forms" in want else None
-    microdata: list | None = [] if "microdata" in want else None
-    rdfa: list | None = [] if "rdfa" in want else None
-    title = _pdf_info_text(doc, "Title") if "title" in want else None
-    description = (
-        _pdf_info_text(doc, "Subject") if "description" in want else None
-    )
-    headings = None
+        computed["text"], computed["spans"] = extract_text_spans(doc, errors)
+    if "title" in want:
+        computed["title"] = _pdf_info_text(doc, "Title")
+    if "description" in want:
+        computed["description"] = _pdf_info_text(doc, "Subject")
     if "headings" in want:
         from caraspark.pdfengine.document import extract_outline
 
-        headings = [
+        computed["headings"] = [
             (o["pos"], o["level"] + 1) for o in extract_outline(doc)
         ]
 
@@ -387,21 +268,6 @@ def _process_pdf(
 
     res = ExtractResult(
         kind="pdf",
-        text=text,
-        spans=spans,
-        outlinks=outlinks,
-        anchors=anchors,
-        tables=tables,
-        lists=lists,
-        images=images,
-        jsonld=jsonld,
-        alternates=alternates,
-        forms=forms,
-        microdata=microdata,
-        rdfa=rdfa,
-        title=title,
-        description=description,
-        headings=headings,
         errors=errors,
         version=doc.version,
         n_objects=len(doc.objects),
@@ -415,6 +281,7 @@ def _process_pdf(
         type_assignments={
             f"{k[0]}.{k[1]}": v for k, v in sorted(tres.assignments.items())
         },
+        **_surfaces(want, computed),
     )
     if want_objects:
         res.objects_json = {
@@ -432,113 +299,22 @@ def _process_html(blob, want=SURFACES) -> ExtractResult:
         # HTML extraction is one single-pass parse that produces all the
         # surfaces together (the pass itself is the cost; the per-surface
         # collection is incidental), so any requested surface runs the full
-        # parse and the unrequested ones are nulled afterwards — the saving
+        # parse and ``_surfaces`` nulls the unrequested ones — the saving
         # is in what crosses the Arrow boundary, not the parse.
-        (
-            text, spans, outlinks, title, canonical, description, headings,
-            og, anchors, tables, lists, images, jsonld, robots_meta,
-            alternates, refresh_meta, base_href, forms, next_href,
-            prev_href, microdata, rdfa,
-        ) = extract_html(blob)
-        has_content = bool(text)
-        if "text" not in want:
-            text = None
-        if "spans" not in want:
-            spans = None
-        if "outlinks" not in want:
-            outlinks = None
-        if "anchors" not in want:
-            anchors = None
-        if "tables" not in want:
-            tables = None
-        if "lists" not in want:
-            lists = None
-        if "images" not in want:
-            images = None
-        if "jsonld" not in want:
-            jsonld = None
-        if "robots" not in want:
-            robots_meta = None
-        if "alternates" not in want:
-            alternates = None
-        if "refresh" not in want:
-            refresh_meta = None
-        if "base" not in want:
-            base_href = None
-        if "forms" not in want:
-            forms = None
-        if "pagination" not in want:
-            next_href = None
-            prev_href = None
-        if "microdata" not in want:
-            microdata = None
-        if "rdfa" not in want:
-            rdfa = None
-        if "title" not in want:
-            title = None
-        if "canonical" not in want:
-            canonical = None
-        if "description" not in want:
-            description = None
-        if "headings" not in want:
-            headings = None
-        if "ogmeta" not in want:
-            og = (None, None, None)
+        vals = extract_html(blob)
+        # ogmeta comes back as one (og_title, og_description, og_image)
+        # triple; every other surface column is one value
+        computed = dict(
+            zip(_SURFACE_FIELDS, vals[:7] + vals[7] + vals[8:], strict=True)
+        )
+        has_content = bool(computed["text"])
     else:
         # Stats mode skips text materialization but must agree with the full
         # run on the error taxonomy: early-exit emptiness probe, no content.
         from caraspark.htmlengine import html_has_content
 
-        text = None
-        spans = None
-        outlinks = None
-        anchors = None
-        tables = None
-        lists = None
-        images = None
-        jsonld = None
-        robots_meta = None
-        alternates = None
-        refresh_meta = None
-        base_href = None
-        forms = None
-        next_href = None
-        prev_href = None
-        microdata = None
-        rdfa = None
-        title = None
-        canonical = None
-        description = None
-        headings = None
-        og = (None, None, None)
+        computed = {}
         has_content = html_has_content(blob)
     if not has_content:
         errors.append(PdfError("html.no_content", pos=0))
-    return ExtractResult(
-        kind="html",
-        text=text,
-        spans=spans,
-        outlinks=outlinks,
-        anchors=anchors,
-        tables=tables,
-        lists=lists,
-        images=images,
-        jsonld=jsonld,
-        robots_meta=robots_meta,
-        alternates=alternates,
-        refresh_meta=refresh_meta,
-        base_href=base_href,
-        forms=forms,
-        next_href=next_href,
-        prev_href=prev_href,
-        microdata=microdata,
-        rdfa=rdfa,
-        title=title,
-        canonical=canonical,
-        description=description,
-        headings=headings,
-        og_title=og[0],
-        og_description=og[1],
-        og_image=og[2],
-        errors=errors,
-    )
+    return ExtractResult(kind="html", errors=errors, **_surfaces(want, computed))

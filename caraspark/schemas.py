@@ -35,7 +35,7 @@ EXTRACTED = T.StructType(
         T.StructField("text", T.BinaryType(), True),  # byte-exact payload
         # v3 SPANS: octet offsets into text, end exclusive; one element per
         # PDF page ("page:<i>") / kept HTML block ("block:<i>"); [] for
-        # empty text, NULL in want_text=False stats mode
+        # empty text, NULL when not requested
         T.StructField(
             "spans",
             T.ArrayType(
@@ -256,6 +256,35 @@ EXTRACTED = T.StructType(
         ),
     ]
 )
+
+
+# The extraction surfaces a consumer can request (``extract(want=...)``),
+# each mapped to the EXTRACTED columns it fills, in the order
+# ``htmlengine.extract_html`` returns them. Every other EXTRACTED column is
+# computed for every document whatever ``want`` says.
+SURFACE_COLUMNS = {
+    "text": ("text",),
+    "spans": ("spans",),
+    "outlinks": ("outlinks",),
+    "title": ("title",),
+    "canonical": ("canonical",),
+    "description": ("description",),
+    "headings": ("headings",),
+    "ogmeta": ("og_title", "og_description", "og_image"),
+    "anchors": ("anchors",),
+    "tables": ("tables",),
+    "lists": ("lists",),
+    "images": ("images",),
+    "jsonld": ("jsonld",),
+    "robots": ("robots_meta",),
+    "alternates": ("alternates",),
+    "refresh": ("refresh_meta",),
+    "base": ("base_href",),
+    "forms": ("forms",),
+    "pagination": ("next_href", "prev_href"),
+    "microdata": ("microdata",),
+    "rdfa": ("rdfa",),
+}
 
 
 def extracted_read_schema():

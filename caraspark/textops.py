@@ -805,15 +805,16 @@ def _clusters_materialized(spark, sf) -> DataFrame:
         # is driver-side), but the FINAL table's blocks materialize on
         # first consumer action instead of at construction time
         df = connected_components(pairs).localCheckpoint(eager=False)
-        # Bound block-manager residency by evicting the OLDEST entry only
-        # (dict preserves insertion order).  Never unpersist here: a caller
-        # may still hold the evicted handle, and unpersisting localCheckpoint
-        # blocks makes it unrecoverable (lineage was truncated).  Dropping
-        # our reference is enough — ContextCleaner frees the blocks once the
-        # DataFrame is garbage-collected with no other holders.
+        # Bound block-manager residency to 8 entries by evicting the OLDEST
+        # after the insert (dict preserves insertion order).  Never unpersist
+        # here: a caller may still hold the evicted handle, and unpersisting
+        # localCheckpoint blocks makes it unrecoverable (lineage was
+        # truncated).  Dropping our reference is enough — ContextCleaner
+        # frees the blocks once the DataFrame is garbage-collected with no
+        # other holders.
+        _CC_CACHE[key] = df
         while len(_CC_CACHE) > 8:
             _CC_CACHE.pop(next(iter(_CC_CACHE)))
-        _CC_CACHE[key] = df
     return df
 
 

@@ -157,7 +157,7 @@ def test_binaryfile_source_feeds_extract(spark, tmp_path):
 
 
 def test_want_text_false_stats_only_path(spark):
-    """Projection pushdown THROUGH the operator: want_text=False skips text
+    """Projection pushdown THROUGH the operator: want=() skips text
     assembly (text IS NULL for every row) while structural metrics match
     the full run exactly."""
     full = {
@@ -167,7 +167,7 @@ def test_want_text_false_stats_only_path(spark):
     stats = {
         r["url"]: r
         for r in extract(
-            synth_df(spark, 90, partitions=4), want_text=False
+            synth_df(spark, 90, partitions=4), want=()
         ).collect()
     }
     assert set(full) == set(stats)
@@ -179,7 +179,7 @@ def test_want_text_false_stats_only_path(spark):
         assert s["kind"] == f["kind"]
         assert s["flags"] == f["flags"]
         # verdict must agree between modes for EVERY doc kind (regression:
-        # want_text=False used to add html.no_content to every HTML doc and
+        # want=() used to add html.no_content to every HTML doc and
         # flip strict=False); the VALIDATION error taxonomy must agree too —
         # stats mode may only lack extraction-phase ``extract.*`` warnings,
         # which by contract never affect the verdict
@@ -193,6 +193,28 @@ def test_want_text_false_stats_only_path(spark):
         assert not any(c.startswith("extract.") for c, _ in s_errs), url
         assert s_errs == f_errs, url
     assert any(s["kind"] == "html" for s in stats.values())
+
+
+def test_extracted_schema_is_the_one_declaration():
+    """EXTRACTED is pinned, the UDF's Arrow schema round-trips to it, and
+    the surface table covers exactly its surface columns."""
+    import hashlib
+
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from caraspark.extract import _ARROW_SCHEMA
+    from caraspark.schemas import EXTRACTED, SURFACE_COLUMNS
+
+    assert (
+        hashlib.sha256(EXTRACTED.json().encode()).hexdigest()
+        == "dd093f5af4663773955e9c907f16a1376d5173e99951af39a16171098f2f46d9"
+    )
+    assert from_arrow_schema(_ARROW_SCHEMA, prefer_timestamp_ntz=True) == EXTRACTED
+    surface_cols = [c for cols in SURFACE_COLUMNS.values() for c in cols]
+    always = {"url", "warc_ts", "verdict", "kind", "errors", "metrics",
+              "flags", "version", "lineage"}
+    assert len(surface_cols) == len(set(surface_cols))
+    assert set(surface_cols) == set(EXTRACTED.names) - always
 
 
 def test_want_surface_projection_parity(spark):
@@ -265,7 +287,7 @@ def test_want_unknown_surface_raises(spark):
 
     with _pytest.raises(ValueError):
         normalize_want(("text", "tittle"))
-    assert normalize_want(None, want_text=False) == frozenset()
+    assert normalize_want(()) == frozenset()
     assert "canonical" in normalize_want(("headmeta",))
 
 

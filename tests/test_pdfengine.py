@@ -663,13 +663,13 @@ def _check_span_tiling(text: bytes, spans):
         assert spans == []
         return
     assert spans, "non-empty text must carry spans"
-    assert spans[0]["start"] == 0
-    for i, s in enumerate(spans):
-        assert 0 <= s["start"] <= s["end"] <= len(text)
-        assert s["label"].endswith(f":{i}")
+    assert spans[0][0] == 0
+    for i, (start, end, label) in enumerate(spans):
+        assert 0 <= start <= end <= len(text)
+        assert label.endswith(f":{i}")
         if i:
-            assert s["start"] == spans[i - 1]["end"] + 1
-    assert spans[-1]["end"] == len(text)
+            assert start == spans[i - 1][1] + 1
+    assert spans[-1][1] == len(text)
 
 
 @pytest.mark.parametrize("name", ALL_RECIPES)
@@ -680,7 +680,7 @@ def test_spans_second_witness(name):
 
     blob = _blob(name)
     r = process_document(blob)
-    _check_span_tiling(r.text, r.spans_as_rows())
+    _check_span_tiling(r.text, r.spans)
     if not r.valid or r.encrypted:
         pytest.skip("oracle witnesses valid/plaintext docs only")
     otext, ospans = oracle_extract_spans(blob)
@@ -725,9 +725,8 @@ def test_spans_html_multibyte_are_octets():
 
 @pytest.mark.parametrize("name", ["pdf_minimal", sorted(HTML_RECIPES)[0]])
 def test_spans_stats_mode_is_null(name):
-    r = process_document(_blob(name), want_text=False)
+    r = process_document(_blob(name), want=())
     assert r.text is None and r.spans is None
-    assert r.spans_as_rows() is None
 
 
 @settings(max_examples=60, deadline=None)
@@ -777,7 +776,7 @@ def test_outlinks_rules():
 def test_outlinks_pdf_and_stats_mode():
     r = process_document(_blob("pdf_minimal"))
     assert r.outlinks == []
-    r = process_document(_blob(sorted(HTML_RECIPES)[0]), want_text=False)
+    r = process_document(_blob(sorted(HTML_RECIPES)[0]), want=())
     assert r.outlinks is None
 
 
@@ -855,7 +854,7 @@ def test_title_pdf_info():
     assert r.title == "Tïtle — 漢字"
     assert r.valid and r.strict
     # stats mode: title rides the text parse
-    r2 = process_document(pdf_info_title(), want_text=False)
+    r2 = process_document(pdf_info_title(), want=())
     assert r2.title is None
     # no /Info -> None
     assert process_document(_blob("pdf_minimal")).title is None
@@ -933,7 +932,7 @@ def test_headmeta_pdf_subject_and_stats_mode():
     r = process_document(pdf_info_title())
     assert r.canonical is None
     assert r.description == "A subject–with dashes"  # 0x85 → en dash
-    r2 = process_document(pdf_info_title(), want_text=False)
+    r2 = process_document(pdf_info_title(), want=())
     assert r2.canonical is None and r2.description is None
 
 
@@ -1181,7 +1180,7 @@ def test_headings_pdf_outline_levels_and_stats_mode():
 
     r = process_document(pdf_outline())
     assert r.headings == [(0, 1), (1, 2), (2, 2), (3, 1)]
-    assert process_document(pdf_outline(), want_text=False).headings is None
+    assert process_document(pdf_outline(), want=()).headings is None
     assert process_document(_blob("pdf_minimal")).headings == []
 
 
@@ -1229,7 +1228,7 @@ def test_ogmeta_none_for_pdfs_and_stats_mode():
     r2 = process_document(
         b"<html><head><meta property='og:title' content='x'></head>"
         b"<body><p>t</p></body></html>",
-        want_text=False,
+        want=(),
     )
     assert (r2.og_title, r2.og_description, r2.og_image) == (None, None, None)
     r3 = process_document(
@@ -1282,7 +1281,7 @@ def test_anchor_stats_mode_and_pdf_contract():
     html = b"<body><p>real text here <a href='/x'>y</a></p></body>"
     full = process_document(html)
     assert full.anchors == ["y"]
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.anchors is None
     no_anchor = process_document(html, want={"text"})
     assert no_anchor.anchors is None and no_anchor.text
@@ -1328,7 +1327,7 @@ def test_html_v10_tables_want_projection():
     assert only.tables == full.tables and only.text is None
     none = process_document(b, want=("text",))
     assert none.tables is None and none.text == b"x\nbody text"
-    stats = process_document(b, want_text=False)
+    stats = process_document(b, want=())
     assert stats.tables is None
     pdf = process_document(b"%PDF-1.4\n1 0 obj null endobj")
     assert pdf.tables == []
@@ -1377,12 +1376,12 @@ def test_html_v12_images_want_projection():
     assert only.images == [("/x.png", "a")] and only.text is None
     none = process_document(html, want={"text"})
     assert none.images is None and none.text
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.images is None
     pdf = process_document(PDF_RECIPES["pdf_minimal"]())
     assert pdf.images == []
     pdf_stats = process_document(
-        PDF_RECIPES["pdf_minimal"](), want_text=False
+        PDF_RECIPES["pdf_minimal"](), want=()
     )
     assert pdf_stats.images is None
 
@@ -1435,7 +1434,7 @@ def test_html_v13_jsonld_want_projection():
     assert only.jsonld == ['{"x":1}'] and only.text is None
     none = process_document(html, want={"text"})
     assert none.jsonld is None and none.text
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.jsonld is None
     pdf = process_document(PDF_RECIPES["pdf_minimal"]())
     assert pdf.jsonld == []
@@ -1471,7 +1470,7 @@ def test_html_v14_robots_want_projection():
     assert only.robots_meta == "noindex" and only.text is None
     none = process_document(html, want={"text"})
     assert none.robots_meta is None and none.text
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.robots_meta is None
     assert process_document(PDF_RECIPES["pdf_minimal"]()).robots_meta is None
 
@@ -1568,7 +1567,7 @@ def test_html_v15_alternates_want_projection():
     assert only.alternates == [("de", "", "/de")] and only.text is None
     none = process_document(html, want={"text"})
     assert none.alternates is None and none.text
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.alternates is None
     assert process_document(PDF_RECIPES["pdf_minimal"]()).alternates == []
 
@@ -1645,7 +1644,7 @@ def test_html_v16_refresh_want_projection():
     assert only.refresh_meta == "0;url=/n" and only.text is None
     none = process_document(html, want={"text"})
     assert none.refresh_meta is None and none.text
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.refresh_meta is None
     assert process_document(PDF_RECIPES["pdf_minimal"]()).refresh_meta is None
 
@@ -1683,7 +1682,7 @@ def test_html_v17_base_want_projection():
     assert only.base_href == "/b/" and only.text is None
     none = process_document(html, want={"text"})
     assert none.base_href is None and none.text
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.base_href is None
     assert process_document(PDF_RECIPES["pdf_minimal"]()).base_href is None
 
@@ -1765,7 +1764,7 @@ def test_html_v18_forms_want_projection():
     assert only.forms == [("get", "/s")] and only.text is None
     none = process_document(html, want={"text"})
     assert none.forms is None and none.text
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.forms is None
     assert process_document(PDF_RECIPES["pdf_minimal"]()).forms == []
 
@@ -1817,7 +1816,7 @@ def test_html_v19_pagination_want_projection():
     assert only.text is None
     none = process_document(html, want={"text"})
     assert none.next_href is None and none.prev_href is None and none.text
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.next_href is None and stats.prev_href is None
     pdf = process_document(PDF_RECIPES["pdf_minimal"]())
     assert pdf.next_href is None and pdf.prev_href is None
@@ -2040,7 +2039,7 @@ def test_html_v20_microdata_want_projection():
     assert only.microdata == [(0, "T", "n", "v")] and only.text is None
     none = process_document(html, want={"text"})
     assert none.microdata is None and none.text
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.microdata is None
     assert process_document(PDF_RECIPES["pdf_minimal"]()).microdata == []
 
@@ -2147,7 +2146,7 @@ def test_html_v21_rdfa_want_projection():
     assert only.rdfa == [(0, "V", "T", "n", "v")] and only.text is None
     none = process_document(html, want={"text"})
     assert none.rdfa is None and none.text
-    stats = process_document(html, want_text=False)
+    stats = process_document(html, want=())
     assert stats.rdfa is None
     assert process_document(PDF_RECIPES["pdf_minimal"]()).rdfa == []
 

@@ -953,6 +953,32 @@ def test_dedup_best_rep_elects_highest_score(spark, sf_smoke):
         )
 
 
+def test_cc_cache_holds_at_most_eight(monkeypatch):
+    """The cluster-table cache is bounded at 8 entries right after an
+    insert, evicting the oldest. The clustering job is stubbed out: only
+    the cache bookkeeping runs."""
+    from types import SimpleNamespace
+
+    from caraspark import textops
+
+    class _Frame:
+        def select(self, *cols):
+            return self
+
+        def localCheckpoint(self, eager=True):
+            return self
+
+    monkeypatch.setattr(textops, "_CC_CACHE", {})
+    monkeypatch.setattr(textops, "_CC_COMPUTE_COUNT", 0)
+    monkeypatch.setattr(textops, "_ngram_pairs", lambda *a: _Frame())
+    monkeypatch.setattr(textops, "connected_components", lambda p: p)
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="app"))
+    for i in range(10):
+        textops._clusters_materialized(spark, f"/sf{i}")
+        assert len(textops._CC_CACHE) == min(i + 1, 8)
+    assert [k[1] for k in textops._CC_CACHE] == [f"/sf{i}" for i in range(2, 10)]
+    assert textops._CC_COMPUTE_COUNT == 10
+
 def test_cc_materialization_single_lineage(spark, sf_smoke):
     """Round-3 verdict item 2: the three CC consumers (dedup_clusters,
     dedup_best_rep, dedup_cluster_sizes) share ONE connected-components
