@@ -67,37 +67,6 @@ def _driver_verified_keys() -> set[str]:
     return seen
 
 
-# Round-5 driver window: the driver verifies exactly the first 50 registry
-# entries, so _FRONT pins them explicitly. After r01–r04, 204 oracle-backed
-# keys have never had a driver row; this window fronts 50 of them, zero
-# repeats, ordered by the round-4 verdict's priority list: (a) the six
-# operators that were NEW in round 4 and whose only evidence is one local
-# gate, (b) the PDF forensics side tables, (c) the events / time-series
-# analytics pack, (d) the streaming side-table twins. tests/test_registry.py
-# asserts list(_merged())[:50] == _FRONT so the window can't drift silently.
-_FRONT = [
-    # -- (a) round-4-new operators, gate-only so far --
-    "url_surt", "quality_calibration", "warc_revisit_plan",
-    "decontaminate_remove", "quality_threshold_sweep", "stream_revisit_plan",
-    # -- (b) PDF forensics side tables --
-    "pdf_repair", "pdf_scavenge", "pdf_revisions", "pdf_sigs", "pdf_xmp",
-    "pdf_fonts", "pdf_pages", "pdf_actions", "pdf_images", "pdf_annots",
-    "pdf_content_ops", "pdf_stream_stats",
-    # -- (c) events / time-series analytics pack --
-    "win_sessionize", "events_funnel", "retention_cohorts",
-    "events_transitions", "ts_downsample", "ts_cusum", "events_attribution",
-    "ts_gapfill", "events_streaks", "events_gap_hist", "events_iqr_outliers",
-    "events_wau", "events_cep", "events_rfm", "events_abtest",
-    "win_sliding_median",
-    # -- (d) streaming side-table twins (each hash-equal to its batch qkey) --
-    "stream_anchor_agg", "stream_tables", "stream_quality", "stream_lists",
-    "stream_images", "stream_jsonld", "stream_robots", "stream_alternates",
-    "stream_frontier", "stream_refresh", "stream_pagination",
-    "stream_sitemap", "stream_feed", "stream_revisit", "stream_validators",
-    "stream_microdata",
-]
-
-
 def _merged():
     out = {}
     for reg in _REGISTRIES:
@@ -105,9 +74,8 @@ def _merged():
             if k in out:
                 raise KeyError(f"duplicate qkey {k!r}")
             out[k] = q
-    # _FRONT pins the driver's 50-row window exactly (in order). Behind it:
-    # never-driver-verified keys first (new operators added mid-round queue
-    # for the NEXT window), then previously-verified keys. The two
+    # The driver verifies a 50-key prefix of this order each round: keys
+    # it has never verified come first, then the verified ones. The two
     # permanently-oracle-free keys (agg_approx: nondeterministic sketch;
     # partition_metrics: wall-clock timing columns) sort dead last so they
     # never burn a window row — each has a hash-verified sibling
@@ -115,11 +83,10 @@ def _merged():
     # evidence. Ties keep registration order, so the result is
     # deterministic.
     seen = _driver_verified_keys()
-    front = {k: i for i, k in enumerate(_FRONT)}
 
     def rank(item):
         k, q = item
-        return (front.get(k, len(front)), q.sql is None, k in seen)
+        return (q.sql is None, k in seen)
 
     return dict(sorted(out.items(), key=rank))
 

@@ -86,10 +86,10 @@ def write_size_layout(
 
     Why this exists (SURVEY.md §4.3 skew discipline): ``extract``'s
     giants mode routes documents by size into a narrow branch and a
-    salted branch — two filters over the same table. Without a stored
-    size column those filters must materialize ``length(html)``, i.e.
-    each branch decodes the FULL blob column and discards the other's
-    rows: at 100 TB that is a second 100 TB scan. With ``nbytes``
+    round-robin giants branch — two filters over the same table. Without
+    a stored size column those filters must materialize
+    ``length(html)``, i.e. each branch decodes the FULL blob column and
+    discards the other's rows: at 100 TB that is a second 100 TB scan. With ``nbytes``
     range-clustered, row-group min/max stats answer both filters — the
     giants branch reads only the giant tail's row groups (sub-percent of
     bytes) and the narrow branch skips exactly those. The cluster job is
@@ -147,6 +147,24 @@ def sf_of(sf_dir: str) -> float:
 
 def corpus_rows_for_sf(sf_dir: str) -> int:
     return {0.001: 128, 0.01: 384, 0.1: 1536}.get(sf_of(sf_dir), 256)
+
+
+def html_docs(docs: DataFrame, *parts, url=None) -> DataFrame:
+    """documents_raw from a ``documents`` frame, batch or streaming: each
+    row's blob is the UTF-8 of ``concat(*parts)`` — a ``str`` part is a
+    literal, a Column part is used as is (typically ``F.col("text")``
+    wrapped in closed-form HTML). ``url`` defaults to the doc_id as a
+    string; ``warc_ts`` is NULL."""
+    from pyspark.sql import Column, functions as F
+
+    if url is None:
+        url = F.col("doc_id").cast("string")
+    html = F.concat(*(p if isinstance(p, Column) else F.lit(p) for p in parts))
+    return docs.select(
+        url.alias("url"),
+        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
+        F.encode(html, "utf-8").alias("html"),
+    )
 
 
 def from_binary_files(spark: SparkSession, path: str) -> DataFrame:

@@ -2,18 +2,18 @@
 
 ``extract(df)``: documents_raw → extracted, as ONE narrow mapInArrow stage —
 the whole C2–C27 chain is per-document pure compute, so there is no shuffle
-between parse stages; the only exchange is the explicit skew-defeating
-repartition in front.
+between parse stages; the only exchange is the giants plan's opt-in
+round-robin repartition of the documents over a size threshold.
 
 Scale design (the north_rule's "partitioning / shuffle / skew handled
 explicitly"):
 
 * **column pruning** — only (url, warc_ts, html) reach the UDF; `text`/`lang`
   never leave the parquet footer (check .explain: ReadSchema is 3 columns);
-* **size-class salting** — partition key is (size_class, salt) where
-  size_class = ceil(log2(bytes)) and salt spreads each class over the
-  cluster: a 1 GiB document never rides in a partition with 10k small ones,
-  and AQE skew-split backs this up at runtime;
+* **giants routing** — documents over a size threshold leave the narrow
+  path and are dealt round-robin over the cluster, so a 1 GiB document
+  never rides in a task with a cluster of other giants; everything else
+  stays narrow;
 * **byte-budgeted output batches** — the UDF re-chunks its output so one
   Arrow IPC message never exceeds ~64 MiB even when inputs are huge;
 * **per-doc resource budgets** — parse depth/object caps inside the engine
@@ -35,6 +35,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from caraspark.schemas import EXTRACTED
 
 OUTPUT_BATCH_BYTES = 64 * 1024 * 1024
+# giants-branch round-robin slices per shuffle partition (see extract())
+GIANT_FANOUT = 4
 
 _ARROW_SCHEMA = to_arrow_schema(EXTRACTED, timestamp_utc=False)
 # text stays large_binary (64-bit offsets): decoded text is not bounded by
@@ -128,12 +130,10 @@ def _extract_batches(
 def extract(
     df: DataFrame,
     num_partitions: int | None = None,
-    n_salts: int = 64,
     salt: bool | str = False,
     giant_threshold: int = 4 << 20,
     want=None,
     nbytes_col: str | None = None,
-    giant_fanout: int = 4,
 ) -> DataFrame:
     """documents_raw → extracted (EXTRACTED schema).
 
@@ -152,31 +152,24 @@ def extract(
     zero shuffle, scaling limited only by input splits (parquet scans split
     at spark.sql.files.maxPartitionBytes, so parallelism is already there).
 
-    ``salt=True`` inserts the explicit skew-defeating exchange: partition
-    key (size_class = ceil(log2 bytes), salt = hash(url) % n_salts), so
-    documents of similar size co-locate and giants spread over the cluster
-    instead of clustering in one task (SURVEY.md §4.3). Use it when the
-    input's physical layout clusters big documents (e.g. a crawl segment
-    sorted by host) — measured cost in BENCH/BASELINE.md: the blob shuffle
-    taxes synthetic throughput ~35% because synthetic docs parse ~100x
-    cheaper per byte than real PDFs; at production parse densities the
-    exchange amortizes to noise.
-
-    ``salt="giants"`` is the scale-preferred middle ground: only documents
-    ≥ ``giant_threshold`` bytes take an exchange — round-robin over
-    ``num_partitions × giant_fanout`` slices (with few individually
+    ``salt="giants"`` is the skew plan, for inputs whose physical layout
+    clusters big documents (e.g. a crawl segment sorted by host): only
+    documents ≥ ``giant_threshold`` bytes take an exchange — round-robin
+    over ``num_partitions × GIANT_FANOUT`` slices (with few individually
     expensive rows the most-loaded task IS the wall; see the branch
     comment below for the exact balance guarantee) — everything else
     stays on the narrow zero-shuffle path, and the two branches union.
     At crawl-realistic skew (giants are a sub-percent tail of rows) this
     shuffles a sub-percent of bytes instead of all of them, while still
     guaranteeing no task inherits a cluster of giants from the input
-    layout. Cost model vs full salting at 100 TB: the blob column is
-    scanned once per branch (each branch's filter discards the other's
-    rows post-scan — `length(html)` cannot prune at the footer), so
-    selective salting trades one extra columnar scan for removing a
+    layout. Cost model vs shuffling every document at 100 TB: the blob
+    column is scanned once per branch (each branch's filter discards the
+    other's rows post-scan — `length(html)` cannot prune at the footer),
+    so the giants plan trades one extra columnar scan for removing a
     100 TB shuffle (write + fetch + read); shuffle bytes drop to the
     giant tail only, and the small-doc branch keeps input locality.
+    Giants-branch rows carry ``lineage.salt = hash(url) % 64``; narrow
+    rows carry -1. Any other ``salt`` value raises ValueError.
 
     ``nbytes_col`` removes even that extra scan when the input table
     carries a stored byte-length column (our ingest layout job,
@@ -190,77 +183,64 @@ def extract(
     """
     from caraspark.pdfengine.api import normalize_want
 
+    if salt not in (False, "giants"):
+        raise ValueError(f"salt must be False or 'giants', got {salt!r}")
     udf = functools.partial(_extract_batches, want=normalize_want(want))
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "64")
-        )
     cols = ["url", "warc_ts", "html"]
     if not salt:
         # routing column not needed on the narrow path — never select it
         return df.select(*cols).mapInArrow(udf, EXTRACTED)
+    if num_partitions is None:
+        num_partitions = int(
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "64")
+        )
     if nbytes_col is not None and nbytes_col not in cols:
         cols.append(nbytes_col)
     pruned = df.select(*cols)
-    keyed = pruned.withColumns(
-        {
-            "size_class": F.ceil(F.log2(F.length("html") + F.lit(2))).cast("int"),
-            "salt": F.pmod(F.xxhash64("url"), F.lit(n_salts)).cast("int"),
-        }
+    # routing predicates: the stored metadata column when the table has
+    # one — kept as PLAIN column comparisons (a coalesce() wrapper
+    # defeats parquet pushdown) so row-group stats prune at the footer;
+    # NULL nbytes rows route to the giants branch via OR-IsNull (also
+    # pushable), so the two filters partition the table exactly.
+    # Without a stored column: computed length (decodes the blob column
+    # in both branches — the documented extra-scan cost).
+    if nbytes_col is not None:
+        nb = F.col(nbytes_col)
+        is_small = nb < giant_threshold
+        is_giant = (nb >= giant_threshold) | nb.isNull()
+    else:
+        nbytes = F.coalesce(F.length("html"), F.lit(0))
+        is_small = nbytes < giant_threshold
+        is_giant = nbytes >= giant_threshold
+    extra = cols[3:]
+    small = pruned.filter(is_small).drop(*extra).mapInArrow(udf, EXTRACTED)
+    # Round-robin over num_partitions × GIANT_FANOUT slices, NOT a hash
+    # key: giants are few and individually expensive, so the tail is
+    # set by the most-loaded TASK, and hashing G giants into P
+    # partitions leaves birthday-collision bins of 3–4 giants
+    # (measured: the r4 giants-mode straggler). Balance guarantee,
+    # precisely: RoundRobinPartitioning deals each INPUT partition's
+    # rows to consecutive slices from a per-partition pseudo-random
+    # start — exactly even within an input partition, random-offset
+    # across partitions. The clustered-tail pathology this mode exists
+    # for (all giants in one file → one input partition) therefore gets
+    # a ±1 deal-out; in the scattered regime (~1 giant per input
+    # partition) balance degrades to uniform-random — no worse than the
+    # hash key — and the fanout× extra bins still cut the expected max
+    # load. The explicit count keeps AQE from coalescing the small
+    # shuffle back into few partitions (coalescing only applies to
+    # non-user-specified counts), and mostly-empty extra tasks cost
+    # microseconds of scheduler time. Costs: sortBeforeRepartition
+    # (default true, required for retry-determinism — do NOT disable it
+    # on this branch or stage retries can drop/duplicate rows) locally
+    # sorts the giant rows incl. blobs before dealing — bounded by the
+    # giant tail's size, not the corpus. salt rides as a provenance
+    # column into the UDF's lineage struct.
+    giants = (
+        pruned.filter(is_giant)
+        .drop(*extra)  # routing column must not ride the shuffle
+        .withColumn("salt", F.pmod(F.xxhash64("url"), F.lit(64)).cast("int"))
+        .repartition(num_partitions * GIANT_FANOUT)
+        .mapInArrow(udf, EXTRACTED)
     )
-    if salt == "giants":
-        # routing predicates: the stored metadata column when the table has
-        # one — kept as PLAIN column comparisons (a coalesce() wrapper
-        # defeats parquet pushdown) so row-group stats prune at the footer;
-        # NULL nbytes rows route to the giants branch via OR-IsNull (also
-        # pushable), so the two filters partition the table exactly.
-        # Without a stored column: computed length (decodes the blob column
-        # in both branches — the documented extra-scan cost).
-        if nbytes_col is not None:
-            nb = F.col(nbytes_col)
-            is_small = nb < giant_threshold
-            is_giant = (nb >= giant_threshold) | nb.isNull()
-        else:
-            nbytes = F.coalesce(F.length("html"), F.lit(0))
-            is_small = nbytes < giant_threshold
-            is_giant = nbytes >= giant_threshold
-        extra = [c for c in cols[3:]]
-        small = (
-            pruned.filter(is_small)
-            .drop(*extra)
-            .mapInArrow(udf, EXTRACTED)
-        )
-        # Round-robin over num_partitions × giant_fanout slices, NOT a hash
-        # on (size_class, salt): giants are few and individually expensive,
-        # so the tail is set by the most-loaded TASK, and hashing G giants
-        # into P partitions leaves birthday-collision bins of 3–4 giants
-        # (measured: the r4 giants-mode straggler). Balance guarantee,
-        # precisely: RoundRobinPartitioning deals each INPUT partition's
-        # rows to consecutive slices from a per-partition pseudo-random
-        # start — exactly even within an input partition, random-offset
-        # across partitions. The clustered-tail pathology this mode exists
-        # for (all giants in one file → one input partition) therefore gets
-        # a ±1 deal-out; in the scattered regime (~1 giant per input
-        # partition) balance degrades to uniform-random — no worse than the
-        # hash key — and the fanout× extra bins still cut the expected max
-        # load. The explicit count keeps AQE from coalescing the small
-        # shuffle back into few partitions (coalescing only applies to
-        # non-user-specified counts), and mostly-empty extra tasks cost
-        # microseconds of scheduler time. Costs: sortBeforeRepartition
-        # (default true, required for retry-determinism — do NOT disable it
-        # on this branch or stage retries can drop/duplicate rows) locally
-        # sorts the giant rows incl. blobs before dealing — bounded by the
-        # giant tail's size, not the corpus. salt/size_class still ride as
-        # provenance columns for the UDF's per-doc metrics.
-        giants = (
-            keyed.filter(is_giant)
-            .drop(*extra)  # routing column must not ride the shuffle
-            .repartition(num_partitions * giant_fanout)
-            .mapInArrow(udf, EXTRACTED)
-        )
-        return small.unionByName(giants)
-    salted = keyed.drop(*(c for c in cols[3:])).repartition(
-        num_partitions, "size_class", "salt"
-    )
-    return salted.mapInArrow(udf, EXTRACTED)
+    return small.unionByName(giants)

@@ -4,7 +4,7 @@
 from the driver testdata are wrapped in HTML boilerplate JVM-side, pushed
 through the full mapInArrow extraction pipeline, and the oracle SQL predicts
 the extracted text in closed form — so the whole engine (routing, HTML
-strip, Arrow plumbing, salting) is value-hash-checked against DuckDB.
+strip, Arrow plumbing) is value-hash-checked against DuckDB.
 
 The PDF-side operators run the real pipeline over the synthetic corpus
 and hash-verify against frozen per-recipe/per-idx expected results
@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from caraspark.corpus import corpus_rows_for_sf, synth_df
+from caraspark.corpus import corpus_rows_for_sf, html_docs, synth_df
 from caraspark.extract import extract
 from caraspark.oracle_freeze import (
     alt_cte,
@@ -88,26 +88,14 @@ def doc_extract_roundtrip(spark, sf):
     # normalizes — documents.text is already single-spaced, so
     # extracted == text exactly.
     docs = load(spark, sf, "documents")
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit(
-                    "<html><head><title>t</title></head><body>"
-                    "<nav><a href='/'>home</a><a href='/a'>about</a></nav>"
-                    "<main><p>"
-                ),
-                F.col("text"),
-                F.lit(
-                    "</p></main><footer>(c) synth</footer>"
-                    "<script>x()</script></body></html>"
-                ),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head><title>t</title></head><body>"
+        "<nav><a href='/'>home</a><a href='/a'>about</a></nav>"
+        "<main><p>",
+        F.col("text"),
+        "</p></main><footer>(c) synth</footer>"
+        "<script>x()</script></body></html>",
     )
     ex = extract(raw)
     return ex.select(
@@ -160,20 +148,12 @@ def doc_spans(spark, sf):
     octet_length, so a chars-vs-bytes bug anywhere in the span plumbing
     (engine, Arrow schema, UTF-8 encode) hash-mismatches."""
     docs = load(spark, sf, "documents")
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><main><p>"),
-                F.col("text"),
-                F.lit(f"</p><p>{_SPAN_LIT}</p></main>"),
-                F.lit("<footer>(c) synth</footer></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><main><p>",
+        F.col("text"),
+        f"</p><p>{_SPAN_LIT}</p></main>",
+        "<footer>(c) synth</footer></body></html>",
     )
     ex = extract(raw)
     s = ex.select("url", F.explode("spans").alias("s"))
@@ -240,29 +220,21 @@ def doc_outlinks(spark, sf):
         F.lit("https://hub.example/t?q="),
         (F.col("doc_id") % 7).cast("string"),
     )
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit('<html><body><main><p>'),
-                F.col("text"),
-                F.lit('</p></main><p><a href="'),
-                nxt,
-                F.lit('">next</a> <a href="'),
-                hub,
-                F.lit('">topic</a> <a href="'),
-                nxt,
-                F.lit('">dup</a> <a href="#top">top</a>'),
-                F.lit('<a href="mailto:x@y.example">mail</a></p>'),
-                F.lit('<nav><a href="/nav-skip">nav</a></nav>'),
-                F.lit('<div id="sidebar"><a href="/boiler-skip">b</a></div>'),
-                F.lit("</body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        '<html><body><main><p>',
+        F.col("text"),
+        '</p></main><p><a href="',
+        nxt,
+        '">next</a> <a href="',
+        hub,
+        '">topic</a> <a href="',
+        nxt,
+        '">dup</a> <a href="#top">top</a>',
+        '<a href="mailto:x@y.example">mail</a></p>',
+        '<nav><a href="/nav-skip">nav</a></nav>',
+        '<div id="sidebar"><a href="/boiler-skip">b</a></div>',
+        "</body></html>",
     )
     ex = extract(raw)
     return ex.select(
@@ -316,21 +288,13 @@ def doc_title(spark, sf):
             F.lit(" </title>"),
         )
     )
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head>"),
-                title_el,
-                F.lit("<title>second ignored</title></head><body><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head>",
+        title_el,
+        "<title>second ignored</title></head><body><p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     ex = extract(raw)
     return ex.select("url", "title")
@@ -386,24 +350,16 @@ def doc_headmeta(spark, sf):
             F.lit(' ">'),
         )
     )
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head>"),
-                canon,
-                desc,
-                F.lit('<link rel="canonical" href="/second-loses">'),
-                F.lit('<meta name="description" content="second loses">'),
-                F.lit("</head><body><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head>",
+        canon,
+        desc,
+        '<link rel="canonical" href="/second-loses">',
+        '<meta name="description" content="second loses">',
+        "</head><body><p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     ex = extract(raw)
     return ex.select("url", "canonical", "description")
@@ -479,29 +435,18 @@ def doc_ogmeta(spark, sf):
             F.lit('<meta property="og:image" content="/loses.png">'),
         )
     )
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head>"),
-                ogt,
-                ogi,
-                F.lit("</head><body>"),
-                ogd,
-                F.lit('<meta property="og:title" content="trail title">'),
-                F.lit(
-                    '<meta property="og:description"'
-                    ' content="visible desc">'
-                ),
-                F.lit("<p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head>",
+        ogt,
+        ogi,
+        "</head><body>",
+        ogd,
+        '<meta property="og:title" content="trail title">',
+        '<meta property="og:description" content="visible desc">',
+        "<p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     ex = extract(raw)
     return ex.select("url", "og_title", "og_description", "og_image")
@@ -539,26 +484,18 @@ def doc_headings(spark, sf):
     emit nothing — DuckDB predicts every (url, block, level) row."""
     docs = load(spark, sf, "documents")
     hlevel = (F.col("doc_id") % 5 + 2).cast("string")
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><h1>Top heading</h1><p>"),
-                F.col("text"),
-                F.lit("</p><h"),
-                hlevel,
-                F.lit(">Section "),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit("</h"),
-                hlevel,
-                F.lit('><div class="sidebar"><h2>skip</h2></div>'),
-                F.lit("<h3>   </h3></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><h1>Top heading</h1><p>",
+        F.col("text"),
+        "</p><h",
+        hlevel,
+        ">Section ",
+        (F.col("doc_id") % 7).cast("string"),
+        "</h",
+        hlevel,
+        '><div class="sidebar"><h2>skip</h2></div>',
+        "<h3>   </h3></body></html>",
     )
     ex = extract(raw)
     h = ex.select("url", F.explode("headings").alias("h"))
@@ -809,37 +746,29 @@ def doc_anchors(spark, sf):
     (url, pos, href, anchor) row."""
     docs = load(spark, sf, "documents")
     did = F.col("doc_id").cast("string")
-    raw = docs.select(
-        did.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><main><p>"),
-                F.col("text"),
-                F.lit('</p></main><p><a href="/p/'),
-                (F.col("doc_id") + 1).cast("string"),
-                F.lit('">read <b>w'),
-                (F.col("doc_id") % 5).cast("string"),
-                F.lit('</b> now</a> <a href="/p/'),
-                (F.col("doc_id") + 1).cast("string"),
-                F.lit('">different loses</a> <a href="/e/'),
-                did,
-                F.lit('"></a> <a href="/o/'),
-                did,
-                F.lit('">out <a href="/i/'),
-                did,
-                F.lit('">in</a> tail</a></p>'),
-                F.lit('<div class="promo"><a href="/skip">no</a></div>'),
-                F.lit('<p><a href="/u/'),
-                did,
-                F.lit('">tail '),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit("</body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><main><p>",
+        F.col("text"),
+        '</p></main><p><a href="/p/',
+        (F.col("doc_id") + 1).cast("string"),
+        '">read <b>w',
+        (F.col("doc_id") % 5).cast("string"),
+        '</b> now</a> <a href="/p/',
+        (F.col("doc_id") + 1).cast("string"),
+        '">different loses</a> <a href="/e/',
+        did,
+        '"></a> <a href="/o/',
+        did,
+        '">out <a href="/i/',
+        did,
+        '">in</a> tail</a></p>',
+        '<div class="promo"><a href="/skip">no</a></div>',
+        '<p><a href="/u/',
+        did,
+        '">tail ',
+        (F.col("doc_id") % 7).cast("string"),
+        "</body></html>",
     )
     ex = extract(raw)
     z = F.arrays_zip("outlinks", "anchors")
@@ -951,29 +880,21 @@ def doc_tables(spark, sf):
     ``pos`` being the spec's cell-close emission order."""
     docs = load(spark, sf, "documents")
     did = F.col("doc_id").cast("string")
-    raw = docs.select(
-        did.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><p>"),
-                F.col("text"),
-                F.lit("</p><table><tr><th>k"),
-                (F.col("doc_id") % 5).cast("string"),
-                F.lit("</th><th>v</th></tr><tr><td>name</td><td>"),
-                did,
-                F.lit("</td></tr><tr><td></td><td>x<table><tr><td>n"),
-                (F.col("doc_id") % 3).cast("string"),
-                F.lit("</td></tr></table>y</td></tr></table>"),
-                F.lit('<div class="sidebar"><table><tr><td>no</td></tr>'),
-                F.lit("</table></div><table><td>implicit "),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit("</body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><p>",
+        F.col("text"),
+        "</p><table><tr><th>k",
+        (F.col("doc_id") % 5).cast("string"),
+        "</th><th>v</th></tr><tr><td>name</td><td>",
+        did,
+        "</td></tr><tr><td></td><td>x<table><tr><td>n",
+        (F.col("doc_id") % 3).cast("string"),
+        "</td></tr></table>y</td></tr></table>",
+        '<div class="sidebar"><table><tr><td>no</td></tr>',
+        "</table></div><table><td>implicit ",
+        (F.col("doc_id") % 7).cast("string"),
+        "</body></html>",
     )
     ex = extract(raw)
     return ex.select("url", F.posexplode("tables").alias("pos", "t")).select(
@@ -1092,30 +1013,21 @@ def doc_lists(spark, sf):
     (url, pos, lst, item, depth, ordered, item_text) row, ``pos`` being
     the spec's item-close emission order."""
     docs = load(spark, sf, "documents")
-    did = F.col("doc_id").cast("string")
-    raw = docs.select(
-        did.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><p>"),
-                F.col("text"),
-                F.lit("</p><ul><li>i"),
-                (F.col("doc_id") % 5).cast("string"),
-                F.lit("</li><li/><li>o"),
-                (F.col("doc_id") % 3).cast("string"),
-                F.lit("<ol><li>n"),
-                (F.col("doc_id") % 2).cast("string"),
-                F.lit("</li></ol> z</li></ul><ul/>"),
-                F.lit('<div class="sidebar"><ul><li>no</li></ul></div>'),
-                F.lit("<ol><li>tail "),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit("</body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><p>",
+        F.col("text"),
+        "</p><ul><li>i",
+        (F.col("doc_id") % 5).cast("string"),
+        "</li><li/><li>o",
+        (F.col("doc_id") % 3).cast("string"),
+        "<ol><li>n",
+        (F.col("doc_id") % 2).cast("string"),
+        "</li></ol> z</li></ul><ul/>",
+        '<div class="sidebar"><ul><li>no</li></ul></div>',
+        "<ol><li>tail ",
+        (F.col("doc_id") % 7).cast("string"),
+        "</body></html>",
     )
     ex = extract(raw)
     return ex.select("url", F.posexplode("lists").alias("pos", "t")).select(
@@ -1228,32 +1140,23 @@ def doc_images(spark, sf):
     from doc_id so DuckDB predicts every (url, pos, src, alt) row,
     ``pos`` being document order."""
     docs = load(spark, sf, "documents")
-    did = F.col("doc_id").cast("string")
-    raw = docs.select(
-        did.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><p>"),
-                F.col("text"),
-                F.lit("</p><img src='/i/"),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit(".png' alt='a  "),
-                (F.col("doc_id") % 3).cast("string"),
-                F.lit("'><img src=' /p"),
-                (F.col("doc_id") % 5).cast("string"),
-                F.lit(".gif '/><img alt='only'>"),
-                F.lit("<img src='data:image/gif;base64,R0' alt='inline'>"),
-                F.lit("<div class='sidebar'><img src='/no.png'></div>"),
-                F.lit("<img src='/i/"),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit(".png' alt='dup'>"),
-                F.lit("</body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><p>",
+        F.col("text"),
+        "</p><img src='/i/",
+        (F.col("doc_id") % 7).cast("string"),
+        ".png' alt='a  ",
+        (F.col("doc_id") % 3).cast("string"),
+        "'><img src=' /p",
+        (F.col("doc_id") % 5).cast("string"),
+        ".gif '/><img alt='only'>",
+        "<img src='data:image/gif;base64,R0' alt='inline'>",
+        "<div class='sidebar'><img src='/no.png'></div>",
+        "<img src='/i/",
+        (F.col("doc_id") % 7).cast("string"),
+        ".png' alt='dup'>",
+        "</body></html>",
     )
     ex = extract(raw)
     return ex.select(
@@ -1396,38 +1299,25 @@ def doc_jsonld(spark, sf):
     with deterministic JSON derived from doc_id so DuckDB predicts every
     (url, pos, payload) row."""
     docs = load(spark, sf, "documents")
-    did = F.col("doc_id").cast("string")
-    raw = docs.select(
-        did.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><p>"),
-                F.col("text"),
-                F.lit(
-                    '</p><script type="application/ld+json"> '
-                    '{"@type":"Article","k":'
-                ),
-                (F.col("doc_id") % 9).cast("string"),
-                F.lit(',"s": "v'),
-                (F.col("doc_id") % 4).cast("string"),
-                F.lit('"} </script>'),
-                F.lit('<script type="application/ld+json"/>'),
-                F.lit("<script>ignore();</script>"),
-                F.lit(
-                    '<div class="promo">'
-                    '<script type="application/ld+json">{"x":1}</script>'
-                    "</div>"
-                ),
-                F.lit('<nav><script type="application/ld+json">{"n":'),
-                (F.col("doc_id") % 6).cast("string"),
-                F.lit("}</script></nav>"),
-                F.lit("</body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><p>",
+        F.col("text"),
+        '</p><script type="application/ld+json"> '
+        '{"@type":"Article","k":',
+        (F.col("doc_id") % 9).cast("string"),
+        ',"s": "v',
+        (F.col("doc_id") % 4).cast("string"),
+        '"} </script>',
+        '<script type="application/ld+json"/>',
+        "<script>ignore();</script>",
+        '<div class="promo">'
+        '<script type="application/ld+json">{"x":1}</script>'
+        "</div>",
+        '<nav><script type="application/ld+json">{"n":',
+        (F.col("doc_id") % 6).cast("string"),
+        "}</script></nav>",
+        "</body></html>",
     )
     ex = extract(raw)
     return ex.select(
@@ -1514,32 +1404,23 @@ def doc_robots(spark, sf):
     loses, and a boiler-region robots that is never seen — with the
     directive chosen by doc_id so DuckDB predicts every row."""
     docs = load(spark, sf, "documents")
-    did = F.col("doc_id").cast("string")
     winner = (
         F.when(F.col("doc_id") % 3 == 0, "index,   Follow")
         .when(F.col("doc_id") % 3 == 1, "NOINDEX,NOFOLLOW")
         .otherwise("NoArchive , NoSnippet")
     )
-    raw = docs.select(
-        did.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head><meta name='robots' content='  '>"),
-                F.lit("<meta name=' ROBOTS ' content=' "),
-                winner,
-                F.lit(" '><meta name='robots' content='loses'>"),
-                F.lit("</head><body>"),
-                F.lit("<div class='promo'>"
-                      "<meta name='robots' content='hidden'></div>"),
-                F.lit("<p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head><meta name='robots' content='  '>",
+        "<meta name=' ROBOTS ' content=' ",
+        winner,
+        " '><meta name='robots' content='loses'>",
+        "</head><body>",
+        "<div class='promo'>"
+        "<meta name='robots' content='hidden'></div>",
+        "<p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     ex = extract(raw)
     return ex.select("url", "robots_meta")
@@ -1600,33 +1481,24 @@ def doc_alternates(spark, sf):
     values from doc_id so DuckDB predicts every (url, pos, hreflang,
     ltype, href) row."""
     docs = load(spark, sf, "documents")
-    did = F.col("doc_id").cast("string")
-    raw = docs.select(
-        did.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head><link rel='alternate' hreflang=' FR-"),
-                (F.col("doc_id") % 4).cast("string"),
-                F.lit(" ' href=' /fr/"),
-                (F.col("doc_id") % 9).cast("string"),
-                F.lit(" '><link rel='alternate' "
-                      "type=' Application/RSS+XML ' href='/feed"),
-                (F.col("doc_id") % 3).cast("string"),
-                F.lit(".xml'><link rel='alternate nofollow' href='/print'>"
-                      "<link rel='alternate'>"
-                      "<link rel='stylesheet' href='/css'>"
-                      "</head><body>"
-                      "<div class='promo'>"
-                      "<link rel='alternate' hreflang='xx' href='/never'>"
-                      "</div><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head><link rel='alternate' hreflang=' FR-",
+        (F.col("doc_id") % 4).cast("string"),
+        " ' href=' /fr/",
+        (F.col("doc_id") % 9).cast("string"),
+        " '><link rel='alternate' "
+        "type=' Application/RSS+XML ' href='/feed",
+        (F.col("doc_id") % 3).cast("string"),
+        ".xml'><link rel='alternate nofollow' href='/print'>"
+        "<link rel='alternate'>"
+        "<link rel='stylesheet' href='/css'>"
+        "</head><body>"
+        "<div class='promo'>"
+        "<link rel='alternate' hreflang='xx' href='/never'>"
+        "</div><p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     ex = extract(raw)
     return ex.select(
@@ -1749,23 +1621,16 @@ def frontier_feed(spark, sf):
         F.lit(".example/sec"), (did % 3).cast("string"),
         F.lit("/page"), did.cast("string"), F.lit(".html"),
     )
-    raw = docs.select(
-        page_url.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><main><p>t</p></main><p><a href='/p/"),
-                (did + 1).cast("string"),
-                F.lit("'>next</a> <a href='../deep/dive"),
-                (did % 4).cast("string"),
-                F.lit(".html'>deep</a> <a href='https://hub.example/t?q="),
-                (did % 7).cast("string"),
-                F.lit("'>hub</a> <a href='#frag'>skip</a></p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit("en").alias("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><main><p>t</p></main><p><a href='/p/",
+        (did + 1).cast("string"),
+        "'>next</a> <a href='../deep/dive",
+        (did % 4).cast("string"),
+        ".html'>deep</a> <a href='https://hub.example/t?q=",
+        (did % 7).cast("string"),
+        "'>hub</a> <a href='#frag'>skip</a></p></body></html>",
+        url=page_url,
     )
     ex = extract(raw, want=("outlinks",))
     links = ex.select(
@@ -1815,32 +1680,24 @@ def doc_refresh(spark, sf):
         )
         .otherwise(F.lit(None).cast("string"))
     )
-    raw = docs.select(
-        did.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
+    raw = html_docs(
+        docs,
+        "<html><head><meta http-equiv='refresh' content=' '>",
+        F.when(
+            winner.isNotNull(),
             F.concat(
-                F.lit("<html><head><meta http-equiv='refresh' content=' '>"),
-                F.when(
-                    winner.isNotNull(),
-                    F.concat(
-                        F.lit("<meta HTTP-EQUIV=' Refresh ' content=' "),
-                        winner,
-                        F.lit(" '><meta http-equiv='refresh'"
-                              " content='9;url=/loses'>"),
-                    ),
-                ).otherwise(F.lit("")),
-                F.lit("</head><body>"),
-                F.lit("<div class='promo'><meta http-equiv='refresh'"
-                      " content='1;url=/hidden'></div>"),
-                F.lit("<p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
+                F.lit("<meta HTTP-EQUIV=' Refresh ' content=' "),
+                winner,
+                F.lit(" '><meta http-equiv='refresh'"
+                      " content='9;url=/loses'>"),
             ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+        ).otherwise(F.lit("")),
+        "</head><body>",
+        "<div class='promo'><meta http-equiv='refresh'"
+        " content='1;url=/hidden'></div>",
+        "<p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     ex = extract(raw, want=("refresh",))
     return ex.select(
@@ -1914,10 +1771,6 @@ def doc_base(spark, sf):
 
     docs = load(spark, sf, "documents")
     did = F.col("doc_id")
-    page_url = F.concat(
-        F.lit("https://site"), (did % 4).cast("string"),
-        F.lit(".example/a/page"), did.cast("string"), F.lit(".html"),
-    )
     winner = (
         F.when(
             did % 3 == 0,
@@ -1932,27 +1785,19 @@ def doc_base(spark, sf):
         )
         .otherwise(F.lit(None).cast("string"))
     )
-    raw = docs.select(
-        did.cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
+    raw = html_docs(
+        docs,
+        "<html><head><base target='_blank'>",
+        F.when(
+            winner.isNotNull(),
             F.concat(
-                F.lit("<html><head><base target='_blank'>"),
-                F.when(
-                    winner.isNotNull(),
-                    F.concat(
-                        F.lit("<base href=' "), winner,
-                        F.lit(" '><base href='/base-loses/'>"),
-                    ),
-                ).otherwise(F.lit("")),
-                F.lit("</head><body><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
+                F.lit("<base href=' "), winner,
+                F.lit(" '><base href='/base-loses/'>"),
             ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+        ).otherwise(F.lit("")),
+        "</head><body><p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     ex = extract(raw, want=("base",)).select("url", "base_href")
     udid = F.col("url").cast("long")
@@ -2023,26 +1868,19 @@ def doc_forms(spark, sf):
         F.lit("https://f"), (did % 4).cast("string"),
         F.lit(".example/app/page"), did.cast("string"), F.lit(".html"),
     )
-    raw = docs.select(
-        page_url.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><p>t</p>"
-                      "<form method=' POST ' action=' /Login"),
-                (did % 5).cast("string"),
-                F.lit(" '><input></form><form action='search"),
-                (did % 3).cast("string"),
-                F.lit(".php'><input></form>"
-                      "<nav><form action='/nav'></form></nav>"
-                      "<div class='sidebar'><form action='/b'></form></div>"
-                      "<form class='promo' action='/ad'></form>"
-                      "</body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><p>t</p>"
+        "<form method=' POST ' action=' /Login",
+        (did % 5).cast("string"),
+        " '><input></form><form action='search",
+        (did % 3).cast("string"),
+        ".php'><input></form>"
+        "<nav><form action='/nav'></form></nav>"
+        "<div class='sidebar'><form action='/b'></form></div>"
+        "<form class='promo' action='/ad'></form>"
+        "</body></html>",
+        url=page_url,
     )
     ex = extract(raw, want=("forms",))
     t = ex.select("url", F.posexplode("forms").alias("pos", "t"))
@@ -2167,22 +2005,15 @@ def dedup_canonical(spark, sf):
     decoy = F.when(
         did % 3 != 2, F.lit('<link rel="canonical" href="/second-loses">')
     ).otherwise(F.lit(""))
-    raw = docs.select(
-        page_url.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head>"),
-                canon_link,
-                decoy,
-                F.lit("</head><body><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head>",
+        canon_link,
+        decoy,
+        "</head><body><p>",
+        F.col("text"),
+        "</p></body></html>",
+        url=page_url,
     )
     ex = extract(raw, want=("canonical", "base"))
     # two-STEP resolution on purpose: resolve_url embeds its base operand
@@ -2259,38 +2090,30 @@ def doc_pagination(spark, sf):
         (did + 1).cast("string"), F.lit(".html"),
     )
     prev_ref = F.concat(F.lit("?p="), (did % 5).cast("string"))
-    raw = docs.select(
-        did.cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
+    raw = html_docs(
+        docs,
+        "<html><head><link rel='next' href=''>",
+        F.when(
+            has_next,
             F.concat(
-                F.lit("<html><head><link rel='next' href=''>"),
-                F.when(
-                    has_next,
-                    F.concat(
-                        F.lit("<link rel=' NEXT alternate ' href=' "),
-                        next_ref,
-                        F.lit(" '><link rel='next' href='/next-loses'>"),
-                    ),
-                ).otherwise(F.lit("")),
-                F.when(
-                    has_prev,
-                    F.concat(
-                        F.lit("<nav><link rel='Previous' href='"),
-                        prev_ref,
-                        F.lit("'></nav><link rel='prev' href='/prev-loses'>"),
-                    ),
-                ).otherwise(F.lit("")),
-                F.lit("</head><body>"
-                      "<div class='promo'><link rel='next' href='/hid'>"
-                      "</div><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
+                F.lit("<link rel=' NEXT alternate ' href=' "),
+                next_ref,
+                F.lit(" '><link rel='next' href='/next-loses'>"),
             ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+        ).otherwise(F.lit("")),
+        F.when(
+            has_prev,
+            F.concat(
+                F.lit("<nav><link rel='Previous' href='"),
+                prev_ref,
+                F.lit("'></nav><link rel='prev' href='/prev-loses'>"),
+            ),
+        ).otherwise(F.lit("")),
+        "</head><body>"
+        "<div class='promo'><link rel='next' href='/hid'>"
+        "</div><p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     ex = extract(raw, want=("pagination",)).select(
         "url", "next_href", "prev_href"
@@ -2363,28 +2186,21 @@ def doc_series(spark, sf):
     page_url = F.concat(
         F.lit("https://s.example/p"), did.cast("string"), F.lit(".html")
     )
-    raw = docs.select(
-        page_url.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
+    raw = html_docs(
+        docs,
+        "<html><head>",
+        F.when(
+            did % 4 != 3,
             F.concat(
-                F.lit("<html><head>"),
-                F.when(
-                    did % 4 != 3,
-                    F.concat(
-                        F.lit("<link rel='next' href='p"),
-                        (did + 1).cast("string"),
-                        F.lit(".html'>"),
-                    ),
-                ).otherwise(F.lit("")),
-                F.lit("</head><body><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
+                F.lit("<link rel='next' href='p"),
+                (did + 1).cast("string"),
+                F.lit(".html'>"),
             ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+        ).otherwise(F.lit("")),
+        "</head><body><p>",
+        F.col("text"),
+        "</p></body></html>",
+        url=page_url,
     )
     ex = extract(raw, want=("pagination",)).select("url", "next_href")
     edges = ex.select(
@@ -2512,20 +2328,15 @@ def doc_markdown(spark, sf):
     reassembly end to end."""
     docs = load(spark, sf, "documents")
     did = F.col("doc_id")
-    raw = docs.select(
-        did.cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><h1>Title "), did.cast("string"),
-                F.lit("</h1><p>para one "), did.cast("string"),
-                F.lit("</p><h2>Sec "), (did % 5).cast("string"),
-                F.lit("</h2><p>para two</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><h1>Title ",
+        did.cast("string"),
+        "</h1><p>para one ",
+        did.cast("string"),
+        "</p><h2>Sec ",
+        (did % 5).cast("string"),
+        "</h2><p>para two</p></body></html>",
     )
     ex = extract(raw, want=("text", "spans", "headings"))
     return markdown_df(ex)
@@ -2575,41 +2386,27 @@ def doc_microdata(spark, sf):
     no shuffle at all — the plan is scan → project → generate."""
     docs = load(spark, sf, "documents")
     did = F.col("doc_id")
-    raw = docs.select(
-        did.cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit(
-                    "<html><body>"
-                    "<div itemscope itemtype=' https://schema.org/Product '>"
-                    "<h2 itemprop='name brand'>Widget "
-                ),
-                (did % 7).cast("string"),
-                F.lit("</h2><a itemprop='url' href=' /p/"),
-                (did % 9).cast("string"),
-                F.lit(" '>buy</a><meta itemprop='sku' content=' SK  "),
-                (did % 5).cast("string"),
-                F.lit(
-                    " '><div itemprop='offers' itemscope "
-                    "itemtype='https://schema.org/Offer'>"
-                    "<span itemprop='price'>"
-                ),
-                (did % 13).cast("string"),
-                F.lit(
-                    " usd</span></div>"
-                    "<div class='promo'><span itemprop='never'>x</span>"
-                    "</div></div><span itemprop='stray'>s"
-                ),
-                (did % 3).cast("string"),
-                F.lit("</span><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body>"
+        "<div itemscope itemtype=' https://schema.org/Product '>"
+        "<h2 itemprop='name brand'>Widget ",
+        (did % 7).cast("string"),
+        "</h2><a itemprop='url' href=' /p/",
+        (did % 9).cast("string"),
+        " '>buy</a><meta itemprop='sku' content=' SK  ",
+        (did % 5).cast("string"),
+        " '><div itemprop='offers' itemscope "
+        "itemtype='https://schema.org/Offer'>"
+        "<span itemprop='price'>",
+        (did % 13).cast("string"),
+        " usd</span></div>"
+        "<div class='promo'><span itemprop='never'>x</span>"
+        "</div></div><span itemprop='stray'>s",
+        (did % 3).cast("string"),
+        "</span><p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     ex = extract(raw, want=("microdata",))
     return ex.select(
@@ -2729,38 +2526,24 @@ def doc_rdfa(spark, sf):
     no shuffle at all — the plan is scan → project → generate."""
     docs = load(spark, sf, "documents")
     did = F.col("doc_id")
-    raw = docs.select(
-        did.cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit(
-                    "<html><body>"
-                    "<div vocab=' https://schema.org/ ' typeof=' Product '>"
-                    "<h2 property='name brand'>Widget "
-                ),
-                (did % 7).cast("string"),
-                F.lit("</h2><a property='url' href=' /p/"),
-                (did % 9).cast("string"),
-                F.lit(" '>buy</a><meta property='sku' content=' SK  "),
-                (did % 5).cast("string"),
-                F.lit(
-                    " '><div property='offers' typeof='Offer'>"
-                    "<span property='price'>"
-                ),
-                (did % 13).cast("string"),
-                F.lit(
-                    " usd</span></div>"
-                    "<div class='promo'><span property='never'>x</span>"
-                    "</div></div><span property='stray'>s"
-                ),
-                (did % 3).cast("string"),
-                F.lit("</span></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.lit("en").alias("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body>"
+        "<div vocab=' https://schema.org/ ' typeof=' Product '>"
+        "<h2 property='name brand'>Widget ",
+        (did % 7).cast("string"),
+        "</h2><a property='url' href=' /p/",
+        (did % 9).cast("string"),
+        " '>buy</a><meta property='sku' content=' SK  ",
+        (did % 5).cast("string"),
+        " '><div property='offers' typeof='Offer'>"
+        "<span property='price'>",
+        (did % 13).cast("string"),
+        " usd</span></div>"
+        "<div class='promo'><span property='never'>x</span>"
+        "</div></div><span property='stray'>s",
+        (did % 3).cast("string"),
+        "</span></body></html>",
     )
     ex = extract(raw, want=("rdfa",))
     t = ex.select(

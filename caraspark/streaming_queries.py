@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from caraspark import streaming as S
+from caraspark.corpus import html_docs
 from caraspark.relational import Q
 
 REGISTRY: dict[str, Q] = {}
@@ -184,19 +185,11 @@ def stream_extract(spark, sf):
     from caraspark.extract import extract
 
     docs = S.replay_documents_stream(spark, sf)
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><main><p>"),
-                F.col("text"),
-                F.lit("</p></main></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><main><p>",
+        F.col("text"),
+        "</p></main></body></html>",
     )
     out = extract(raw).select(
         "url",
@@ -241,25 +234,17 @@ def stream_anchor_agg(spark, sf):
     from caraspark.extract import extract
 
     docs = S.replay_documents_stream(spark, sf)
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><main><p>"),
-                F.col("text"),
-                F.lit('</p></main><p><a href="/hub/'),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit('">w'),
-                (F.col("doc_id") % 5).cast("string"),
-                F.lit(' topic</a> <a href="/p/'),
-                (F.col("doc_id") + 1).cast("string"),
-                F.lit('">next</a></p></body></html>'),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><main><p>",
+        F.col("text"),
+        '</p></main><p><a href="/hub/',
+        (F.col("doc_id") % 7).cast("string"),
+        '">w',
+        (F.col("doc_id") % 5).cast("string"),
+        ' topic</a> <a href="/p/',
+        (F.col("doc_id") + 1).cast("string"),
+        '">next</a></p></body></html>',
     )
     pairs = (
         extract(raw)
@@ -306,23 +291,15 @@ def stream_tables(spark, sf):
     from caraspark.extract import extract
 
     docs = S.replay_documents_stream(spark, sf)
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><p>"),
-                F.col("text"),
-                F.lit("</p><table><tr><th>grp"),
-                (F.col("doc_id") % 5).cast("string"),
-                F.lit("</th></tr><tr><td>"),
-                (F.col("doc_id") % 11).cast("string"),
-                F.lit("</td></tr></table></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><p>",
+        F.col("text"),
+        "</p><table><tr><th>grp",
+        (F.col("doc_id") % 5).cast("string"),
+        "</th></tr><tr><td>",
+        (F.col("doc_id") % 11).cast("string"),
+        "</td></tr></table></body></html>",
     )
     cells = (
         extract(raw)
@@ -425,23 +402,15 @@ def stream_lists(spark, sf):
     from caraspark.extract import extract
 
     docs = S.replay_documents_stream(spark, sf)
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><p>"),
-                F.col("text"),
-                F.lit("</p><ul><li>step"),
-                (F.col("doc_id") % 4).cast("string"),
-                F.lit("<ol><li>"),
-                (F.col("doc_id") % 9).cast("string"),
-                F.lit("</li></ol></li></ul></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><p>",
+        F.col("text"),
+        "</p><ul><li>step",
+        (F.col("doc_id") % 4).cast("string"),
+        "<ol><li>",
+        (F.col("doc_id") % 9).cast("string"),
+        "</li></ol></li></ul></body></html>",
     )
     items = (
         extract(raw)
@@ -487,23 +456,15 @@ def stream_images(spark, sf):
     from caraspark.extract import extract
 
     docs = S.replay_documents_stream(spark, sf)
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><p>"),
-                F.col("text"),
-                F.lit("</p><img src='/s/"),
-                (F.col("doc_id") % 6).cast("string"),
-                F.lit(".png' alt='y'><img src='data:g"),
-                (F.col("doc_id") % 3).cast("string"),
-                F.lit("'></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><p>",
+        F.col("text"),
+        "</p><img src='/s/",
+        (F.col("doc_id") % 6).cast("string"),
+        ".png' alt='y'><img src='data:g",
+        (F.col("doc_id") % 3).cast("string"),
+        "'></body></html>",
     )
     elems = (
         extract(raw)
@@ -543,23 +504,15 @@ def stream_jsonld(spark, sf):
     from caraspark.extract import extract
 
     docs = S.replay_documents_stream(spark, sf)
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><p>"),
-                F.col("text"),
-                F.lit('</p><script type="application/ld+json">{"k":'),
-                (F.col("doc_id") % 8).cast("string"),
-                F.lit("}</script>"),
-                F.lit('<script type="application/ld+json"></script>'),
-                F.lit("</body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><p>",
+        F.col("text"),
+        '</p><script type="application/ld+json">{"k":',
+        (F.col("doc_id") % 8).cast("string"),
+        "}</script>",
+        '<script type="application/ld+json"></script>',
+        "</body></html>",
     )
     p = (
         extract(raw)
@@ -597,21 +550,13 @@ def stream_robots(spark, sf):
         .when(F.col("doc_id") % 3 == 2, "index,  Follow")
         .otherwise("ALL")
     )
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head><meta name='robots' content='"),
-                directive,
-                F.lit("'></head><body><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head><meta name='robots' content='",
+        directive,
+        "'></head><body><p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     out = (
         extract(raw)
@@ -646,23 +591,15 @@ def stream_alternates(spark, sf):
     from caraspark.extract import extract
 
     docs = S.replay_documents_stream(spark, sf)
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head><link rel='alternate' hreflang='fr-"),
-                (F.col("doc_id") % 4).cast("string"),
-                F.lit("' href='/fr'>"
-                      "<link rel='alternate' type='application/rss+xml' "
-                      "href='/feed.xml'></head><body><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head><link rel='alternate' hreflang='fr-",
+        (F.col("doc_id") % 4).cast("string"),
+        "' href='/fr'>"
+        "<link rel='alternate' type='application/rss+xml' "
+        "href='/feed.xml'></head><body><p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     out = (
         extract(raw)
@@ -706,21 +643,14 @@ def stream_frontier(spark, sf):
         F.lit(".example/sec"), (did % 3).cast("string"),
         F.lit("/page"), did.cast("string"), F.lit(".html"),
     )
-    raw = docs.select(
-        page_url.alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><main><p>t</p></main><p><a href='/p/"),
-                (did + 1).cast("string"),
-                F.lit("'>next</a> <a href='https://hub.example/t?q="),
-                (did % 7).cast("string"),
-                F.lit("'>hub</a></p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><main><p>t</p></main><p><a href='/p/",
+        (did + 1).cast("string"),
+        "'>next</a> <a href='https://hub.example/t?q=",
+        (did % 7).cast("string"),
+        "'>hub</a></p></body></html>",
+        url=page_url,
     )
     links = (
         extract(raw, want=("outlinks",))
@@ -764,21 +694,13 @@ def stream_refresh(spark, sf):
         )
         .otherwise(F.lit(""))
     )
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head>"),
-                tag,
-                F.lit("</head><body><p>"),
-                F.col("text"),
-                F.lit("</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head>",
+        tag,
+        "</head><body><p>",
+        F.col("text"),
+        "</p></body></html>",
     )
     out = (
         extract(raw, want=("refresh",))
@@ -809,28 +731,20 @@ def stream_pagination(spark, sf):
 
     docs = S.replay_documents_stream(spark, sf)
     did = F.col("doc_id")
-    raw = docs.select(
-        did.cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><head>"),
-                F.when(
-                    did % 3 != 2,
-                    F.concat(F.lit("<link rel='next' href='/p"),
-                             (did + 1).cast("string"), F.lit("'>")),
-                ).otherwise(F.lit("")),
-                F.when(
-                    did % 2 == 0,
-                    F.concat(F.lit("<link rel='prev' href='/p"),
-                             (did - 1).cast("string"), F.lit("'>")),
-                ).otherwise(F.lit("")),
-                F.lit("</head><body><p>t</p></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><head>",
+        F.when(
+            did % 3 != 2,
+            F.concat(F.lit("<link rel='next' href='/p"),
+                     (did + 1).cast("string"), F.lit("'>")),
+        ).otherwise(F.lit("")),
+        F.when(
+            did % 2 == 0,
+            F.concat(F.lit("<link rel='prev' href='/p"),
+                     (did - 1).cast("string"), F.lit("'>")),
+        ).otherwise(F.lit("")),
+        "</head><body><p>t</p></body></html>",
     )
     ex = extract(raw, want=("pagination",))
     role = (
@@ -1092,24 +1006,16 @@ def stream_microdata(spark, sf):
     from caraspark.extract import extract
 
     docs = S.replay_documents_stream(spark, sf)
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><div itemscope itemtype='T"),
-                (F.col("doc_id") % 4).cast("string"),
-                F.lit("'><span itemprop='name'>N "),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit("</span><meta itemprop='sku' content='S"),
-                (F.col("doc_id") % 5).cast("string"),
-                F.lit("'></div><span itemprop='stray'>x</span>"),
-                F.lit("</body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><div itemscope itemtype='T",
+        (F.col("doc_id") % 4).cast("string"),
+        "'><span itemprop='name'>N ",
+        (F.col("doc_id") % 7).cast("string"),
+        "</span><meta itemprop='sku' content='S",
+        (F.col("doc_id") % 5).cast("string"),
+        "'></div><span itemprop='stray'>x</span>",
+        "</body></html>",
     )
     t = (
         extract(raw, want=("microdata",))
@@ -1149,23 +1055,15 @@ def stream_rdfa(spark, sf):
     from caraspark.extract import extract
 
     docs = S.replay_documents_stream(spark, sf)
-    raw = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("timestamp_ntz").alias("warc_ts"),
-        F.encode(
-            F.concat(
-                F.lit("<html><body><div vocab='V"),
-                (F.col("doc_id") % 3).cast("string"),
-                F.lit("' typeof='T'><span property='name'>N "),
-                (F.col("doc_id") % 7).cast("string"),
-                F.lit("</span><span property='sameAs' resource='/c/"),
-                (F.col("doc_id") % 5).cast("string"),
-                F.lit("'>x</span></div></body></html>"),
-            ),
-            "utf-8",
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("lang"),
+    raw = html_docs(
+        docs,
+        "<html><body><div vocab='V",
+        (F.col("doc_id") % 3).cast("string"),
+        "' typeof='T'><span property='name'>N ",
+        (F.col("doc_id") % 7).cast("string"),
+        "</span><span property='sameAs' resource='/c/",
+        (F.col("doc_id") % 5).cast("string"),
+        "'>x</span></div></body></html>",
     )
     t = (
         extract(raw, want=("rdfa",))

@@ -20,9 +20,16 @@ N_DOCS = 64
 
 @pytest.fixture(scope="module")
 def extracted_rows(spark):
-    # salted mode here; the invariance test below compares against the
-    # narrow mode — covering both plans AND partitioning-independence
-    df = extract(synth_df(spark, N_DOCS, partitions=8), num_partitions=8, salt=True)
+    # giants mode with threshold 0: every row takes the round-robin
+    # exchange; the invariance tests below compare the narrow plan and a
+    # mixed giants split against it — covering both plans AND
+    # partitioning-independence
+    df = extract(
+        synth_df(spark, N_DOCS, partitions=8),
+        num_partitions=8,
+        salt="giants",
+        giant_threshold=0,
+    )
     rows = {r["url"]: r for r in df.collect()}
     assert len(rows) == N_DOCS
     return rows
@@ -68,8 +75,9 @@ def test_spark_matches_local_engine(extracted_rows):
 
 
 def test_distribution_invariance(spark, extracted_rows):
-    """narrow/1-partition vs salted/8-partition: byte-identical per url."""
-    df1 = extract(synth_df(spark, N_DOCS, partitions=3), num_partitions=1)
+    """The narrow plan over 3 input partitions vs the fixture's exchange
+    over 8 input partitions: byte-identical per url."""
+    df1 = extract(synth_df(spark, N_DOCS, partitions=3))
     rows1 = {r["url"]: r for r in df1.collect()}
     assert set(rows1) == set(extracted_rows)
     for url, a in rows1.items():
@@ -82,8 +90,9 @@ def test_distribution_invariance(spark, extracted_rows):
 
 def test_giants_mode_invariance(spark, extracted_rows):
     """salt="giants" (selective: only docs over the threshold shuffle)
-    produces byte-identical results to the fully-salted reference rows —
-    including docs that sit exactly at the routing boundary."""
+    produces byte-identical results to the fixture's all-exchange
+    reference rows — including docs that sit exactly at the routing
+    boundary."""
     df = extract(
         synth_df(spark, N_DOCS, partitions=5),
         num_partitions=4,
@@ -102,6 +111,13 @@ def test_giants_mode_invariance(spark, extracted_rows):
             routed_giant += 1
     # both branches actually ran (narrow rows carry salt=-1)
     assert 0 < routed_giant < N_DOCS
+
+
+def test_salt_accepts_only_false_or_giants(spark):
+    df = synth_df(spark, 4, partitions=1)
+    for bad in (True, "salted", None):
+        with pytest.raises(ValueError, match="salt"):
+            extract(df, salt=bad)
 
 
 def test_lineage_populated(extracted_rows):
@@ -311,10 +327,10 @@ def test_html_has_content_matches_full_extraction():
 def test_giants_nbytes_col_routing(spark, tmp_path, extracted_rows):
     """Stored-nbytes routing (ingest size layout): extract with
     nbytes_col over a range-clustered corpus is byte-identical to the
-    salted reference, both branch filters PUSH to the parquet scan
-    (row-group stats prune the other branch's bytes — no second
-    blob-column decode), and the routing column never crosses the Arrow
-    boundary into the UDF."""
+    fixture's all-exchange reference, both branch filters PUSH to the
+    parquet scan (row-group stats prune the other branch's bytes — no
+    second blob-column decode), and the routing column never crosses the
+    Arrow boundary into the UDF."""
     from caraspark.corpus import synth_df, write_size_layout
     from caraspark.extract import extract
 

@@ -103,7 +103,7 @@ def test_asof_join_is_single_shuffle_no_join_node(spark, sf_smoke, qs):
     assert p.count("Exchange hashpartitioning") == 1, p
 
 
-# --- extract path: narrow by default, one exchange when salted -------------
+# --- extract path: narrow by default, one exchange for the giants ---------
 
 
 def test_extract_narrow_plan_has_no_shuffle(spark):
@@ -111,19 +111,13 @@ def test_extract_narrow_plan_has_no_shuffle(spark):
     assert "Exchange" not in p, p
 
 
-def test_extract_salted_plan_has_exactly_one_shuffle(spark):
-    p = plan_of(extract(synth_df(spark, 64), salt=True), "simple")
-    assert p.count("Exchange hashpartitioning") == 1, p
-    assert "size_class" in p and "salt" in p
-
-
 def test_extract_giants_plan_shuffles_only_the_giant_branch(spark):
     # selective salting: one union of two branches — the small-doc branch
     # is narrow (no exchange above its scan), the giant branch carries the
-    # single exchange. The giant exchange is ROUND-ROBIN, not a hash on
-    # (size_class, salt): giants are few and individually expensive, so
-    # hash-collision bins of 3–4 giants set the task tail; round-robin
-    # deals them out ≤1-ish per slice (extract()'s giant_fanout).
+    # single exchange. The giant exchange is ROUND-ROBIN, not a hash key:
+    # giants are few and individually expensive, so hash-collision bins
+    # of 3–4 giants set the task tail; round-robin deals them out ≤1-ish
+    # per slice (extract.GIANT_FANOUT).
     p = plan_of(
         extract(synth_df(spark, 64), salt="giants", giant_threshold=1024),
         "simple",
@@ -775,7 +769,7 @@ def test_ppl_buckets_cutoffs_broadcast_corpus_never_sorted(spark, sf_smoke, qs):
 def test_filter_noindex_is_scan_stage_no_shuffle(spark, sf_smoke, qs):
     """The compliance filter must stay a scan-stage predicate over the
     extracted robots_meta column: it may add NO exchange beyond the ones
-    the extraction pipeline itself performs (the salting repartition) —
+    the extraction pipeline itself performs (none on the narrow plan) —
     at 10^12 docs this runs in front of every consumer."""
     from caraspark.extract_queries import _extracted
 

@@ -30,7 +30,7 @@ def child(master: str, corpus: str, mode: str, repeats: int = 5) -> None:
     from caraspark.extract import extract
     from caraspark.session import get_spark
 
-    salt: bool | str = {"salted": True, "giants": "giants"}.get(mode, False)
+    salt: bool | str = "giants" if mode == "giants" else False
     # the _sized corpus is range-clustered by doc size: byte-budgeted
     # splits there pack wildly unequal DOC counts (per-doc parse cost
     # dominates on small docs), so scans of it get row-aware split
@@ -96,7 +96,7 @@ def main() -> None:
     modes = (
         sys.argv[2].split(",")
         if len(sys.argv) > 2
-        else ["narrow", "salted", "giants", "narrow_sized"]
+        else ["narrow", "giants", "narrow_sized"]
     )
     # --density-only: skip the per-mode 8c/32c sweeps and run ONLY the
     # headline phase (interleaved solo / 4x / same-window hw probe rounds)
@@ -306,9 +306,6 @@ def main() -> None:
         "unit": "ratio",
         "docs_per_sec_8c": dps("local[8]", "narrow") if has("narrow") else None,
         "docs_per_sec_32c": dps("local[32]", "narrow") if has("narrow") else None,
-        "salted_efficiency": eff("salted") if has("salted") else None,
-        "salted_docs_per_sec_8c": dps("local[8]", "salted") if ("local[8]", "salted") in results else None,
-        "salted_docs_per_sec_32c": dps("local[32]", "salted") if ("local[32]", "salted") in results else None,
         "giants_efficiency": eff("giants") if has("giants") else None,
         "giants_docs_per_sec_8c": dps("local[8]", "giants") if ("local[8]", "giants") in results else None,
         "giants_docs_per_sec_32c": dps("local[32]", "giants") if ("local[32]", "giants") in results else None,
@@ -421,11 +418,11 @@ session:
 
 ## Skew modes
 
-| Metric | narrow (default, writer-order corpus) | salted (full-shuffle skew mode, writer-order) | narrow on SIZED corpus (skew-clustered control) | giants on SIZED corpus (selective skew mode + stored-nbytes routing) |
-|---|---|---|---|---|
-| docs/s @ 8 cores, idle VM | {s["docs_per_sec_8c"]} | {s["salted_docs_per_sec_8c"]} | {s["narrow_sized_docs_per_sec_8c"]} | {s["giants_docs_per_sec_8c"]} |
-| docs/s @ 32 cores | {s["docs_per_sec_32c"]} | {s["salted_docs_per_sec_32c"]} | {s["narrow_sized_docs_per_sec_32c"]} | {s["giants_docs_per_sec_32c"]} |
-| efficiency vs idle-VM baseline | {s["idle_baseline_efficiency"]} | {s["salted_efficiency"]} | {s["narrow_sized_efficiency"]} | {s["giants_efficiency"]} |
+| Metric | narrow (default, writer-order corpus) | narrow on SIZED corpus (skew-clustered control) | giants on SIZED corpus (selective skew mode + stored-nbytes routing) |
+|---|---|---|---|
+| docs/s @ 8 cores, idle VM | {s["docs_per_sec_8c"]} | {s["narrow_sized_docs_per_sec_8c"]} | {s["giants_docs_per_sec_8c"]} |
+| docs/s @ 32 cores | {s["docs_per_sec_32c"]} | {s["narrow_sized_docs_per_sec_32c"]} | {s["giants_docs_per_sec_32c"]} |
+| efficiency vs idle-VM baseline | {s["idle_baseline_efficiency"]} | {s["narrow_sized_efficiency"]} | {s["giants_efficiency"]} |
 
 `giants` shuffles ONLY documents over the giant threshold (the skewed
 tail — a sub-percent of rows in a crawl) and unions them with the narrow
@@ -436,10 +433,10 @@ giant docs land in the tail file. There its routing filters push to the
 parquet footer (`nbytes` row-group stats), so each branch reads only its
 own bytes — no second blob-column scan — while `narrow_sized` (same
 bytes, no salting) inherits a straggler task that parses every giant
-serially. Compare columns 3 and 4: the gap is what the selective
+serially. Compare columns 2 and 3: the gap is what the selective
 exchange buys on a layout-skewed input. Since round 5 the giant
 branch deals its rows out ROUND-ROBIN over `num_partitions x
-giant_fanout` slices instead of hashing on (size_class, salt): with few
+GIANT_FANOUT` slices instead of hashing on a key: with few
 individually-expensive rows the most-loaded task is the wall, and a
 hash key leaves birthday-collision bins of 3-4 giants (the r4
 straggler). Same-window evidence for the change — cross-session
@@ -471,10 +468,7 @@ sides):
 Notes:
 * The default plan is narrow (zero shuffle): parquet scan splits already
   provide the parallelism; there is no serial stage, no driver collect, no
-  global sort anywhere in the extract path. The salted mode adds one
-  explicit exchange keyed on (size_class, salt) for inputs whose physical
-  layout clusters giant documents; its shuffle tax is exaggerated here
-  because synthetic documents parse ~100x cheaper per byte than real PDFs.
+  global sort anywhere in the extract path.
 * Byte-identity rate vs the frozen oracle: 100% (pytest golden suite).
 
 Reproduce: `python tools/bench_scaling.py {s["docs"]}`
