@@ -25,21 +25,11 @@ import math
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from caraspark.relational import Q
+from caraspark.relational import Q, registrar
 from caraspark.tables import load
 
 REGISTRY: dict[str, Q] = {}
-
-
-def _q(name: str, sql):
-    def deco(fn):
-        if name in REGISTRY:  # a silent overwrite hides a qkey
-            raise KeyError(f"duplicate qkey {name!r} in this module")
-        REGISTRY[name] = Q(fn, sql)
-        return fn
-
-    return deco
-
+_q = registrar(REGISTRY)
 
 # ---------------------------------------------------------------------------
 # PII redaction

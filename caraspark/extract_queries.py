@@ -29,21 +29,11 @@ from caraspark.oracle_freeze import (
     perdoc_cte,
     tables_cte,
 )
-from caraspark.relational import Q, REGISTRY as _REL  # reuse the dataclass
+from caraspark.relational import Q, registrar
 from caraspark.tables import load
 
 REGISTRY: dict[str, Q] = {}
-
-
-def _q(name: str, sql):
-    def deco(fn):
-        if name in REGISTRY:  # a silent overwrite hides a qkey
-            raise KeyError(f"duplicate qkey {name!r} in this module")
-        REGISTRY[name] = Q(fn, sql)
-        return fn
-
-    return deco
-
+_q = registrar(REGISTRY)
 
 _EXTRACT_CACHE: dict = {}
 

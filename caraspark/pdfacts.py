@@ -2,7 +2,9 @@
 covered by extract/sidetables): one mapInArrow pass computes a per-document
 facts row (header routing, token histogram, strict verdict, xref entry
 kinds, filters used, holes, reachability), and each qkey is a relational
-query over it.
+query over it. ``FACTS`` is declared like the side tables (a
+``sidetables.DocTable``), but over every document: an HTML document gets
+a row too.
 
 SQL oracles: the synth corpus is deterministic per recipe position
 (``idx % R`` → recipe; every PDF blob byte-identical across idx, every
@@ -17,67 +19,41 @@ truth stays independently pinned by tests/golden/.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pyarrow as pa
 from pyspark.sql import functions as F
 
 from caraspark.corpus import corpus_rows_for_sf, synth_df
 from caraspark.pdfacts_expected import RECIPE_FACTS
-from caraspark.relational import Q
+from caraspark.relational import Q, registrar
+from caraspark.sidetables import BIGINT, BOOLEAN, INT, STRING, doc_table
 
 REGISTRY: dict[str, Q] = {}
+_q = registrar(REGISTRY)
 
-
-def _q(name: str, sql):
-    def deco(fn):
-        if name in REGISTRY:  # a silent overwrite hides a qkey
-            raise KeyError(f"duplicate qkey {name!r} in this module")
-        REGISTRY[name] = Q(fn, sql)
-        return fn
-
-    return deco
-
-
-_FACTS_DDL = (
-    "url string, kind string, version string, valid boolean, strict boolean, "
-    "n_tokens int, n_tok_int int, n_tok_name int, n_tok_str int, "
-    "n_xref_inuse int, n_xref_free int, n_xref_compressed int, "
-    "filters string, n_objects int, n_reachable int, n_holes int, "
-    "hole_bytes bigint, encrypted boolean, hybrid boolean, text_md5 string"
-)
-_FACTS_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("kind", pa.string()),
-        ("version", pa.string()),
-        ("valid", pa.bool_()),
-        ("strict", pa.bool_()),
-        ("n_tokens", pa.int32()),
-        ("n_tok_int", pa.int32()),
-        ("n_tok_name", pa.int32()),
-        ("n_tok_str", pa.int32()),
-        ("n_xref_inuse", pa.int32()),
-        ("n_xref_free", pa.int32()),
-        ("n_xref_compressed", pa.int32()),
-        ("filters", pa.string()),
-        ("n_objects", pa.int32()),
-        ("n_reachable", pa.int32()),
-        ("n_holes", pa.int32()),
-        ("hole_bytes", pa.int64()),
-        ("encrypted", pa.bool_()),
-        ("hybrid", pa.bool_()),
-        ("text_md5", pa.string()),
-    ]
+FACTS = doc_table(
+    lambda url, blob: (doc_facts(url, blob),),
+    kind=STRING,
+    version=STRING,
+    valid=BOOLEAN,
+    strict=BOOLEAN,
+    n_tokens=INT,
+    n_tok_int=INT,
+    n_tok_name=INT,
+    n_tok_str=INT,
+    n_xref_inuse=INT,
+    n_xref_free=INT,
+    n_xref_compressed=INT,
+    filters=STRING,
+    n_objects=INT,
+    n_reachable=INT,
+    n_holes=INT,
+    hole_bytes=BIGINT,
+    encrypted=BOOLEAN,
+    hybrid=BOOLEAN,
+    text_md5=STRING,
 )
 
-
-_REC_COLS = [
-    "rid", "name", "kind", "version", "valid", "strict", "n_tokens",
-    "n_tok_int", "n_tok_name", "n_tok_str", "n_xref_inuse", "n_xref_free",
-    "n_xref_compressed", "filters", "n_objects", "n_reachable", "n_holes",
-    "hole_bytes", "encrypted", "hybrid", "text_md5",
-]
+# the frozen per-recipe lookup: recipe id and name, then the facts columns
+_REC_COLS = ["rid", "name", *FACTS.schema.names[1:]]
 
 
 def _facts_cte() -> str:
@@ -195,25 +171,6 @@ def doc_facts(url: str, blob: bytes) -> dict:
     )
 
 
-def _facts_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    cols = {f.name: [] for f in _FACTS_ARROW}
-
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            row = doc_facts(url, blob)
-            for k, v in row.items():
-                cols[k].append(v)
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _FACTS_ARROW],
-                schema=_FACTS_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
-
-
 _FACTS_CACHE: dict = {}
 
 
@@ -227,9 +184,7 @@ def _facts(spark, sf):
         _FACTS_CACHE,
         spark,
         sf,
-        lambda: synth_df(spark, corpus_rows_for_sf(sf)).mapInArrow(
-            _facts_batches, _FACTS_DDL
-        ),
+        lambda: FACTS.over(synth_df(spark, corpus_rows_for_sf(sf))),
     )
 
 

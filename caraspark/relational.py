@@ -42,17 +42,24 @@ class Q:
     sql: Optional[str]  # DuckDB oracle; None → driver does a rows-only check
 
 
+def registrar(registry: dict[str, Q]):
+    """A module's ``@_q(name, sql)`` decorator: registers ``Q(fn, sql)``
+    under ``name`` in ``registry``."""
+
+    def _q(name: str, sql: Optional[str]):
+        def deco(fn):
+            if name in registry:  # a silent overwrite hides a qkey
+                raise KeyError(f"duplicate qkey {name!r} in this module")
+            registry[name] = Q(fn, sql)
+            return fn
+
+        return deco
+
+    return _q
+
+
 REGISTRY: dict[str, Q] = {}
-
-
-def _q(name: str, sql: Optional[str]):
-    def deco(fn):
-        if name in REGISTRY:  # a silent overwrite hides a qkey
-            raise KeyError(f"duplicate qkey {name!r} in this module")
-        REGISTRY[name] = Q(fn, sql)
-        return fn
-
-    return deco
+_q = registrar(REGISTRY)
 
 
 # ---------------------------------------------------------------------------

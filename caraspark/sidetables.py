@@ -1,11 +1,18 @@
-"""Exploded side tables over the synthetic corpus: objects, edges, types,
-cleanup (SURVEY.md C20–C25 as corpus-scale queries).
+"""Exploded side tables over the synthetic corpus (SURVEY.md C20–C25 as
+corpus-scale queries): the corpus versions of caradoc's single-file
+commands. ``findref`` becomes a filter on the edges table, dangling-ref
+detection a LEFT ANTI join against the objects table, ``types`` a
+(url, obj, type) table, ``cleanup`` md5-of-canonical-bytes + a fixpoint
+flag. Beside them sit the per-feature tables: attachments, outline, form
+fields, JavaScript, actions, revisions, pages, fonts, signatures, XMP,
+annotations, content-stream operators and stream statistics, plus the
+xref-free scavenge census and the repair rewrite.
 
-Each is one narrow mapInArrow pass producing normalized rows, then plain
-relational ops on top — the corpus versions of caradoc's single-file
-commands: ``findref`` becomes a filter on the edges table, dangling-ref
-detection becomes a LEFT ANTI join, ``types`` becomes a (url, obj, type)
-table, ``cleanup`` becomes md5-of-canonical-bytes + a fixpoint flag.
+Each table is declared once as a ``DocTable``: its row function and its
+Arrow columns. One mapper (``DocTable.batches``) carries every table
+across the Python boundary as a narrow mapInArrow stage, and the Spark
+schema is derived from the Arrow one; each qkey is plain relational ops
+on top. ``pdfacts`` declares its facts table the same way.
 
 Each qkey hash-verifies against a closed-form DuckDB oracle over the
 frozen per-recipe corpus reconstruction (caraspark/oracle_freeze.py):
@@ -17,10 +24,15 @@ value hash. Byte-level anchors remain the pytest golden suite.
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
+from collections import Counter
+from dataclasses import dataclass
+from typing import Callable, Iterable, Iterator, Mapping
 
 import pyarrow as pa
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from caraspark.corpus import corpus_rows_for_sf, synth_df
 from caraspark.oracle_freeze import (
@@ -46,148 +58,76 @@ from caraspark.oracle_freeze import (
     types_cte,
     variant_cte,
 )
-from caraspark.relational import Q
+from caraspark.pdfengine.api import is_pdf, process_document
+from caraspark.pdfengine.cleanup import cleanup, repair_document
+from caraspark.pdfengine.document import (
+    extract_actions,
+    extract_annotations,
+    extract_attachments,
+    extract_fonts,
+    extract_form_fields,
+    extract_javascript,
+    extract_outline,
+    extract_revisions,
+    extract_signatures,
+    extract_xmp,
+    load_document,
+    scavenge_summary,
+    stream_stats,
+)
+from caraspark.pdfengine.model import Stream, canonical_json
+from caraspark.pdfengine.textextract import content_op_histogram, extract_pages
+from caraspark.pdfengine.typecheck import check_types
+from caraspark.relational import Q, registrar
 
 REGISTRY: dict[str, Q] = {}
+_q = registrar(REGISTRY)
+
+STRING, INT, BIGINT, BOOLEAN = pa.string(), pa.int32(), pa.int64(), pa.bool_()
 
 
-def _q(name: str, sql):
-    def deco(fn):
-        if name in REGISTRY:  # a silent overwrite hides a qkey
-            raise KeyError(f"duplicate qkey {name!r} in this module")
-        REGISTRY[name] = Q(fn, sql)
-        return fn
+@dataclass(frozen=True)
+class DocTable:
+    """A table exploded from documents. ``rows(url, blob)`` gives one
+    document's rows, each a mapping from column name to value (other keys
+    are ignored); ``schema`` is the Arrow schema, ``url`` first. The Spark
+    schema derives from it, so each column is written once."""
 
-    return deco
+    rows: Callable[[str, bytes | None], Iterable[Mapping]]
+    schema: pa.Schema
 
+    @property
+    def spark_schema(self) -> StructType:
+        return from_arrow_schema(self.schema)
 
-_EDGES_DDL = (
-    "url string, src_num int, src_gen int, dst_num int, dst_gen int, "
-    "path string, dangling boolean"
-)
-_EDGES_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("src_num", pa.int32()),
-        ("src_gen", pa.int32()),
-        ("dst_num", pa.int32()),
-        ("dst_gen", pa.int32()),
-        ("path", pa.string()),
-        ("dangling", pa.bool_()),
-    ]
-)
-
-_OBJECTS_DDL = (
-    "url string, num int, gen int, kind string, type_name string, "
-    "body_json string, n_refs int"
-)
-_OBJECTS_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("num", pa.int32()),
-        ("gen", pa.int32()),
-        ("kind", pa.string()),
-        ("type_name", pa.string()),
-        ("body_json", pa.string()),
-        ("n_refs", pa.int32()),
-    ]
-)
-
-_ATTACH_DDL = (
-    "url string, att_name string, att_md5 string, att_size bigint"
-)
-_ATTACH_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("att_name", pa.string()),
-        ("att_md5", pa.string()),
-        ("att_size", pa.int64()),
-    ]
-)
-
-_CLEANUP_DDL = "url string, clean_md5 string, clean_bytes bigint, fixpoint boolean"
-_CLEANUP_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("clean_md5", pa.string()),
-        ("clean_bytes", pa.int64()),
-        ("fixpoint", pa.bool_()),
-    ]
-)
-
-
-def _edges_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import load_document
-
-    cols = {f.name: [] for f in _EDGES_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            doc = load_document(blob)
-            known = set(doc.objects)
-            for src, dst, path in doc.edges:
-                cols["url"].append(url)
-                cols["src_num"].append(src[0] if src else None)
-                cols["src_gen"].append(src[1] if src else None)
-                cols["dst_num"].append(dst[0])
-                cols["dst_gen"].append(dst[1])
-                cols["path"].append(path)
-                cols["dangling"].append(dst not in known)
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _EDGES_ARROW],
-                schema=_EDGES_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
-
-
-def _objects_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from caraspark.pdfengine.api import is_pdf, process_document
-    from caraspark.pdfengine.model import Stream, canonical_json
-
-    cols = {f.name: [] for f in _OBJECTS_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            from caraspark.pdfengine.document import load_document
-            from caraspark.pdfengine.model import Ref
-            from caraspark.pdfengine.typecheck import check_types
-
-            doc = load_document(blob)
-            tres = check_types(doc)
-            refcounts: dict = {}
-            for _src, dst, _p in doc.edges:
-                refcounts[dst] = refcounts.get(dst, 0) + 1
-            for key in sorted(doc.objects):
-                o = doc.objects[key]
-                body = o.d if isinstance(o, Stream) else o
-                kind = (
-                    "stream"
-                    if isinstance(o, Stream)
-                    else type(body).__name__.lower()
+    def batches(self, it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        """The Python side of the table's mapInArrow stage: ``url`` and
+        ``html`` leave Arrow with one ``to_pylist`` each, every row value
+        joins its column's list, and an input batch that gave any rows
+        leaves as one output batch of one ``pa.array`` per column."""
+        names = self.schema.names[1:]
+        for batch in it:
+            cols = {n: [] for n in self.schema.names}
+            urls = batch.column("url").to_pylist()
+            for url, blob in zip(urls, batch.column("html").to_pylist()):
+                for row in self.rows(url, blob):
+                    cols["url"].append(url)
+                    for n in names:
+                        cols[n].append(row[n])
+            if cols["url"]:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(cols[f.name], f.type) for f in self.schema],
+                    schema=self.schema,
                 )
-                cols["url"].append(url)
-                cols["num"].append(key[0])
-                cols["gen"].append(key[1])
-                cols["kind"].append(kind)
-                cols["type_name"].append(tres.assignments.get(key))
-                cols["body_json"].append(canonical_json(body))
-                cols["n_refs"].append(refcounts.get(key, 0))
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _OBJECTS_ARROW],
-                schema=_OBJECTS_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
+
+    def over(self, docs: DataFrame) -> DataFrame:
+        """This table over a ``url``/``html`` frame, one narrow stage."""
+        return docs.mapInArrow(self.batches, self.spark_schema)
+
+
+def doc_table(rows, **cols: pa.DataType) -> DocTable:
+    """Declare a table: its row function and its columns after ``url``."""
+    return DocTable(rows, pa.schema([("url", STRING), *cols.items()]))
 
 
 def _prune_skip(blob: bytes, *tokens: bytes) -> bool:
@@ -204,67 +144,85 @@ def _prune_skip(blob: bytes, *tokens: bytes) -> bool:
     return not any(t in blob for t in tokens)
 
 
-def _attach_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import hashlib
+def _pdf(rows, *markers: bytes, parse=load_document):
+    """Row function of a PDF side table: ``rows(parse(blob))``, where
+    ``parse`` is ``load_document`` unless the table reads the raw bytes
+    (``parse=bytes``). A NULL or non-PDF blob gives no rows, and so does
+    one that ``_prune_skip`` proves free of every marker name."""
 
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import extract_attachments, load_document
+    def pdf_rows(url, blob):
+        if blob is None or not is_pdf(blob):
+            return ()
+        if markers and _prune_skip(blob, *markers):
+            return ()
+        return rows(parse(blob))
 
-    cols = {f.name: [] for f in _ATTACH_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            if _prune_skip(blob, b"/EmbeddedFiles"):
-                continue
-            for a in extract_attachments(load_document(blob)):
-                cols["url"].append(url)
-                cols["att_name"].append(a["name"])
-                cols["att_md5"].append(
-                    None
-                    if a["payload"] is None
-                    else hashlib.md5(a["payload"]).hexdigest()
-                )
-                cols["att_size"].append(a["size"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _ATTACH_ARROW],
-                schema=_ATTACH_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
+    return pdf_rows
 
 
-def _cleanup_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    import hashlib
+def _edge_rows(doc):
+    return (
+        {
+            "src_num": src[0] if src else None,
+            "src_gen": src[1] if src else None,
+            "dst_num": dst[0],
+            "dst_gen": dst[1],
+            "path": path,
+            "dangling": dst not in doc.objects,
+        }
+        for src, dst, path in doc.edges
+    )
 
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.cleanup import cleanup
-    from caraspark.pdfengine.document import load_document
 
-    cols = {f.name: [] for f in _CLEANUP_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            c1 = cleanup(load_document(blob))
-            c2 = cleanup(load_document(c1))
-            cols["url"].append(url)
-            cols["clean_md5"].append(hashlib.md5(c1).hexdigest())
-            cols["clean_bytes"].append(len(c1))
-            cols["fixpoint"].append(c1 == c2)
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _CLEANUP_ARROW],
-                schema=_CLEANUP_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
+def _object_rows(doc):
+    types = check_types(doc).assignments
+    n_refs = Counter(dst for _src, dst, _path in doc.edges)
+    for key in sorted(doc.objects):
+        o = doc.objects[key]
+        body = o.d if isinstance(o, Stream) else o
+        kind = "stream" if isinstance(o, Stream) else type(body).__name__.lower()
+        yield {
+            "num": key[0],
+            "gen": key[1],
+            "kind": kind,
+            "type_name": types.get(key),
+            "body_json": canonical_json(body),
+            "n_refs": n_refs[key],
+        }
 
+
+def _cleanup_rows(doc):
+    clean = cleanup(doc)
+    return [
+        {
+            "clean_md5": hashlib.md5(clean).hexdigest(),
+            "clean_bytes": len(clean),
+            "fixpoint": clean == cleanup(load_document(clean)),
+        }
+    ]
+
+
+EDGES = doc_table(
+    _pdf(_edge_rows),
+    src_num=INT,
+    src_gen=INT,
+    dst_num=INT,
+    dst_gen=INT,
+    path=STRING,
+    dangling=BOOLEAN,
+)
+OBJECTS = doc_table(
+    _pdf(_object_rows),
+    num=INT,
+    gen=INT,
+    kind=STRING,
+    type_name=STRING,
+    body_json=STRING,
+    n_refs=INT,
+)
+CLEANUP = doc_table(
+    _pdf(_cleanup_rows), clean_md5=STRING, clean_bytes=BIGINT, fixpoint=BOOLEAN
+)
 
 _SIDE_CACHE: dict = {}
 
@@ -279,15 +237,9 @@ def _cached(spark, sf, which: str):
     dominates their cost."""
     from caraspark.qcache import get_or_persist
 
-    batches, ddl = {
-        "edges": (_edges_batches, _EDGES_DDL),
-        "objects": (_objects_batches, _OBJECTS_DDL),
-    }[which]
+    table = {"edges": EDGES, "objects": OBJECTS}[which]
     return get_or_persist(
-        _SIDE_CACHE,
-        spark,
-        (sf, which),
-        lambda: _corpus(spark, sf).mapInArrow(batches, ddl),
+        _SIDE_CACHE, spark, (sf, which), lambda: table.over(_corpus(spark, sf))
     )
 
 
@@ -441,8 +393,7 @@ FROM docs d JOIN px x ON x.rid = d.rid""",
 )
 def pdf_cleanup(spark, sf):
     # C24: canonical re-serialization; fixpoint must hold corpus-wide
-    c = _corpus(spark, sf).mapInArrow(_cleanup_batches, _CLEANUP_DDL)
-    return c.select("url", "clean_md5", "clean_bytes", "fixpoint")
+    return CLEANUP.over(_corpus(spark, sf))
 
 
 # ---------------------------------------------------------------------------
@@ -456,27 +407,11 @@ def _make_objects_udtf():
     @udtf(returnType="num int, gen int, kind string, n_refs int")
     class ExplodeObjects:
         """UDTF alternative to the mapInArrow objects pass (SURVEY.md U6):
-        LATERAL-join one blob into its object rows."""
+        LATERAL-join one blob into its object rows (``OBJECTS``' rows)."""
 
         def eval(self, url: str, blob):
-            from caraspark.pdfengine.api import is_pdf
-            from caraspark.pdfengine.document import load_document
-            from caraspark.pdfengine.model import Stream
-
-            b = bytes(blob) if blob is not None else b""
-            if not is_pdf(b):
-                return
-            doc = load_document(b)
-            refcounts: dict = {}
-            for _src, dst, _p in doc.edges:
-                refcounts[dst] = refcounts.get(dst, 0) + 1
-            for key in sorted(doc.objects):
-                o = doc.objects[key]
-                body = o.d if isinstance(o, Stream) else o
-                kind = (
-                    "stream" if isinstance(o, Stream) else type(body).__name__.lower()
-                )
-                yield key[0], key[1], kind, refcounts.get(key, 0)
+            for r in OBJECTS.rows(url, None if blob is None else bytes(blob)):
+                yield r["num"], r["gen"], r["kind"], r["n_refs"]
 
     return ExplodeObjects
 
@@ -502,6 +437,21 @@ def udtf_objects(spark, sf):
     )
 
 
+def _attachment_rows(doc):
+    for a in extract_attachments(doc):
+        payload = a["payload"]
+        md5 = None if payload is None else hashlib.md5(payload).hexdigest()
+        yield {"att_name": a["name"], "att_md5": md5, "att_size": a["size"]}
+
+
+ATTACHMENTS = doc_table(
+    _pdf(_attachment_rows, b"/EmbeddedFiles"),
+    att_name=STRING,
+    att_md5=STRING,
+    att_size=BIGINT,
+)
+
+
 @_q(
     "pdf_attachments",
     f"""WITH {corpus_cte()},
@@ -516,46 +466,12 @@ def pdf_attachments(spark, sf):
     chain end-to-end against the frozen per-recipe rows. Narrow Arrow
     stage like every side table; payload bytes never leave the executor
     (only digests are emitted)."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_attach_batches, _ATTACH_DDL)
+    return ATTACHMENTS.over(_corpus(spark, sf))
 
 
-_OUTLINE_DDL = "url string, pos int, level int, title string"
-_OUTLINE_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("pos", pa.int32()),
-        ("level", pa.int32()),
-        ("title", pa.string()),
-    ]
+OUTLINE = doc_table(
+    _pdf(extract_outline, b"/Outlines"), pos=INT, level=INT, title=STRING
 )
-
-
-def _outline_batches(it):
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import extract_outline, load_document
-
-    cols = {f.name: [] for f in _OUTLINE_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            if _prune_skip(blob, b"/Outlines"):
-                continue
-            for o in extract_outline(load_document(blob)):
-                cols["url"].append(url)
-                cols["pos"].append(o["pos"])
-                cols["level"].append(o["level"])
-                cols["title"].append(o["title"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _OUTLINE_ARROW],
-                schema=_OUTLINE_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
 
 
 @_q(
@@ -572,53 +488,24 @@ def pdf_outline(spark, sf):
     reachable outline item — pins the First/Next chain walk and text-
     string decode against the frozen per-recipe rows. Narrow Arrow stage,
     no shuffle."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_outline_batches, _OUTLINE_DDL)
+    return OUTLINE.over(_corpus(spark, sf))
 
 
-_FORMFIELD_DDL = (
-    "url string, pos int, fname string, ft string, fvalue string"
-)
-_FORMFIELD_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("pos", pa.int32()),
-        ("fname", pa.string()),
-        ("ft", pa.string()),
-        ("fvalue", pa.string()),
-    ]
-)
-
-
-def _formfield_batches(it):
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import (
-        extract_form_fields,
-        load_document,
+def _formfield_rows(doc):
+    # the engine's name/value are the table's fname/fvalue
+    return (
+        {**f, "fname": f["name"], "fvalue": f["value"]}
+        for f in extract_form_fields(doc)
     )
 
-    cols = {f.name: [] for f in _FORMFIELD_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            if _prune_skip(blob, b"/AcroForm"):
-                continue
-            for x in extract_form_fields(load_document(blob)):
-                cols["url"].append(url)
-                cols["pos"].append(x["pos"])
-                cols["fname"].append(x["name"])
-                cols["ft"].append(x["ft"])
-                cols["fvalue"].append(x["value"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _FORMFIELD_ARROW],
-                schema=_FORMFIELD_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
+
+FORMFIELDS = doc_table(
+    _pdf(_formfield_rows, b"/AcroForm"),
+    pos=INT,
+    fname=STRING,
+    ft=STRING,
+    fvalue=STRING,
+)
 
 
 @_q(
@@ -633,8 +520,7 @@ def pdf_formfields(spark, sf):
     fields with dotted fully-qualified names, inherited /FT and /V
     resolved (radio-group pattern), values rendered deterministically —
     hash-verified against frozen per-recipe rows. Narrow Arrow stage."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_formfield_batches, _FORMFIELD_DDL)
+    return FORMFIELDS.over(_corpus(spark, sf))
 
 
 @_q(
@@ -663,51 +549,16 @@ def pdf_images(spark, sf):
     )
 
 
-_JS_DDL = (
-    "url string, pos int, source string, js_len int, js_md5 string, "
-    "js_head string"
+# a /JavaScript (or abbreviated /JS) action name needs a literal "/J"
+# somewhere in plaintext — see _prune_skip
+JAVASCRIPT = doc_table(
+    _pdf(extract_javascript, b"/J"),
+    pos=INT,
+    source=STRING,
+    js_len=INT,
+    js_md5=STRING,
+    js_head=STRING,
 )
-_JS_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("pos", pa.int32()),
-        ("source", pa.string()),
-        ("js_len", pa.int32()),
-        ("js_md5", pa.string()),
-        ("js_head", pa.string()),
-    ]
-)
-
-
-def _js_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import extract_javascript, load_document
-
-    cols = {f.name: [] for f in _JS_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            # a /JavaScript (or abbreviated /JS) action name needs a
-            # literal "/J" somewhere in plaintext — see _prune_skip
-            if _prune_skip(blob, b"/J"):
-                continue
-            for j in extract_javascript(load_document(blob)):
-                cols["url"].append(url)
-                cols["pos"].append(j["pos"])
-                cols["source"].append(j["source"])
-                cols["js_len"].append(j["js_len"])
-                cols["js_md5"].append(j["js_md5"])
-                cols["js_head"].append(j["js_head"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _JS_ARROW],
-                schema=_JS_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
 
 
 @_q(
@@ -726,52 +577,25 @@ def pdf_javascript(spark, sf):
     Hash-verified against frozen per-recipe rows; stream-backed /JS
     payloads pin the filter chain too. Narrow Arrow stage like every
     side table; only digests and 32-char heads leave the executor."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_js_batches, _JS_DDL)
+    return JAVASCRIPT.over(_corpus(spark, sf))
 
 
-_ACT_DDL = "url string, pos int, source string, s string, target string"
-_ACT_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("pos", pa.int32()),
-        ("source", pa.string()),
-        ("s", pa.string()),
-        ("target", pa.string()),
-    ]
+# actions hang off exactly five catalog hooks — a blob with none of their
+# marker names (see _prune_skip) has no reachable action at all
+ACTIONS = doc_table(
+    _pdf(
+        extract_actions,
+        b"/OpenAction",
+        b"/AA",
+        b"/JavaScript",
+        b"/Annots",
+        b"/Outlines",
+    ),
+    pos=INT,
+    source=STRING,
+    s=STRING,
+    target=STRING,
 )
-
-
-def _act_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import extract_actions, load_document
-
-    cols = {f.name: [] for f in _ACT_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            # actions hang off exactly five catalog hooks — a blob with
-            # none of their marker names (see _prune_skip) has no
-            # reachable action at all
-            if _prune_skip(blob, b"/OpenAction", b"/AA", b"/JavaScript",
-                           b"/Annots", b"/Outlines"):
-                continue
-            for a in extract_actions(load_document(blob)):
-                cols["url"].append(url)
-                cols["pos"].append(a["pos"])
-                cols["source"].append(a["source"])
-                cols["s"].append(a["s"])
-                cols["target"].append(a["target"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _ACT_ARROW],
-                schema=_ACT_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
 
 
 @_q(
@@ -791,52 +615,18 @@ def pdf_actions(spark, sf):
     just the JavaScript slice `pdf_javascript` pins. Hash-verified
     against frozen per-recipe rows. Narrow Arrow stage; only subtype
     names and 64-char target heads leave the executor."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_act_batches, _ACT_DDL)
+    return ACTIONS.over(_corpus(spark, sf))
 
 
-_REV_DDL = (
-    "url string, rev int, kind string, size int, has_prev boolean,"
-    " has_xrefstm boolean, n_won int"
+REVISIONS = doc_table(
+    _pdf(extract_revisions),
+    rev=INT,
+    kind=STRING,
+    size=INT,
+    has_prev=BOOLEAN,
+    has_xrefstm=BOOLEAN,
+    n_won=INT,
 )
-_REV_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("rev", pa.int32()),
-        ("kind", pa.string()),
-        ("size", pa.int32()),
-        ("has_prev", pa.bool_()),
-        ("has_xrefstm", pa.bool_()),
-        ("n_won", pa.int32()),
-    ]
-)
-
-
-def _rev_batches(it):
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import extract_revisions, load_document
-
-    cols = {f.name: [] for f in _REV_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            for rv in extract_revisions(load_document(blob)):
-                cols["url"].append(url)
-                cols["rev"].append(rv["rev"])
-                cols["kind"].append(rv["kind"])
-                cols["size"].append(rv["size"])
-                cols["has_prev"].append(rv["has_prev"])
-                cols["has_xrefstm"].append(rv["has_xrefstm"])
-                cols["n_won"].append(rv["n_won"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _REV_ARROW],
-                schema=_REV_ARROW,
-            )
-            cols = {f.name: [] for f in _REV_ARROW}
 
 
 @_q(
@@ -857,51 +647,17 @@ def pdf_revisions(spark, sf):
     actually touched (signature-defeating object swaps surface exactly
     here). Narrow Arrow stage; only fixed-width facts leave the
     executor."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_rev_batches, _REV_DDL)
+    return REVISIONS.over(_corpus(spark, sf))
 
 
-_PAGES_DDL = (
-    "url string, page int, obj string, content_bytes int, text_len int,"
-    " text_md5 string"
+PAGES = doc_table(
+    _pdf(extract_pages),
+    page=INT,
+    obj=STRING,
+    content_bytes=INT,
+    text_len=INT,
+    text_md5=STRING,
 )
-_PAGES_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("page", pa.int32()),
-        ("obj", pa.string()),
-        ("content_bytes", pa.int32()),
-        ("text_len", pa.int32()),
-        ("text_md5", pa.string()),
-    ]
-)
-
-
-def _pages_batches(it):
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import load_document
-    from caraspark.pdfengine.textextract import extract_pages
-
-    cols = {f.name: [] for f in _PAGES_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            for pg in extract_pages(load_document(blob)):
-                cols["url"].append(url)
-                cols["page"].append(pg["page"])
-                cols["obj"].append(pg["obj"])
-                cols["content_bytes"].append(pg["content_bytes"])
-                cols["text_len"].append(pg["text_len"])
-                cols["text_md5"].append(pg["text_md5"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _PAGES_ARROW],
-                schema=_PAGES_ARROW,
-            )
-            cols = {f.name: [] for f in _PAGES_ARROW}
 
 
 @_q(
@@ -921,50 +677,16 @@ def pdf_pages(spark, sf):
     resource contexts against the frozen rows, independently of the
     whole-document form-feed join the goldens pin. Narrow Arrow stage;
     digests only."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_pages_batches, _PAGES_DDL)
+    return PAGES.over(_corpus(spark, sf))
 
 
-_FONTS_DDL = (
-    "url string, obj string, subtype string, base_font string,"
-    " embedded boolean"
+FONTS = doc_table(
+    _pdf(extract_fonts, b"/Font"),
+    obj=STRING,
+    subtype=STRING,
+    base_font=STRING,
+    embedded=BOOLEAN,
 )
-_FONTS_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("obj", pa.string()),
-        ("subtype", pa.string()),
-        ("base_font", pa.string()),
-        ("embedded", pa.bool_()),
-    ]
-)
-
-
-def _fonts_batches(it):
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import extract_fonts, load_document
-
-    cols = {f.name: [] for f in _FONTS_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            if _prune_skip(blob, b"/Font"):
-                continue
-            for ft in extract_fonts(load_document(blob)):
-                cols["url"].append(url)
-                cols["obj"].append(ft["obj"])
-                cols["subtype"].append(ft["subtype"])
-                cols["base_font"].append(ft["base_font"])
-                cols["embedded"].append(ft["embedded"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _FONTS_ARROW],
-                schema=_FONTS_ARROW,
-            )
-            cols = {f.name: [] for f in _FONTS_ARROW}
 
 
 @_q(
@@ -982,58 +704,22 @@ def pdf_fonts(spark, sf):
     non-embedded font means text extraction depended on external
     metrics. Byte-level /Font prune skips fontless documents before any
     parse; narrow Arrow stage, fixed-width facts only."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_fonts_batches, _FONTS_DDL)
+    return FONTS.over(_corpus(spark, sf))
 
 
-_SIGS_DDL = (
-    "url string, obj string, filter string, subfilter string,"
-    " n_ranges int, starts_at_zero boolean, unsigned_tail int"
+SIGS = doc_table(
+    _pdf(
+        lambda blob: extract_signatures(load_document(blob), len(blob)),
+        b"/ByteRange",
+        parse=bytes,
+    ),
+    obj=STRING,
+    filter=STRING,
+    subfilter=STRING,
+    n_ranges=INT,
+    starts_at_zero=BOOLEAN,
+    unsigned_tail=INT,
 )
-_SIGS_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("obj", pa.string()),
-        ("filter", pa.string()),
-        ("subfilter", pa.string()),
-        ("n_ranges", pa.int32()),
-        ("starts_at_zero", pa.bool_()),
-        ("unsigned_tail", pa.int32()),
-    ]
-)
-
-
-def _sigs_batches(it):
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import (
-        extract_signatures,
-        load_document,
-    )
-
-    cols = {f.name: [] for f in _SIGS_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            if _prune_skip(blob, b"/ByteRange"):
-                continue
-            blob = bytes(blob)
-            for sg in extract_signatures(load_document(blob), len(blob)):
-                cols["url"].append(url)
-                cols["obj"].append(sg["obj"])
-                cols["filter"].append(sg["filter"])
-                cols["subfilter"].append(sg["subfilter"])
-                cols["n_ranges"].append(sg["n_ranges"])
-                cols["starts_at_zero"].append(sg["starts_at_zero"])
-                cols["unsigned_tail"].append(sg["unsigned_tail"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _SIGS_ARROW],
-                schema=_SIGS_ARROW,
-            )
-            cols = {f.name: [] for f in _SIGS_ARROW}
 
 
 @_q(
@@ -1053,54 +739,18 @@ def pdf_sigs(spark, sf):
     ``pdf_revisions``' n_won localizes). Byte-level /ByteRange prune
     skips unsigned documents before any parse; narrow Arrow stage,
     fixed-width facts only."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_sigs_batches, _SIGS_DDL)
+    return SIGS.over(_corpus(spark, sf))
 
 
-_XMP_DDL = (
-    "url string, obj string, xmp_title string, xmp_creator string,"
-    " create_date string, info_title string, title_match boolean"
+XMP = doc_table(
+    _pdf(extract_xmp, b"/Metadata"),
+    obj=STRING,
+    xmp_title=STRING,
+    xmp_creator=STRING,
+    create_date=STRING,
+    info_title=STRING,
+    title_match=BOOLEAN,
 )
-_XMP_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("obj", pa.string()),
-        ("xmp_title", pa.string()),
-        ("xmp_creator", pa.string()),
-        ("create_date", pa.string()),
-        ("info_title", pa.string()),
-        ("title_match", pa.bool_()),
-    ]
-)
-
-
-def _xmp_batches(it):
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import extract_xmp, load_document
-
-    cols = {f.name: [] for f in _XMP_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            if _prune_skip(blob, b"/Metadata"):
-                continue
-            for xr in extract_xmp(load_document(bytes(blob))):
-                cols["url"].append(url)
-                cols["obj"].append(xr["obj"])
-                cols["xmp_title"].append(xr["xmp_title"])
-                cols["xmp_creator"].append(xr["xmp_creator"])
-                cols["create_date"].append(xr["create_date"])
-                cols["info_title"].append(xr["info_title"])
-                cols["title_match"].append(xr["title_match"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _XMP_ARROW],
-                schema=_XMP_ARROW,
-            )
-            cols = {f.name: [] for f in _XMP_ARROW}
 
 
 @_q(
@@ -1118,51 +768,18 @@ def pdf_xmp(spark, sf):
     tooling drift and tampering (producers SHOULD keep packet and Info
     synchronized). Byte-level /Metadata prune skips packless documents
     before any parse; narrow Arrow stage, fixed-width facts only."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_xmp_batches, _XMP_DDL)
+    return XMP.over(_corpus(spark, sf))
 
 
-_SCAV_DDL = (
-    "url string, n_markers int, n_parsed int, n_confirmed int, "
-    "n_shadow int, n_xref_inuse int"
+# scavenge_summary's five counts, in its return order
+_SCAVENGE_COUNTS = ("n_markers", "n_parsed", "n_confirmed", "n_shadow", "n_xref_inuse")
+SCAVENGE = doc_table(
+    _pdf(
+        lambda blob: [dict(zip(_SCAVENGE_COUNTS, scavenge_summary(blob)))],
+        parse=bytes,
+    ),
+    **dict.fromkeys(_SCAVENGE_COUNTS, INT),
 )
-_SCAV_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("n_markers", pa.int32()),
-        ("n_parsed", pa.int32()),
-        ("n_confirmed", pa.int32()),
-        ("n_shadow", pa.int32()),
-        ("n_xref_inuse", pa.int32()),
-    ]
-)
-
-
-def _scav_batches(it):
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import scavenge_summary
-
-    cols = {f.name: [] for f in _SCAV_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            nm, np_, nc, ns, nx = scavenge_summary(bytes(blob))
-            cols["url"].append(url)
-            cols["n_markers"].append(nm)
-            cols["n_parsed"].append(np_)
-            cols["n_confirmed"].append(nc)
-            cols["n_shadow"].append(ns)
-            cols["n_xref_inuse"].append(nx)
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _SCAV_ARROW],
-                schema=_SCAV_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
 
 
 @_q(
@@ -1190,55 +807,30 @@ def pdf_scavenge(spark, sf):
 
     Scale shape: one narrow Arrow pass per document partition — the scan
     is a compiled-regex pass over bytes already in the task, the recovery
-    parse reuses the bounded throw-free engine, output is six fixed-width
-    ints per url; zero shuffles, giants handled by the corpus' size-class
-    salting like every other engine pass."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_scav_batches, _SCAV_DDL)
+    parse reuses the bounded throw-free engine, output is five fixed-width
+    ints per url; zero shuffles."""
+    return SCAVENGE.over(_corpus(spark, sf))
 
 
-_REPAIR_DDL = (
-    "url string, repaired_bytes bigint, repaired_md5 string, "
-    "n_objects int, repaired_valid boolean"
-)
-_REPAIR_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("repaired_bytes", pa.int64()),
-        ("repaired_md5", pa.string()),
-        ("n_objects", pa.int32()),
-        ("repaired_valid", pa.bool_()),
+def _repair_rows(blob):
+    rep = repair_document(blob)
+    return [
+        {
+            "repaired_bytes": len(rep),
+            "repaired_md5": hashlib.md5(rep).hexdigest(),
+            "n_objects": len(load_document(rep).objects),
+            "repaired_valid": process_document(rep).valid,
+        }
     ]
+
+
+REPAIR = doc_table(
+    _pdf(_repair_rows, parse=bytes),
+    repaired_bytes=BIGINT,
+    repaired_md5=STRING,
+    n_objects=INT,
+    repaired_valid=BOOLEAN,
 )
-
-
-def _repair_batches(it):
-    import hashlib
-
-    from caraspark.pdfengine.api import is_pdf, process_document
-    from caraspark.pdfengine.cleanup import repair_document
-    from caraspark.pdfengine.document import load_document
-
-    cols = {f.name: [] for f in _REPAIR_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            rep = repair_document(bytes(blob))
-            cols["url"].append(url)
-            cols["repaired_bytes"].append(len(rep))
-            cols["repaired_md5"].append(hashlib.md5(rep).hexdigest())
-            cols["n_objects"].append(len(load_document(rep).objects))
-            cols["repaired_valid"].append(process_document(rep).valid)
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _REPAIR_ARROW],
-                schema=_REPAIR_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
 
 
 @_q(
@@ -1263,58 +855,18 @@ def pdf_repair(spark, sf):
     Scale shape: one narrow Arrow pass per partition, same as every
     engine qkey — repair is per-document pure compute, no exchange; the
     output row is five fixed-width columns."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_repair_batches, _REPAIR_DDL)
+    return REPAIR.over(_corpus(spark, sf))
 
 
-_ANNOT_DDL = (
-    "url string, pos int, page_idx int, subtype string,"
-    " has_action boolean, has_aa boolean, has_appearance boolean"
+ANNOTS = doc_table(
+    _pdf(extract_annotations, b"/Annots"),
+    pos=INT,
+    page_idx=INT,
+    subtype=STRING,
+    has_action=BOOLEAN,
+    has_aa=BOOLEAN,
+    has_appearance=BOOLEAN,
 )
-_ANNOT_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("pos", pa.int32()),
-        ("page_idx", pa.int32()),
-        ("subtype", pa.string()),
-        ("has_action", pa.bool_()),
-        ("has_aa", pa.bool_()),
-        ("has_appearance", pa.bool_()),
-    ]
-)
-
-
-def _annot_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import (
-        extract_annotations,
-        load_document,
-    )
-
-    cols = {f.name: [] for f in _ANNOT_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            if _prune_skip(blob, b"/Annots"):
-                continue
-            for a in extract_annotations(load_document(blob)):
-                cols["url"].append(url)
-                cols["pos"].append(a["pos"])
-                cols["page_idx"].append(a["page_idx"])
-                cols["subtype"].append(a["subtype"])
-                cols["has_action"].append(a["has_action"])
-                cols["has_aa"].append(a["has_aa"])
-                cols["has_appearance"].append(a["has_appearance"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _ANNOT_ARROW],
-                schema=_ANNOT_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
 
 
 @_q(
@@ -1335,41 +887,10 @@ def pdf_annots(spark, sf):
     tabulate).  Hash-verified against frozen per-recipe rows.  Narrow
     Arrow stage; the ``/Annots`` byte-marker prune skips the page walk
     for the (overwhelming at web scale) annotation-free majority."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_annot_batches, _ANNOT_DDL)
+    return ANNOTS.over(_corpus(spark, sf))
 
 
-_CONTENTOP_DDL = "url string, op string, n int"
-_CONTENTOP_ARROW = pa.schema(
-    [("url", pa.string()), ("op", pa.string()), ("n", pa.int32())]
-)
-
-
-def _contentop_batches(
-    it: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import load_document
-    from caraspark.pdfengine.textextract import content_op_histogram
-
-    cols = {f.name: [] for f in _CONTENTOP_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            for r in content_op_histogram(load_document(blob)):
-                cols["url"].append(url)
-                cols["op"].append(r["op"])
-                cols["n"].append(r["n"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _CONTENTOP_ARROW],
-                schema=_CONTENTOP_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
+CONTENT_OPS = doc_table(_pdf(content_op_histogram), op=STRING, n=INT)
 
 
 @_q(
@@ -1390,55 +911,18 @@ def pdf_content_ops(spark, sf):
     XObject boundaries as text extraction; hash-verified against frozen
     per-recipe rows.  Narrow Arrow stage; only (op, count) pairs leave
     the executor."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_contentop_batches, _CONTENTOP_DDL)
+    return CONTENT_OPS.over(_corpus(spark, sf))
 
 
-_STREAMSTAT_DDL = (
-    "url string, num int, gen int, decoded boolean, n_bytes bigint,"
-    " n_distinct int, top_permille int"
+STREAM_STATS = doc_table(
+    _pdf(stream_stats),
+    num=INT,
+    gen=INT,
+    decoded=BOOLEAN,
+    n_bytes=BIGINT,
+    n_distinct=INT,
+    top_permille=INT,
 )
-_STREAMSTAT_ARROW = pa.schema(
-    [
-        ("url", pa.string()),
-        ("num", pa.int32()),
-        ("gen", pa.int32()),
-        ("decoded", pa.bool_()),
-        ("n_bytes", pa.int64()),
-        ("n_distinct", pa.int32()),
-        ("top_permille", pa.int32()),
-    ]
-)
-
-
-def _streamstat_batches(
-    it: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
-    from caraspark.pdfengine.api import is_pdf
-    from caraspark.pdfengine.document import load_document, stream_stats
-
-    cols = {f.name: [] for f in _STREAMSTAT_ARROW}
-    for batch in it:
-        urls = batch.column("url").to_pylist()
-        blobs = batch.column("html").to_pylist()
-        for url, blob in zip(urls, blobs):
-            if blob is None or not is_pdf(blob):
-                continue
-            for r in stream_stats(load_document(blob)):
-                cols["url"].append(url)
-                cols["num"].append(r["num"])
-                cols["gen"].append(r["gen"])
-                cols["decoded"].append(r["decoded"])
-                cols["n_bytes"].append(r["n_bytes"])
-                cols["n_distinct"].append(r["n_distinct"])
-                cols["top_permille"].append(r["top_permille"])
-        if cols["url"]:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[f.name], f.type) for f in _STREAMSTAT_ARROW],
-                schema=_STREAMSTAT_ARROW,
-            )
-            for v in cols.values():
-                v.clear()
 
 
 @_q(
@@ -1461,5 +945,4 @@ def pdf_stream_stats(spark, sf):
     tabulated, not silent.  Hash-verified against frozen per-recipe
     rows.  Narrow Arrow stage; payload bytes never leave the executor —
     only six small integers per stream."""
-    raw = _corpus(spark, sf)
-    return raw.mapInArrow(_streamstat_batches, _STREAMSTAT_DDL)
+    return STREAM_STATS.over(_corpus(spark, sf))

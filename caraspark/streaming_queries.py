@@ -10,20 +10,10 @@ from pyspark.sql import functions as F
 
 from caraspark import streaming as S
 from caraspark.corpus import html_docs
-from caraspark.relational import Q
+from caraspark.relational import Q, registrar
 
 REGISTRY: dict[str, Q] = {}
-
-
-def _q(name: str, sql):
-    def deco(fn):
-        if name in REGISTRY:  # a silent overwrite hides a qkey
-            raise KeyError(f"duplicate qkey {name!r} in this module")
-        REGISTRY[name] = Q(fn, sql)
-        return fn
-
-    return deco
-
+_q = registrar(REGISTRY)
 
 @_q(
     "stream_tumbling",
@@ -1167,10 +1157,9 @@ def stream_annots(spark, sf):
     Scale: state is one row per annotation subtype ((28 defined by PDF17
     SS12.5.6); the stream materializes (subtype, url) pairs only —
     blobs die inside the Arrow stage of their own micro-batch."""
-    from caraspark.sidetables import _ANNOT_DDL, _annot_batches
+    from caraspark.sidetables import ANNOTS
 
-    docs = S.replay_corpus_stream(spark, sf)
-    an = docs.mapInArrow(_annot_batches, _ANNOT_DDL)
+    an = ANNOTS.over(S.replay_corpus_stream(spark, sf))
     out = an.groupBy("subtype").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_annots"),
         F.sum(F.when(F.col("has_action"), 1).otherwise(0))
@@ -1205,10 +1194,9 @@ def stream_content_ops(spark, sf):
 
     Scale: state is one row per distinct operator (~70 defined);
     (op, count) pairs are all that cross the stream."""
-    from caraspark.sidetables import _CONTENTOP_DDL, _contentop_batches
+    from caraspark.sidetables import CONTENT_OPS
 
-    docs = S.replay_corpus_stream(spark, sf)
-    ops = docs.mapInArrow(_contentop_batches, _CONTENTOP_DDL)
+    ops = CONTENT_OPS.over(S.replay_corpus_stream(spark, sf))
     out = ops.groupBy("op").agg(
         F.sum("n").cast("bigint").alias("n_ops"),
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),

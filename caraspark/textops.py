@@ -20,21 +20,11 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from caraspark.relational import Q
+from caraspark.relational import Q, registrar
 from caraspark.tables import load
 
 REGISTRY: dict[str, Q] = {}
-
-
-def _q(name: str, sql):
-    def deco(fn):
-        if name in REGISTRY:  # a silent overwrite hides a qkey
-            raise KeyError(f"duplicate qkey {name!r} in this module")
-        REGISTRY[name] = Q(fn, sql)
-        return fn
-
-    return deco
-
+_q = registrar(REGISTRY)
 
 # ---------------------------------------------------------------------------
 # text analysis

@@ -10,6 +10,8 @@ import json
 import os
 import sys
 
+import pytest
+
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
@@ -103,3 +105,18 @@ def test_every_qkey_output_schema_is_driver_canonicalizable(spark, sf_smoke):
             plan_offenders[k] = sorted(marks)
     # one combined assert so a schema offender can't mask plan offenders
     assert (offenders, plan_offenders) == ({}, {})
+
+
+def test_registering_a_name_twice_raises():
+    # a silent overwrite would hide a qkey; each module's _q refuses it
+    from caraspark import sidetables
+    from caraspark.relational import registrar
+
+    registry = {}
+    _q = registrar(registry)
+    _q("k", None)(lambda spark, sf: None)
+    with pytest.raises(KeyError, match="duplicate qkey 'k'"):
+        _q("k", "SELECT 1")(lambda spark, sf: None)
+    assert registry["k"].sql is None
+    with pytest.raises(KeyError, match="pdf_edges"):
+        sidetables._q("pdf_edges", None)(lambda spark, sf: None)

@@ -54,15 +54,8 @@ def test_rerun_is_noop(spark, tmp_path):
 def test_snapshot_time_travel(spark, tmp_path):
     """Every snapshot in the chain stays readable: an earlier snapshot id
     yields exactly the rows committed at that point (Iceberg-style)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/jobs")
-    from extract_job import read_extracted, run_job
-
     out = str(tmp_path / "tt")
     run_job(spark, None, out, units=8, unit_chunk=4, synth_docs=400)
-    from caraspark.manifest import SnapshotManifest
-
     from caraspark.manifest import SnapshotManifest
 
     man = SnapshotManifest(out)

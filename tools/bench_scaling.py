@@ -16,7 +16,8 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # resolved per-run via bench_extract.corpus_path(n_docs) — a fixed path
 # was once clobbered by a concurrent bench regenerating a different size
@@ -347,7 +348,7 @@ def main() -> None:
 
 
 def _write_report(s: dict) -> None:
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
     # the gate takes the best PER-ROUND pairing (round aggregate over the
     # global best solo, normalized by that round's floored ceiling) — spell
     # the winning pairing out so the table's raw/ceiling rows (which may
@@ -362,8 +363,8 @@ def _write_report(s: dict) -> None:
             f"over floored same-window ceiling "
             f"max({r['hw_eff']}, 0.8) = {max(r['hw_eff'], 0.8)}"
         )
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
-        f.write(f"""# BENCH/BASELINE — measured numbers (protocol: /root/repo/BASELINE.md)
+    with open(os.path.join(ROOT, "BENCH", "BASELINE.md"), "w") as f:
+        f.write(f"""# BENCH/BASELINE — measured numbers (protocol: BASELINE.md at the repo root)
 
 Same job (`caraspark.extract` over the committed deterministic corpus,
 seed 42, incl. pdf_giant skew docs), byte-identical parquet input at

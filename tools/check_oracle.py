@@ -8,10 +8,12 @@ Usage:  python tools/check_oracle.py [sf_dir] [qkey ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from caraspark.oracle_compare import compare, duck_connection  # noqa: E402
 

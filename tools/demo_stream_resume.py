@@ -28,7 +28,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 N_FILES = 8
 ROWS_PER_FILE = 5000
@@ -77,7 +78,7 @@ def main() -> None:
 
     cmd = [
         "/opt/spark/bin/spark-submit", "--master", "local[8]",
-        "--py-files", "/root/repo/caraspark.zip",
+        "--py-files", os.path.join(ROOT, "caraspark.zip"),
         os.path.abspath(__file__), "--run", src, out,
     ]
 

@@ -11,16 +11,18 @@ Run once per deliberate spec change; the diff IS the review artifact.
 from __future__ import annotations
 
 import json
+import os
 import pathlib
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from caraspark.pdfengine import process_document  # noqa: E402
 from caraspark.synth import HTML_RECIPES, PDF_RECIPES  # noqa: E402
 
-GOLDEN_DIR = pathlib.Path("/root/repo/tests/golden")
+GOLDEN_DIR = pathlib.Path(ROOT, "tests", "golden")
 
 
 def main() -> None:
