@@ -4,9 +4,14 @@ Capability parity: caradoc's ``src/stream/`` filter set [P?] — FlateDecode,
 ASCIIHexDecode, ASCII85Decode, RunLengthDecode, plus TIFF/PNG predictor undo;
 beyond it, LZWDecode [PDF17 §7.4.4] with /EarlyChange (the remaining
 non-image filter family of the spec).
-Implementation: zlib/binascii/base64 (C-speed) per stream; predictors in
-NumPy — Sub/Up/Average vectorize per row; Paeth is row-sequential but
-column-vectorized.
+Implementation: per-byte work runs in C or NumPy wherever the format
+allows. Flate is zlib; ASCIIHex strips white space with ``bytes.translate``
+and decodes with binascii; ASCII85 decodes a digit-only body as one base-85
+matrix product in NumPy and leaves anything else to ``base64.a85decode``;
+LZW reads each code from a 3-byte window at a bit cursor, one step per
+code. PNG predictors go row by row: None, Sub and Up rows are NumPy row
+operations; Average and Paeth rows are inherently left-to-right and run as
+plain-int loops, one per channel; TIFF 2 is the same running sum as PNG Sub.
 
 A filter failure never throws past this module: it records a taxonomy error
 and yields None, so one corrupt stream can't kill an Arrow batch.
@@ -54,14 +59,14 @@ def decode_stream(
         return raw
     if isinstance(filters, Name):
         filters = [filters]
-    parms = sdict.get("DecodeParms", sdict.get("DP"))
-    if isinstance(parms, Ref) and resolver:
-        parms = resolver(parms)
-    if parms is None or isinstance(parms, dict):
-        parms = [parms] * len(filters)
     if not isinstance(filters, list):
         errors.append(PdfError("filter.bad_filter_entry", obj=objkey))
         return None
+    parms = sdict.get("DecodeParms", sdict.get("DP"))
+    if isinstance(parms, Ref) and resolver:
+        parms = resolver(parms)
+    if not isinstance(parms, list):  # one entry for every filter
+        parms = [parms] * len(filters)
 
     data = raw
     for i, f in enumerate(filters):
@@ -111,67 +116,87 @@ def _apply_one(data, name, parms, errors, objkey, resolver):
         return None
 
 
+_WS = b"\x00\t\n\x0c\r "  # PDF white-space [PDF17 §7.2.2]
+_A85_DIGITS = bytes(range(ord("!"), ord("u") + 1))
+_POW85 = 85 ** np.arange(4, -1, -1, dtype=np.uint64)
+
+
 def _ascii_hex(data: bytes) -> bytes:
     end = data.find(b">")
     if end != -1:
         data = data[:end]
-    compact = bytes(c for c in data if c not in b"\x00\t\n\x0c\r ")
+    compact = data.translate(None, _WS)
     if len(compact) % 2:
         compact += b"0"
     return binascii.unhexlify(compact)
 
 
 def _ascii_85(data: bytes) -> bytes:
+    """Digit-only bodies decode as one base-85 matrix product; anything else
+    (``z``, stray bytes, overflow) goes to ``base64.a85decode``, whose
+    errors are the reported ones. Like it, the tail is padded with ``u``."""
     end = data.find(b"~>")
     if end != -1:
         data = data[:end]
-    compact = bytes(c for c in data if c not in b"\x00\t\n\x0c\r ")
+    compact = data.translate(None, _WS)
     if compact.startswith(b"<~"):
         compact = compact[2:]
-    return base64.a85decode(compact, adobe=False)
+    if compact.translate(None, _A85_DIGITS):
+        return base64.a85decode(compact, adobe=False)
+    groups, rest = divmod(len(compact) + 4, 5)
+    digits = np.frombuffer(compact + b"uuuu", dtype=np.uint8)[: groups * 5]
+    words = (digits.reshape(groups, 5) - np.uint8(33)).astype(np.uint64) @ _POW85
+    if groups and words.max() > 0xFFFFFFFF:
+        return base64.a85decode(compact, adobe=False)
+    out = words.astype(">u4").tobytes()
+    return out[: len(out) - (4 - rest)]
+
+
+_LZW_CLEAR, _LZW_EOD = 256, 257
+_LZW_BASE = [bytes([i]) for i in range(256)] + [b"", b""]  # + CLEAR, EOD
 
 
 def _lzw(data: bytes, early: int = 1) -> bytes:
     """LZWDecode [PDF17 §7.4.4]: MSB-first variable-width codes (9→12 bits),
     256=clear-table, 257=EOD; /EarlyChange (default 1) widens the code one
-    entry before the table fills, matching the TIFF-heritage encoders."""
-    CLEAR, EOD = 256, 257
-    base = [bytes([i]) for i in range(256)] + [b"", b""]
-    table = list(base)
+    entry before the table fills, matching the TIFF-heritage encoders.
+    Each code is read from the 3-byte window at its bit cursor (offset ≤ 7
+    plus width ≤ 12 fits in 24 bits), one step per code."""
+    table = list(_LZW_BASE)
     width = 9
     out = bytearray()
     prev: bytes | None = None
-    buf = 0
-    nbits = 0
-    for byte in data:
-        buf = (buf << 8) | byte
-        nbits += 8
-        while nbits >= width:
-            nbits -= width
-            code = (buf >> nbits) & ((1 << width) - 1)
-            if code == CLEAR:
-                table = list(base)
-                width = 9
-                prev = None
-                continue
-            if code == EOD:
-                return bytes(out)
-            if prev is None:
-                if code >= len(table):
-                    raise ValueError("lzw: bad initial code")
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):  # KwKwK special case
-                entry = prev + prev[:1]
-                table.append(entry)
-            else:
-                raise ValueError("lzw: code beyond table")
-            out += entry
-            prev = entry
-            if len(table) + early >= (1 << width) and width < 12:
-                width += 1
+    buf = data + b"\0\0"
+    nbits = len(data) * 8
+    pos = 0
+    while pos + width <= nbits:
+        i = pos >> 3
+        window = int.from_bytes(buf[i : i + 3], "big")
+        code = (window >> (24 - (pos & 7) - width)) & ((1 << width) - 1)
+        pos += width
+        if code == _LZW_CLEAR:
+            table = list(_LZW_BASE)
+            width = 9
+            prev = None
+            continue
+        if code == _LZW_EOD:
+            break
+        if prev is None:
+            if code >= len(table):
+                raise ValueError("lzw: bad initial code")
+            entry = table[code]
+        elif code < len(table):
+            entry = table[code]
+            table.append(prev + entry[:1])
+        elif code == len(table):  # KwKwK special case
+            entry = prev + prev[:1]
+            table.append(entry)
+        else:
+            raise ValueError("lzw: code beyond table")
+        out += entry
+        prev = entry
+        if len(table) + early >= (1 << width) and width < 12:
+            width += 1
     return bytes(out)
 
 
@@ -220,13 +245,10 @@ def _undo_predictor(data, parms, errors, objkey, resolver):
             errors.append(PdfError("filter.predictor_unsupported", obj=objkey,
                                    msg=f"tiff bpc={bpc}"))
             return None
-        arr = np.frombuffer(data, dtype=np.uint8).copy()
+        arr = np.frombuffer(data, dtype=np.uint8)
         nrows = len(arr) // rowlen
         arr = arr[: nrows * rowlen].reshape(nrows, rowlen)
-        # cumulative sum per color channel along the row (mod 256)
-        for c in range(bpp):
-            arr[:, c::bpp] = np.cumsum(arr[:, c::bpp], axis=1, dtype=np.int64) & 0xFF
-        return arr.tobytes()
+        return _running_sum(arr, bpp).tobytes()
 
     if 10 <= pred <= 15:  # PNG: per-row tag byte then filtered bytes
         stride = rowlen + 1
@@ -235,46 +257,69 @@ def _undo_predictor(data, parms, errors, objkey, resolver):
             errors.append(PdfError("filter.predictor_len", obj=objkey))
             data = data[: n * stride]
         raw = np.frombuffer(data, dtype=np.uint8).reshape(n, stride)
-        tags = raw[:, 0]
-        rows = raw[:, 1:].astype(np.int64)
-        prev = np.zeros(rowlen, dtype=np.int64)
-        out = np.empty((n, rowlen), dtype=np.uint8)
-        for r in range(n):
-            row = rows[r]
-            t = tags[r]
-            if t == 0:
-                cur = row & 0xFF
-            elif t == 1:  # Sub
-                cur = row.copy()
-                for i in range(bpp, rowlen):
-                    cur[i] = (cur[i] + cur[i - bpp]) & 0xFF
-            elif t == 2:  # Up — fully vectorized
-                cur = (row + prev) & 0xFF
-            elif t == 3:  # Average
-                cur = row.copy()
-                for i in range(rowlen):
-                    left = cur[i - bpp] if i >= bpp else 0
-                    cur[i] = (cur[i] + ((left + prev[i]) >> 1)) & 0xFF
-            elif t == 4:  # Paeth
-                cur = row.copy()
-                for i in range(rowlen):
-                    a = cur[i - bpp] if i >= bpp else 0
-                    b = prev[i]
-                    c = prev[i - bpp] if i >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    if pa <= pb and pa <= pc:
-                        pr = a
-                    elif pb <= pc:
-                        pr = b
-                    else:
-                        pr = c
-                    cur[i] = (cur[i] + pr) & 0xFF
-            else:
-                raise ValueError(f"png predictor tag {t}")
-            out[r] = cur
-            prev = cur.astype(np.int64)
-        return out.tobytes()
+        return _undo_png(raw[:, 0], raw[:, 1:], bpp)
 
     errors.append(PdfError("filter.predictor_unsupported", obj=objkey, msg=str(pred)))
     return None
+
+
+def _running_sum(rows, bpp):
+    """Per-channel running sum along each row, mod 256 (undoes PNG Sub and
+    TIFF 2). The row is zero-padded to whole pixels so that one cumsum over
+    the pixel axis covers every channel."""
+    k, w = rows.shape
+    width = -(-w // bpp) * bpp
+    padded = np.zeros((k, width), dtype=np.uint8)
+    padded[:, :w] = rows
+    pixels = padded.reshape(k, width // bpp, bpp)
+    return np.cumsum(pixels, axis=1, dtype=np.uint8).reshape(k, width)[:, :w]
+
+
+def _undo_png(tags, rows, bpp) -> bytes:
+    """Undo PNG row filters row by row: ``tags`` holds each row's filter
+    type, ``rows`` the (n, rowlen) filtered bytes. None, Sub and Up rows are
+    a copy, a per-channel running sum and a vector add; Average and Paeth
+    depend on the byte just decoded to their left, so they run as plain-int
+    loops, one per channel."""
+    rowlen = rows.shape[1]
+    out = bytearray()
+    prev = bytes(rowlen)
+    for t, row in zip(tags.tolist(), rows):
+        if t == 0:
+            cur = row.tobytes()
+        elif t == 1:  # Sub
+            cur = _running_sum(row[None], bpp).tobytes()
+        elif t == 2:  # Up
+            cur = (row + np.frombuffer(prev, dtype=np.uint8)).tobytes()
+        elif t <= 4:  # each channel's bytes form one left-to-right chain
+            undo = _average if t == 3 else _paeth
+            filtered, cur = row.tobytes(), bytearray(rowlen)
+            for ch in range(min(bpp, rowlen)):
+                cur[ch::bpp] = undo(filtered[ch::bpp], prev[ch::bpp])
+        else:
+            raise ValueError(f"png predictor tag {t}")
+        out += cur
+        prev = cur
+    return bytes(out)
+
+
+def _average(filtered, above):
+    """One channel of an Average row: add the floor mean of the decoded
+    byte to the left (``a``, 0 at the row start) and the byte above."""
+    out, a = [], 0
+    for x, b in zip(filtered, above):
+        a = (x + ((a + b) >> 1)) & 0xFF
+        out.append(a)
+    return out
+
+
+def _paeth(filtered, above):
+    """One channel of a Paeth row: add whichever of left ``a``, above ``b``
+    and upper-left ``c`` is nearest ``a + b - c`` (ties in that order)."""
+    out, a, c = [], 0, 0
+    for x, b in zip(filtered, above):
+        pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - c - c)
+        a = (x + (a if pa <= pb and pa <= pc else b if pb <= pc else c)) & 0xFF
+        c = b
+        out.append(a)
+    return out

@@ -378,8 +378,8 @@ def _decode(raw: bytes, d: dict, objs) -> bytes | None:
                 early = 1
                 if isinstance(p, dict) and p.get("EarlyChange") == 0:
                     early = 0
-                # independent impl: bit-cursor over the whole stream,
-                # dict-of-ints table (vs the engine's rolling buffer + list)
+                # independent impl: one bit at a time, dict-of-ints table
+                # (vs the engine's 3-byte window per code + list table)
                 bits = len(data) * 8
                 pos = 0
                 tbl: dict[int, bytes] = {}

@@ -205,8 +205,9 @@ def test_lzw_decodeparms_earlychange_zero():
 @settings(max_examples=80, deadline=None)
 @given(st.binary(min_size=0, max_size=6000))
 def test_lzw_engine_oracle_differential(data):
-    """Two independent decoders (engine: rolling buffer + list table;
-    oracle: bit cursor + dict table) agree on every encoder output."""
+    """Two independent decoders (engine: 3-byte window per code + list
+    table; oracle: bit-by-bit cursor + dict table) agree on every encoder
+    output."""
     from caraspark.pdfengine.filters import _lzw
     from caraspark.synth import _lzw_encode
     from oracle.text_oracle import _decode as oracle_decode
@@ -221,6 +222,35 @@ def test_filter_chain_error_is_taxonomy_not_exception():
     out = decode_stream(b"not-zlib", {"Filter": Name("FlateDecode")}, errors)
     assert out is None
     assert errors and errors[0].code.startswith("filter.")
+
+
+@pytest.mark.parametrize("want", [(), None], ids=["stats", "all"])
+@pytest.mark.parametrize(
+    "entries,flate",
+    [
+        (b"/Filter 5", False),
+        (b"/Filter 1.5", False),
+        (b"/Filter true", False),
+        (b"/Filter /FlateDecode /DecodeParms 7", True),
+    ],
+)
+def test_non_name_filter_or_parms_is_data_not_exception(entries, flate, want):
+    """A /Filter that is neither a name nor an array is a taxonomy error; a
+    /DecodeParms that is neither a dict nor an array applies to every filter
+    and, not being a dict, sets no predictor."""
+    import zlib
+
+    from caraspark.synth import CONTENT_HELLO, _assemble, _base_objects
+
+    content = zlib.compress(CONTENT_HELLO) if flate else CONTENT_HELLO
+    r = process_document(_assemble(_base_objects(content, entries)), want=want)
+    codes = {e.code for e in r.errors}
+    if flate:
+        assert not codes and r.strict
+        assert want == () or r.text == b"Hello World"
+    else:
+        assert "filter.bad_filter_entry" in codes and not r.strict
+        assert want == () or "extract.content_undecoded" in codes
 
 
 # --- layer 3: property-based ------------------------------------------------
