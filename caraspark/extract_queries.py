@@ -15,7 +15,10 @@ its parse_ms timings are inherently nondeterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F, types as T
 
 from caraspark.corpus import corpus_rows_for_sf, html_docs, synth_df
 from caraspark.extract import extract
@@ -30,6 +33,7 @@ from caraspark.oracle_freeze import (
     tables_cte,
 )
 from caraspark.relational import Q, registrar
+from caraspark.schemas import EXTRACTED, SURFACE_COLUMNS
 from caraspark.tables import load
 
 REGISTRY: dict[str, Q] = {}
@@ -112,6 +116,92 @@ def doc_extract(spark, sf):
     )
 
 
+class _Sig(NamedTuple):
+    """One per-document signature of an EXTRACTED array surface, named
+    ``{surface}_sig``: its elements as canonical strings (``_canonical``)
+    joined by "\\x1f" under md5 — the hex digest keeps control bytes out
+    of SQL literals — or, plain, joined by ";"."""
+
+    surface: str
+    count: str  # the name of the size column beside the signature
+    md5: bool = True
+    fsep: str = ":"  # joins a struct element's fields
+    counted: str | None = None  # the array the count sizes, if not surface
+
+
+# The corpus signatures: every surface over the full synth corpus (PDF and
+# HTML recipes, []-for-PDF array surfaces) against the frozen
+# per-recipe/per-idx expected values of ``perdoc`` (oracle_freeze). A tuple
+# row selects scalar surface columns as they are.
+_SIGS = {
+    "doc_spans_sig": _Sig("spans", "n_spans", md5=False, fsep="-"),
+    "doc_outlinks_sig": _Sig("outlinks", "n_outlinks", md5=False),
+    "doc_title_sig": ("title",),
+    "doc_headmeta_sig": ("canonical", "description"),
+    "doc_ogmeta_sig": SURFACE_COLUMNS["ogmeta"],
+    "doc_headings_sig": _Sig("headings", "n_headings", md5=False),
+    "doc_anchors_sig": _Sig("anchors", "n_outlinks", counted="outlinks"),
+    "doc_tables_sig": _Sig("tables", "n_cells"),
+    "doc_lists_sig": _Sig("lists", "n_items"),
+    "doc_images_sig": _Sig("images", "n_images"),
+    "doc_jsonld_sig": _Sig("jsonld", "n_jsonld"),
+    "doc_alternates_sig": _Sig("alternates", "n_alternates"),
+    "doc_forms_sig": _Sig("forms", "n_forms"),
+    "doc_microdata_sig": _Sig("microdata", "n_microdata"),
+    "doc_rdfa_sig": _Sig("rdfa", "n_rdfa"),
+}
+
+
+def _canonical(surface: str, fsep: str) -> Column:
+    """Each element of an EXTRACTED array column as one string: a struct's
+    fields in EXTRACTED order joined by ``fsep`` (booleans as 0/1), a
+    string element as it is."""
+    elem = EXTRACTED[surface].dataType.elementType
+    if not isinstance(elem, T.StructType):
+        return F.col(surface)
+
+    def field(x, f):
+        if isinstance(f.dataType, T.StringType):
+            return x[f.name]
+        if isinstance(f.dataType, T.BooleanType):
+            return x[f.name].cast("int").cast("string")
+        return x[f.name].cast("string")
+
+    return F.transform(
+        surface,
+        lambda x: F.concat_ws(fsep, *(field(x, f) for f in elem.fields)),
+    )
+
+
+def _sig_query(key: str, s) -> None:
+    """Register ``key``: url plus the row's columns for every synth
+    document, checked against the same columns of ``perdoc``."""
+    if isinstance(s, _Sig):
+        cols = f"CAST({s.count} AS INT) AS {s.count}, {s.surface}_sig"
+    else:
+        cols = ", ".join(s)
+
+    sql = f"WITH {corpus_cte()},\n{perdoc_cte()}\nSELECT url, {cols}\nFROM perdoc"
+
+    @_q(key, sql)
+    def fn(spark, sf):
+        ex = _extracted(spark, sf)
+        if not isinstance(s, _Sig):
+            return ex.select("url", *s)
+        canon = _canonical(s.surface, s.fsep)
+        joined = F.concat_ws("\x1f" if s.md5 else ";", canon)
+        sig = F.md5(F.encode(joined, "utf-8")) if s.md5 else joined
+        return ex.select(
+            "url",
+            F.size(s.counted or s.surface).alias(s.count),
+            sig.alias(f"{s.surface}_sig"),
+        )
+
+
+for _key, _s in _SIGS.items():
+    _sig_query(_key, _s)
+
+
 _SPAN_LIT = "naïve café — 漢字 span check"  # multibyte: octets ≠ chars
 
 
@@ -152,36 +242,6 @@ def doc_spans(spark, sf):
         F.col("s.start").alias("span_start"),
         F.col("s.end").alias("span_end"),
         F.col("s.label").alias("label"),
-    )
-
-
-@_q(
-    "doc_spans_sig",
-    f"""WITH {corpus_cte()},
-{perdoc_cte()}
-SELECT url, CAST(n_spans AS INT) AS n_spans, spans_sig
-FROM perdoc""",
-)
-def doc_spans_sig(spark, sf):
-    """v3 SPANS over the full synth corpus (PDF page spans + HTML block
-    spans) vs the frozen per-recipe/per-idx expected signatures — pins
-    page-tree order, form-feed offsets, and empty-text span semantics."""
-    ex = _extracted(spark, sf)
-    return ex.select(
-        "url",
-        F.size("spans").alias("n_spans"),
-        F.concat_ws(
-            ";",
-            F.transform(
-                "spans",
-                lambda s: F.concat_ws(
-                    "-",
-                    s["start"].cast("string"),
-                    s["end"].cast("string"),
-                    s["label"],
-                ),
-            ),
-        ).alias("spans_sig"),
     )
 
 
@@ -232,26 +292,6 @@ def doc_outlinks(spark, sf):
     ).select("url", F.col("pos").cast("int").alias("pos"), "href")
 
 
-@_q(
-    "doc_outlinks_sig",
-    f"""WITH {corpus_cte()},
-{perdoc_cte()}
-SELECT url, CAST(n_outlinks AS INT) AS n_outlinks, outlinks_sig
-FROM perdoc""",
-)
-def doc_outlinks_sig(spark, sf):
-    """v4 OUTLINKS over the full synth corpus (PDF → empty, HTML link
-    farms / nav menus / paywalled pages) vs the frozen per-recipe/per-idx
-    expected signatures — pins drop-region exclusion, dedup order, and
-    the []-for-PDF contract corpus-wide."""
-    ex = _extracted(spark, sf)
-    return ex.select(
-        "url",
-        F.size("outlinks").alias("n_outlinks"),
-        F.concat_ws(";", "outlinks").alias("outlinks_sig"),
-    )
-
-
 _TITLE_LIT = "Naïve — 漢字 title"  # multibyte + entity-adjacent chars
 
 
@@ -287,20 +327,6 @@ def doc_title(spark, sf):
         "</p></body></html>",
     )
     ex = extract(raw)
-    return ex.select("url", "title")
-
-
-@_q(
-    "doc_title_sig",
-    f"""WITH {corpus_cte()},
-{perdoc_cte()}
-SELECT url, title FROM perdoc""",
-)
-def doc_title_sig(spark, sf):
-    """v5 TITLE over the full synth corpus (PDF /Info /Title incl. UTF-16BE
-    BOM + PDFDocEncoding, HTML <title> incl. titles inside dropped heads)
-    vs the frozen per-recipe/per-idx expected values."""
-    ex = _extracted(spark, sf)
     return ex.select("url", "title")
 
 
@@ -352,20 +378,6 @@ def doc_headmeta(spark, sf):
         "</p></body></html>",
     )
     ex = extract(raw)
-    return ex.select("url", "canonical", "description")
-
-
-@_q(
-    "doc_headmeta_sig",
-    f"""WITH {corpus_cte()},
-{perdoc_cte()}
-SELECT url, canonical, description FROM perdoc""",
-)
-def doc_headmeta_sig(spark, sf):
-    """v6 HEADMETA over the full synth corpus (PDF /Info /Subject incl.
-    PDFDocEncoding renormalization, HTML canonical/description in dropped
-    heads) vs the frozen per-recipe/per-idx expected values."""
-    ex = _extracted(spark, sf)
     return ex.select("url", "canonical", "description")
 
 
@@ -443,20 +455,6 @@ def doc_ogmeta(spark, sf):
 
 
 @_q(
-    "doc_ogmeta_sig",
-    f"""WITH {corpus_cte()},
-{perdoc_cte()}
-SELECT url, og_title, og_description, og_image FROM perdoc""",
-)
-def doc_ogmeta_sig(spark, sf):
-    """v8 OGMETA over the full synth corpus (html_ogmeta recipe carries
-    real og tags + decoys; every other recipe and all PDFs must be NULL)
-    vs the frozen per-recipe/per-idx expected values."""
-    ex = _extracted(spark, sf)
-    return ex.select("url", "og_title", "og_description", "og_image")
-
-
-@_q(
     "doc_headings",
     """SELECT CAST(doc_id AS VARCHAR) AS url,
        CAST(0 AS INT) AS block, CAST(1 AS INT) AS level
@@ -491,33 +489,6 @@ def doc_headings(spark, sf):
     h = ex.select("url", F.explode("headings").alias("h"))
     return h.select(
         "url", F.col("h.block").alias("block"), F.col("h.level").alias("level")
-    )
-
-
-@_q(
-    "doc_headings_sig",
-    f"""WITH {corpus_cte()},
-{perdoc_cte()}
-SELECT url, CAST(n_headings AS INT) AS n_headings, headings_sig
-FROM perdoc""",
-)
-def doc_headings_sig(spark, sf):
-    """v7 HEADINGS over the full synth corpus (HTML h1–h6 kept-block
-    structure + PDF outline preorder levels) vs the frozen
-    per-recipe/per-idx expected signatures."""
-    ex = _extracted(spark, sf)
-    return ex.select(
-        "url",
-        F.size("headings").alias("n_headings"),
-        F.concat_ws(
-            ";",
-            F.transform(
-                "headings",
-                lambda h: F.concat_ws(
-                    ":", h["block"].cast("string"), h["level"].cast("string")
-                ),
-            ),
-        ).alias("headings_sig"),
     )
 
 
@@ -771,28 +742,6 @@ def doc_anchors(spark, sf):
 
 
 @_q(
-    "doc_anchors_sig",
-    f"""WITH {corpus_cte()},
-{perdoc_cte()}
-SELECT url, CAST(n_outlinks AS INT) AS n_outlinks, anchors_sig
-FROM perdoc""",
-)
-def doc_anchors_sig(spark, sf):
-    """v9 ANCHORS over the full synth corpus (link farms, nav menus, the
-    html_anchors edge-matrix recipe, []-for-PDF) vs the frozen
-    per-recipe/per-idx md5 signatures — the hex digest keeps control
-    bytes out of SQL literals while still pinning every capture byte."""
-    ex = _extracted(spark, sf)
-    return ex.select(
-        "url",
-        F.size("outlinks").alias("n_outlinks"),
-        F.md5(F.encode(F.concat_ws("\x1f", "anchors"), "utf-8")).alias(
-            "anchors_sig"
-        ),
-    )
-
-
-@_q(
     "anchor_text_agg",
     f"""WITH {corpus_cte()},
 {anchors_cte()}
@@ -899,39 +848,6 @@ def doc_tables(spark, sf):
 
 
 @_q(
-    "doc_tables_sig",
-    f"""WITH {corpus_cte()},
-{perdoc_cte()}
-SELECT url, CAST(n_cells AS INT) AS n_cells, tables_sig
-FROM perdoc""",
-)
-def doc_tables_sig(spark, sf):
-    """v10 TABLES over the full synth corpus (the html_table recipe's data
-    grid + link-farm row, the unclosed-table recipe, []-for-PDF) vs the
-    frozen per-recipe/per-idx md5 signatures over the canonical
-    "table:row:col:header:cell" strings in emission order."""
-    ex = _extracted(spark, sf)
-    canon = F.transform(
-        "tables",
-        lambda x: F.concat_ws(
-            ":",
-            x["table"].cast("string"),
-            x["row"].cast("string"),
-            x["col"].cast("string"),
-            x["header"].cast("int").cast("string"),
-            x["cell"],
-        ),
-    )
-    return ex.select(
-        "url",
-        F.size("tables").alias("n_cells"),
-        F.md5(F.encode(F.concat_ws("\x1f", canon), "utf-8")).alias(
-            "tables_sig"
-        ),
-    )
-
-
-@_q(
     "table_shape",
     f"""WITH {corpus_cte()},
 {tables_cte()}
@@ -1032,39 +948,6 @@ def doc_lists(spark, sf):
 
 
 @_q(
-    "doc_lists_sig",
-    f"""WITH {corpus_cte()},
-{perdoc_cte()}
-SELECT url, CAST(n_items AS INT) AS n_items, lists_sig
-FROM perdoc""",
-)
-def doc_lists_sig(spark, sf):
-    """v11 LISTS over the full synth corpus (the html_lists edge-matrix
-    recipe, nav/drop-region lists across the other recipes, []-for-PDF)
-    vs the frozen per-recipe/per-idx md5 signatures over the canonical
-    "list:item:depth:ordered:item_text" strings in emission order."""
-    ex = _extracted(spark, sf)
-    canon = F.transform(
-        "lists",
-        lambda x: F.concat_ws(
-            ":",
-            x["list"].cast("string"),
-            x["item"].cast("string"),
-            x["depth"].cast("string"),
-            x["ordered"].cast("int").cast("string"),
-            x["item_text"],
-        ),
-    )
-    return ex.select(
-        "url",
-        F.size("lists").alias("n_items"),
-        F.md5(F.encode(F.concat_ws("\x1f", canon), "utf-8")).alias(
-            "lists_sig"
-        ),
-    )
-
-
-@_q(
     "list_stats",
     f"""WITH {corpus_cte()},
 {lists_cte()}
@@ -1156,31 +1039,6 @@ def doc_images(spark, sf):
         F.col("pos").cast("int").alias("pos"),
         F.col("t.src").alias("src"),
         F.col("t.alt").alias("alt"),
-    )
-
-
-@_q(
-    "doc_images_sig",
-    f"""WITH {{corpus}},
-{{perdoc}}
-SELECT url, CAST(n_images AS INT) AS n_images, images_sig
-FROM perdoc""".format(corpus=corpus_cte(), perdoc=perdoc_cte()),
-)
-def doc_images_sig(spark, sf):
-    """v12 IMAGES over the full synth corpus (the html_images edge-matrix
-    recipe, incidental imgs across the other recipes, []-for-PDF) vs the
-    frozen per-recipe/per-idx md5 signatures over the canonical
-    "src:alt" strings in document order."""
-    ex = _extracted(spark, sf)
-    canon = F.transform(
-        "images", lambda x: F.concat_ws(":", x["src"], x["alt"])
-    )
-    return ex.select(
-        "url",
-        F.size("images").alias("n_images"),
-        F.md5(F.encode(F.concat_ws("\x1f", canon), "utf-8")).alias(
-            "images_sig"
-        ),
     )
 
 
@@ -1314,27 +1172,6 @@ def doc_jsonld(spark, sf):
         "url", F.posexplode("jsonld").alias("pos", "payload")
     ).select(
         "url", F.col("pos").cast("int").alias("pos"), "payload"
-    )
-
-
-@_q(
-    "doc_jsonld_sig",
-    f"""WITH {{corpus}},
-{{perdoc}}
-SELECT url, CAST(n_jsonld AS INT) AS n_jsonld, jsonld_sig
-FROM perdoc""".format(corpus=corpus_cte(), perdoc=perdoc_cte()),
-)
-def doc_jsonld_sig(spark, sf):
-    """v13 JSONLD over the full synth corpus (the html_jsonld edge-matrix
-    recipe, []-elsewhere/[]-for-PDF) vs the frozen per-recipe/per-idx md5
-    signatures over the \x1f-joined raw payloads in document order."""
-    ex = _extracted(spark, sf)
-    return ex.select(
-        "url",
-        F.size("jsonld").alias("n_jsonld"),
-        F.md5(F.encode(F.concat_ws("\x1f", F.col("jsonld")), "utf-8")).alias(
-            "jsonld_sig"
-        ),
     )
 
 
@@ -1499,32 +1336,6 @@ def doc_alternates(spark, sf):
         F.col("t.hreflang").alias("hreflang"),
         F.col("t.type").alias("ltype"),
         F.col("t.href").alias("href"),
-    )
-
-
-@_q(
-    "doc_alternates_sig",
-    f"""WITH {{corpus}},
-{{perdoc}}
-SELECT url, CAST(n_alternates AS INT) AS n_alternates, alternates_sig
-FROM perdoc""".format(corpus=corpus_cte(), perdoc=perdoc_cte()),
-)
-def doc_alternates_sig(spark, sf):
-    """v15 ALTERNATES over the full synth corpus (the html_ogmeta
-    edge-matrix rows, []-for-PDF) vs the frozen per-recipe/per-idx md5
-    signatures over the canonical "hreflang:type:href" triples in
-    document order."""
-    ex = _extracted(spark, sf)
-    canon = F.transform(
-        "alternates",
-        lambda x: F.concat_ws(":", x["hreflang"], x["type"], x["href"]),
-    )
-    return ex.select(
-        "url",
-        F.size("alternates").alias("n_alternates"),
-        F.md5(F.encode(F.concat_ws("\x1f", canon), "utf-8")).alias(
-            "alternates_sig"
-        ),
     )
 
 
@@ -1881,30 +1692,6 @@ def doc_forms(spark, sf):
         F.col("t.method").alias("method"),
         F.col("t.action").alias("action"),
         abs_action.alias("abs_action"),
-    )
-
-
-@_q(
-    "doc_forms_sig",
-    f"""WITH {{corpus}},
-{{perdoc}}
-SELECT url, CAST(n_forms AS INT) AS n_forms, forms_sig
-FROM perdoc""".format(corpus=corpus_cte(), perdoc=perdoc_cte()),
-)
-def doc_forms_sig(spark, sf):
-    """v18 FORMS over the full synth corpus (the html_forms edge-matrix
-    recipe, []-for-PDF) vs the frozen per-recipe/per-idx md5 signatures
-    over the canonical "method:action" strings in document order."""
-    ex = _extracted(spark, sf)
-    canon = F.transform(
-        "forms", lambda x: F.concat_ws(":", x["method"], x["action"])
-    )
-    return ex.select(
-        "url",
-        F.size("forms").alias("n_forms"),
-        F.md5(F.encode(F.concat_ws("\x1f", canon), "utf-8")).alias(
-            "forms_sig"
-        ),
     )
 
 
@@ -2412,34 +2199,6 @@ def doc_microdata(spark, sf):
 
 
 @_q(
-    "doc_microdata_sig",
-    f"""WITH {{corpus}},
-{{perdoc}}
-SELECT url, CAST(n_microdata AS INT) AS n_microdata, microdata_sig
-FROM perdoc""".format(corpus=corpus_cte(), perdoc=perdoc_cte()),
-)
-def doc_microdata_sig(spark, sf):
-    """v20 MICRODATA over the full synth corpus (the html_microdata
-    edge-matrix rows, []-for-PDF) vs the frozen per-recipe/per-idx md5
-    signatures over the canonical "item:itemtype:prop:value" strings in
-    emission order."""
-    ex = _extracted(spark, sf)
-    canon = F.transform(
-        "microdata",
-        lambda x: F.concat_ws(
-            ":", x["item"], x["itemtype"], x["prop"], x["value"]
-        ),
-    )
-    return ex.select(
-        "url",
-        F.size("microdata").alias("n_microdata"),
-        F.md5(F.encode(F.concat_ws("\x1f", canon), "utf-8")).alias(
-            "microdata_sig"
-        ),
-    )
-
-
-@_q(
     "microdata_types",
     f"""WITH {{corpus}},
 {{md}}
@@ -2547,34 +2306,6 @@ def doc_rdfa(spark, sf):
         F.col("t.typeof").alias("typeof"),
         F.col("t.prop").alias("prop"),
         F.col("t.value").alias("value"),
-    )
-
-
-@_q(
-    "doc_rdfa_sig",
-    f"""WITH {{corpus}},
-{{perdoc}}
-SELECT url, CAST(n_rdfa AS INT) AS n_rdfa, rdfa_sig
-FROM perdoc""".format(corpus=corpus_cte(), perdoc=perdoc_cte()),
-)
-def doc_rdfa_sig(spark, sf):
-    """v21 RDFA over the full synth corpus (the html_rdfa edge-matrix
-    rows, []-for-PDF) vs the frozen per-recipe/per-idx md5 signatures
-    over the canonical "item:vocab:typeof:prop:value" strings in
-    emission order."""
-    ex = _extracted(spark, sf)
-    canon = F.transform(
-        "rdfa",
-        lambda x: F.concat_ws(
-            ":", x["item"], x["vocab"], x["typeof"], x["prop"], x["value"]
-        ),
-    )
-    return ex.select(
-        "url",
-        F.size("rdfa").alias("n_rdfa"),
-        F.md5(F.encode(F.concat_ws("\x1f", canon), "utf-8")).alias(
-            "rdfa_sig"
-        ),
     )
 
 

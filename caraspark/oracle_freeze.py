@@ -76,26 +76,10 @@ docs AS (
 )"""
 
 
-_EXTRA_COLS = [
-    "rid", "valid", "strict", "n_objects", "n_streams", "n_updates",
-    "bytes_in", "bytes_decoded", "text_len", "text_md5", "err_codes",
-    "text_sha256", "text_tokens", "text_alpha", "text_chars",
-    "n_spans", "spans_sig", "n_outlinks", "outlinks_sig", "anchors_sig",
-    "n_cells", "tables_sig", "n_items", "lists_sig",
-    "n_images", "images_sig", "n_forms", "forms_sig",
-    "n_jsonld", "jsonld_sig",
-    "n_alternates", "alternates_sig", "n_microdata", "microdata_sig",
-    "n_rdfa", "rdfa_sig",
-    "robots_meta", "refresh_meta",
-    "base_href", "next_href", "prev_href",
-    "title",
-    "canonical", "description", "og_title", "og_description", "og_image",
-    "n_headings", "headings_sig",
-    "n_edges", "n_dangling", "n_trailer_roots", "dangling_paths",
-    "clean_md5", "clean_bytes", "fixpoint",
-]
-_HTML_COLS = [
-    "idx", "valid", "strict", "n_objects", "n_streams", "n_updates",
+# The extraction-result columns a PDF row (recipe extras) and an HTML row
+# (per-idx freeze) share, in ``perdoc`` order.
+_DOC_COLS = [
+    "valid", "strict", "n_objects", "n_streams", "n_updates",
     "bytes_in", "bytes_decoded", "text_len", "text_md5", "err_codes",
     "text_sha256", "text_tokens", "text_alpha", "text_chars",
     "n_spans", "spans_sig", "n_outlinks", "outlinks_sig", "anchors_sig",
@@ -110,6 +94,9 @@ _HTML_COLS = [
     "canonical", "description", "og_title", "og_description", "og_image",
     "n_headings", "headings_sig",
 ]
+_EXTRA_COLS = ["rid", *_DOC_COLS, "n_edges", "n_dangling", "n_trailer_roots",
+               "dangling_paths", "clean_md5", "clean_bytes", "fixpoint"]
+_HTML_COLS = ["idx", *_DOC_COLS]
 
 
 def extras_cte() -> str:
@@ -235,39 +222,17 @@ def findref_cte() -> str:
 def perdoc_cte() -> str:
     """One closed-form row per synth document (pdf via recipe extras, html
     via the per-idx freeze) with the extraction-result columns."""
+
+    def cols(t: str) -> str:
+        return ", ".join(f"{t}.{c}" for c in _DOC_COLS)
+
     return f"""{extras_cte()},
 {html_cte()},
 perdoc AS (
-  SELECT d.idx, d.rid, d.url, d.kind, p.valid, p.strict, p.n_objects,
-         p.n_streams, p.n_updates, p.bytes_in, p.bytes_decoded,
-         p.text_len, p.text_md5, p.err_codes, p.text_sha256,
-         p.text_tokens, p.text_alpha, p.text_chars,
-         p.n_spans, p.spans_sig, p.n_outlinks, p.outlinks_sig,
-         p.anchors_sig, p.n_cells, p.tables_sig, p.n_items,
-         p.lists_sig, p.n_images, p.images_sig, p.n_forms,
-         p.forms_sig, p.n_jsonld,
-         p.jsonld_sig, p.n_alternates, p.alternates_sig,
-         p.n_microdata, p.microdata_sig, p.n_rdfa, p.rdfa_sig,
-         p.robots_meta, p.refresh_meta, p.base_href, p.next_href,
-         p.prev_href, p.title,
-         p.canonical, p.description, p.og_title, p.og_description,
-         p.og_image, p.n_headings, p.headings_sig
+  SELECT d.idx, d.rid, d.url, d.kind, {cols("p")}
   FROM docs d JOIN px p ON p.rid = d.rid
   UNION ALL
-  SELECT d.idx, d.rid, d.url, d.kind, h.valid, h.strict, h.n_objects,
-         h.n_streams, h.n_updates, h.bytes_in, h.bytes_decoded,
-         h.text_len, h.text_md5, h.err_codes, h.text_sha256,
-         h.text_tokens, h.text_alpha, h.text_chars,
-         h.n_spans, h.spans_sig, h.n_outlinks, h.outlinks_sig,
-         h.anchors_sig, h.n_cells, h.tables_sig, h.n_items,
-         h.lists_sig, h.n_images, h.images_sig, h.n_forms,
-         h.forms_sig, h.n_jsonld,
-         h.jsonld_sig, h.n_alternates, h.alternates_sig,
-         h.n_microdata, h.microdata_sig, h.n_rdfa, h.rdfa_sig,
-         h.robots_meta, h.refresh_meta, h.base_href, h.next_href,
-         h.prev_href, h.title,
-         h.canonical, h.description, h.og_title, h.og_description,
-         h.og_image, h.n_headings, h.headings_sig
+  SELECT d.idx, d.rid, d.url, d.kind, {cols("h")}
   FROM docs d JOIN hx h ON h.idx = d.idx
 )"""
 

@@ -1,14 +1,18 @@
 """Streaming qkeys (SURVEY.md B8): each runs a real Structured Streaming
 query to completion (memory sink, processAllAvailable) and returns the
-result. Where the semantics are batch-equivalent the DuckDB oracle verifies
-values; session windows / stateful ops are rows-only (pytest pins them to
-their batch equivalents instead)."""
+result. Every key has DuckDB oracle SQL: its batch-equivalent result,
+written relationally where the streaming operator has no SQL twin (a
+session window as gaps-and-islands, a stateful fold as its final state).
+The per-surface rollups over in-stream extraction are one ``_Rollup`` row
+each, built by ``_rollup``."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from typing import Callable, NamedTuple
 
-from caraspark import streaming as S
+from pyspark.sql import Column, DataFrame, functions as F
+
+from caraspark import curation, streaming as S
 from caraspark.corpus import html_docs
 from caraspark.relational import Q, registrar
 
@@ -189,9 +193,81 @@ def stream_extract(spark, sf):
     return S.run_to_memory(out)
 
 
-@_q(
-    "stream_anchor_agg",
-    """WITH hub AS (
+class _Rollup(NamedTuple):
+    """A streaming per-surface rollup. Documents arrive as file-source
+    micro-batches; each is wrapped in the HTML of ``parts(doc_id)`` and
+    extracted IN-STREAM (``want``) by the same Arrow UDF the batch job
+    runs; ``rows`` turns the extracted frame into key columns plus, when
+    the row has ``minmax``, one value column ``v``; a complete-mode
+    aggregation keyed by every column but ``v`` keeps the ``count``
+    column and min(v)/max(v) under the ``minmax`` names. A ``str`` part
+    (of ``parts`` or of ``url``, the page url's parts) is a literal, a
+    Column part is cast to string. DuckDB predicts every row closed-form
+    from ``sql``.
+
+    Scale: state is one fixed-width row per key (a count and two short
+    strings); the shuffle carries (key, partial aggregate) pairs only,
+    and document payloads never leave the extraction batch."""
+
+    sql: str
+    parts: Callable[[Column], tuple]
+    want: tuple[str, ...]
+    rows: Callable[[DataFrame], DataFrame]
+    count: str
+    minmax: tuple[str, str] | None = None
+    url: Callable[[Column], tuple] | None = None
+
+
+def _each(surface: str, **cols):
+    """Row function: one row per element ``t`` of ``surface``; each
+    output column is a field name of ``t`` or a function of ``t``."""
+
+    def rows(ex):
+        t = F.col("t")
+        return ex.select(F.explode(surface).alias("t")).select(
+            *(
+                (t[c] if isinstance(c, str) else c(t)).alias(name)
+                for name, c in cols.items()
+            )
+        )
+
+    return rows
+
+
+def _anchor_pairs(ex):
+    t = F.col("t")
+    zipped = F.arrays_zip("outlinks", "anchors")
+    pairs = ex.select(F.explode(zipped).alias("t"))
+    return pairs.select(t["outlinks"].alias("href"), t["anchors"].alias("v"))
+
+
+def _link_hosts(ex):
+    # the same resolve_url column chain as the batch frontier_feed
+    links = ex.select("url", F.explode("outlinks").alias("href"))
+    abs_url = curation.resolve_url(F.col("url"), F.col("href"))
+    return links.select(
+        F.regexp_extract(abs_url, r"^[a-z]+://([^/?#]*)", 1).alias("host")
+    )
+
+
+def _series_role(ex):
+    nxt, prv = F.col("next_href").isNotNull(), F.col("prev_href").isNotNull()
+    role = (
+        F.when(nxt & prv, "middle")
+        .when(nxt, "head")
+        .when(prv, "tail")
+        .otherwise("standalone")
+    )
+    return ex.select(role.alias("role"))
+
+
+_ROLLUPS = {
+    # v9 ANCHORS web-graph view keyed by target href: a colliding
+    # /hub/{id%7} link whose text varies by id%5 plus a unique next-page
+    # link. No countDistinct (streaming forbids it): extraction keeps a
+    # doc's first occurrence of each href, so n_refs is the referrer count.
+    "stream_anchor_agg": _Rollup(
+        sql="""WITH hub AS (
   SELECT '/hub/' || CAST(doc_id % 7 AS VARCHAR) AS href,
          'w' || CAST(doc_id % 5 AS VARCHAR) || ' topic' AS anchor
   FROM documents
@@ -202,60 +278,19 @@ def stream_extract(spark, sf):
 SELECT href, CAST(count(*) AS BIGINT) AS n_refs,
        min(anchor) AS anchor_min, max(anchor) AS anchor_max
 FROM hub GROUP BY href""",
-)
-def stream_anchor_agg(spark, sf):
-    """Streaming web-graph rollup over the v9 ANCHORS surface: documents
-    arrive as micro-batches, each is wrapped with two deterministic
-    anchors (a colliding /hub/{id%7} link whose text varies by id%5, and
-    a unique next-page link), extracted IN-STREAM by the same Arrow UDF
-    the batch job runs, and the exploded (href, anchor) pairs feed a
-    stateful streaming aggregation keyed by target href (complete mode —
-    the running web-graph view a crawl scheduler consults).  DuckDB
-    predicts every (href, n_refs, anchor_min, anchor_max) row
-    closed-form.  (No countDistinct column: streaming forbids exact
-    distinct aggregation, and v4's per-doc first-occurrence dedup already
-    makes every doc contribute a href at most once, so n_refs IS the
-    referrer count here.)
-
-    Scale: state is per-href fixed-width (a count + two bounded strings);
-    the stream never materializes document payloads past the extraction
-    batch, and the shuffle carries (href, anchor) pairs only — the same
-    exchange shape as the batch anchor_text_agg."""
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    raw = html_docs(
-        docs,
-        "<html><body><main><p>",
-        F.col("text"),
-        '</p></main><p><a href="/hub/',
-        (F.col("doc_id") % 7).cast("string"),
-        '">w',
-        (F.col("doc_id") % 5).cast("string"),
-        ' topic</a> <a href="/p/',
-        (F.col("doc_id") + 1).cast("string"),
-        '">next</a></p></body></html>',
-    )
-    pairs = (
-        extract(raw)
-        .select("url", F.explode(F.arrays_zip("outlinks", "anchors")).alias("oa"))
-        .select(
-            "url",
-            F.col("oa.outlinks").alias("href"),
-            F.col("oa.anchors").alias("anchor"),
-        )
-    )
-    out = pairs.groupBy("href").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_refs"),
-        F.min("anchor").alias("anchor_min"),
-        F.max("anchor").alias("anchor_max"),
-    )
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_tables",
-    """WITH cells AS (
+        parts=lambda d: (
+            "<html><body><main><p>", F.col("text"),
+            '</p></main><p><a href="/hub/', d % 7, '">w', d % 5,
+            ' topic</a> <a href="/p/', d + 1, '">next</a></p></body></html>',
+        ),
+        want=("outlinks", "anchors"),
+        rows=_anchor_pairs,
+        count="n_refs",
+        minmax=("anchor_min", "anchor_max"),
+    ),
+    # v10 TABLES: a 2-row table, header cell by id%5, data cell by id%11
+    "stream_tables": _Rollup(
+        sql="""WITH cells AS (
   SELECT CAST(0 AS INTEGER) AS trow, TRUE AS header,
          'grp' || CAST(doc_id % 5 AS VARCHAR) AS cell
   FROM documents
@@ -266,51 +301,271 @@ def stream_anchor_agg(spark, sf):
 SELECT trow, header, CAST(count(*) AS BIGINT) AS n_cells,
        min(cell) AS cell_min, max(cell) AS cell_max
 FROM cells GROUP BY trow, header""",
+        parts=lambda d: (
+            "<html><body><p>", F.col("text"), "</p><table><tr><th>grp",
+            d % 5, "</th></tr><tr><td>", d % 11,
+            "</td></tr></table></body></html>",
+        ),
+        want=("tables",),
+        rows=_each("tables", trow="row", header="header", v="cell"),
+        count="n_cells",
+        minmax=("cell_min", "cell_max"),
+    ),
+    # v11 LISTS: an unordered item by id%4 holding an ordered one by id%9
+    "stream_lists": _Rollup(
+        sql="""WITH items AS (
+  SELECT CAST(0 AS INTEGER) AS depth, FALSE AS ordered,
+         'step' || CAST(doc_id % 4 AS VARCHAR) AS itext
+  FROM documents
+  UNION ALL
+  SELECT CAST(1 AS INTEGER), TRUE, CAST(doc_id % 9 AS VARCHAR)
+  FROM documents
 )
-def stream_tables(spark, sf):
-    """Streaming rollup over the v10 TABLES surface: documents arrive as
-    micro-batches, each wrapped with a deterministic 2-row table (a
-    header cell keyed by doc_id%5 and a data cell keyed by doc_id%11),
-    extracted IN-STREAM by the same Arrow UDF the batch job runs; the
-    exploded cells feed a stateful aggregation keyed by (row, header) —
-    complete mode.  DuckDB predicts every row closed-form.
+SELECT depth, ordered, CAST(count(*) AS BIGINT) AS n_items,
+       min(itext) AS item_min, max(itext) AS item_max
+FROM items GROUP BY depth, ordered""",
+        parts=lambda d: (
+            "<html><body><p>", F.col("text"), "</p><ul><li>step", d % 4,
+            "<ol><li>", d % 9, "</li></ol></li></ul></body></html>",
+        ),
+        want=("lists",),
+        rows=_each("lists", depth="depth", ordered="ordered", v="item_text"),
+        count="n_items",
+        minmax=("item_min", "item_max"),
+    ),
+    # v12 IMAGES: an alt-carrying path image and an alt-less data: URI
+    "stream_images": _Rollup(
+        sql="""WITH imgs AS (
+  SELECT TRUE AS has_alt,
+         '/s/' || CAST(doc_id % 6 AS VARCHAR) || '.png' AS src
+  FROM documents
+  UNION ALL
+  SELECT FALSE, 'data:g' || CAST(doc_id % 3 AS VARCHAR) FROM documents
+)
+SELECT has_alt, CAST(count(*) AS BIGINT) AS n_imgs,
+       min(src) AS src_min, max(src) AS src_max
+FROM imgs GROUP BY has_alt""",
+        parts=lambda d: (
+            "<html><body><p>", F.col("text"), "</p><img src='/s/", d % 6,
+            ".png' alt='y'><img src='data:g", d % 3, "'></body></html>",
+        ),
+        want=("images",),
+        rows=_each("images", has_alt=lambda t: t["alt"] != "", v="src"),
+        count="n_imgs",
+        minmax=("src_min", "src_max"),
+    ),
+    # v13 JSONLD: one ld+json payload and one empty match
+    "stream_jsonld": _Rollup(
+        sql="""WITH p AS (
+  SELECT '{"k":' || CAST(doc_id % 8 AS VARCHAR) || '}' AS payload
+  FROM documents
+  UNION ALL
+  SELECT '' FROM documents
+)
+SELECT payload <> '' AS nonempty, CAST(count(*) AS BIGINT) AS n_payloads,
+       min(payload) AS p_min, max(payload) AS p_max
+FROM p GROUP BY payload <> ''""",
+        parts=lambda d: (
+            "<html><body><p>", F.col("text"),
+            '</p><script type="application/ld+json">{"k":', d % 8,
+            "}</script>", '<script type="application/ld+json"></script>',
+            "</body></html>",
+        ),
+        want=("jsonld",),
+        rows=_each("jsonld", nonempty=lambda t: t != "", v=lambda t: t),
+        count="n_payloads",
+        minmax=("p_min", "p_max"),
+    ),
+    # v14 ROBOTSMETA: the live noindex-rate dashboard of a crawl operator
+    "stream_robots": _Rollup(
+        sql="""SELECT CASE doc_id % 3 WHEN 1 THEN 'noindex,nofollow'
+           WHEN 2 THEN 'index, follow' ELSE 'all' END AS robots_meta,
+       CAST(count(*) AS BIGINT) AS n_docs
+FROM documents
+GROUP BY CASE doc_id % 3 WHEN 1 THEN 'noindex,nofollow'
+           WHEN 2 THEN 'index, follow' ELSE 'all' END""",
+        parts=lambda d: (
+            "<html><head><meta name='robots' content='",
+            F.when(d % 3 == 1, "NOINDEX,NOFOLLOW")
+            .when(d % 3 == 2, "index,  Follow")
+            .otherwise("ALL"),
+            "'></head><body><p>", F.col("text"), "</p></body></html>",
+        ),
+        want=("robots",),
+        rows=lambda ex: ex.select("robots_meta"),
+        count="n_docs",
+    ),
+    # v15 ALTERNATES: one hreflang alternate and one feed alternate (empty
+    # hreflang) — the live multilingual-coverage count per language tag
+    "stream_alternates": _Rollup(
+        sql="""WITH alts AS (
+  SELECT 'fr-' || CAST(doc_id % 4 AS VARCHAR) AS hreflang FROM documents
+  UNION ALL
+  SELECT '' FROM documents
+)
+SELECT hreflang, CAST(count(*) AS BIGINT) AS n_links
+FROM alts GROUP BY hreflang""",
+        parts=lambda d: (
+            "<html><head><link rel='alternate' hreflang='fr-", d % 4,
+            "' href='/fr'><link rel='alternate' type='application/rss+xml' "
+            "href='/feed.xml'></head><body><p>", F.col("text"),
+            "</p></body></html>",
+        ),
+        want=("alternates",),
+        rows=_each("alternates", hreflang="hreflang"),
+        count="n_links",
+    ),
+    # the batch frontier_feed over micro-batches: one root-relative and one
+    # absolute hub link per page, resolved, counted per host — the view a
+    # frontier scheduler shards politeness budgets from
+    "stream_frontier": _Rollup(
+        sql="""WITH links AS (
+  SELECT 'site' || CAST(doc_id % 7 AS VARCHAR) || '.example' AS host
+  FROM documents
+  UNION ALL
+  SELECT 'hub.example' FROM documents
+)
+SELECT host, CAST(count(*) AS BIGINT) AS n_links
+FROM links GROUP BY host""",
+        parts=lambda d: (
+            "<html><body><main><p>t</p></main><p><a href='/p/", d + 1,
+            "'>next</a> <a href='https://hub.example/t?q=", d % 7,
+            "'>hub</a></p></body></html>",
+        ),
+        url=lambda d: (
+            "https://site", d % 7, ".example/sec", d % 3, "/page", d, ".html",
+        ),
+        want=("outlinks",),
+        rows=_link_hosts,
+        count="n_links",
+    ),
+    # v16 REFRESH: instant redirect / delayed reload / none — the live
+    # redirect-rate dashboard
+    "stream_refresh": _Rollup(
+        sql="""SELECT CASE doc_id % 4
+         WHEN 0 THEN '0; url=/moved'
+         WHEN 1 THEN '30' END AS refresh_meta,
+       CAST(count(*) AS BIGINT) AS n_docs
+FROM documents GROUP BY 1""",
+        parts=lambda d: (
+            "<html><head>",
+            F.when(d % 4 == 0, "<meta http-equiv='refresh' "
+                   "content='0;   URL=/Moved'>")
+            .when(d % 4 == 1, "<meta http-equiv='refresh' content='30'>")
+            .otherwise(""),
+            "</head><body><p>", F.col("text"), "</p></body></html>",
+        ),
+        want=("refresh",),
+        rows=lambda ex: ex.select("refresh_meta"),
+        count="n_docs",
+    ),
+    # v19 PAGINATION: rel=next/prev links (the doc_pagination class matrix)
+    # give each page a series role — how much multi-page reassembly the
+    # current crawl wave will need
+    "stream_pagination": _Rollup(
+        sql="""SELECT CASE WHEN doc_id % 3 <> 2 AND doc_id % 2 = 0 THEN 'middle'
+            WHEN doc_id % 3 <> 2 THEN 'head'
+            WHEN doc_id % 2 = 0 THEN 'tail'
+            ELSE 'standalone' END AS role,
+       CAST(count(*) AS BIGINT) AS n_docs
+FROM documents GROUP BY 1""",
+        parts=lambda d: (
+            "<html><head>",
+            F.when(d % 3 != 2, F.format_string("<link rel='next' href='/p%d'>",
+                                               d + 1)).otherwise(""),
+            F.when(d % 2 == 0, F.format_string("<link rel='prev' href='/p%d'>",
+                                               d - 1)).otherwise(""),
+            "</head><body><p>t</p></body></html>",
+        ),
+        want=("pagination",),
+        rows=_series_role,
+        count="n_docs",
+    ),
+    # v20 MICRODATA: one typed item (two props, one attribute-valued) plus
+    # one orphan prop
+    "stream_microdata": _Rollup(
+        sql="""WITH t AS (
+  SELECT 'name' AS prop, 'N ' || CAST(doc_id % 7 AS VARCHAR) AS value
+  FROM documents
+  UNION ALL
+  SELECT 'sku', 'S' || CAST(doc_id % 5 AS VARCHAR) FROM documents
+  UNION ALL
+  SELECT 'stray', 'x' FROM documents
+)
+SELECT prop, CAST(count(*) AS BIGINT) AS n_props,
+       min(value) AS v_min, max(value) AS v_max
+FROM t GROUP BY prop""",
+        parts=lambda d: (
+            "<html><body><div itemscope itemtype='T", d % 4,
+            "'><span itemprop='name'>N ", d % 7,
+            "</span><meta itemprop='sku' content='S", d % 5,
+            "'></div><span itemprop='stray'>x</span>", "</body></html>",
+        ),
+        want=("microdata",),
+        rows=_each("microdata", prop="prop", v="value"),
+        count="n_props",
+        minmax=("v_min", "v_max"),
+    ),
+    # v21 RDFA: a vocab-scoped typed subject with one text-capture prop and
+    # one resource-valued prop
+    "stream_rdfa": _Rollup(
+        sql="""WITH t AS (
+  SELECT 'V' || CAST(doc_id % 3 AS VARCHAR) AS vocab,
+         'name' AS prop, 'N ' || CAST(doc_id % 7 AS VARCHAR) AS value
+  FROM documents
+  UNION ALL
+  SELECT 'V' || CAST(doc_id % 3 AS VARCHAR), 'sameAs',
+         '/c/' || CAST(doc_id % 5 AS VARCHAR) FROM documents
+)
+SELECT vocab, prop, CAST(count(*) AS BIGINT) AS n_props,
+       min(value) AS v_min, max(value) AS v_max
+FROM t GROUP BY vocab, prop""",
+        parts=lambda d: (
+            "<html><body><div vocab='V", d % 3,
+            "' typeof='T'><span property='name'>N ", d % 7,
+            "</span><span property='sameAs' resource='/c/", d % 5,
+            "'>x</span></div></body></html>",
+        ),
+        want=("rdfa",),
+        rows=_each("rdfa", vocab="vocab", prop="prop", v="value"),
+        count="n_props",
+        minmax=("v_min", "v_max"),
+    ),
+}
 
-    Scale: two fixed-width state rows total; the stream materializes
-    (row, header, short cell string) triples only — the same
-    bounded-state shape as stream_anchor_agg."""
-    from caraspark.extract import extract
 
-    docs = S.replay_documents_stream(spark, sf)
-    raw = html_docs(
-        docs,
-        "<html><body><p>",
-        F.col("text"),
-        "</p><table><tr><th>grp",
-        (F.col("doc_id") % 5).cast("string"),
-        "</th></tr><tr><td>",
-        (F.col("doc_id") % 11).cast("string"),
-        "</td></tr></table></body></html>",
-    )
-    cells = (
-        extract(raw)
-        .select(F.explode("tables").alias("t"))
-        .select(
-            F.col("t.row").alias("trow"),
-            F.col("t.header").alias("header"),
-            F.col("t.cell").alias("cell"),
+def _str(part) -> Column:
+    return F.lit(part) if isinstance(part, str) else part.cast("string")
+
+
+def _rollup(r: _Rollup):
+    def fn(spark, sf):
+        from caraspark.extract import extract
+
+        d = F.col("doc_id")
+        raw = html_docs(
+            S.replay_documents_stream(spark, sf),
+            *map(_str, r.parts(d)),
+            url=r.url and F.concat(*map(_str, r.url(d))),
         )
-    )
-    out = cells.groupBy("trow", "header").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cells"),
-        F.min("cell").alias("cell_min"),
-        F.max("cell").alias("cell_max"),
-    )
-    return S.run_to_memory(out, mode="complete")
+        rows = r.rows(extract(raw, want=r.want))
+        aggs = [F.count(F.lit(1)).cast("bigint").alias(r.count)]
+        if r.minmax:
+            lo, hi = r.minmax
+            aggs += [F.min("v").alias(lo), F.max("v").alias(hi)]
+        keys = [c for c in rows.columns if c != "v"]
+        return S.run_to_memory(rows.groupBy(*keys).agg(*aggs), mode="complete")
+
+    return fn
+
+
+for _name, _r in _ROLLUPS.items():
+    _q(_name, _r.sql)(_rollup(_r))
 
 
 @_q(
     "stream_quality",
-    """WITH f AS (
+    f"""WITH f AS (
   SELECT doc_id, lang,
          len(string_split(text,' ')) AS n_tok,
          len(list_filter(string_split(lower(text),' '),
@@ -327,7 +582,7 @@ s AS (
          - 3*(n_upper*1000 // l) - 40*n_long + n_tok AS score
   FROM f
 )
-SELECT lang, score >= 420 AS keep,
+SELECT lang, score >= {curation._QL_THRESH} AS keep,
        CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(score) AS BIGINT) AS score_sum,
        CAST(min(score) AS BIGINT) AS score_min,
@@ -349,405 +604,13 @@ def stream_quality(spark, sf):
     (lang, bool, BIGINT) partial aggregates only — documents never leave
     the featurize stage.
     """
-    from caraspark.curation import _QL_THRESH, quality_features
-
     docs = S.replay_documents_stream(spark, sf).filter(F.length("text") > 0)
-    scored = quality_features(docs, extra=("lang",))
+    scored = curation.quality_features(docs, extra=("lang",))
     out = scored.groupBy("lang", "keep").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("score").cast("bigint").alias("score_sum"),
         F.min("score").cast("bigint").alias("score_min"),
         F.max("score").cast("bigint").alias("score_max"),
-    )
-    assert _QL_THRESH == 420  # oracle literal above must track the constant
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_lists",
-    """WITH items AS (
-  SELECT CAST(0 AS INTEGER) AS depth, FALSE AS ordered,
-         'step' || CAST(doc_id % 4 AS VARCHAR) AS itext
-  FROM documents
-  UNION ALL
-  SELECT CAST(1 AS INTEGER), TRUE, CAST(doc_id % 9 AS VARCHAR)
-  FROM documents
-)
-SELECT depth, ordered, CAST(count(*) AS BIGINT) AS n_items,
-       min(itext) AS item_min, max(itext) AS item_max
-FROM items GROUP BY depth, ordered""",
-)
-def stream_lists(spark, sf):
-    """Streaming rollup over the v11 LISTS surface: documents arrive as
-    micro-batches, each wrapped with a deterministic nested list (an
-    unordered outer item keyed by doc_id%4 carrying an ordered inner
-    item keyed by doc_id%9), extracted IN-STREAM by the same Arrow UDF
-    the batch job runs; the exploded items feed a stateful aggregation
-    keyed by (depth, ordered) — complete mode.  DuckDB predicts every
-    row closed-form.
-
-    Scale: two fixed-width state rows total; the stream materializes
-    (depth, ordered, short item string) triples only — the same
-    bounded-state shape as stream_tables."""
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    raw = html_docs(
-        docs,
-        "<html><body><p>",
-        F.col("text"),
-        "</p><ul><li>step",
-        (F.col("doc_id") % 4).cast("string"),
-        "<ol><li>",
-        (F.col("doc_id") % 9).cast("string"),
-        "</li></ol></li></ul></body></html>",
-    )
-    items = (
-        extract(raw)
-        .select(F.explode("lists").alias("t"))
-        .select(
-            F.col("t.depth").alias("depth"),
-            F.col("t.ordered").alias("ordered"),
-            F.col("t.item_text").alias("itext"),
-        )
-    )
-    out = items.groupBy("depth", "ordered").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_items"),
-        F.min("itext").alias("item_min"),
-        F.max("itext").alias("item_max"),
-    )
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_images",
-    """WITH imgs AS (
-  SELECT TRUE AS has_alt,
-         '/s/' || CAST(doc_id % 6 AS VARCHAR) || '.png' AS src
-  FROM documents
-  UNION ALL
-  SELECT FALSE, 'data:g' || CAST(doc_id % 3 AS VARCHAR) FROM documents
-)
-SELECT has_alt, CAST(count(*) AS BIGINT) AS n_imgs,
-       min(src) AS src_min, max(src) AS src_max
-FROM imgs GROUP BY has_alt""",
-)
-def stream_images(spark, sf):
-    """Streaming rollup over the v12 IMAGES surface: documents arrive as
-    micro-batches, each wrapped with one alt-carrying path image and one
-    alt-less data: URI image, extracted IN-STREAM by the same Arrow UDF
-    the batch job runs; the exploded elements feed a stateful
-    aggregation keyed by alt presence — complete mode.  DuckDB predicts
-    every row closed-form.
-
-    Scale: two fixed-width state rows total; the stream materializes
-    (bool, short src string) pairs only — the same bounded-state shape
-    as stream_lists/stream_tables."""
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    raw = html_docs(
-        docs,
-        "<html><body><p>",
-        F.col("text"),
-        "</p><img src='/s/",
-        (F.col("doc_id") % 6).cast("string"),
-        ".png' alt='y'><img src='data:g",
-        (F.col("doc_id") % 3).cast("string"),
-        "'></body></html>",
-    )
-    elems = (
-        extract(raw)
-        .select(F.explode("images").alias("t"))
-        .select(
-            (F.col("t.alt") != "").alias("has_alt"),
-            F.col("t.src").alias("src"),
-        )
-    )
-    out = elems.groupBy("has_alt").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_imgs"),
-        F.min("src").alias("src_min"),
-        F.max("src").alias("src_max"),
-    )
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_jsonld",
-    """WITH p AS (
-  SELECT '{"k":' || CAST(doc_id % 8 AS VARCHAR) || '}' AS payload
-  FROM documents
-  UNION ALL
-  SELECT '' FROM documents
-)
-SELECT payload <> '' AS nonempty, CAST(count(*) AS BIGINT) AS n_payloads,
-       min(payload) AS p_min, max(payload) AS p_max
-FROM p GROUP BY payload <> ''""",
-)
-def stream_jsonld(spark, sf):
-    """Streaming rollup over the v13 JSONLD surface: documents arrive as
-    micro-batches, each wrapped with one ld+json payload and one empty
-    match, extracted IN-STREAM by the same Arrow UDF; the exploded
-    payloads feed a stateful aggregation keyed by non-emptiness —
-    complete mode, two fixed-width state rows, same bounded-state shape
-    as the other per-surface stream rollups."""
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    raw = html_docs(
-        docs,
-        "<html><body><p>",
-        F.col("text"),
-        '</p><script type="application/ld+json">{"k":',
-        (F.col("doc_id") % 8).cast("string"),
-        "}</script>",
-        '<script type="application/ld+json"></script>',
-        "</body></html>",
-    )
-    p = (
-        extract(raw)
-        .select(F.explode("jsonld").alias("payload"))
-        .select((F.col("payload") != "").alias("nonempty"), "payload")
-    )
-    out = p.groupBy("nonempty").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_payloads"),
-        F.min("payload").alias("p_min"),
-        F.max("payload").alias("p_max"),
-    )
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_robots",
-    """SELECT CASE doc_id % 3 WHEN 1 THEN 'noindex,nofollow'
-           WHEN 2 THEN 'index, follow' ELSE 'all' END AS robots_meta,
-       CAST(count(*) AS BIGINT) AS n_docs
-FROM documents
-GROUP BY CASE doc_id % 3 WHEN 1 THEN 'noindex,nofollow'
-           WHEN 2 THEN 'index, follow' ELSE 'all' END""",
-)
-def stream_robots(spark, sf):
-    """Streaming compliance monitor over the v14 ROBOTSMETA surface:
-    pages arrive as micro-batches, each carrying a deterministic robots
-    meta, extracted IN-STREAM; the per-directive document counts are the
-    live dashboard a crawl operator watches to see noindex rates shift —
-    complete mode, three fixed-width state rows."""
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    directive = (
-        F.when(F.col("doc_id") % 3 == 1, "NOINDEX,NOFOLLOW")
-        .when(F.col("doc_id") % 3 == 2, "index,  Follow")
-        .otherwise("ALL")
-    )
-    raw = html_docs(
-        docs,
-        "<html><head><meta name='robots' content='",
-        directive,
-        "'></head><body><p>",
-        F.col("text"),
-        "</p></body></html>",
-    )
-    out = (
-        extract(raw)
-        .groupBy("robots_meta")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-    )
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_alternates",
-    """WITH alts AS (
-  SELECT 'fr-' || CAST(doc_id % 4 AS VARCHAR) AS hreflang FROM documents
-  UNION ALL
-  SELECT '' FROM documents
-)
-SELECT hreflang, CAST(count(*) AS BIGINT) AS n_links
-FROM alts GROUP BY hreflang""",
-)
-def stream_alternates(spark, sf):
-    """Streaming rollup over the v15 ALTERNATES surface: documents
-    arrive as micro-batches, each wrapped with one hreflang alternate
-    and one feed alternate (empty hreflang), extracted IN-STREAM by the
-    same Arrow UDF the batch job runs; the exploded triples feed a
-    stateful per-language-tag count — the live multilingual-coverage
-    dashboard a crawl operator watches while a frontier expands.
-    Complete mode; DuckDB predicts every row closed-form.
-
-    Scale: one fixed-width state row per language tag (~10^2 at web
-    scale); the stream materializes short tag strings only — the same
-    bounded-state shape as stream_images/stream_robots."""
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    raw = html_docs(
-        docs,
-        "<html><head><link rel='alternate' hreflang='fr-",
-        (F.col("doc_id") % 4).cast("string"),
-        "' href='/fr'>"
-        "<link rel='alternate' type='application/rss+xml' "
-        "href='/feed.xml'></head><body><p>",
-        F.col("text"),
-        "</p></body></html>",
-    )
-    out = (
-        extract(raw)
-        .select(F.explode("alternates").alias("t"))
-        .groupBy(F.col("t.hreflang").alias("hreflang"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_links"))
-    )
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_frontier",
-    """WITH links AS (
-  SELECT 'site' || CAST(doc_id % 7 AS VARCHAR) || '.example' AS host
-  FROM documents
-  UNION ALL
-  SELECT 'hub.example' FROM documents
-)
-SELECT host, CAST(count(*) AS BIGINT) AS n_links
-FROM links GROUP BY host""",
-)
-def stream_frontier(spark, sf):
-    """Streaming frontier feed: the batch `frontier_feed` composition run
-    over micro-batches — outlinks extracted IN-STREAM by the same Arrow
-    UDF, each href resolved with the SAME `resolve_url` column chain the
-    batch path uses (one root-relative link + one absolute hub link per
-    page), then a stateful per-host link count (complete mode) — the live
-    view a frontier scheduler shards politeness budgets from.
-
-    Scale: resolution is stateless scan-stage regex inside the micro-
-    batch; state is one BIGINT per host and the only shuffle carries
-    (host, partial-count) pairs — same bounded-state shape as
-    stream_anchor_agg."""
-    from caraspark.curation import resolve_url
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    did = F.col("doc_id")
-    page_url = F.concat(
-        F.lit("https://site"), (did % 7).cast("string"),
-        F.lit(".example/sec"), (did % 3).cast("string"),
-        F.lit("/page"), did.cast("string"), F.lit(".html"),
-    )
-    raw = html_docs(
-        docs,
-        "<html><body><main><p>t</p></main><p><a href='/p/",
-        (did + 1).cast("string"),
-        "'>next</a> <a href='https://hub.example/t?q=",
-        (did % 7).cast("string"),
-        "'>hub</a></p></body></html>",
-        url=page_url,
-    )
-    links = (
-        extract(raw, want=("outlinks",))
-        .select("url", F.explode("outlinks").alias("href"))
-    )
-    abs_url = resolve_url(F.col("url"), F.col("href"))
-    hosts = links.select(
-        F.regexp_extract(abs_url, r"^[a-z]+://([^/?#]*)", 1).alias("host")
-    )
-    out = hosts.groupBy("host").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_links")
-    )
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_refresh",
-    """SELECT CASE doc_id % 4
-         WHEN 0 THEN '0; url=/moved'
-         WHEN 1 THEN '30' END AS refresh_meta,
-       CAST(count(*) AS BIGINT) AS n_docs
-FROM documents GROUP BY 1""",
-)
-def stream_refresh(spark, sf):
-    """Streaming soft-redirect monitor over the v16 REFRESH surface:
-    pages arrive as micro-batches with a deterministic refresh meta
-    (instant redirect / delayed reload / none), extracted IN-STREAM; the
-    per-directive live counts are the redirect-rate dashboard a crawl
-    operator watches — complete mode, three fixed-width state rows."""
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    tag = (
-        F.when(
-            F.col("doc_id") % 4 == 0,
-            F.lit("<meta http-equiv='refresh' content='0;   URL=/Moved'>"),
-        )
-        .when(
-            F.col("doc_id") % 4 == 1,
-            F.lit("<meta http-equiv='refresh' content='30'>"),
-        )
-        .otherwise(F.lit(""))
-    )
-    raw = html_docs(
-        docs,
-        "<html><head>",
-        tag,
-        "</head><body><p>",
-        F.col("text"),
-        "</p></body></html>",
-    )
-    out = (
-        extract(raw, want=("refresh",))
-        .groupBy("refresh_meta")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-    )
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_pagination",
-    """SELECT CASE WHEN doc_id % 3 <> 2 AND doc_id % 2 = 0 THEN 'middle'
-            WHEN doc_id % 3 <> 2 THEN 'head'
-            WHEN doc_id % 2 = 0 THEN 'tail'
-            ELSE 'standalone' END AS role,
-       CAST(count(*) AS BIGINT) AS n_docs
-FROM documents GROUP BY 1""",
-)
-def stream_pagination(spark, sf):
-    """Streaming series-role census over the v19 PAGINATION surface:
-    pages arrive as micro-batches carrying rel=next/prev links (the
-    doc_pagination class matrix), both hrefs extracted IN-STREAM, each
-    page classified head / middle / tail / standalone — the live view
-    that tells a crawler how much multi-page reassembly the current
-    wave will need. Complete mode, four fixed-width state rows; the
-    only shuffle carries (role, partial-count) pairs."""
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    did = F.col("doc_id")
-    raw = html_docs(
-        docs,
-        "<html><head>",
-        F.when(
-            did % 3 != 2,
-            F.concat(F.lit("<link rel='next' href='/p"),
-                     (did + 1).cast("string"), F.lit("'>")),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 2 == 0,
-            F.concat(F.lit("<link rel='prev' href='/p"),
-                     (did - 1).cast("string"), F.lit("'>")),
-        ).otherwise(F.lit("")),
-        "</head><body><p>t</p></body></html>",
-    )
-    ex = extract(raw, want=("pagination",))
-    role = (
-        F.when(
-            F.col("next_href").isNotNull() & F.col("prev_href").isNotNull(),
-            F.lit("middle"),
-        )
-        .when(F.col("next_href").isNotNull(), F.lit("head"))
-        .when(F.col("prev_href").isNotNull(), F.lit("tail"))
-        .otherwise(F.lit("standalone"))
-    )
-    out = ex.select(role.alias("role")).groupBy("role").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
     return S.run_to_memory(out, mode="complete")
 
@@ -967,107 +830,6 @@ def stream_validators(spark, sf):
         classify_validators(fetches)
         .groupBy("validator")
         .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_microdata",
-    """WITH t AS (
-  SELECT 'name' AS prop, 'N ' || CAST(doc_id % 7 AS VARCHAR) AS value
-  FROM documents
-  UNION ALL
-  SELECT 'sku', 'S' || CAST(doc_id % 5 AS VARCHAR) FROM documents
-  UNION ALL
-  SELECT 'stray', 'x' FROM documents
-)
-SELECT prop, CAST(count(*) AS BIGINT) AS n_props,
-       min(value) AS v_min, max(value) AS v_max
-FROM t GROUP BY prop""",
-)
-def stream_microdata(spark, sf):
-    """Streaming rollup over the v20 MICRODATA surface: documents arrive
-    as micro-batches, each wrapped with one typed item (two props, one
-    attribute-valued) plus one orphan prop, extracted IN-STREAM by the
-    same Arrow UDF; exploded tuples feed a stateful aggregation keyed by
-    prop — complete mode, three fixed-width state rows, the same
-    bounded-state shape as the other per-surface stream rollups (the
-    live which-typed-records-are-flowing dashboard for a crawl ingest)."""
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    raw = html_docs(
-        docs,
-        "<html><body><div itemscope itemtype='T",
-        (F.col("doc_id") % 4).cast("string"),
-        "'><span itemprop='name'>N ",
-        (F.col("doc_id") % 7).cast("string"),
-        "</span><meta itemprop='sku' content='S",
-        (F.col("doc_id") % 5).cast("string"),
-        "'></div><span itemprop='stray'>x</span>",
-        "</body></html>",
-    )
-    t = (
-        extract(raw, want=("microdata",))
-        .select(F.explode("microdata").alias("t"))
-        .select(F.col("t.prop").alias("prop"), F.col("t.value").alias("value"))
-    )
-    out = t.groupBy("prop").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_props"),
-        F.min("value").alias("v_min"),
-        F.max("value").alias("v_max"),
-    )
-    return S.run_to_memory(out, mode="complete")
-
-
-@_q(
-    "stream_rdfa",
-    """WITH t AS (
-  SELECT 'V' || CAST(doc_id % 3 AS VARCHAR) AS vocab,
-         'name' AS prop, 'N ' || CAST(doc_id % 7 AS VARCHAR) AS value
-  FROM documents
-  UNION ALL
-  SELECT 'V' || CAST(doc_id % 3 AS VARCHAR), 'sameAs',
-         '/c/' || CAST(doc_id % 5 AS VARCHAR) FROM documents
-)
-SELECT vocab, prop, CAST(count(*) AS BIGINT) AS n_props,
-       min(value) AS v_min, max(value) AS v_max
-FROM t GROUP BY vocab, prop""",
-)
-def stream_rdfa(spark, sf):
-    """Streaming rollup over the v21 RDFA surface: documents arrive as
-    micro-batches, each wrapped with a vocab-scoped typed subject
-    carrying one text-capture prop and one resource-valued prop,
-    extracted IN-STREAM; exploded tuples feed a stateful aggregation
-    keyed by (vocab, prop) — complete mode, six fixed-width state rows,
-    completing the structured-data triad's streaming censuses
-    (stream_jsonld, stream_microdata, stream_rdfa)."""
-    from caraspark.extract import extract
-
-    docs = S.replay_documents_stream(spark, sf)
-    raw = html_docs(
-        docs,
-        "<html><body><div vocab='V",
-        (F.col("doc_id") % 3).cast("string"),
-        "' typeof='T'><span property='name'>N ",
-        (F.col("doc_id") % 7).cast("string"),
-        "</span><span property='sameAs' resource='/c/",
-        (F.col("doc_id") % 5).cast("string"),
-        "'>x</span></div></body></html>",
-    )
-    t = (
-        extract(raw, want=("rdfa",))
-        .select(F.explode("rdfa").alias("t"))
-        .select(
-            F.col("t.vocab").alias("vocab"),
-            F.col("t.prop").alias("prop"),
-            F.col("t.value").alias("value"),
-        )
-    )
-    out = t.groupBy("vocab", "prop").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_props"),
-        F.min("value").alias("v_min"),
-        F.max("value").alias("v_max"),
     )
     return S.run_to_memory(out, mode="complete")
 

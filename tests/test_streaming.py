@@ -338,9 +338,10 @@ def test_stream_frontier_matches_closed_form(spark, sf_smoke):
     """Every doc contributes exactly one resolved link to its own site
     host (root-relative /p/ link) and one to hub.example (absolute) —
     the streamed per-host counts must equal that closed form."""
-    from caraspark.streaming_queries import stream_frontier
+    from caraspark.streaming_queries import REGISTRY
     from caraspark.tables import load
 
+    stream_frontier = REGISTRY["stream_frontier"].fn
     got = {r.host: r.n_links for r in stream_frontier(spark, sf_smoke).collect()}
     dids = [
         r.doc_id

@@ -370,9 +370,10 @@ def build_extras():
 
 
 def _img_facts(res) -> dict:
-    """Mirror doc_images_sig's JVM expression: md5 over the \x1f-joined
-    "src:alt" canonical strings in document order; None when the surface
-    was not computed."""
+    """Mirror the JVM expression that extract_queries derives from
+    doc_images_sig's ``_SIGS`` row: md5 over the \x1f-joined "src:alt"
+    canonical strings in document order; None when the surface was not
+    computed."""
     if res.images is None:
         return {"n_images": None, "images_sig": None}
     return {
@@ -384,7 +385,8 @@ def _img_facts(res) -> dict:
 
 
 def _form_facts(res) -> dict:
-    """Mirror doc_forms_sig's JVM expression: md5 over the \x1f-joined
+    """Mirror the JVM expression that extract_queries derives from
+    doc_forms_sig's ``_SIGS`` row: md5 over the \x1f-joined
     "method:action" canonical strings in document order."""
     if res.forms is None:
         return {"n_forms": None, "forms_sig": None}
@@ -397,9 +399,10 @@ def _form_facts(res) -> dict:
 
 
 def _alt_facts(res) -> dict:
-    """Mirror doc_alternates_sig's JVM expression: md5 over the
-    \x1f-joined "hreflang:type:href" canonical triples in document
-    order; None when the surface was not computed."""
+    """Mirror the JVM expression that extract_queries derives from
+    doc_alternates_sig's ``_SIGS`` row: md5 over the \x1f-joined
+    "hreflang:type:href" canonical triples in document order; None when
+    the surface was not computed."""
     if res.alternates is None:
         return {"n_alternates": None, "alternates_sig": None}
     return {
@@ -413,9 +416,10 @@ def _alt_facts(res) -> dict:
 
 
 def _md_facts(res) -> dict:
-    """Mirror doc_microdata_sig's JVM expression: md5 over the
-    \x1f-joined "item:itemtype:prop:value" canonical strings in
-    emission order; None when the surface was not computed."""
+    """Mirror the JVM expression that extract_queries derives from
+    doc_microdata_sig's ``_SIGS`` row: md5 over the \x1f-joined
+    "item:itemtype:prop:value" canonical strings in emission order; None
+    when the surface was not computed."""
     if res.microdata is None:
         return {"n_microdata": None, "microdata_sig": None}
     return {
@@ -429,9 +433,10 @@ def _md_facts(res) -> dict:
 
 
 def _rd_facts(res) -> dict:
-    """Mirror doc_rdfa_sig's JVM expression: md5 over the
-    \x1f-joined "item:vocab:typeof:prop:value" canonical strings in
-    emission order; None when the surface was not computed."""
+    """Mirror the JVM expression that extract_queries derives from
+    doc_rdfa_sig's ``_SIGS`` row: md5 over the \x1f-joined
+    "item:vocab:typeof:prop:value" canonical strings in emission order;
+    None when the surface was not computed."""
     if res.rdfa is None:
         return {"n_rdfa": None, "rdfa_sig": None}
     return {
@@ -445,8 +450,9 @@ def _rd_facts(res) -> dict:
 
 
 def _jsonld_facts(res) -> dict:
-    """Mirror doc_jsonld_sig's JVM expression: md5 over the \x1f-joined
-    raw payloads in document order; None when not computed."""
+    """Mirror the JVM expression that extract_queries derives from
+    doc_jsonld_sig's ``_SIGS`` row: md5 over the \x1f-joined raw
+    payloads in document order; None when not computed."""
     if res.jsonld is None:
         return {"n_jsonld": None, "jsonld_sig": None}
     return {
@@ -480,9 +486,10 @@ def _title_facts(res) -> dict:
 
 
 def _anchor_facts(res) -> dict:
-    """Mirror doc_anchors_sig's JVM expression: md5 over the \x1f-joined
-    anchor list (hex digest so no control byte ever reaches a SQL
-    literal); None when the surface was not computed."""
+    """Mirror the JVM expression that extract_queries derives from
+    doc_anchors_sig's ``_SIGS`` row: md5 over the \x1f-joined anchor
+    list (hex digest so no control byte ever reaches a SQL literal);
+    None when the surface was not computed."""
     if res.anchors is None:
         return {"anchors_sig": None}
     return {
@@ -493,7 +500,8 @@ def _anchor_facts(res) -> dict:
 
 
 def _list_facts(res) -> dict:
-    """Mirror doc_lists_sig's JVM expression: md5 over the \x1f-joined
+    """Mirror the JVM expression that extract_queries derives from
+    doc_lists_sig's ``_SIGS`` row: md5 over the \x1f-joined
     "list:item:depth:ordered(0/1):item_text" canonical strings in
     emission order; None when the surface was not computed."""
     if res.lists is None:
@@ -510,7 +518,8 @@ def _list_facts(res) -> dict:
 
 
 def _table_facts(res) -> dict:
-    """Mirror doc_tables_sig's JVM expression: md5 over the \x1f-joined
+    """Mirror the JVM expression that extract_queries derives from
+    doc_tables_sig's ``_SIGS`` row: md5 over the \x1f-joined
     "table:row:col:header(0/1):cell" canonical strings in emission
     order; None when the surface was not computed."""
     if res.tables is None:
@@ -527,16 +536,18 @@ def _table_facts(res) -> dict:
 
 
 def _outlink_facts(outlinks) -> dict:
-    """Mirror doc_outlinks_sig's JVM expressions: size(outlinks) and the
-    ";"-joined href signature ("" for none)."""
+    """Mirror the JVM expressions that extract_queries derives from
+    doc_outlinks_sig's ``_SIGS`` row: size(outlinks) and the ";"-joined
+    href signature ("" for none)."""
     if outlinks is None:
         return {"n_outlinks": None, "outlinks_sig": None}
     return {"n_outlinks": len(outlinks), "outlinks_sig": ";".join(outlinks)}
 
 
 def _span_facts(spans) -> dict:
-    """Mirror doc_spans_sig's JVM expressions: size(spans) and the
-    ";"-joined "start-end-label" signature string ("" for no spans)."""
+    """Mirror the JVM expressions that extract_queries derives from
+    doc_spans_sig's ``_SIGS`` row: size(spans) and the ";"-joined
+    "start-end-label" signature string ("" for no spans)."""
     if spans is None:
         return {"n_spans": None, "spans_sig": None}
     return {
