@@ -8,6 +8,7 @@ training-data pipeline needs.
 
 Layout:
     caraspark.session     SparkSession factory (UTC, AQE, Arrow tuned)
+    caraspark.workerd     Python worker daemon (no per-task zip rescan)
     caraspark.schemas     every explicit StructType (never inferred)
     caraspark.synth       deterministic documents_raw corpus generator
     caraspark.pdf         byte-level PDF lexer/parser/xref/filters/typecheck

@@ -13,6 +13,13 @@ is the one we'd ship to a 1000-executor cluster too:
                                Python workers; a small maxRecordsPerBatch plus
                                the byte-budget logic in extract.py bounds the
                                per-batch footprint (SURVEY.md §4.3).
+* caraspark.workerd daemon   — forks Python workers that skip the per-task
+                               zip-directory rescan (≈0.1-0.2 s of CPU per
+                               task; see workerd.py). It starts before any
+                               --py-files include is on the worker's path,
+                               so executorEnv.PYTHONPATH leads with
+                               caraspark's import root (the repository, or
+                               caraspark.zip itself).
 """
 
 from __future__ import annotations
@@ -24,6 +31,9 @@ from pyspark.sql import SparkSession
 # Arrow rows per batch for Python-UDF exchange. Extraction re-batches by a
 # BYTE budget inside the UDF; this only caps the row count per IPC message.
 ARROW_BATCH_ROWS = 1024
+
+# The directory (or zip) that ``import caraspark`` resolved from.
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -47,6 +57,9 @@ def get_spark(
         except (IndexError, ValueError):
             cores = os.cpu_count() or 8
     shuffle = max(2 * cores, 8)
+    pythonpath = os.pathsep.join(
+        p for p in (_IMPORT_ROOT, os.environ.get("PYTHONPATH")) if p
+    )
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -64,6 +77,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("CARASPARK_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "caraspark.workerd")
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

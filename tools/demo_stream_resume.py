@@ -34,6 +34,7 @@ sys.path.insert(0, ROOT)
 N_FILES = 8
 ROWS_PER_FILE = 5000
 BASE = "/tmp/caraspark_stream_resume_demo"
+MASTER = "local[8]"
 
 
 def job(src: str, out: str) -> None:
@@ -42,11 +43,10 @@ def job(src: str, out: str) -> None:
     `streaming.foreach_batch_to_parquet` (idempotent epoch-dir writes +
     durable checkpoint + drain-and-exit), so the demo exercises the exact
     code path it makes claims about."""
-    from pyspark.sql import SparkSession
-
+    from caraspark.session import get_spark
     from caraspark.streaming import foreach_batch_to_parquet
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark("stream-resume-demo", master=MASTER)
     stream = (
         spark.readStream.schema("event_id long, payload string")
         .option("maxFilesPerTrigger", "1")
@@ -76,9 +76,13 @@ def main() -> None:
             os.path.join(src, f"part-{f}.parquet"),
         )
 
+    from build_pyfiles import build
+
+    pyfiles = os.path.join(ROOT, "caraspark.zip")
+    build(pyfiles)  # ship the current code, not a stale zip
     cmd = [
-        "/opt/spark/bin/spark-submit", "--master", "local[8]",
-        "--py-files", os.path.join(ROOT, "caraspark.zip"),
+        "spark-submit", "--master", MASTER,
+        "--py-files", pyfiles,
         os.path.abspath(__file__), "--run", src, out,
     ]
 
