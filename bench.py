@@ -32,6 +32,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from caraspark import textops  # noqa: E402
+from caraspark.curation import (  # noqa: E402
+    content_drift_prefiltered,
+    winnow_fingerprints,
+)
+from caraspark.tables import load  # noqa: E402
+
 HEADLINE = [
     "agg_q1",
     "join_sortmerge",
@@ -205,6 +212,30 @@ EXTRAS = [
     "quality_threshold_sweep",
 ]
 
+# the shared-cluster-table trio, timed together once after the extras
+CC_TRIO = ("dedup_clusters", "dedup_best_rep", "dedup_cluster_sizes")
+
+
+def _xxh(build):
+    """A production-hash lane: ``build`` over the documents table with
+    xxhash64 in place of the qkey's md5/sha2 digests, same plan shape."""
+    return lambda spark, sf: build(load(spark, sf, "documents"), hash_fn="xxh")
+
+
+# Production-variant lanes, each timed once after the extras pack.
+# content_drift_prefiltered is the digest-prefiltered Jaccard off the
+# changerate lag window (shingles only for changed pairs). It is NOT
+# comparable to the content_drift qkey's wall: it walks 6 crawls per url
+# (~1.8 changed pairs/url on this corpus, plus the window exchange) where
+# the qkey shingles exactly 1 simulated pair/url.
+VARIANTS = {
+    "content_drift_prefiltered": content_drift_prefiltered,
+    "dedup_minhash_xxh": _xxh(textops.minhash_candidates),
+    "dedup_simhash_xxh": _xxh(textops.simhash_signatures),
+    "dedup_substring_xxh": _xxh(textops.substring_marks),
+    "fingerprint_winnow_xxh": _xxh(winnow_fingerprints),
+}
+
 REPEATS = 3
 
 
@@ -261,64 +292,56 @@ def main() -> None:
 
     # ---- extraction throughput FIRST (fresh JVM, nothing heavy ran yet);
     # bench_extract does its own warmup pass + best-of-3 ----
-    try:
-        from caraspark.bench_extract import (
-            corpus_path,
-            ensure_corpus,
-            extraction_docs_per_sec,
-        )
+    from caraspark.bench_extract import (
+        corpus_path,
+        ensure_corpus,
+        extraction_docs_per_sec,
+    )
 
-        n_docs = 4096
-        ensure_corpus(spark, n_docs)
-        sha = corpus_fingerprint(spark, corpus_path(n_docs))
-        pinned = None
-        manifest = os.path.join(here, "BENCH", "corpus_manifest.json")
-        if os.path.exists(manifest):
-            with open(manifest, encoding="utf-8") as f:
-                pinned = json.load(f).get("corpus_md5") == sha
-        docs_s, docs, secs = extraction_docs_per_sec(spark, n_docs)
-        extra.update(
-            {
-                "extract_docs_per_sec": round(docs_s, 1),
-                "extract_docs": docs,
-                "extract_sec": round(secs, 3),
-                "extract_corpus_md5": sha,
-                "extract_corpus_pinned": pinned,
-            }
-        )
-        timings["doc_extract"] = round(secs, 3)
+    n_docs = 4096
+    ensure_corpus(spark, n_docs)
+    sha = corpus_fingerprint(spark, corpus_path(n_docs))
+    pinned = None
+    manifest = os.path.join(here, "BENCH", "corpus_manifest.json")
+    if os.path.exists(manifest):
+        with open(manifest, encoding="utf-8") as f:
+            pinned = json.load(f).get("corpus_md5") == sha
+    docs_s, docs, secs = extraction_docs_per_sec(spark, n_docs)
+    extra.update(
+        {
+            "extract_docs_per_sec": round(docs_s, 1),
+            "extract_docs": docs,
+            "extract_sec": round(secs, 3),
+            "extract_corpus_md5": sha,
+            "extract_corpus_pinned": pinned,
+        }
+    )
+    timings["doc_extract"] = round(secs, 3)
 
-        # Sustained throughput on a 64k-doc corpus: the 4,096-doc wall
-        # (~0.7 s) is dominated by fixed per-job overhead (task dispatch,
-        # Python-worker batching — measured ~1.2 s constant by regressing
-        # wall on corpus size, session 5), so its docs/s swings with the
-        # sandbox, not the pipeline: 5.9k docs/s at 4,096 docs vs ~24k
-        # sustained on the 200k scaling corpus, same code, same idle VM.
-        # 16× the docs cuts the constant's share to ~30%; the 200k-corpus
-        # scaling runs (BENCH/scaling_*) remain the asymptotic record.
-        n_sustained = 65536
-        ensure_corpus(spark, n_sustained)
-        sus_s, sus_docs, sus_secs = extraction_docs_per_sec(
-            spark, n_sustained
-        )
-        extra.update(
-            {
-                "extract_docs_per_sec_sustained": round(sus_s, 1),
-                "extract_sustained_docs": sus_docs,
-                "extract_sustained_sec": round(sus_secs, 3),
-            }
-        )
-    except ImportError:
-        pass
+    # Sustained throughput on a 64k-doc corpus: the 4,096-doc wall
+    # (~0.7 s) is dominated by fixed per-job overhead (task dispatch,
+    # Python-worker batching — measured ~1.2 s constant by regressing
+    # wall on corpus size), so its docs/s swings with the
+    # host, not the pipeline: 5.9k docs/s at 4,096 docs vs ~24k
+    # sustained on the 200k scaling corpus, same code, same idle VM.
+    # 16× the docs cuts the constant's share to ~30%; the 200k-corpus
+    # scaling runs (BENCH/scaling_*) remain the asymptotic record.
+    n_sustained = 65536
+    ensure_corpus(spark, n_sustained)
+    sus_s, sus_docs, sus_secs = extraction_docs_per_sec(
+        spark, n_sustained
+    )
+    extra.update(
+        {
+            "extract_docs_per_sec_sustained": round(sus_s, 1),
+            "extract_sustained_docs": sus_docs,
+            "extract_sustained_sec": round(sus_secs, 3),
+        }
+    )
 
     # ---- headline pack: one untimed warmup, then best-of-3 per query ----
-    for name in ("scan_parquet",):
-        if name in qs:
-            run_noop(qs[name](spark, sf_dir))
-
+    run_noop(qs["scan_parquet"](spark, sf_dir))
     for name in HEADLINE:
-        if name not in qs:
-            continue
         timings[name] = best_of(lambda: run_noop(qs[name](spark, sf_dir)))
 
     # ---- LLM-pipeline ops, timed (single-shot: each is many seconds, and
@@ -336,18 +359,11 @@ def main() -> None:
 
     def _run_extra(name: str) -> None:
         if name in CC_CONSUMERS:
-            try:
-                from caraspark import textops
-
-                cc_cache_reset(textops)
-            except ImportError:
-                pass
+            cc_cache_reset(textops)
         run_noop(qs[name](spark, sf_dir))
 
     extra_pack: dict[str, float] = {}
     for name in EXTRAS:
-        if name not in qs:
-            continue
         if name in SLOW_EXTRAS:
             extra_pack[name] = best_of(lambda n=name: _run_extra(n))
         else:
@@ -358,86 +374,17 @@ def main() -> None:
     # shared-CC composition: the three cluster-table consumers over ONE
     # materialized connected-components pass (the production shape; the
     # per-qkey colds above each pay the star rounds from scratch)
-    try:
-        from caraspark import textops
+    cc_cache_reset(textops)
+    t0 = time.time()
+    for name in CC_TRIO:
+        run_noop(qs[name](spark, sf_dir))
+    extra["cc_trio_shared_sec"] = round(time.time() - t0, 3)
+    cc_cache_reset(textops)
 
-        cc_cache_reset(textops)
+    for name, lane in VARIANTS.items():
         t0 = time.time()
-        for name in ("dedup_clusters", "dedup_best_rep",
-                     "dedup_cluster_sizes"):
-            run_noop(qs[name](spark, sf_dir))
-        extra["cc_trio_shared_sec"] = round(time.time() - t0, 3)
-        cc_cache_reset(textops)
-    except (ImportError, KeyError):
-        pass
-
-    # production drift variant: digest-prefiltered Jaccard off the
-    # changerate lag window (shingles only for changed pairs) at the same
-    # hash family / shingle width as the content_drift qkey. NOT directly
-    # comparable to that qkey's wall: the lane walks 6 crawls per url
-    # (~1.8 changed pairs/url on this corpus, plus the window exchange)
-    # where the qkey shingles exactly 1 simulated pair/url — what it
-    # benches is the production plan shape (digest filter below the
-    # shingle project), whose win materializes at real few-%-change rates
-    try:
-        from caraspark.curation import content_drift_prefiltered
-
-        t0 = time.time()
-        run_noop(content_drift_prefiltered(spark, sf_dir))
-        extra_pack["content_drift_prefiltered"] = round(time.time() - t0, 3)
-    except ImportError:
-        pass
-
-    # production-hash minhash variant: same plan shape, xxhash64 lanes
-    try:
-        from caraspark.relational import load
-        from caraspark.textops import minhash_candidates
-
-        t0 = time.time()
-        run_noop(minhash_candidates(load(spark, sf_dir, "documents"),
-                                    hash_fn="xxh"))
-        extra_pack["dedup_minhash_xxh"] = round(time.time() - t0, 3)
-    except ImportError:
-        pass
-
-    # production-hash simhash variant: same plan shape, one xxhash64 per
-    # token + shift-and-mask bit votes instead of md5 hex nibble probes
-    try:
-        from caraspark.relational import load
-        from caraspark.textops import simhash_signatures
-
-        t0 = time.time()
-        run_noop(simhash_signatures(load(spark, sf_dir, "documents"),
-                                    hash_fn="xxh"))
-        extra_pack["dedup_simhash_xxh"] = round(time.time() - t0, 3)
-    except ImportError:
-        pass
-
-    # production-hash substring-dedup variant: 8-byte xxhash64 window
-    # keys instead of 32-char md5 hex digests in every exchange
-    try:
-        from caraspark.relational import load
-        from caraspark.textops import substring_marks
-
-        t0 = time.time()
-        run_noop(substring_marks(load(spark, sf_dir, "documents"),
-                                 hash_fn="xxh"))
-        extra_pack["dedup_substring_xxh"] = round(time.time() - t0, 3)
-    except ImportError:
-        pass
-
-    # production-hash winnowing variant: one xxhash64 per gram instead of
-    # md5 digest + hex slice + conv() base parse
-    try:
-        from caraspark.curation import winnow_fingerprints
-        from caraspark.relational import load
-
-        t0 = time.time()
-        run_noop(winnow_fingerprints(load(spark, sf_dir, "documents"),
-                                     hash_fn="xxh"))
-        extra_pack["fingerprint_winnow_xxh"] = round(time.time() - t0, 3)
-    except ImportError:
-        pass
+        run_noop(lane(spark, sf_dir))
+        extra_pack[name] = round(time.time() - t0, 3)
 
     total = round(sum(timings.values()), 3)
     out = {

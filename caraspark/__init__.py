@@ -15,6 +15,7 @@ Layout:
     caraspark.html_extract HTML boilerplate strip (stdlib html.parser)
     caraspark.extract     the mapInArrow extraction pipeline (flagship)
     caraspark.relational  Part-B relational operator pack (qkey registry)
+                          + the shared Arrow row mapper (map_rows)
     caraspark.textops     dedup / similarity / language-ID / quality ops
     caraspark.manifest    snapshot manifest (Iceberg-style) + resume
 """

@@ -8,60 +8,21 @@ scaling runs stay driver-light.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from caraspark.relational import map_rows
 from caraspark.schemas import DOCUMENTS_RAW
+from caraspark.synth import corpus_row
 
-_ARROW = pa.schema(
-    [
-        pa.field("url", pa.string(), False),
-        pa.field("warc_ts", pa.timestamp("us"), True),
-        pa.field("html", pa.large_binary(), True),
-        pa.field("text", pa.string(), True),
-        pa.field("lang", pa.string(), True),
-    ]
+# documents_raw as Arrow; html is large_binary (64-bit offsets), so one
+# batch of blobs may pass binary's 2 GiB limit
+RAW_ARROW = to_arrow_schema(DOCUMENTS_RAW, timestamp_utc=False)
+RAW_ARROW = RAW_ARROW.set(
+    RAW_ARROW.get_field_index("html"),
+    RAW_ARROW.field("html").with_type(pa.large_binary()),
 )
-
-
-def _gen(include_giant: bool):
-    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from caraspark.synth import HTML_RECIPES, PDF_RECIPES, LANGS, pdf_giant
-        import random
-        from datetime import datetime, timedelta
-
-        recipes = list(PDF_RECIPES.items()) + [
-            (k, None) for k in sorted(HTML_RECIPES)
-        ]
-        base_ts = datetime(2026, 1, 1)
-        for batch in it:
-            rows = []
-            for idx in batch.column("id").to_pylist():
-                rng = random.Random(f"42:{idx}")
-                name, fn_ = recipes[idx % len(recipes)]
-                blob = (
-                    HTML_RECIPES[name](rng) if fn_ is None else fn_()
-                )
-                if include_giant and idx > 0 and idx % 4999 == 0:
-                    name, blob = "pdf_giant", pdf_giant(50_000)
-                rows.append(
-                    {
-                        "url": f"https://synth.example/{name}/{idx}",
-                        "warc_ts": base_ts + timedelta(seconds=idx * 37 % 2_592_000),
-                        "html": blob,
-                        "text": None,
-                        "lang": LANGS[idx % len(LANGS)],
-                    }
-                )
-                if len(rows) >= 64:
-                    yield pa.RecordBatch.from_pylist(rows, schema=_ARROW)
-                    rows = []
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=_ARROW)
-
-    return fn
 
 
 def synth_df(
@@ -70,10 +31,14 @@ def synth_df(
     partitions: int | None = None,
     include_giant: bool = False,
 ) -> DataFrame:
+    """Rows ``0..n-1`` of the synth corpus (``synth.corpus_row``)."""
     if partitions is None:
         partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    rng = spark.range(0, n, 1, partitions)
-    return rng.mapInArrow(_gen(include_giant), DOCUMENTS_RAW)
+    return map_rows(
+        spark.range(0, n, 1, partitions),
+        lambda idx: (corpus_row(idx, include_giant),),
+        RAW_ARROW,
+    )
 
 
 def write_size_layout(

@@ -835,6 +835,24 @@ deg AS (SELECT u AS node, count(*) AS deg FROM edges GROUP BY u)
 """
 
 
+def _pr_graph(spark, sf):
+    """The (nodes, edges) frames of ``_pr_graph_sql``: distinct sources,
+    and their links to other existing sources."""
+    d = load(spark, sf, "documents")
+    nodes = d.select(F.col("source").alias("node")).distinct()
+    links = d.select(
+        F.col("source").alias("u"),
+        F.concat(
+            F.lit("src"),
+            ((F.col("doc_id") + F.col("n_chars")) % 20).cast("string"),
+        ).alias("v"),
+    ).distinct()
+    edges = links.filter(F.col("u") != F.col("v")).join(
+        nodes.withColumnRenamed("node", "v"), "v", "left_semi"
+    )
+    return nodes, edges
+
+
 def _pagerank_sql() -> str:
     its = [f"r0 AS (SELECT node, {_PR_SCALE} AS r FROM nodes)"]
     for i in range(1, _PR_ITERS + 1):
@@ -885,19 +903,7 @@ def graph_pagerank(spark, sf):
     Fixed iteration count (not convergence-tested) keeps the plan
     statically analyzable; production runs add the two-scalar
     convergence probe the connected-components loop uses."""
-    d = load(spark, sf, "documents")
-    nodes = d.select(F.col("source").alias("node")).distinct()
-    links = d.select(
-        F.col("source").alias("u"),
-        F.concat(
-            F.lit("src"),
-            ((F.col("doc_id") + F.col("n_chars")) % 20).cast("string"),
-        ).alias("v"),
-    ).distinct()
-    edges = (
-        links.filter(F.col("u") != F.col("v"))
-        .join(nodes.withColumnRenamed("node", "v"), "v", "left_semi")
-    )
+    nodes, edges = _pr_graph(spark, sf)
     deg = edges.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -1004,20 +1010,8 @@ def graph_hits(spark, sf):
     pre-partitioned by join key amortize the exchange across iterations;
     ``localCheckpoint`` per iteration truncates lineage exactly as the
     PageRank loop documents."""
-    d = load(spark, sf, "documents")
-    nodes = d.select(F.col("source").alias("node")).distinct()
-    links = d.select(
-        F.col("source").alias("u"),
-        F.concat(
-            F.lit("src"),
-            ((F.col("doc_id") + F.col("n_chars")) % 20).cast("string"),
-        ).alias("v"),
-    ).distinct()
-    edges = (
-        links.filter(F.col("u") != F.col("v"))
-        .join(nodes.withColumnRenamed("node", "v"), "v", "left_semi")
-        .localCheckpoint()
-    )
+    nodes, edges = _pr_graph(spark, sf)
+    edges = edges.localCheckpoint()
 
     def _half(score, src_col, dst_col, out):
         # one propagation half-step: sum scores over edges, L-inf normalize
@@ -1108,19 +1102,7 @@ def graph_triangles(spark, sf):
     pairs, and the per-corner census is a map-side-combining groupBy.
     Web-scale runs order by DEGREE instead of name (same plan, one extra
     degree join) so high-degree hubs sit last and generate no wedges."""
-    d = load(spark, sf, "documents")
-    nodes = d.select(F.col("source").alias("node")).distinct()
-    links = d.select(
-        F.col("source").alias("u"),
-        F.concat(
-            F.lit("src"),
-            ((F.col("doc_id") + F.col("n_chars")) % 20).cast("string"),
-        ).alias("v"),
-    ).distinct()
-    edges = (
-        links.filter(F.col("u") != F.col("v"))
-        .join(nodes.withColumnRenamed("node", "v"), "v", "left_semi")
-    )
+    nodes, edges = _pr_graph(spark, sf)
     und = edges.select(
         F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
     ).distinct()

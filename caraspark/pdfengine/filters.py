@@ -27,13 +27,6 @@ import numpy as np
 
 from caraspark.pdfengine.model import Name, PdfError, Ref
 
-SUPPORTED = {
-    "FlateDecode",
-    "LZWDecode",
-    "ASCIIHexDecode",
-    "ASCII85Decode",
-    "RunLengthDecode",
-}
 _ALIASES = {  # PDF 1.1 short forms [PDF17 Table H.1]
     "Fl": "FlateDecode",
     "LZW": "LZWDecode",

@@ -26,19 +26,13 @@ import re
 from caraspark.pdfengine.model import PdfError
 
 WHITESPACE = b"\x00\t\n\x0c\r "
-DELIMITERS = b"()<>[]{}/%"
 
 MAX_INT = 2**63 - 1
 
-_SKIP_RE = re.compile(rb"[\x00\t\n\x0c\r ]+")
-_COMMENT_RE = re.compile(rb"[^\r\n]*")
-_NUM_RE = re.compile(rb"[+-]?(?:\d+\.\d*|\.\d+|\d+)")
-_REGULAR_RE = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]+")
 # one C-level match per token for the hot classes: skips any run of
 # whitespace/comments, then classifies number | /name | keyword; the
 # remaining classes (strings, hex, delimiters) fall through to the
-# byte-dispatch below. MUST stay semantically identical to the separate
-# regexes above — the differential token test pins this.
+# byte-dispatch below.
 _MASTER_RE = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
     rb"(?:(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
@@ -83,19 +77,6 @@ class Lexer:
 
     def _err(self, code: str, pos: int, msg: str = "") -> None:
         self.errors.append(PdfError(code=code, pos=pos, msg=msg))
-
-    def skip_ws(self) -> None:
-        """Skip whitespace and comments (%…EOL)."""
-        data, end = self.data, self.end
-        while self.pos < end:
-            m = _SKIP_RE.match(data, self.pos, end)
-            if m:
-                self.pos = m.end()
-            if self.pos < end and data[self.pos] == 0x25:  # '%'
-                m = _COMMENT_RE.match(data, self.pos + 1, end)
-                self.pos = m.end()
-            elif not m:
-                return
 
     def next_token(self) -> tuple:
         data, end = self.data, self.end

@@ -214,9 +214,6 @@ def _skip_container(ts: TokenStream, closer: str) -> None:
             depth -= 1
 
 
-_EOL_AFTER_STREAM = (b"\r\n", b"\n")
-
-
 def parse_indirect_object(
     data: bytes,
     offset: int,

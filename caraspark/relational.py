@@ -26,12 +26,14 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Callable, Iterable, Iterator, Mapping, Optional
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from caraspark.tables import load
 
@@ -56,6 +58,49 @@ def registrar(registry: dict[str, Q]):
         return deco
 
     return _q
+
+
+Rows = Callable[..., Iterable[Mapping]]
+# Arrow types of the row mappers' columns, by their Spark names
+STRING, INT, BIGINT, BOOLEAN = pa.string(), pa.int32(), pa.int64(), pa.bool_()
+
+
+def spark_schema(schema: pa.Schema) -> T.StructType:
+    """The Spark schema of an Arrow one; a timestamp without a time zone
+    is TIMESTAMP_NTZ."""
+    return from_arrow_schema(schema, prefer_timestamp_ntz=True)
+
+
+def row_batches(rows: Rows, schema: pa.Schema):
+    """The Python side of a ``map_rows`` stage, as a function from input
+    to output Arrow batches: each input column leaves Arrow with one
+    ``to_pylist``, every row value joins its column's list, and an input
+    batch that gave any rows leaves as one output batch of one
+    ``pa.array`` per column."""
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            cols = {n: [] for n in schema.names}
+            for values in zip(*(c.to_pylist() for c in batch.columns)):
+                for row in rows(*values):
+                    for n, col in cols.items():
+                        col.append(row[n])
+            if cols[schema.names[0]]:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(cols[f.name], f.type) for f in schema],
+                    schema=schema,
+                )
+
+    return batches
+
+
+def map_rows(df: DataFrame, rows: Rows, schema: pa.Schema) -> DataFrame:
+    """``df`` through one narrow mapInArrow stage. ``rows(*values)`` takes
+    one input row's values in ``df``'s column order and gives its output
+    rows, each a mapping from column name to value (other keys are
+    ignored); ``schema`` is the output's Arrow schema, and the Spark
+    schema derives from it, so each output column is written once."""
+    return df.mapInArrow(row_batches(rows, schema), spark_schema(schema))
 
 
 REGISTRY: dict[str, Q] = {}

@@ -9,10 +9,11 @@ annotations, content-stream operators and stream statistics, plus the
 xref-free scavenge census and the repair rewrite.
 
 Each table is declared once as a ``DocTable``: its row function and its
-Arrow columns. One mapper (``DocTable.batches``) carries every table
-across the Python boundary as a narrow mapInArrow stage, and the Spark
-schema is derived from the Arrow one; each qkey is plain relational ops
-on top. ``pdfacts`` declares its facts table the same way.
+Arrow columns. The shared row mapper (``relational.map_rows``, the one
+that also carries the WARC record maps and the synth corpus) takes every
+table across the Python boundary as a narrow mapInArrow stage, and the
+Spark schema is derived from the Arrow one; each qkey is plain relational
+ops on top. ``pdfacts`` declares its facts table the same way.
 
 Each qkey hash-verifies against a closed-form DuckDB oracle over the
 frozen per-recipe corpus reconstruction (caraspark/oracle_freeze.py):
@@ -31,7 +32,6 @@ from typing import Callable, Iterable, Iterator, Mapping
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructType
 
 from caraspark.corpus import corpus_rows_for_sf, synth_df
@@ -78,12 +78,20 @@ from caraspark.pdfengine.document import (
 from caraspark.pdfengine.model import Stream, canonical_json
 from caraspark.pdfengine.textextract import content_op_histogram, extract_pages
 from caraspark.pdfengine.typecheck import check_types
-from caraspark.relational import Q, registrar
+from caraspark.relational import (
+    BIGINT,
+    BOOLEAN,
+    INT,
+    STRING,
+    Q,
+    map_rows,
+    registrar,
+    row_batches,
+    spark_schema,
+)
 
 REGISTRY: dict[str, Q] = {}
 _q = registrar(REGISTRY)
-
-STRING, INT, BIGINT, BOOLEAN = pa.string(), pa.int32(), pa.int64(), pa.bool_()
 
 
 @dataclass(frozen=True)
@@ -98,31 +106,18 @@ class DocTable:
 
     @property
     def spark_schema(self) -> StructType:
-        return from_arrow_schema(self.schema)
+        return spark_schema(self.schema)
+
+    def _url_rows(self, url, blob):
+        return ({**row, "url": url} for row in self.rows(url, blob))
 
     def batches(self, it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        """The Python side of the table's mapInArrow stage: ``url`` and
-        ``html`` leave Arrow with one ``to_pylist`` each, every row value
-        joins its column's list, and an input batch that gave any rows
-        leaves as one output batch of one ``pa.array`` per column."""
-        names = self.schema.names[1:]
-        for batch in it:
-            cols = {n: [] for n in self.schema.names}
-            urls = batch.column("url").to_pylist()
-            for url, blob in zip(urls, batch.column("html").to_pylist()):
-                for row in self.rows(url, blob):
-                    cols["url"].append(url)
-                    for n in names:
-                        cols[n].append(row[n])
-            if cols["url"]:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cols[f.name], f.type) for f in self.schema],
-                    schema=self.schema,
-                )
+        """The Python side of ``over``, over ``url``/``html`` batches."""
+        return row_batches(self._url_rows, self.schema)(it)
 
     def over(self, docs: DataFrame) -> DataFrame:
-        """This table over a ``url``/``html`` frame, one narrow stage."""
-        return docs.mapInArrow(self.batches, self.spark_schema)
+        """This table over a documents frame, one narrow stage."""
+        return map_rows(docs.select("url", "html"), self._url_rows, self.schema)
 
 
 def doc_table(rows, **cols: pa.DataType) -> DocTable:

@@ -16,6 +16,7 @@ from __future__ import annotations
 import random
 import zlib
 from datetime import datetime, timedelta
+from functools import lru_cache
 
 # ---------------------------------------------------------------------------
 # low-level classic-xref assembler
@@ -1273,28 +1274,35 @@ HTML_RECIPES = {
 LANGS = ["en", "es", "zh", "de", "fr"]
 
 
-def corpus_rows(n_docs: int, seed: int = 42, include_giant: bool = False):
-    """Yield (url, warc_ts, html, text, lang) rows, seed-deterministic.
+_CORPUS_EPOCH = datetime(2026, 1, 1)
 
-    ``text`` is NULL (as in prod); the expected extraction lives in the
-    goldens, not the input. Recipes cycle; sizes vary via the rng.
-    """
-    recipes = list(PDF_RECIPES.items()) + [
-        (k, None) for k in sorted(HTML_RECIPES)
-    ]
-    base_ts = datetime(2026, 1, 1)
-    for i in range(n_docs):
-        rng = random.Random(f"{seed}:{i}")
-        name, fn = recipes[i % len(recipes)]
-        if fn is None:
-            blob = HTML_RECIPES[name](rng)
-        else:
-            blob = fn()
-        if include_giant and i > 0 and i % 4999 == 0:
-            name, blob = "pdf_giant", pdf_giant(50_000)
-        url = f"https://synth.example/{name}/{i}"
-        ts = base_ts + timedelta(seconds=i * 37 % 2_592_000)
-        yield (url, ts, blob, None, LANGS[i % len(LANGS)])
+
+@lru_cache(maxsize=None)
+def _corpus_recipes() -> tuple:
+    """The corpus recipe cycle: every PDF recipe, then the sorted HTML
+    ones. Built on first use, once every recipe is registered."""
+    return (*PDF_RECIPES.items(), *((k, None) for k in sorted(HTML_RECIPES)))
+
+
+def corpus_row(idx: int, include_giant: bool = False) -> dict:
+    """Row ``idx`` of the synth corpus, a documents_raw mapping. Recipes
+    cycle and sizes vary via a per-row rng, so any row is built alone;
+    ``text`` is NULL (as in prod): the expected extraction lives in the
+    goldens, not the input. With ``include_giant`` every 4999th row is a
+    ``pdf_giant``."""
+    rng = random.Random(f"42:{idx}")
+    recipes = _corpus_recipes()
+    name, fn = recipes[idx % len(recipes)]
+    blob = HTML_RECIPES[name](rng) if fn is None else fn()
+    if include_giant and idx > 0 and idx % 4999 == 0:
+        name, blob = "pdf_giant", pdf_giant(50_000)
+    return {
+        "url": f"https://synth.example/{name}/{idx}",
+        "warc_ts": _CORPUS_EPOCH + timedelta(seconds=idx * 37 % 2_592_000),
+        "html": blob,
+        "text": None,
+        "lang": LANGS[idx % len(LANGS)],
+    }
 
 
 # ---------------------------------------------------------------------------

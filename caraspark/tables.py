@@ -2,13 +2,11 @@
 
 The driver testdata (TESTDATA.md / FIXTURES.md §1) is a directory of parquet
 files, one per table.  ``load`` is the single entry point — explicit name
-allowlist, no schema inference surprises, and each call registers the table
-as a temp view so SQL-form queries work against the same data.
+allowlist, no schema inference surprises; it returns the table as a
+DataFrame and registers no view.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,16 +23,8 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (for spark.sql paths)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -849,21 +849,6 @@ def dedup_clusters(spark, sf):
     return _clusters_materialized(spark, sf)
 
 
-def _simhash16_exprs(side: str):
-    """16 per-nibble majority-vote sums over token md5s."""
-    return [
-        F.sum(
-            F.when(
-                F.substring(F.col(f"{side}h"), i + 1, 1).isin(
-                    *"89abcdef"
-                ),
-                1,
-            ).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(16)
-    ]
-
-
 def _simhash16_sql() -> str:
     bits = ",\n         ".join(
         f"CASE WHEN sum(CASE WHEN substring(h, {i + 1}, 1) IN "

@@ -22,6 +22,15 @@ by one file, and the gzip members stream-decode (``zlib`` multi-member
 loop, never a whole-file bytes copy per record). Everything downstream is
 the same ``documents_raw`` schema the parquet and loose-file sources feed.
 
+Spark side: every map from rows to rows is a row function plus its
+Arrow schema, run by the shared mapper ``relational.map_rows`` — a reader
+is a row function over the ``warc`` blob column that yields rows of
+``parse_warc(blob)``, a per-document map one over the document's columns.
+Every writer is ``_blobs(df, key, records, partitions, warcinfo)``: it
+hash-partitions on ``key`` and folds each input batch into one blob of
+gzip members, an optional ``warcinfo`` record and then ``records(*row)``
+for each row.
+
 Determinism: the writer emits zlib-generated gzip headers (MTIME=0) and
 derives WARC-Record-IDs from md5(url, date) — byte-identical output for
 identical input on any host, which is what lets the roundtrip qkey
@@ -39,8 +48,17 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from caraspark.relational import Q, registrar
-from caraspark.schemas import DOCUMENTS_RAW
+from caraspark.corpus import RAW_ARROW
+from caraspark.relational import (
+    BIGINT,
+    BOOLEAN,
+    INT,
+    STRING,
+    Q,
+    map_rows,
+    registrar,
+    spark_schema,
+)
 from caraspark.tables import load
 
 REGISTRY: dict[str, Q] = {}
@@ -111,6 +129,14 @@ def _gzip_member(raw: bytes) -> bytes:
     return c.compress(raw) + c.flush()
 
 
+def _warcinfo_record(fields: str) -> bytes:
+    return build_record(
+        "warcinfo",
+        fields.encode() + _CRLF,
+        content_type="application/warc-fields",
+    )
+
+
 def build_warc(
     records: list[tuple[str, datetime, bytes]],
     gzip_members: bool = True,
@@ -120,13 +146,7 @@ def build_warc(
     a leading ``warcinfo`` record, then one ``response`` record per input,
     each its own gzip member when ``gzip_members`` (the Common Crawl
     layout) else plain concatenation."""
-    recs = [
-        build_record(
-            "warcinfo",
-            warcinfo.encode() + _CRLF,
-            content_type="application/warc-fields",
-        )
-    ]
+    recs = [_warcinfo_record(warcinfo)]
     recs += [
         build_record("response", payload, url=url, ts=ts)
         for url, ts, payload in records
@@ -238,40 +258,60 @@ def parse_warc(blob: bytes) -> list[dict]:
 # Spark-side source / sink
 # ---------------------------------------------------------------------------
 
-_RAW_ARROW = pa.schema(
-    [
-        pa.field("url", pa.string(), False),
-        pa.field("warc_ts", pa.timestamp("us"), True),
-        pa.field("html", pa.large_binary(), True),
-        pa.field("text", pa.string(), True),
-        pa.field("lang", pa.string(), True),
-    ]
-)
-
-_WARC_BLOB = pa.schema([pa.field("warc", pa.large_binary(), False)])
+_WARC_BLOB = pa.schema([("warc", pa.large_binary())])
 
 
-def _responses_to_raw(batches: Iterator[pa.RecordBatch], col: str):
-    for batch in batches:
-        rows = []
-        for blob in batch.column(col).to_pylist():
-            for rec in parse_warc(blob):
-                if rec["rec_type"] != "response" or rec["url"] is None:
-                    continue
-                rows.append(
-                    {
-                        "url": rec["url"],
-                        "warc_ts": rec["ts"],
-                        "html": rec["body"],
-                        "text": None,
-                        "lang": None,
-                    }
-                )
-                if len(rows) >= 256:
-                    yield pa.RecordBatch.from_pylist(rows, schema=_RAW_ARROW)
-                    rows = []
-        if rows:
-            yield pa.RecordBatch.from_pylist(rows, schema=_RAW_ARROW)
+def _doc_capture(doc_id: int) -> tuple[str, datetime]:
+    """The synth url and fetch time of a documents row's capture."""
+    return (
+        f"https://synth.example/doc/{doc_id}",
+        _WARC_EPOCH + timedelta(seconds=doc_id % 86400),
+    )
+
+
+def _blobs(
+    df: DataFrame,
+    key: str,
+    records,
+    partitions: int = 8,
+    warcinfo: str | None = None,
+) -> DataFrame:
+    """WARC file blobs from ``df`` hash-partitioned on ``key``: each input
+    batch becomes one blob, the gzip members of a ``warcinfo`` record
+    (when named) and of ``records(*row)`` for each row, its values in
+    ``df``'s column order. A batch with no records gives no blob."""
+    info = [] if warcinfo is None else [_warcinfo_record(warcinfo)]
+
+    def blobs(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            recs = [
+                rec
+                for row in zip(*(c.to_pylist() for c in batch.columns))
+                for rec in records(*row)
+            ]
+            if recs:
+                blob = b"".join(_gzip_member(r) for r in info + recs)
+                yield pa.record_batch([[blob]], schema=_WARC_BLOB)
+
+    return df.repartition(partitions, key).mapInArrow(
+        blobs, spark_schema(_WARC_BLOB)
+    )
+
+
+def _raw_rows(blob: bytes):
+    """documents_raw rows of a WARC file: its response records with a
+    url."""
+    return (
+        {
+            "url": r["url"],
+            "warc_ts": r["ts"],
+            "html": r["body"],
+            "text": None,
+            "lang": None,
+        }
+        for r in parse_warc(blob)
+        if r["rec_type"] == "response" and r["url"] is not None
+    )
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
@@ -287,11 +327,12 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
         .load(path)
         .select(F.col("content").alias("warc"))
     )
+    return map_rows(files, _raw_rows, RAW_ARROW)
 
-    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from _responses_to_raw(it, "warc")
 
-    return files.mapInArrow(gen, DOCUMENTS_RAW)
+def _response_records(doc_id: int, body: bytes) -> list[bytes]:
+    url, ts = _doc_capture(doc_id)
+    return [build_record("response", http_response(body), url=url, ts=ts)]
 
 
 def warc_sink_df(docs: DataFrame, partitions: int = 8) -> DataFrame:
@@ -300,27 +341,25 @@ def warc_sink_df(docs: DataFrame, partitions: int = 8) -> DataFrame:
     files (tests write these blobs to disk and read them back through
     ``read_warc``). Input needs columns ``doc_id`` (bigint) and ``body``
     (binary); url/ts derive deterministically from doc_id."""
-
-    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            ids = batch.column("doc_id").to_pylist()
-            bodies = batch.column("body").to_pylist()
-            recs = [
-                (
-                    f"https://synth.example/doc/{i}",
-                    _WARC_EPOCH + timedelta(seconds=i % 86400),
-                    http_response(b),
-                )
-                for i, b in zip(ids, bodies)
-            ]
-            if recs:
-                yield pa.RecordBatch.from_pylist(
-                    [{"warc": build_warc(recs)}], schema=_WARC_BLOB
-                )
-
-    return docs.repartition(partitions, "doc_id").mapInArrow(
-        gen, "warc binary"
+    return _blobs(
+        docs.select("doc_id", "body"),
+        "doc_id",
+        _response_records,
+        partitions,
+        "software: caraspark-warc/1.0",
     )
+
+
+def _conversion_records(url: str, text: bytes | None) -> list[bytes]:
+    return [
+        build_record(
+            "conversion",
+            text or b"",
+            url=url,
+            ts=_WARC_EPOCH,
+            content_type="text/plain",
+        )
+    ]
 
 
 def wet_sink_df(extracted: DataFrame, partitions: int = 8) -> DataFrame:
@@ -329,40 +368,12 @@ def wet_sink_df(extracted: DataFrame, partitions: int = 8) -> DataFrame:
     is the extracted text bytes, one file blob per partition-batch. The
     inverse of the crawl on-ramp: raw WARC in (``read_warc``), extracted
     WET out. Input needs columns ``url`` (string) and ``text`` (binary)."""
-
-    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            urls = batch.column("url").to_pylist()
-            texts = batch.column("text").to_pylist()
-            recs = [
-                build_record(
-                    "conversion",
-                    t or b"",
-                    url=u,
-                    ts=_WARC_EPOCH,
-                    content_type="text/plain",
-                )
-                for u, t in zip(urls, texts)
-            ]
-            if recs:
-                blob = build_record(
-                    "warcinfo",
-                    b"software: caraspark-warc/1.0 (WET)" + _CRLF,
-                    content_type="application/warc-fields",
-                )
-                yield pa.RecordBatch.from_pylist(
-                    [
-                        {
-                            "warc": b"".join(
-                                _gzip_member(r) for r in [blob] + recs
-                            )
-                        }
-                    ],
-                    schema=_WARC_BLOB,
-                )
-
-    return extracted.repartition(partitions, "url").mapInArrow(
-        gen, "warc binary"
+    return _blobs(
+        extracted.select("url", "text"),
+        "url",
+        _conversion_records,
+        partitions,
+        "software: caraspark-warc/1.0 (WET)",
     )
 
 
@@ -391,12 +402,7 @@ def warc_roundtrip(spark, sf):
     docs = load(spark, sf, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("body")
     )
-    blobs = warc_sink_df(docs)
-
-    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        yield from _responses_to_raw(it, "warc")
-
-    parsed = blobs.mapInArrow(gen, DOCUMENTS_RAW)
+    parsed = map_rows(warc_sink_df(docs), _raw_rows, RAW_ARROW)
     return parsed.select(
         "url",
         F.col("warc_ts").cast("timestamp").cast("long").alias("ts_epoch"),
@@ -413,13 +419,7 @@ def warc_roundtrip(spark, sf):
 # the oracle's closed-form byte counts can never drift from the writer:
 #   record_len = _CDX_REC_CONST + len(url) + digits(payload_len) + payload_len
 #   payload_len = _CDX_HTTP_CONST + digits(body_len) + body_len
-_CDX_WARCINFO_LEN = len(
-    build_record(
-        "warcinfo",
-        b"software: caraspark-warc/1.0" + _CRLF,
-        content_type="application/warc-fields",
-    )
-)
+_CDX_WARCINFO_LEN = len(_warcinfo_record("software: caraspark-warc/1.0"))
 _CDX_HTTP_CONST = len(http_response(b"")) - 1  # minus the '0' length digit
 _CDX_REC_CONST = (
     len(build_record("response", b"", url="", ts=_WARC_EPOCH)) - 1
@@ -459,6 +459,32 @@ FROM g
 """
 
 
+_CDX_FRAMES = pa.schema(
+    {
+        "doc_id": BIGINT,
+        "source": STRING,
+        "url": STRING,
+        "ts14": STRING,
+        "rec_len": BIGINT,
+        "digest": STRING,
+    }
+)
+
+
+def _cdx_rows(doc_id: int, source: str, body: bytes):
+    """A document's framing: its record's length and payload digest."""
+    url, ts = _doc_capture(doc_id)
+    (rec,) = _response_records(doc_id, body)
+    yield {
+        "doc_id": doc_id,
+        "source": source,
+        "url": url,
+        "ts14": ts.strftime("%Y%m%d%H%M%S"),
+        "rec_len": len(rec),
+        "digest": hashlib.md5(body).hexdigest(),
+    }
+
+
 @_q("warc_cdx", _cdx_sql())
 def warc_cdx(spark, sf):
     """CDX index build — the lookup sidecar a crawl archive ships beside
@@ -484,47 +510,7 @@ def warc_cdx(spark, sf):
     docs = load(spark, sf, "documents").select(
         "doc_id", "source", F.encode("text", "utf-8").alias("body")
     )
-
-    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        schema = pa.schema(
-            [
-                ("doc_id", pa.int64()),
-                ("source", pa.string()),
-                ("url", pa.string()),
-                ("ts14", pa.string()),
-                ("rec_len", pa.int64()),
-                ("digest", pa.string()),
-            ]
-        )
-        for batch in it:
-            ids = batch.column("doc_id").to_pylist()
-            srcs = batch.column("source").to_pylist()
-            bodies = batch.column("body").to_pylist()
-            rows = []
-            for i, s, b in zip(ids, srcs, bodies):
-                url = f"https://synth.example/doc/{i}"
-                ts = _WARC_EPOCH + timedelta(seconds=i % 86400)
-                rec = build_record(
-                    "response", http_response(b), url=url, ts=ts
-                )
-                rows.append(
-                    {
-                        "doc_id": i,
-                        "source": s,
-                        "url": url,
-                        "ts14": ts.strftime("%Y%m%d%H%M%S"),
-                        "rec_len": len(rec),
-                        "digest": hashlib.md5(b).hexdigest(),
-                    }
-                )
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-    framed = docs.mapInArrow(
-        gen,
-        "doc_id bigint, source string, url string, ts14 string, "
-        "rec_len bigint, digest string",
-    )
+    framed = map_rows(docs, _cdx_rows, _CDX_FRAMES)
     host = F.regexp_extract("url", r"https://([^/]+)/", 1)
     path = F.regexp_extract("url", r"https://[^/]+(/.*)", 1)
     surt = F.concat(
@@ -587,48 +573,54 @@ def _wat_payload(url: str, title: str, links: list[str]) -> bytes:
     return body.encode("utf-8")
 
 
+def _metadata_records(url: str, title: str | None, links) -> list[bytes]:
+    return [
+        build_record(
+            "metadata",
+            _wat_payload(url, title or "", links or []),
+            url=url,
+            ts=_WARC_EPOCH,
+            content_type="application/json",
+        )
+    ]
+
+
 def wat_sink_df(meta: DataFrame, partitions: int = 8) -> DataFrame:
     """WAT-style output: each (url, title, outlinks) row becomes a WARC
     ``metadata`` record carrying the JSON envelope, one file blob per
     partition-batch — completing the crawl triad next to ``warc_sink_df``
     (raw) and ``wet_sink_df`` (extracted text).  Deterministic bytes:
     fixed timestamp, fixed key order, per-record gzip members."""
-
-    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            urls = batch.column("url").to_pylist()
-            titles = batch.column("title").to_pylist()
-            links = batch.column("outlinks").to_pylist()
-            recs = [
-                build_record(
-                    "metadata",
-                    _wat_payload(u, t or "", ln or []),
-                    url=u,
-                    ts=_WARC_EPOCH,
-                    content_type="application/json",
-                )
-                for u, t, ln in zip(urls, titles, links)
-            ]
-            if recs:
-                info = build_record(
-                    "warcinfo",
-                    b"software: caraspark-warc/1.0 (WAT)" + _CRLF,
-                    content_type="application/warc-fields",
-                )
-                yield pa.RecordBatch.from_pylist(
-                    [
-                        {
-                            "warc": b"".join(
-                                _gzip_member(r) for r in [info] + recs
-                            )
-                        }
-                    ],
-                    schema=_WARC_BLOB,
-                )
-
-    return meta.repartition(partitions, "url").mapInArrow(
-        gen, "warc binary"
+    return _blobs(
+        meta.select("url", "title", "outlinks"),
+        "url",
+        _metadata_records,
+        partitions,
+        "software: caraspark-warc/1.0 (WAT)",
     )
+
+
+_PAYLOADS = pa.schema(
+    {"url": STRING, "n_octets": BIGINT, "payload_md5": STRING}
+)
+
+
+def _payload_rows(rec_type: str):
+    """Row function over a WARC blob: the url, payload length and payload
+    md5 of each of its ``rec_type`` records."""
+
+    def rows(blob: bytes):
+        return (
+            {
+                "url": r["url"],
+                "n_octets": len(r["payload"]),
+                "payload_md5": hashlib.md5(r["payload"]).hexdigest(),
+            }
+            for r in parse_warc(blob)
+            if r["rec_type"] == rec_type
+        )
+
+    return rows
 
 
 @_q(
@@ -668,39 +660,7 @@ def warc_wat(spark, sf):
             F.concat(F.lit("/x/"), (F.col("doc_id") % 3).cast("string")),
         ).alias("outlinks"),
     )
-    blobs = wat_sink_df(meta)
-
-    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            rows = []
-            for blob in batch.column("warc").to_pylist():
-                for rec in parse_warc(bytes(blob)):
-                    if rec["rec_type"] != "metadata":
-                        continue
-                    rows.append(
-                        {
-                            "url": rec["url"],
-                            "n_octets": len(rec["payload"]),
-                            "payload_md5": hashlib.md5(
-                                rec["payload"]
-                            ).hexdigest(),
-                        }
-                    )
-            if rows:
-                yield pa.RecordBatch.from_pylist(
-                    rows,
-                    schema=pa.schema(
-                        [
-                            ("url", pa.string()),
-                            ("n_octets", pa.int64()),
-                            ("payload_md5", pa.string()),
-                        ]
-                    ),
-                )
-
-    return blobs.mapInArrow(
-        gen, "url string, n_octets bigint, payload_md5 string"
-    )
+    return map_rows(wat_sink_df(meta), _payload_rows("metadata"), _PAYLOADS)
 
 
 @_q(
@@ -723,39 +683,8 @@ def warc_wet(spark, sf):
         F.col("doc_id").cast("string").alias("url"),
         F.encode("text", "utf-8").alias("text"),
     )
-    blobs = wet_sink_df(ext)
+    return map_rows(wet_sink_df(ext), _payload_rows("conversion"), _PAYLOADS)
 
-    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            rows = []
-            for blob in batch.column("warc").to_pylist():
-                for rec in parse_warc(bytes(blob)):
-                    if rec["rec_type"] != "conversion":
-                        continue
-                    rows.append(
-                        {
-                            "url": rec["url"],
-                            "n_octets": len(rec["payload"]),
-                            "payload_md5": hashlib.md5(
-                                rec["payload"]
-                            ).hexdigest(),
-                        }
-                    )
-            if rows:
-                yield pa.RecordBatch.from_pylist(
-                    rows,
-                    schema=pa.schema(
-                        [
-                            ("url", pa.string()),
-                            ("n_octets", pa.int64()),
-                            ("payload_md5", pa.string()),
-                        ]
-                    ),
-                )
-
-    return blobs.mapInArrow(
-        gen, "url string, n_octets bigint, payload_md5 string"
-    )
 
 # ---------------------------------------------------------------------------
 # Revisit records (WARC 1.1 §6.7) — fetch-time dedup + digest-join resolution
@@ -810,6 +739,54 @@ FROM documents
 """
 
 
+def _revisit_records(doc_id: int, body: bytes) -> list[bytes]:
+    """A page's two fetches: the crawl-1 response, then one day later a
+    changed response (doc_id % 3 == 0) or a bodyless revisit record."""
+    url, ts1 = _doc_capture(doc_id)
+    ts2 = ts1 + timedelta(days=1)
+    first = build_record("response", http_response(body), url, ts1)
+    if doc_id % 3 == 0:
+        body2 = http_response(body + b"\nrev2")
+        return [first, build_record("response", body2, url, ts2)]
+    digest = hashlib.md5(body).hexdigest()
+    return [first, build_revisit_record(url, ts2, digest, url, _warc_date(ts1))]
+
+
+_REVISIT_ROWS = pa.schema(
+    {
+        "rec_type": STRING,
+        "url": STRING,
+        "ts_epoch": BIGINT,
+        "digest": STRING,
+        "sha256": STRING,
+        "refers_to": STRING,
+    }
+)
+
+
+def _revisit_rows(blob: bytes):
+    """The response and revisit records of a WARC blob: a response
+    carries its body's digests, a revisit its parsed digest and
+    refers-to url."""
+    for r in parse_warc(blob):
+        ts_epoch = int(r["ts"].timestamp()) if r["ts"] else None
+        if r["rec_type"] == "response":
+            yield {
+                **r,
+                "ts_epoch": ts_epoch,
+                "digest": hashlib.md5(r["body"]).hexdigest(),
+                "sha256": hashlib.sha256(r["body"]).hexdigest(),
+                "refers_to": None,
+            }
+        elif r["rec_type"] == "revisit":
+            yield {
+                **r,
+                "ts_epoch": ts_epoch,
+                "digest": r["payload_digest"],
+                "sha256": None,
+            }
+
+
 @_q("warc_revisit", _revisit_sql())
 def warc_revisit(spark, sf):
     """Two-crawl WARC with revisit records, resolved by a digest join —
@@ -835,103 +812,8 @@ def warc_revisit(spark, sf):
     docs = load(spark, sf, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("body")
     )
-
-    def write(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            ids = batch.column("doc_id").to_pylist()
-            bodies = batch.column("body").to_pylist()
-            members: list[bytes] = []
-            for i, b in zip(ids, bodies):
-                b = bytes(b)
-                url = f"https://synth.example/doc/{i}"
-                ts1 = _WARC_EPOCH + timedelta(seconds=i % 86400)
-                ts2 = ts1 + timedelta(days=1)
-                members.append(
-                    _gzip_member(
-                        build_record("response", http_response(b), url, ts1)
-                    )
-                )
-                if i % 3 == 0:
-                    members.append(
-                        _gzip_member(
-                            build_record(
-                                "response",
-                                http_response(b + b"\nrev2"),
-                                url,
-                                ts2,
-                            )
-                        )
-                    )
-                else:
-                    members.append(
-                        _gzip_member(
-                            build_revisit_record(
-                                url,
-                                ts2,
-                                hashlib.md5(b).hexdigest(),
-                                url,
-                                _warc_date(ts1),
-                            )
-                        )
-                    )
-            if members:
-                yield pa.RecordBatch.from_pylist(
-                    [{"warc": b"".join(members)}], schema=_WARC_BLOB
-                )
-
-    blobs = docs.repartition(8, "doc_id").mapInArrow(write, "warc binary")
-
-    rec_schema = pa.schema(
-        [
-            ("rec_type", pa.string()),
-            ("url", pa.string()),
-            ("ts_epoch", pa.int64()),
-            ("digest", pa.string()),
-            ("sha256", pa.string()),
-            ("refers_to", pa.string()),
-        ]
-    )
-
-    def read(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            rows = []
-            for blob in batch.column("warc").to_pylist():
-                for rec in parse_warc(bytes(blob)):
-                    if rec["rec_type"] == "response":
-                        body = rec["body"]
-                        rows.append(
-                            {
-                                "rec_type": "response",
-                                "url": rec["url"],
-                                "ts_epoch": int(
-                                    rec["ts"].timestamp()
-                                ) if rec["ts"] else None,
-                                "digest": hashlib.md5(body).hexdigest(),
-                                "sha256": hashlib.sha256(body).hexdigest(),
-                                "refers_to": None,
-                            }
-                        )
-                    elif rec["rec_type"] == "revisit":
-                        rows.append(
-                            {
-                                "rec_type": "revisit",
-                                "url": rec["url"],
-                                "ts_epoch": int(
-                                    rec["ts"].timestamp()
-                                ) if rec["ts"] else None,
-                                "digest": rec["payload_digest"],
-                                "sha256": None,
-                                "refers_to": rec["refers_to"],
-                            }
-                        )
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=rec_schema)
-
-    parsed = blobs.mapInArrow(
-        read,
-        "rec_type string, url string, ts_epoch bigint, digest string, "
-        "sha256 string, refers_to string",
-    )
+    blobs = _blobs(docs, "doc_id", _revisit_records)
+    parsed = map_rows(blobs, _revisit_rows, _REVISIT_ROWS)
     day2 = int((_WARC_EPOCH + timedelta(days=1)).timestamp())
     fetch1 = parsed.filter(
         (F.col("rec_type") == "response") & (F.col("ts_epoch") < day2)
@@ -1002,6 +884,49 @@ FROM documents
 """
 
 
+_HEADERS = pa.schema(
+    {
+        "url": STRING,
+        "status": INT,
+        "content_type": STRING,
+        "x_robots_tag": STRING,
+        "noindex": BOOLEAN,
+    }
+)
+
+
+def _header_rows(doc_id: int, body: bytes):
+    """Frame a document as a response whose HTTP head carries the
+    residue-planted status, Content-Type and X-Robots-Tag, then harvest
+    them back out of the parsed record's payload."""
+    url, ts = _doc_capture(doc_id)
+    status = 404 if doc_id % 17 == 0 else 200
+    ctype = "application/pdf" if doc_id % 6 == 0 else "text/html"
+    extra = b""
+    if doc_id % 9 == 0:
+        extra = b"X-Robots-Tag: noindex, nofollow\r\n"
+    elif doc_id % 9 == 3:
+        extra = b"X-Robots-Tag: noarchive\r\n"
+    http = (
+        f"HTTP/1.1 {status} X\r\nContent-Type: {ctype}\r\n".encode()
+        + extra
+        + f"Content-Length: {len(body)}\r\n\r\n".encode()
+        + body
+    )
+    for r in parse_warc(build_record("response", http, url=url, ts=ts)):
+        if r["rec_type"] != "response":
+            continue
+        st, hdrs = http_head(r["payload"])
+        xrt = hdrs.get("x-robots-tag")
+        yield {
+            "url": r["url"],
+            "status": st,
+            "content_type": hdrs.get("content-type", "").partition(";")[0],
+            "x_robots_tag": xrt,
+            "noindex": bool(xrt and "noindex" in xrt),
+        }
+
+
 @_q("warc_headers", _warc_headers_sql())
 def warc_headers(spark, sf):
     """HTTP header harvest, hash-verified roundtrip: each document is
@@ -1019,65 +944,7 @@ def warc_headers(spark, sf):
     docs = load(spark, sf, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("body")
     )
-
-    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        schema = pa.schema(
-            [
-                ("url", pa.string()),
-                ("status", pa.int32()),
-                ("content_type", pa.string()),
-                ("x_robots_tag", pa.string()),
-                ("noindex", pa.bool_()),
-            ]
-        )
-        for batch in it:
-            rows = []
-            for i, b in zip(
-                batch.column("doc_id").to_pylist(),
-                batch.column("body").to_pylist(),
-            ):
-                b = bytes(b)
-                url = f"https://synth.example/doc/{i}"
-                ts = _WARC_EPOCH + timedelta(seconds=i % 86400)
-                status = 404 if i % 17 == 0 else 200
-                ctype = "application/pdf" if i % 6 == 0 else "text/html"
-                extra = b""
-                if i % 9 == 0:
-                    extra = b"X-Robots-Tag: noindex, nofollow\r\n"
-                elif i % 9 == 3:
-                    extra = b"X-Robots-Tag: noarchive\r\n"
-                http = (
-                    f"HTTP/1.1 {status} X\r\nContent-Type: {ctype}\r\n"
-                ).encode() + extra + (
-                    f"Content-Length: {len(b)}\r\n\r\n"
-                ).encode() + b
-                rec = build_record("response", http, url=url, ts=ts)
-                for r in parse_warc(rec):
-                    if r["rec_type"] != "response":
-                        continue
-                    st, hdrs = http_head(r["payload"])
-                    xrt = hdrs.get("x-robots-tag")
-                    rows.append(
-                        {
-                            "url": r["url"],
-                            "status": st,
-                            "content_type": hdrs.get(
-                                "content-type", ""
-                            ).partition(";")[0],
-                            "x_robots_tag": xrt,
-                            "noindex": bool(
-                                xrt and "noindex" in xrt
-                            ),
-                        }
-                    )
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-    return docs.repartition(8, "doc_id").mapInArrow(
-        gen,
-        "url string, status int, content_type string, "
-        "x_robots_tag string, noindex boolean",
-    )
+    return map_rows(docs.repartition(8, "doc_id"), _header_rows, _HEADERS)
 
 
 def _warc_truncated_sql() -> str:
@@ -1088,6 +955,38 @@ SELECT 'https://synth.example/doc/' || CAST(doc_id AS VARCHAR) AS url,
        md5(left(text, 500)) AS payload_md5
 FROM documents
 """
+
+
+_TRUNCATED = pa.schema(
+    {
+        "url": STRING,
+        "truncated": BOOLEAN,
+        "n_chars": BIGINT,
+        "payload_md5": STRING,
+    }
+)
+
+
+def _truncated_rows(doc_id: int, stored: bytes, cut: bool):
+    """Store a document's prefix as a response, flagged ``WARC-Truncated``
+    when ``cut``, and read the flag and the stored body back."""
+    url, ts = _doc_capture(doc_id)
+    rec = build_record(
+        "response",
+        http_response(stored),
+        url=url,
+        ts=ts,
+        extra_headers=["WARC-Truncated: length"] if cut else None,
+    )
+    for r in parse_warc(rec):
+        if r["rec_type"] != "response":
+            continue
+        yield {
+            "url": r["url"],
+            "truncated": r["truncated"] is not None,
+            "n_chars": len(r["body"].decode("utf-8")),
+            "payload_md5": hashlib.md5(r["body"]).hexdigest(),
+        }
 
 
 @_q("warc_truncated", _warc_truncated_sql())
@@ -1112,53 +1011,8 @@ def warc_truncated(spark, sf):
         F.encode(F.substring("text", 1, 500), "utf-8").alias("stored"),
         (F.length("text") > 500).alias("cut"),
     )
-
-    def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        schema = pa.schema(
-            [
-                ("url", pa.string()),
-                ("truncated", pa.bool_()),
-                ("n_chars", pa.int64()),
-                ("payload_md5", pa.string()),
-            ]
-        )
-        for batch in it:
-            rows = []
-            for i, body, cut in zip(
-                batch.column("doc_id").to_pylist(),
-                batch.column("stored").to_pylist(),
-                batch.column("cut").to_pylist(),
-            ):
-                body = bytes(body)
-                url = f"https://synth.example/doc/{i}"
-                ts = _WARC_EPOCH + timedelta(seconds=i % 86400)
-                rec = build_record(
-                    "response",
-                    http_response(body),
-                    url=url,
-                    ts=ts,
-                    extra_headers=(
-                        ["WARC-Truncated: length"] if cut else None
-                    ),
-                )
-                for r in parse_warc(rec):
-                    if r["rec_type"] != "response":
-                        continue
-                    b = r["body"]
-                    rows.append(
-                        {
-                            "url": r["url"],
-                            "truncated": r["truncated"] is not None,
-                            "n_chars": len(b.decode("utf-8")),
-                            "payload_md5": hashlib.md5(b).hexdigest(),
-                        }
-                    )
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-    return docs.repartition(8, "doc_id").mapInArrow(
-        gen,
-        "url string, truncated boolean, n_chars bigint, payload_md5 string",
+    return map_rows(
+        docs.repartition(8, "doc_id"), _truncated_rows, _TRUNCATED
     )
 
 
@@ -1216,6 +1070,65 @@ WHERE doc_id % 19 <> 0
 """
 
 
+def _request_records(doc_id: int) -> list[bytes]:
+    """A capture event's records: the request naming its response's
+    record id, then the response; a %19 capture is response-only, a %17
+    one a failed fetch (request only, no Concurrent-To)."""
+    if doc_id % 19 == 0:
+        kind = "response_only"
+    elif doc_id % 17 == 0:
+        kind = "request_only"
+    else:
+        kind = "pair"
+    url = f"https://h{doc_id % 7}.ex/p{doc_id}"
+    ts = _WARC_EPOCH + timedelta(seconds=doc_id % 86400)
+    verb = "HEAD" if doc_id % 13 == 0 else "GET"
+    body = b"" if verb == "HEAD" else b"b" + b"x" * (49 + doc_id % 40)
+    resp_id = _record_id(url, _warc_date(ts)) if kind == "pair" else None
+    recs = []
+    if kind != "response_only":
+        recs.append(build_request_record(url, ts, verb, resp_id))
+    if kind != "request_only":
+        recs.append(build_record("response", http_response(body), url, ts))
+    return recs
+
+
+_REQUEST_ROWS = pa.schema(
+    {
+        "rec_type": STRING,
+        "url": STRING,
+        "record_id": STRING,
+        "concurrent_to": STRING,
+        "verb": STRING,
+        "path": STRING,
+        "body_len": INT,
+    }
+)
+
+
+def _request_rows(blob: bytes):
+    """The request and response records of a WARC blob: a request carries
+    the verb and path of its stored request line, a response its body
+    length."""
+    for r in parse_warc(blob):
+        if r["rec_type"] == "request":
+            parts = r["payload"].split(_CRLF, 1)[0].split(b" ")
+            yield {
+                **r,
+                "verb": parts[0].decode("latin-1"),
+                "path": parts[1].decode("latin-1") if len(parts) > 1 else None,
+                "body_len": None,
+            }
+        elif r["rec_type"] == "response":
+            yield {
+                **r,
+                "concurrent_to": None,
+                "verb": None,
+                "path": None,
+                "body_len": len(r["body"]),
+            }
+
+
 @_q("warc_request", _warc_request_sql())
 def warc_request(spark, sf):
     """Request/response capture events paired by WARC-Concurrent-To —
@@ -1237,102 +1150,8 @@ def warc_request(spark, sf):
     payloads."""
     docs = load(spark, sf, "documents").select("doc_id")
 
-    def write(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            members: list[bytes] = []
-            for i in batch.column("doc_id").to_pylist():
-                if i % 19 == 0:
-                    kind = "response_only"
-                elif i % 17 == 0:
-                    kind = "request_only"
-                else:
-                    kind = "pair"
-                url = f"https://h{i % 7}.ex/p{i}"
-                ts = _WARC_EPOCH + timedelta(seconds=i % 86400)
-                verb = "HEAD" if i % 13 == 0 else "GET"
-                body = b"" if verb == "HEAD" else (
-                    b"b" + b"x" * (49 + i % 40)
-                )
-                resp_id = _record_id(url, _warc_date(ts))
-                if kind != "response_only":
-                    members.append(
-                        _gzip_member(
-                            build_request_record(
-                                url,
-                                ts,
-                                verb,
-                                resp_id if kind == "pair" else None,
-                            )
-                        )
-                    )
-                if kind != "request_only":
-                    members.append(
-                        _gzip_member(
-                            build_record(
-                                "response", http_response(body), url, ts
-                            )
-                        )
-                    )
-            if members:
-                yield pa.RecordBatch.from_pylist(
-                    [{"warc": b"".join(members)}], schema=_WARC_BLOB
-                )
-
-    blobs = docs.repartition(8, "doc_id").mapInArrow(write, "warc binary")
-
-    rec_schema = pa.schema(
-        [
-            ("rec_type", pa.string()),
-            ("url", pa.string()),
-            ("record_id", pa.string()),
-            ("concurrent_to", pa.string()),
-            ("verb", pa.string()),
-            ("path", pa.string()),
-            ("body_len", pa.int32()),
-        ]
-    )
-
-    def read(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in it:
-            rows = []
-            for blob in batch.column("warc").to_pylist():
-                for rec in parse_warc(bytes(blob)):
-                    if rec["rec_type"] == "request":
-                        first = rec["payload"].split(b"\r\n", 1)[0]
-                        parts = first.split(b" ")
-                        rows.append(
-                            {
-                                "rec_type": "request",
-                                "url": rec["url"],
-                                "record_id": rec["record_id"],
-                                "concurrent_to": rec["concurrent_to"],
-                                "verb": parts[0].decode("latin-1"),
-                                "path": parts[1].decode("latin-1")
-                                if len(parts) > 1
-                                else None,
-                                "body_len": None,
-                            }
-                        )
-                    elif rec["rec_type"] == "response":
-                        rows.append(
-                            {
-                                "rec_type": "response",
-                                "url": rec["url"],
-                                "record_id": rec["record_id"],
-                                "concurrent_to": None,
-                                "verb": None,
-                                "path": None,
-                                "body_len": len(rec["body"]),
-                            }
-                        )
-            if rows:
-                yield pa.RecordBatch.from_pylist(rows, schema=rec_schema)
-
-    parsed = blobs.mapInArrow(
-        read,
-        "rec_type string, url string, record_id string, "
-        "concurrent_to string, verb string, path string, body_len int",
-    )
+    blobs = _blobs(docs, "doc_id", _request_records)
+    parsed = map_rows(blobs, _request_rows, _REQUEST_ROWS)
     reqs = parsed.filter(F.col("rec_type") == "request").select(
         "url", "verb", "path", "concurrent_to"
     )

@@ -529,3 +529,62 @@ def test_parse_warc_terminates_on_arbitrary_bytes():
         return
 
     run()
+
+
+# sha256 over each sink's blobs (sorted, then joined) for the fixed
+# 40-row inputs of test_sinks_are_byte_stable: the sinks' bytes are a
+# format contract, so a change to them must change these on purpose
+_SINK_SHA256 = {
+    "warc": "7773e78aa282d97dab39e3ddbea622836541f85c206ade22adf5b12a421517d6",
+    "wet": "128f64eae92a52f4db34b0a2ed4da8cdac5555d725b4c41ebc6869ec2df30da2",
+    "wat": "21cb5b0e25c2ec8daacedf66b2b0a699109a008deb555e3d5496ad8f09316b0e",
+}
+
+
+def test_sinks_are_byte_stable(spark):
+    """The three sinks' bytes for fixed 40-row inputs (NULL texts and
+    titles, empty link lists included). One input partition, so every
+    output partition sees its rows in input order."""
+    import hashlib
+
+    def frame(rows, ddl):
+        return spark.createDataFrame(rows, ddl).coalesce(1)
+
+    ids = range(40)
+    sinks = {
+        "warc": W.warc_sink_df(
+            frame(
+                [(i, f"body {i} é".encode() * (i % 5)) for i in ids],
+                "doc_id bigint, body binary",
+            )
+        ),
+        "wet": W.wet_sink_df(
+            frame(
+                [
+                    (f"https://ex.test/t/{i}", None if i % 7 == 0 else b"t%d" % i)
+                    for i in ids
+                ],
+                "url string, text binary",
+            )
+        ),
+        "wat": W.wat_sink_df(
+            frame(
+                [
+                    (
+                        f"https://ex.test/m/{i}",
+                        None if i % 6 == 0 else f"t{i}",
+                        [f"/l/{j}" for j in range(i % 4)],
+                    )
+                    for i in ids
+                ],
+                "url string, title string, outlinks array<string>",
+            )
+        ),
+    }
+    got = {
+        name: hashlib.sha256(
+            b"".join(sorted(r.warc for r in df.collect()))
+        ).hexdigest()
+        for name, df in sinks.items()
+    }
+    assert got == _SINK_SHA256

@@ -32,7 +32,7 @@ from caraspark.synth import HTML_RECIPES, PDF_RECIPES  # noqa: E402
 
 
 def recipe_list():
-    """Same order as caraspark.corpus._gen: PDF recipes then sorted HTML."""
+    """Same order as caraspark.synth.corpus_row: PDF recipes then sorted HTML."""
     return list(PDF_RECIPES.items()) + [(k, None) for k in sorted(HTML_RECIPES)]
 
 
