@@ -80,7 +80,7 @@ def doc_facts(url: str, blob: bytes) -> dict:
 
     from caraspark.pdfengine.api import FATAL_CODES, is_pdf
     from caraspark.pdfengine.document import load_document
-    from caraspark.pdfengine.lexer import Lexer
+    from caraspark.pdfengine.lexer import HEX, INT, NAME, STR, tokens
     from caraspark.pdfengine.model import Name, Stream
     from caraspark.pdfengine.textextract import extract_text
     from caraspark.pdfengine.typecheck import check_types
@@ -97,18 +97,15 @@ def doc_facts(url: str, blob: bytes) -> dict:
             text_md5=None,
         )
     # C4: whole-file token histogram (bounded)
-    lx = Lexer(blob)
     hist = {"int": 0, "name": 0, "str": 0}
+    slot = {INT: "int", NAME: "name", STR: "str", HEX: "str"}
     n_tok = 0
-    while n_tok < 100_000:
-        t = lx.next_token()
-        if t[0] == "eof":
+    for kind, _, _, _ in tokens(blob):
+        if n_tok == 100_000:
             break
         n_tok += 1
-        if t[0] in hist:
-            hist[t[0]] += 1
-        elif t[0] == "hexstr":
-            hist["str"] += 1
+        if kind in slot:
+            hist[slot[kind]] += 1
 
     doc = load_document(blob)
     errors = list(doc.errors)

@@ -168,12 +168,7 @@ def repair_document(data: bytes) -> bytes:
         scavenge_objects,
     )
     from caraspark.pdfengine.filters import decode_stream
-    from caraspark.pdfengine.lexer import Lexer
-    from caraspark.pdfengine.parser import (
-        TokenStream,
-        parse_indirect_object,
-        parse_object,
-    )
+    from caraspark.pdfengine.parser import parse_indirect_object, parse_object
 
     doc = load_document(data)
     if doc.objects and doc.trailers:
@@ -213,8 +208,7 @@ def repair_document(data: bytes) -> bytes:
         if i == -1:
             break
         pos = i + 7
-        errs = []
-        t = parse_object(TokenStream(Lexer(data, i + 7, errors=errs)), errs)
+        t, _ = parse_object(data, i + 7, [])
         if isinstance(t, dict):
             trailer = t
     if trailer is not None:

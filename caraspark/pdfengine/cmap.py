@@ -21,7 +21,9 @@ SPEC (mirrored byte-for-byte by ``oracle/text_oracle.py``):
 
 from __future__ import annotations
 
-from caraspark.pdfengine.lexer import Lexer
+from caraspark.pdfengine.lexer import ARRAY_CLOSE, ARRAY_OPEN, HEX, KW, STR, tokens
+
+_STRINGS = (STR, HEX)
 
 
 class ToUnicodeCMap:
@@ -84,41 +86,34 @@ def parse_tounicode(data: bytes) -> ToUnicodeCMap:
     malformed input — unparseable sections are skipped (the show-string
     then falls back to U+FFFD per unmapped code)."""
     cm = ToUnicodeCMap()
-    lx = Lexer(data, errors=[])
-    toks: list[tuple] = []
-    while True:
-        t = lx.next_token()
-        if t[0] == "eof":
-            break
-        toks.append(t)
-
+    toks = [(kind, v) for kind, v, _, _ in tokens(data)]
     i, n = 0, len(toks)
 
     def hexval(t):
-        return t[1] if t[0] in ("hexstr", "str") else None
+        return t[1] if t[0] in _STRINGS else None
 
     while i < n:
-        kind, v, _ = toks[i]
-        if kind != "kw":
+        kind, v = toks[i]
+        if kind != KW:
             i += 1
             continue
-        if v == "begincodespacerange":
+        if v == b"begincodespacerange":
             i += 1
-            while i + 1 < n and toks[i][0] in ("hexstr", "str"):
+            while i + 1 < n and toks[i][0] in _STRINGS:
                 lo, hi = hexval(toks[i]), hexval(toks[i + 1])
                 i += 2
                 if lo is not None and hi is not None and len(lo) == len(hi):
                     cm.ranges.append((lo, hi))
-        elif v == "beginbfchar":
+        elif v == b"beginbfchar":
             i += 1
-            while i + 1 < n and toks[i][0] in ("hexstr", "str"):
+            while i + 1 < n and toks[i][0] in _STRINGS:
                 src, dst = hexval(toks[i]), hexval(toks[i + 1])
                 i += 2
                 if src is not None and dst is not None:
                     cm.mapping[src] = _utf16(dst)
-        elif v == "beginbfrange":
+        elif v == b"beginbfrange":
             i += 1
-            while i + 1 < n and toks[i][0] in ("hexstr", "str"):
+            while i + 1 < n and toks[i][0] in _STRINGS:
                 lo, hi = hexval(toks[i]), hexval(toks[i + 1])
                 i += 2
                 if i >= n or lo is None or hi is None or len(lo) != len(hi):
@@ -129,18 +124,18 @@ def parse_tounicode(data: bytes) -> ToUnicodeCMap:
                     i += 1
                     continue
                 w = len(lo)
-                if toks[i][0] in ("hexstr", "str"):
+                if toks[i][0] in _STRINGS:
                     dst = hexval(toks[i])
                     i += 1
                     for d in range(span + 1):
                         cm.mapping[(lo_i + d).to_bytes(w, "big")] = _incremented(
                             dst, d
                         )
-                elif toks[i][0] == "[":
+                elif toks[i][0] == ARRAY_OPEN:
                     i += 1
                     d = 0
-                    while i < n and toks[i][0] != "]":
-                        if toks[i][0] in ("hexstr", "str") and d <= span:
+                    while i < n and toks[i][0] != ARRAY_CLOSE:
+                        if toks[i][0] in _STRINGS and d <= span:
                             cm.mapping[(lo_i + d).to_bytes(w, "big")] = _utf16(
                                 toks[i][1]
                             )

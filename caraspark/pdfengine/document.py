@@ -13,13 +13,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from caraspark.pdfengine.filters import decode_stream
-from caraspark.pdfengine.lexer import Lexer
+from caraspark.pdfengine.lexer import INT, next_token
 from caraspark.pdfengine.model import Name, PdfError, Ref, Stream
-from caraspark.pdfengine.parser import (
-    TokenStream,
-    parse_indirect_object,
-    parse_object,
-)
+from caraspark.pdfengine.parser import parse_indirect_object, parse_object
 from caraspark.pdfengine.xref import (
     XrefEntry,
     check_header,
@@ -278,15 +274,16 @@ def _explode_objstm(
         return
 
     # header: N pairs of "objnum offset" relative to /First
-    lx = Lexer(payload, 0, end=min(first, len(payload)), errors=errors)
-    ts = TokenStream(lx)
+    hdr_end = min(first, len(payload))
+    pos = 0
     pairs: list[tuple[int, int]] = []
     for _ in range(n):
-        t1, t2 = ts.next(), ts.next()
-        if t1[0] != "int" or t2[0] != "int":
+        k1, onum, _, pos = next_token(payload, pos, hdr_end, errors=errors)
+        k2, ooff, _, pos = next_token(payload, pos, hdr_end, errors=errors)
+        if k1 != INT or k2 != INT:
             errors.append(PdfError("objstm.bad_pair", obj=(stm_num, 0)))
             break
-        pairs.append((t1[1], t2[1]))
+        pairs.append((onum, ooff))
 
     wanted = {e.num: e for e in members}
     for i, (onum, ooff) in enumerate(pairs):
@@ -294,8 +291,10 @@ def _explode_objstm(
         if at >= len(payload):
             errors.append(PdfError("objstm.bad_offset", obj=(onum, 0)))
             continue
-        olx = Lexer(payload, at, errors=errors)
-        obj = parse_object(TokenStream(olx), errors, strict=strict)
+        errs: list = []
+        obj, _ = parse_object(payload, at, errs, strict=strict)
+        # members are lexed relaxed: an odd hex-digit count is no error here
+        errors.extend(e for e in errs if e.code != "lex.hexstring_odd")
         if isinstance(obj, Stream):  # embedded objects may not be streams
             errors.append(PdfError("objstm.stream_inside", obj=(onum, 0)))
             continue

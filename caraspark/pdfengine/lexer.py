@@ -1,48 +1,79 @@
-"""COS lexer (SURVEY.md C4/C5; semantics from ISO 32000-1 §7.2–7.3).
+"""COS tokenizer (SURVEY.md C4/C5; semantics from ISO 32000-1 §7.2–7.3).
 
 Capability parity target: caradoc ``src/parser/lexer.mll`` +
 ``strictlexer.mll`` and the overflow-checked ints of
-``src/data/boundedint.ml`` [P].  Implementation is from scratch: a
-position-tracked incremental tokenizer over a bytes buffer, regex-driven for
-the hot token classes (regex scanning runs in C), byte-at-a-time only inside
-literal strings.
+``src/data/boundedint.ml`` [P].  Implementation is from scratch: ONE token
+regex, ``TOKEN_RE``, whose single C-level match skips white space and
+comments and then classifies the next token by its numbered group.  The
+object parser and the content-stream machines read those matches
+directly (dispatch on ``m.lastindex``, keywords compared as bytes); this
+module adds only what a regex cannot do:
 
-Token = (kind, value, pos) with kinds:
-    'int'     Python int, |v| < 2^63 (overflow → 'real' token + lex.int_overflow)
-    'real'    verbatim lexeme str (PDF reals have no exponent form)
-    'name'    decoded name str (after #xx unescape)
-    'str'     bytes (literal string, escapes resolved)
-    'hexstr'  bytes (hex string, odd length padded with 0)
-    '[' ']' '<<' '>>' '{' '}'   structural delimiters
-    'kw'      any other regular-character run (obj/endobj/R/true/… and
-              content-stream operators — the parser interprets)
-    'eof'
+* ``slow_token`` — the irregular rest, reached when no group matched:
+  literal strings with an escape, a nested paren or a raw EOL inside,
+  hex strings with white space or bad digits, a stray ``)`` or ``>``;
+* ``int_token`` / ``name_value`` / ``hex_value`` — the value rules with
+  their lex errors (int overflow, bad ``#xx`` escape, odd hex length);
+* ``next_token`` / ``tokens`` — the same tokenizer as one call per token,
+  for the cold callers (xref tables, object-stream headers, CMaps).
+
+Token kinds (the group numbers of ``TOKEN_RE``; ``EOF`` is 0):
+    REAL    verbatim lexeme str (PDF reals have no exponent form)
+    INT     Python int, |v| < 2^63 (overflow → REAL + lex.int_overflow)
+    NAME    decoded name str (after #xx unescape)
+    KW      any other regular-character run, as bytes (obj/endobj/R/true/…
+            and content-stream operators — the parser interprets)
+    DICT_OPEN DICT_CLOSE ARRAY_OPEN ARRAY_CLOSE BRACE_OPEN BRACE_CLOSE
+    STR     bytes (literal string, escapes resolved)
+    HEX     bytes (hex string, odd length padded with 0)
 """
 
 from __future__ import annotations
 
 import re
+from binascii import unhexlify
 
 from caraspark.pdfengine.model import PdfError
 
 WHITESPACE = b"\x00\t\n\x0c\r "
 
 MAX_INT = 2**63 - 1
+MIN_INT = -(2**63)
 
-# one C-level match per token for the hot classes: skips any run of
-# whitespace/comments, then classifies number | /name | keyword; the
-# remaining classes (strings, hex, delimiters) fall through to the
-# byte-dispatch below.
-_MASTER_RE = re.compile(
+EOF = 0
+(
+    REAL, INT, NAME, KW,
+    DICT_OPEN, DICT_CLOSE, ARRAY_OPEN, ARRAY_CLOSE, BRACE_OPEN, BRACE_CLOSE,
+    STR, HEX,
+) = range(1, 13)
+
+# the historical kind names; error messages (cos.dict_key_not_name) carry them
+KIND_NAMES = (
+    "eof", "real", "int", "name", "kw",
+    "<<", ">>", "[", "]", "{", "}",
+    "str", "hexstr",
+)
+
+# Skip any run of white space / comments, then at most one token.  Group
+# order matters: REAL before INT (``1.5``), ``<<`` before ``<hex>``, ``>>``
+# before a stray ``>``.  No group matches (``lastindex is None``) at EOF and
+# on the irregular tokens ``slow_token`` handles.
+TOKEN_RE = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)*"
-    rb"(?:(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
-    rb"|/(?P<name>[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<kw>[^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"
+    rb"(?:([+-]?(?:\d+\.\d*|\.\d+))"          # 1 REAL
+    rb"|([+-]?\d+)"                           # 2 INT
+    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"   # 3 NAME
+    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"    # 4 KW
+    rb"|(<<)|(>>)|(\[)|(\])|(\{)|(\})"        # 5-10 delimiters
+    rb"|\(([^()\\\r\n]*)\)"                   # 11 STR: no escape/nesting/EOL
+    rb"|<([0-9A-Fa-f]*)>"                     # 12 HEX: digits only
     rb")?"
 )
+
 _STR_SPECIAL_RE = re.compile(rb"[()\\\r\n]")
 _HEX_BODY_RE = re.compile(rb"[0-9A-Fa-f\x00\t\n\x0c\r ]*")
 _HEXPAIR_RE = re.compile(rb"[0-9A-Fa-f]{2}")
+_NOT_HEX = bytes(c for c in range(256) if c not in b"0123456789abcdefABCDEF")
 
 _ESCAPES = {
     ord("n"): b"\n",
@@ -56,188 +87,185 @@ _ESCAPES = {
 }
 
 
-class Lexer:
-    """Incremental tokenizer; errors accumulate in ``self.errors``."""
+def int_token(lexeme: bytes, p: int, errors: list) -> tuple[int, object]:
+    """(INT, int) — or, boundedint rule, (REAL, lexeme) plus
+    lex.int_overflow when it does not fit 64 bits, so bytes round-trip."""
+    v = int(lexeme)
+    if MIN_INT <= v <= MAX_INT:
+        return INT, v
+    errors.append(PdfError("lex.int_overflow", p, msg=lexeme.decode("ascii")))
+    return REAL, lexeme.decode("ascii")
 
-    __slots__ = ("data", "pos", "end", "strict", "errors")
 
-    def __init__(
-        self,
-        data: bytes,
-        pos: int = 0,
-        end: int | None = None,
-        strict: bool = False,
-        errors: list[PdfError] | None = None,
-    ):
-        self.data = data
-        self.pos = pos
-        self.end = len(data) if end is None else end
-        self.strict = strict
-        self.errors = errors if errors is not None else []
+def name_value(raw: bytes, p: int, errors: list) -> str:
+    """#xx unescape for /Name [PDF17 §7.3.5]; ``p`` is the '/' pos."""
+    if b"#" not in raw:
+        return raw.decode("latin-1")
+    out = bytearray()
+    i, n = 0, len(raw)
+    while i < n:
+        if raw[i] == 0x23 and i + 2 <= n:  # a final '#' stays literal
+            hx = _HEXPAIR_RE.match(raw, i + 1)
+            if hx:
+                out.append(int(hx.group(), 16))
+                i += 3
+                continue
+            errors.append(PdfError("lex.name_bad_escape", p + 1 + i))
+            # relaxed: keep the '#' literally
+        out.append(raw[i])
+        i += 1
+    return out.decode("latin-1")
 
-    def _err(self, code: str, pos: int, msg: str = "") -> None:
-        self.errors.append(PdfError(code=code, pos=pos, msg=msg))
 
-    def next_token(self) -> tuple:
-        data, end = self.data, self.end
-        m = _MASTER_RE.match(data, self.pos, end)
-        kind = m.lastgroup
-        if kind is not None:
-            self.pos = m.end()
-            if kind == "num":
-                p = m.start("num")
-                lex = m.group("num")
-                if b"." in lex:
-                    return ("real", lex.decode("ascii"), p)
-                v = int(lex)
-                if -MAX_INT - 1 <= v <= MAX_INT:
-                    return ("int", v, p)
-                # boundedint rule: overflowing ints are a lex error; the
-                # verbatim lexeme survives as a real so bytes round-trip.
-                self._err("lex.int_overflow", p, lex.decode("ascii"))
-                return ("real", lex.decode("ascii"), p)
-            if kind == "name":
-                p = m.start("name") - 1  # token starts at the '/'
-                raw = m.group("name")
-                if b"#" not in raw:
-                    return ("name", raw.decode("latin-1"), p)
-                return ("name", self._unescape_name(raw, p), p)
-            # kind == 'kw'
-            p = m.start("kw")
-            return ("kw", m.group("kw").decode("latin-1"), p)
+def hex_value(digits: bytes, p: int, strict: bool, errors: list) -> bytes:
+    """Hex digits → bytes; an odd count is padded with '0'."""
+    if len(digits) & 1:
+        digits += b"0"
+        if strict:
+            errors.append(PdfError("lex.hexstring_odd", p))
+    return unhexlify(digits)
 
-        # skip consumed; remaining classes dispatch on the next byte
-        self.pos = p = m.end()
-        if p >= end:
-            return ("eof", None, p)
-        c = data[p]
+
+def slow_token(
+    data: bytes, p: int, end: int, strict: bool, errors: list
+) -> tuple[int, object, int]:
+    """The token at ``p`` that ``TOKEN_RE`` left unmatched (``p < end``):
+    → (kind, value, resume position)."""
+    c = data[p]
+    if c == 0x28:  # '('
+        return _string(data, p, end, errors)
+    if c == 0x3C:  # '<' not followed by '<'
+        return _hexstring(data, p, end, strict, errors)
+    if c == 0x3E:  # '>' not followed by '>'
+        errors.append(PdfError("lex.stray_gt", p))
+        return KW, b">", p + 1
+    # ')' without '(' — every other byte is matched by TOKEN_RE
+    errors.append(PdfError("lex.unbalanced_paren", p))
+    return KW, data[p : p + 1], p + 1
+
+
+def _string(data: bytes, p: int, end: int, errors: list) -> tuple:
+    """(literal string) with nesting + escapes [PDF17 §7.3.4.2]."""
+    out = bytearray()
+    depth = 1
+    i = p + 1
+    while i < end:
+        m = _STR_SPECIAL_RE.search(data, i, end)
+        if not m:
+            break
+        out += data[i : m.start()]
+        i = m.start()
+        c = data[i]
         if c == 0x28:  # '('
-            return self._lex_string(p)
-        if c == 0x3C:  # '<'
-            if p + 1 < end and data[p + 1] == 0x3C:
-                self.pos = p + 2
-                return ("<<", None, p)
-            return self._lex_hexstring(p)
-        if c == 0x3E:  # '>'
-            if p + 1 < end and data[p + 1] == 0x3E:
-                self.pos = p + 2
-                return (">>", None, p)
-            self._err("lex.stray_gt", p)
-            self.pos = p + 1
-            return ("kw", ">", p)
-        if c == 0x5B:
-            self.pos = p + 1
-            return ("[", None, p)
-        if c == 0x5D:
-            self.pos = p + 1
-            return ("]", None, p)
-        if c == 0x7B:
-            self.pos = p + 1
-            return ("{", None, p)
-        if c == 0x7D:
-            self.pos = p + 1
-            return ("}", None, p)
-        if c == 0x29:  # ')' without '('
-            self._err("lex.unbalanced_paren", p)
-            self.pos = p + 1
-            return ("kw", ")", p)
-
-        # unreachable: every byte is either matched by the master regex
-        # (regular/ws/comment/name) or one of the delimiters above
-        self.pos = p + 1
-        return ("kw", chr(c), p)
-
-    def _unescape_name(self, raw: bytes, p: int) -> str:
-        """#xx unescape for /Name [PDF17 §7.3.5]; ``p`` is the '/' pos."""
-        out = bytearray()
-        i, n = 0, len(raw)
-        while i < n:
-            if raw[i] == 0x23 and i + 2 < n + 1:
-                hx = _HEXPAIR_RE.match(raw, i + 1)
-                if hx:
-                    out.append(int(hx.group(), 16))
-                    i += 3
-                    continue
-                self._err("lex.name_bad_escape", p + 1 + i)
-                # relaxed: keep the '#' literally
-            out.append(raw[i])
+            depth += 1
+            out.append(c)
             i += 1
-        return out.decode("latin-1")
-
-    def _lex_string(self, p: int) -> tuple:
-        """(literal string) with nesting + escapes [PDF17 §7.3.4.2]."""
-        data, end = self.data, self.end
-        out = bytearray()
-        depth = 1
-        i = p + 1
-        while i < end:
-            m = _STR_SPECIAL_RE.search(data, i, end)
-            if not m:
+        elif c == 0x29:  # ')'
+            depth -= 1
+            if depth == 0:
+                return STR, bytes(out), i + 1
+            out.append(c)
+            i += 1
+        elif c in (0x0D, 0x0A):  # raw EOL inside string → \n
+            out.append(0x0A)
+            i += 2 if data[i : i + 2] == b"\r\n" else 1
+        else:  # backslash
+            i += 1
+            if i >= end:
                 break
-            out += data[i : m.start()]
-            i = m.start()
-            c = data[i]
-            if c == 0x28:  # '('
-                depth += 1
-                out.append(c)
+            e = data[i]
+            if e in _ESCAPES:
+                out += _ESCAPES[e]
                 i += 1
-            elif c == 0x29:  # ')'
-                depth -= 1
-                if depth == 0:
-                    self.pos = i + 1
-                    return ("str", bytes(out), p)
-                out.append(c)
-                i += 1
-            elif c in (0x0D, 0x0A):  # raw EOL inside string → \n
-                out.append(0x0A)
+            elif 0x30 <= e <= 0x37:  # \ooo: 1–3 octal digits
+                j = i
+                while j < min(i + 3, end) and 0x30 <= data[j] <= 0x37:
+                    j += 1
+                out.append(int(data[i:j], 8) & 0xFF)
+                i = j
+            elif e in (0x0D, 0x0A):  # line continuation
                 i += 2 if data[i : i + 2] == b"\r\n" else 1
-            else:  # backslash
+            else:  # lone backslash: drop it, keep the char
+                out.append(e)
                 i += 1
-                if i >= end:
-                    break
-                e = data[i]
-                if e in _ESCAPES:
-                    out += _ESCAPES[e]
-                    i += 1
-                elif 0x30 <= e <= 0x37:  # \ooo: 1–3 octal digits
-                    j = i
-                    while j < min(i + 3, end) and 0x30 <= data[j] <= 0x37:
-                        j += 1
-                    out.append(int(data[i:j], 8) & 0xFF)
-                    i = j
-                elif e in (0x0D, 0x0A):  # line continuation
-                    i += 2 if data[i : i + 2] == b"\r\n" else 1
-                else:  # lone backslash: drop it, keep the char
-                    out.append(e)
-                    i += 1
-        self._err("lex.unterminated_string", p)
-        self.pos = end
-        return ("str", bytes(out), p)
+    errors.append(PdfError("lex.unterminated_string", p))
+    return STR, bytes(out), end
 
-    def _lex_hexstring(self, p: int) -> tuple:
-        """<hex string>: whitespace-tolerant, odd length → pad '0'."""
-        data, end = self.data, self.end
-        m = _HEX_BODY_RE.match(data, p + 1, end)
-        body = m.group()
-        q = m.end()
-        if q < end and data[q] == 0x3E:  # '>'
-            self.pos = q + 1
+
+def _hexstring(data: bytes, p: int, end: int, strict: bool, errors: list) -> tuple:
+    """<hex string>: whitespace-tolerant; relaxed past bad characters."""
+    m = _HEX_BODY_RE.match(data, p + 1, end)
+    q = m.end()
+    if q < end and data[q] == 0x3E:  # '>'
+        digits = m.group().translate(None, WHITESPACE)
+        nxt = q + 1
+    else:
+        # relaxed: scan to the next '>' dropping everything but hex digits
+        gt = data.find(b">", q, end)
+        errors.append(PdfError("lex.hexstring_bad_char", q))
+        if gt == -1:
+            errors.append(PdfError("lex.unterminated_string", p))
+            gt, nxt = end, end
         else:
-            # relaxed: scan to the next '>' skipping invalid chars
-            nxt = data.find(b">", q, end)
-            self._err("lex.hexstring_bad_char", q)
-            if nxt == -1:
-                self._err("lex.unterminated_string", p)
-                self.pos = end
-                body = bytes(ch for ch in data[p + 1 : end] if ch in b"0123456789abcdefABCDEF")
-            else:
-                self.pos = nxt + 1
-                body = bytes(
-                    ch for ch in data[p + 1 : nxt] if ch in b"0123456789abcdefABCDEF"
-                )
-        hexdigits = bytes(ch for ch in body if ch not in WHITESPACE)
-        if len(hexdigits) % 2:
-            hexdigits += b"0"
-            if self.strict:
-                self._err("lex.hexstring_odd", p)
-        return ("hexstr", bytes.fromhex(hexdigits.decode("ascii")), p)
+            nxt = gt + 1
+        digits = data[p + 1 : gt].translate(None, _NOT_HEX)
+    return HEX, hex_value(digits, p, strict, errors), nxt
+
+
+def next_token(
+    data: bytes,
+    pos: int,
+    end: int,
+    strict: bool = False,
+    errors: list | None = None,
+) -> tuple[int, object, int, int]:
+    """One token at or after ``pos`` → (kind, value, start, resume).
+
+    Values: INT int, REAL lexeme str, NAME str, KW bytes, STR/HEX bytes,
+    delimiters and EOF None.  Lex errors go to ``errors`` (dropped if
+    None)."""
+    if errors is None:
+        errors = []
+    m = TOKEN_RE.match(data, pos, end)
+    i = m.lastindex
+    if i is None:
+        p = m.end()
+        if p >= end:
+            return EOF, None, p, p
+        kind, v, nxt = slow_token(data, p, end, strict, errors)
+        return kind, v, p, nxt
+    p = m.start(i)
+    if i == INT:
+        kind, v = int_token(m[INT], p, errors)
+        return kind, v, p, m.end()
+    if i == REAL:
+        return REAL, m[REAL].decode("ascii"), p, m.end()
+    if i == NAME:
+        return NAME, name_value(m[NAME], p - 1, errors), p - 1, m.end()
+    if i == KW:
+        return KW, m[KW], p, m.end()
+    if i == STR:
+        return STR, m[STR], p - 1, m.end()
+    if i == HEX:
+        return HEX, hex_value(m[HEX], p - 1, strict, errors), p - 1, m.end()
+    return i, None, p, m.end()
+
+
+def tokens(
+    data: bytes,
+    pos: int = 0,
+    end: int | None = None,
+    strict: bool = False,
+    errors: list | None = None,
+):
+    """Every token from ``pos`` to ``end``: (kind, value, start, resume)."""
+    if end is None:
+        end = len(data)
+    if errors is None:
+        errors = []
+    while True:
+        tok = next_token(data, pos, end, strict, errors)
+        if tok[0] == EOF:
+            return
+        yield tok
+        pos = tok[3]

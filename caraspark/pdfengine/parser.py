@@ -4,15 +4,43 @@ Capability parity: caradoc ``src/parser/parser.mly`` (relaxed grammar),
 ``strictparser.mly`` (strict variant) and the indirect-object / stream logic
 of ``src/parser/fetchimpl.ml`` + ``src/data/pdfstream.ml`` [P].
 
-From-scratch design: a token-buffer stream with k-lookahead (for the
-``int int R`` reference form) feeding an **explicit-stack** tree builder —
-no Python recursion, so adversarial 10k-deep nesting hits the configurable
-depth budget (``resource.depth_limit``) instead of a RecursionError.
+From-scratch design: the parser reads ``lexer.TOKEN_RE`` matches directly
+at byte offsets (dispatch on the group number; the irregular rest goes
+through ``lexer.slow_token``) and builds the tree on an **explicit stack**
+— no Python recursion, so adversarial 10k-deep nesting hits the
+configurable depth budget (``resource.depth_limit``) instead of a
+RecursionError.  The ``int int R`` reference form looks at most two
+matches ahead, and only after an integer; those matches are reused, not
+re-lexed.  A body is tokenized up to the first keyword its grammar cannot
+consume, so an object ends at the end of its own ``endobj`` and lex errors
+come only from tokens the object consumes.
 """
 
 from __future__ import annotations
 
-from caraspark.pdfengine.lexer import Lexer
+from caraspark.pdfengine import lexer
+from caraspark.pdfengine.lexer import (
+    ARRAY_CLOSE,
+    ARRAY_OPEN,
+    BRACE_CLOSE,
+    DICT_CLOSE,
+    DICT_OPEN,
+    EOF,
+    HEX,
+    INT,
+    KIND_NAMES,
+    KW,
+    MAX_INT,
+    MIN_INT,
+    NAME,
+    REAL,
+    STR,
+    hex_value,
+    int_token,
+    name_value,
+    next_token,
+    slow_token,
+)
 from caraspark.pdfengine.model import Name, PdfError, Real, Ref, Stream
 
 # bounded so downstream recursive consumers (canonical JSON serialization,
@@ -21,197 +49,197 @@ DEFAULT_MAX_DEPTH = 256
 
 _UNEXPECTED = object()  # sentinel: value position hit a foreign keyword
 
-
-class TokenStream:
-    __slots__ = ("lx", "buf")
-
-    def __init__(self, lx: Lexer):
-        self.lx = lx
-        self.buf: list[tuple] = []
-
-    def peek(self, k: int = 0) -> tuple:
-        while len(self.buf) <= k:
-            self.buf.append(self.lx.next_token())
-        return self.buf[k]
-
-    def next(self) -> tuple:
-        if self.buf:
-            return self.buf.pop(0)
-        return self.lx.next_token()
-
-    def push_back(self, tok: tuple) -> None:
-        self.buf.insert(0, tok)
-
-    @property
-    def pos(self) -> int:
-        return self.peek()[2]
-
-
-def _scalar(ts: TokenStream, tok: tuple, errors: list, strict: bool):
-    """Turn one non-container token into a value, handling `int int R`."""
-    kind, v, pos = tok
-    if kind == "int":
-        n1 = ts.peek(0)
-        n2 = ts.peek(1)
-        if n1[0] == "int" and n2[0] == "kw" and n2[1] == "R":
-            ts.next()
-            ts.next()
-            if v < 0 or n1[1] < 0 or (strict and n1[1] > 65535):
-                errors.append(
-                    PdfError("cos.bad_reference", pos, msg=f"{v} {n1[1]} R")
-                )
-            return Ref(v, n1[1])
-        return v
-    if kind == "real":
-        return Real(v)
-    if kind == "str" or kind == "hexstr":
-        return v
-    if kind == "name":
-        return Name(v)
-    if kind == "kw":
-        if v == "true":
-            return True
-        if v == "false":
-            return False
-        if v == "null":
-            return None
-        return _UNEXPECTED
-    return _UNEXPECTED
+_KEYWORD_VALUES = {b"true": True, b"false": False, b"null": None}
 
 
 def parse_object(
-    ts: TokenStream,
+    data: bytes,
+    pos: int,
     errors: list,
     strict: bool = False,
     max_depth: int = DEFAULT_MAX_DEPTH,
 ):
-    """Parse one DirectObject; explicit container stack, bounded depth.
+    """Parse one DirectObject at ``pos`` → (value, resume position).
 
-    On a foreign keyword in value position the token is pushed back and
-    ``_UNEXPECTED`` propagates: the caller (indirect-object / trailer /
-    content parser) decides what it means.
+    On a foreign keyword in value position the keyword is left unread
+    (resume = its start) and, at top level, ``_UNEXPECTED`` is the value:
+    the caller (indirect-object / trailer / content parser) decides what
+    it means.
     """
+    match = lexer.TOKEN_RE.match
+    n = len(data)
     stack: list[tuple] = []  # (container, pending_key | None)
     pending_key: str | None = None
     container = None
+    la = la2 = None  # matches an `int int R` probe lexed ahead
 
     while True:
-        tok = ts.next()
-        kind, v, pos = tok
-        value = None
-        have_value = False
-
-        if kind == "eof":
-            errors.append(PdfError("cos.eof_in_object", pos))
-            value = None
-            # unwind: return whatever was built so far
-            while stack:
-                container, pending_key = stack.pop()
-            return container if container is not None else None
-        if kind == "[":
-            if len(stack) + 1 > max_depth:
-                errors.append(PdfError("resource.depth_limit", pos))
-                _skip_container(ts, "]")
-                value, have_value = [], True
-            else:
-                stack.append((container, pending_key))
-                container, pending_key = [], None
-                continue
-        elif kind == "<<":
-            if len(stack) + 1 > max_depth:
-                errors.append(PdfError("resource.depth_limit", pos))
-                _skip_container(ts, ">>")
-                value, have_value = {}, True
-            else:
-                stack.append((container, pending_key))
-                container, pending_key = {}, None
-                continue
-        elif kind == "]":
-            if isinstance(container, list):
-                value = container
-                container, pending_key = stack.pop()
-                have_value = True
-            else:
-                errors.append(PdfError("cos.unbalanced_bracket", pos))
-                continue
-        elif kind == ">>":
-            if isinstance(container, dict):
-                if pending_key is not None:
-                    errors.append(PdfError("cos.dict_missing_value", pos, path=pending_key))
-                value = container
-                container, pending_key = stack.pop()
-                have_value = True
-            else:
-                errors.append(PdfError("cos.unbalanced_bracket", pos))
-                continue
-        elif kind in ("{", "}"):
-            errors.append(PdfError("cos.unexpected_brace", pos))
-            continue
+        if la is None:
+            m = match(data, pos)
         else:
-            if isinstance(container, dict) and pending_key is None:
-                # key position: must be a name
-                if kind == "name":
+            m, la, la2 = la, la2, None
+        i = m.lastindex
+        if i is None:
+            start = m.end()
+            if start >= n:
+                errors.append(PdfError("cos.eof_in_object", start))
+                return None, start
+            if data[start] in b")>":
+                # a stray ')' or '>' is a keyword no grammar rule consumes:
+                # left unread, its lex error is the next reader's to record
+                i, v, pos = KW, data[start : start + 1], start + 1
+            else:
+                i, v, pos = slow_token(data, start, n, strict, errors)
+        else:
+            start = m.start(i)
+            pos = m.end()
+            if i == INT:
+                v = int(m[INT])
+                if not MIN_INT <= v <= MAX_INT:
+                    i, v = int_token(m[INT], start, errors)
+            elif i == NAME:
+                start -= 1
+                v = m[NAME]
+                v = name_value(v, start, errors) if b"#" in v else v.decode("latin-1")
+            elif i == STR:
+                start -= 1
+                v = m[STR]
+            elif i == REAL:
+                v = m[REAL].decode("ascii")
+            elif i == HEX:
+                start -= 1
+                v = hex_value(m[HEX], start, strict, errors)
+            else:
+                v = m[i]
+
+        if i < DICT_OPEN or i > BRACE_CLOSE:  # a scalar or a keyword
+            key_slot = pending_key is None and container.__class__ is dict
+            if key_slot:
+                if i == NAME:
                     pending_key = v
                     if strict and v in container:
-                        errors.append(PdfError("cos.dict_dup_key", pos, path=v))
+                        errors.append(PdfError("cos.dict_dup_key", start, path=v))
                     continue
-                errors.append(PdfError("cos.dict_key_not_name", pos, msg=kind))
-                # relaxed: consume the stray value and resync
-                sv = _scalar(ts, tok, errors, strict)
-                if sv is _UNEXPECTED:
-                    ts.push_back(tok)
-                    # foreign keyword while inside a dict: bail out
-                    while stack:
-                        container, pending_key = stack.pop()
-                    return container
-                continue
-            value = _scalar(ts, tok, errors, strict)
-            if value is _UNEXPECTED:
-                ts.push_back(tok)
-                if not stack and container is None:
-                    return _UNEXPECTED
-                errors.append(PdfError("cos.unexpected_keyword", pos, msg=str(v)))
-                # relaxed resync: close all open containers
-                while stack:
-                    if isinstance(container, dict) and pending_key is not None:
-                        container[pending_key] = None
-                    parent, pk = stack.pop()
-                    if isinstance(parent, list):
-                        parent.append(container)
-                    elif isinstance(parent, dict) and pk is not None:
-                        parent[pk] = container
-                    container, pending_key = parent, pk
-                return container
-            have_value = True
-
-        if have_value:
-            if container is None:
-                return value
-            if isinstance(container, list):
-                container.append(value)
-            elif pending_key is None:
-                # a container value landed in dict KEY position
-                # (e.g. << [1 2] /X >>) — keys must be names; drop it
+                # relaxed: the stray value is consumed, then dropped
                 errors.append(
-                    PdfError("cos.dict_key_not_name", pos, msg=kind)
+                    PdfError("cos.dict_key_not_name", start, msg=KIND_NAMES[i])
                 )
+            if i == INT:
+                m1 = la or match(data, pos)
+                if m1.lastindex == INT:
+                    m2 = match(data, m1.end())
+                    if m2.lastindex == KW and m2[KW] == b"R":
+                        gen = int(m1[INT])
+                        if MIN_INT <= gen <= MAX_INT:
+                            if v < 0 or gen < 0 or (strict and gen > 65535):
+                                errors.append(
+                                    PdfError(
+                                        "cos.bad_reference", start, msg=f"{v} {gen} R"
+                                    )
+                                )
+                            v = Ref(v, gen)
+                            pos = m2.end()
+                            m1 = m2 = None
+                    la, la2 = m1, m2
+                else:
+                    la = m1
+            elif i == NAME:
+                v = Name(v)
+            elif i == REAL:
+                v = Real(v)
+            elif i == KW:
+                if v in _KEYWORD_VALUES:
+                    v = _KEYWORD_VALUES[v]
+                elif key_slot:
+                    # foreign keyword while inside a dict: bail out
+                    return None, start
+                elif container is None:
+                    return _UNEXPECTED, start
+                else:
+                    errors.append(
+                        PdfError(
+                            "cos.unexpected_keyword", start, msg=v.decode("latin-1")
+                        )
+                    )
+                    # relaxed resync: close all open containers
+                    while stack:
+                        if isinstance(container, dict) and pending_key is not None:
+                            container[pending_key] = None
+                        parent, pk = stack.pop()
+                        if isinstance(parent, list):
+                            parent.append(container)
+                        elif isinstance(parent, dict) and pk is not None:
+                            parent[pk] = container
+                        container, pending_key = parent, pk
+                    return container, start
+            if key_slot:
+                continue
+            if container.__class__ is list:
+                container.append(v)
+            elif container is None:
+                return v, pos
             else:
-                container[pending_key] = value
+                container[pending_key] = v
                 pending_key = None
+            continue
+
+        if i == ARRAY_OPEN or i == DICT_OPEN:
+            if len(stack) + 1 > max_depth:
+                errors.append(PdfError("resource.depth_limit", start))
+                pos = _skip_container(data, pos, i, strict, errors)
+                value = [] if i == ARRAY_OPEN else {}
+            else:
+                stack.append((container, pending_key))
+                container, pending_key = ([] if i == ARRAY_OPEN else {}), None
+                continue
+        elif i == ARRAY_CLOSE:
+            if container.__class__ is not list:
+                errors.append(PdfError("cos.unbalanced_bracket", start))
+                continue
+            value = container
+            container, pending_key = stack.pop()
+        elif i == DICT_CLOSE:
+            if container.__class__ is not dict:
+                errors.append(PdfError("cos.unbalanced_bracket", start))
+                continue
+            if pending_key is not None:
+                errors.append(
+                    PdfError("cos.dict_missing_value", start, path=pending_key)
+                )
+            value = container
+            container, pending_key = stack.pop()
+        else:  # '{' or '}'
+            errors.append(PdfError("cos.unexpected_brace", start))
+            continue
+
+        # a finished container (or a depth-limited stand-in) is the value
+        if container is None:
+            return value, pos
+        if container.__class__ is list:
+            container.append(value)
+        elif pending_key is None:
+            # a container value landed in dict KEY position
+            # (e.g. << [1 2] /X >>) — keys must be names; drop it
+            errors.append(PdfError("cos.dict_key_not_name", start, msg=KIND_NAMES[i]))
+        else:
+            container[pending_key] = value
+            pending_key = None
 
 
-def _skip_container(ts: TokenStream, closer: str) -> None:
-    """Consume tokens until the matching closer (depth-limited subtree)."""
+def _skip_container(data: bytes, pos: int, opener: int, strict, errors) -> int:
+    """Consume tokens through the matching closer (depth-limited subtree)."""
+    closer = ARRAY_CLOSE if opener == ARRAY_OPEN else DICT_CLOSE
+    n = len(data)
     depth = 1
-    opener = "[" if closer == "]" else "<<"
     while depth:
-        kind, _, _ = ts.next()
-        if kind == "eof":
-            return
+        kind, _, _, pos = next_token(data, pos, n, strict, errors)
+        if kind == EOF:
+            return pos
         if kind == opener:
             depth += 1
         elif kind == closer:
             depth -= 1
+    return pos
 
 
 def parse_indirect_object(
@@ -225,16 +253,17 @@ def parse_indirect_object(
 ):
     """``N G obj … endobj`` at a byte offset (C8), incl. stream payloads (C9).
 
-    Returns (num, gen, obj_or_Stream, end_offset) or None on hard failure.
-    ``resolve_length`` resolves an indirect /Length (int or None).
+    Returns (num, gen, obj_or_Stream, end_offset) or None on hard failure;
+    ``end_offset`` is the end of ``endobj`` (or, when it is missing, the
+    start of the token found in its place).  ``resolve_length`` resolves an
+    indirect /Length (int or None).
     """
-    lx = Lexer(data, offset, strict=strict, errors=errors)
-    ts = TokenStream(lx)
-    t1, t2, t3 = ts.next(), ts.next(), ts.next()
-    if not (t1[0] == "int" and t2[0] == "int" and t3[0] == "kw" and t3[1] == "obj"):
+    n = len(data)
+    head = _header(data, offset, n, strict, errors)
+    if head is None:
         errors.append(PdfError("obj.bad_header", offset))
         return None
-    num, gen = t1[1], t2[1]
+    num, gen, pos = head
     if expected is not None and (num, gen) != expected:
         errors.append(
             PdfError(
@@ -244,38 +273,53 @@ def parse_indirect_object(
                 msg=f"found {num} {gen}",
             )
         )
-    body = parse_object(ts, errors, strict=strict, max_depth=max_depth)
+    body, pos = parse_object(data, pos, errors, strict=strict, max_depth=max_depth)
     if body is _UNEXPECTED:
-        errors.append(PdfError("obj.empty_body", ts.pos, obj=(num, gen)))
+        errors.append(PdfError("obj.empty_body", pos, obj=(num, gen)))
         body = None
 
-    tok = ts.next()
-    if tok[0] == "kw" and tok[1] == "stream":
+    kind, kw, at, pos = _keyword(data, pos, n, strict, errors)
+    if kind == KW and kw == b"stream":
         if not isinstance(body, dict):
-            errors.append(PdfError("stream.dict_missing", tok[2], obj=(num, gen)))
-            body = body if isinstance(body, dict) else {}
-        stream_obj, end = _read_stream_payload(
-            data, tok[2], body, errors, strict, resolve_length, (num, gen)
+            errors.append(PdfError("stream.dict_missing", at, obj=(num, gen)))
+            body = {}
+        body, end = _read_stream_payload(
+            data, at, body, errors, strict, resolve_length, (num, gen)
         )
-        end2 = _expect_endobj(
-            TokenStream(Lexer(data, end, strict=strict, errors=errors)),
-            errors,
-            (num, gen),
-            strict,
-        )
-        return (num, gen, stream_obj, end2)
-    if tok[0] == "kw" and tok[1] == "endobj":
-        return (num, gen, body, lx.pos)
-    errors.append(PdfError("obj.missing_endobj", tok[2], obj=(num, gen)))
-    return (num, gen, body, tok[2])
+        kind, kw, at, pos = _keyword(data, end, n, strict, errors)
+    if kind == KW and kw == b"endobj":
+        return (num, gen, body, pos)
+    errors.append(PdfError("obj.missing_endobj", at, obj=(num, gen)))
+    return (num, gen, body, at)
 
 
-def _expect_endobj(ts: TokenStream, errors: list, objkey, strict: bool) -> int:
-    tok = ts.next()
-    if tok[0] == "kw" and tok[1] == "endobj":
-        return ts.lx.pos
-    errors.append(PdfError("obj.missing_endobj", tok[2], obj=objkey))
-    return tok[2]
+def _header(data: bytes, pos: int, n: int, strict: bool, errors: list):
+    """``N G obj`` → (N, G, position after ``obj``), or None."""
+    match = lexer.TOKEN_RE.match
+    m1 = match(data, pos)
+    if m1.lastindex == INT:
+        m2 = match(data, m1.end())
+        if m2.lastindex == INT:
+            m3 = match(data, m2.end())
+            if m3.lastindex == KW and m3[KW] == b"obj":
+                num, gen = int(m1[INT]), int(m2[INT])
+                if MIN_INT <= num <= MAX_INT and MIN_INT <= gen <= MAX_INT:
+                    return num, gen, m3.end()
+    # the general case, with the lex errors of all three tokens
+    k1, num, _, pos = next_token(data, pos, n, strict, errors)
+    k2, gen, _, pos = next_token(data, pos, n, strict, errors)
+    k3, kw, _, pos = next_token(data, pos, n, strict, errors)
+    if k1 == INT and k2 == INT and k3 == KW and kw == b"obj":
+        return num, gen, pos
+    return None
+
+
+def _keyword(data: bytes, pos: int, n: int, strict: bool, errors: list):
+    """``next_token`` with the keyword case (``endobj``/``stream``) inline."""
+    m = lexer.TOKEN_RE.match(data, pos)
+    if m.lastindex == KW:
+        return KW, m[KW], m.start(KW), m.end()
+    return next_token(data, pos, n, strict, errors)
 
 
 def _read_stream_payload(

@@ -68,16 +68,40 @@ and compared byte-for-byte:
     document whose text is b"" yields [] — spans are offsets into the
     emitted payload, and there is none.
 
+Implementation: the operator machine (``extract_page_text``) and the
+operator histogram (``content_op_histogram``) read ``lexer.TOKEN_RE``
+matches straight off the content bytes — operand classes dispatch on the
+match's group, operators are looked up as bytes in ``_TEXT_OPS`` — and
+never build a token list: a 500 KB content stream holds only its operand
+stack and the text it emits.  Array and dict operands go through the object
+parser; both machines share one inline-image skip
+(``_skip_inline_image``).
+
 Everything here is per-document pure compute — it runs inside the Arrow
 batch UDF with zero shuffle.
 """
 
 from __future__ import annotations
 
+from caraspark.pdfengine import lexer
 from caraspark.pdfengine.cmap import ToUnicodeCMap, parse_tounicode
-from caraspark.pdfengine.lexer import Lexer
-from caraspark.pdfengine.model import Name, PdfError, Ref, Stream
-from caraspark.pdfengine.parser import TokenStream, parse_object
+from caraspark.pdfengine.lexer import (
+    ARRAY_OPEN,
+    DICT_OPEN,
+    EOF,
+    HEX,
+    INT,
+    KW,
+    NAME,
+    REAL,
+    STR,
+    hex_value,
+    name_value,
+    next_token,
+    slow_token,
+)
+from caraspark.pdfengine.model import Name, PdfError, Real, Ref, Stream
+from caraspark.pdfengine.parser import parse_object
 
 # Kern-space threshold for a 1000-unit (full-width) font; per-font the
 # effective threshold is -0.18 × repw(font) — see SPEC "font metrics".
@@ -290,6 +314,54 @@ def _content_bytes(doc, page_key, errors) -> bytes:
     return b"\n".join(parts)
 
 
+# the text operators; every other keyword only clears the operand stack
+_SHOW, _NEWLINE_SHOW, _SHOW_ARRAY, _FONT, _FORM, _IMAGE, _MOVE, _NEWLINE = range(8)
+_TEXT_OPS = {
+    b"Tj": _SHOW,
+    b"'": _NEWLINE_SHOW,
+    b'"': _NEWLINE_SHOW,
+    b"TJ": _SHOW_ARRAY,
+    b"Tf": _FONT,
+    b"Do": _FORM,
+    b"BI": _IMAGE,
+    b"Td": _MOVE,
+    b"TD": _MOVE,
+    b"T*": _NEWLINE,
+    b"Tm": _NEWLINE,
+    b"ET": _NEWLINE,
+    b"BT": _NEWLINE,
+}
+
+
+def _skip_inline_image(data: bytes, pos: int, counts=None) -> int:
+    """From just past ``BI``: the image dict's tokens through ``ID``, then
+    raw bytes to an ``EI`` preceded by a whitespace byte and followed by
+    whitespace/delimiter/EOF (see SPEC) → the position after that ``EI``,
+    or the end of the stream.  ``counts`` tallies the keywords read."""
+    n = len(data)
+    while True:
+        kind, v, _, pos = next_token(data, pos, n)
+        if kind == EOF:
+            return n
+        if kind == KW:
+            if counts is not None:
+                counts[v] += 1
+            if v == b"ID":
+                break
+    i = pos
+    while True:
+        m = data.find(b"EI", i, n)
+        if m < 0:
+            return n
+        if (m == 0 or data[m - 1] in _WS) and (
+            m + 2 >= n or data[m + 2] in _WS_DELIM
+        ):
+            if counts is not None:
+                counts[b"EI"] += 1
+            return m + 2
+        i = m + 1
+
+
 def extract_page_text(
     content: bytes,
     errors: list,
@@ -299,10 +371,13 @@ def extract_page_text(
     _depth: int = 0,
     _active: frozenset = frozenset(),
 ) -> str:
-    """Run the text-operator machine over one page's content bytes."""
-    lx = Lexer(content, errors=[])  # content-stream lex errors are not
-    ts = TokenStream(lx)            # document-validity errors
-    operands: list = []
+    """Run the text-operator machine over one page's content bytes,
+    streaming ``TOKEN_RE`` matches (no token list is built)."""
+    match = lexer.TOKEN_RE.match
+    n = len(content)
+    pos = 0
+    lex_errors: list = []  # content-stream lex errors are not
+    operands: list = []    # document-validity errors
     lines: list[str] = []
     cur: list[str] = []
     cmap: ToUnicodeCMap | None = None  # of the current font (Tf)
@@ -344,75 +419,75 @@ def extract_page_text(
             cur.append(cmap.decode(v) if cmap else decode_pdf_string(v))
 
     while True:
-        tok = ts.next()
-        kind, v, _ = tok
-        if kind == "eof":
-            break
-        if kind in ("int", "real", "str", "hexstr", "name"):
-            if kind == "real":
-                operands.append(float(v))
-            elif kind == "name":
-                operands.append(Name(v))
-            else:
-                operands.append(v)
+        m = match(content, pos)
+        i = m.lastindex
+        if i == INT:
+            pos = m.end()
+            operands.append(int(m[INT]))
             continue
-        if kind == "[":
-            ts.push_back(tok)
-            arr = parse_object(ts, [], strict=False)
-            operands.append(arr if isinstance(arr, list) else [])
+        if i == KW:
+            pos = m.end()
+            op = m[KW]
+        elif i is None:
+            p = m.end()
+            if p >= n:
+                break
+            i, op, pos = slow_token(content, p, n, False, lex_errors)
+            if i != KW:  # an escaped/nested string or a loose hex string
+                operands.append(op)
+                continue
+        else:
+            pos = m.end()
+            if i == REAL:
+                operands.append(float(m[REAL]))
+            elif i == STR:
+                operands.append(m[STR])
+            elif i == NAME:
+                operands.append(Name(name_value(m[NAME], 0, lex_errors)))
+            elif i == HEX:
+                operands.append(hex_value(m[HEX], 0, False, lex_errors))
+            elif i == ARRAY_OPEN:
+                arr, pos = parse_object(content, m.start(i), [])
+                operands.append(arr if isinstance(arr, list) else [])
+            elif i == DICT_OPEN:
+                d, pos = parse_object(content, m.start(i), [])
+                operands.append(d if isinstance(d, dict) else {})
+            else:  # a stray closer or brace
+                operands.clear()
             continue
-        if kind == "<<":
-            ts.push_back(tok)
-            d = parse_object(ts, [], strict=False)
-            operands.append(d if isinstance(d, dict) else {})
-            continue
-        if kind in ("]", ">>", "{", "}"):
-            operands.clear()
-            continue
-        # kind == 'kw' → operator
-        op = v
-        if op == "Tj" and operands:
-            show(operands[-1])
-        elif op == "'" and operands:
-            newline()
-            show(operands[-1])
-        elif op == '"' and operands:
-            newline()
-            show(operands[-1])
-        elif op == "TJ" and operands and isinstance(operands[-1], list):
-            for el in operands[-1]:
-                if isinstance(el, bytes):
-                    show(el)
-                elif isinstance(el, (int, float)) and el <= kern_thr:
-                    cur.append(" ")
-        elif op == "Tf" and operands and isinstance(operands[0], Name):
-            cmap, kern_thr = (fonts or {}).get(
-                operands[0].v, (None, float(KERN_SPACE_THRESHOLD))
-            )
-        elif op == "Do" and operands and isinstance(operands[0], Name):
-            do_form(operands[0].v)
-        elif op == "BI":
-            # inline image [PDF17 §8.9.7]: dict tokens through ID, then
-            # raw bytes to a whitespace-delimited EI (see SPEC above)
-            while True:
-                k2, v2, _p2 = ts.next()
-                if k2 == "eof" or (k2 == "kw" and v2 == "ID"):
-                    break
-            ts.buf.clear()
-            data, end = lx.data, lx.end
-            i = lx.pos
-            while True:
-                m = data.find(b"EI", i, end)
-                if m < 0:
-                    lx.pos = end
-                    break
-                if (m == 0 or data[m - 1] in _WS) and (
-                    m + 2 >= end or data[m + 2] in _WS_DELIM
-                ):
-                    lx.pos = m + 2
-                    break
-                i = m + 1
-        elif op in ("Td", "TD"):
+
+        code = _TEXT_OPS.get(op)
+        if code is None:
+            pass
+        elif code == _SHOW:
+            if operands:
+                show(operands[-1])
+        elif code == _NEWLINE_SHOW:
+            if operands:
+                newline()
+                show(operands[-1])
+        elif code == _SHOW_ARRAY:
+            if operands and isinstance(operands[-1], list):
+                for el in operands[-1]:
+                    if isinstance(el, bytes):
+                        show(el)
+                    elif isinstance(el, (int, float)):
+                        if el <= kern_thr:
+                            cur.append(" ")
+                    elif isinstance(el, Real) and el.value() <= kern_thr:
+                        cur.append(" ")
+        elif code == _FONT:
+            if operands and isinstance(operands[0], Name):
+                cmap, kern_thr = (fonts or {}).get(
+                    operands[0].v, (None, float(KERN_SPACE_THRESHOLD))
+                )
+        elif code == _FORM:
+            if operands and isinstance(operands[0], Name):
+                do_form(operands[0].v)
+        elif code == _IMAGE:
+            # inline image [PDF17 §8.9.7]: image bytes never reach the ops
+            pos = _skip_inline_image(content, pos)
+        elif code == _MOVE:
             tx = operands[0] if len(operands) > 0 else 0
             ty = operands[1] if len(operands) > 1 else 0
             if not isinstance(tx, (int, float)):
@@ -423,9 +498,7 @@ def extract_page_text(
                 newline()
             elif tx != 0 and cur and not cur[-1].endswith(" "):
                 cur.append(" ")
-        elif op in ("T*", "Tm"):
-            newline()
-        elif op in ("ET", "BT"):
+        else:  # _NEWLINE: T* Tm ET BT
             newline()
         operands.clear()
 
@@ -504,46 +577,31 @@ def content_op_histogram(doc) -> list[dict]:
     Rows: {"op", "n"} sorted by op."""
     from collections import Counter
 
-    counts: Counter = Counter()
+    counts: Counter = Counter()  # keyword bytes → occurrences
     errors: list = []
+    match = lexer.TOKEN_RE.match
     for pk in _page_order(doc):
         content = _content_bytes(doc, pk, errors)
-        if not content:
-            continue
-        lx = Lexer(content, errors=[])
-        ts = TokenStream(lx)
+        pos, n = 0, len(content)
         while True:
-            tok = ts.next()
-            if tok[0] == "eof":
-                break
-            if tok[0] != "kw":
+            m = match(content, pos)
+            i = m.lastindex
+            if i == KW:
+                pos = m.end()
+                op = m[KW]
+            elif i is None:
+                p = m.end()
+                if p >= n:
+                    break
+                i, op, pos = slow_token(content, p, n, False, [])
+                if i != KW:
+                    continue
+            else:
+                pos = m.end()
                 continue
-            counts[tok[1]] += 1
-            if tok[1] == "BI":
-                # same inline-image skip as extract_page_text: dict
-                # tokens through ID (counted), then raw bytes to a
-                # whitespace-delimited EI — payload bytes must not lex
-                while True:
-                    k2, v2, _p2 = ts.next()
-                    if k2 == "eof":
-                        break
-                    if k2 == "kw":
-                        counts[v2] += 1
-                        if v2 == "ID":
-                            break
-                ts.buf.clear()
-                data, end = lx.data, lx.end
-                i = lx.pos
-                while True:
-                    m = data.find(b"EI", i, end)
-                    if m < 0:
-                        lx.pos = end
-                        break
-                    if (m == 0 or data[m - 1] in _WS) and (
-                        m + 2 >= end or data[m + 2] in _WS_DELIM
-                    ):
-                        lx.pos = m + 2
-                        counts["EI"] += 1
-                        break
-                    i = m + 1
-    return [{"op": op, "n": counts[op]} for op in sorted(counts)]
+            counts[op] += 1
+            if op == b"BI":
+                # the same inline-image skip as extract_page_text; the
+                # dict's keywords (through ID) and the EI are counted
+                pos = _skip_inline_image(content, pos, counts)
+    return [{"op": op.decode("latin-1"), "n": counts[op]} for op in sorted(counts)]

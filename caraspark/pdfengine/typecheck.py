@@ -3043,10 +3043,11 @@ def check_types(doc, strict: bool = False) -> TypeResult:
     """Worklist BFS from the trailer; see module docstring."""
     res = TypeResult()
     worklist: list[tuple[tuple[int, int], object, str]] = []
-    enqueued: set[tuple[tuple[int, int], str]] = set()
+    # type expressions are frozen dataclasses: hashable, equal iff same shape
+    enqueued: set[tuple[tuple[int, int], object]] = set()
 
     def enqueue(key, texpr, path):
-        tag = (key, _texpr_tag(texpr))
+        tag = (key, texpr)
         if tag not in enqueued:
             enqueued.add(tag)
             worklist.append((key, texpr, path))
@@ -3220,10 +3221,6 @@ def _class_compatible(a: str, b: str) -> bool:
     return (a, b) in _COMPATIBLE or (
         a.startswith("annot") and b.startswith("annot")
     )
-
-
-def _texpr_tag(t) -> str:
-    return repr(t)
 
 
 def _try_match(v, texpr, doc, sub, enqueue, path, objkey) -> bool:

@@ -18,9 +18,9 @@ from dataclasses import dataclass
 import numpy as np
 
 from caraspark.pdfengine.filters import decode_stream
-from caraspark.pdfengine.lexer import Lexer
+from caraspark.pdfengine.lexer import INT, KW, next_token, tokens
 from caraspark.pdfengine.model import Name, PdfError, Ref, Stream
-from caraspark.pdfengine.parser import TokenStream, parse_indirect_object, parse_object
+from caraspark.pdfengine.parser import _UNEXPECTED, parse_indirect_object, parse_object
 
 _HEADER_RE = re.compile(rb"%PDF-(\d)\.(\d)")
 _XREF_ENTRY_RE = re.compile(rb"(\d{10}) (\d{5}) ([nf])")
@@ -77,34 +77,32 @@ def parse_classic_xref(
     data: bytes, offset: int, errors: list, strict: bool
 ) -> tuple[list[XrefEntry], dict | None, int]:
     """C10: `xref` + subsections of 20-byte entries, then `trailer` dict."""
-    lx = Lexer(data, offset, strict=strict, errors=errors)
-    ts = TokenStream(lx)
-    tok = ts.next()
-    if tok[0] != "kw" or tok[1] != "xref":
+    n = len(data)
+    kind, v, at, pos = next_token(data, offset, n, strict, errors)
+    if kind != KW or v != b"xref":
         errors.append(PdfError("xref.bad_table", offset))
         return [], None, offset
     entries: list[XrefEntry] = []
     while True:
-        tok = ts.next()
-        if tok[0] == "int":  # subsection header: start count
-            t2 = ts.next()
-            if t2[0] != "int":
-                errors.append(PdfError("xref.bad_subsection", tok[2]))
-                return entries, None, tok[2]
-            start, count = tok[1], t2[1]
+        kind, start, at, pos = next_token(data, pos, n, strict, errors)
+        if kind == INT:  # subsection header: start count
+            kind2, count, _, pos = next_token(data, pos, n, strict, errors)
+            if kind2 != INT:
+                errors.append(PdfError("xref.bad_subsection", at))
+                return entries, None, at
             # entries are fixed-width; consume them positionally, not via the
-            # lexer, because `0000000000 65535 f` lexes as three tokens anyway
-            # but the 20-byte framing is part of the strict grammar
-            p = lx.pos
-            while p < len(data) and data[p] in b"\r\n \t":
+            # tokenizer, because `0000000000 65535 f` lexes as three tokens
+            # anyway but the 20-byte framing is part of the strict grammar
+            p = pos
+            while p < n and data[p] in b"\r\n \t":
                 p += 1
             for k in range(count):
                 m = _XREF_ENTRY_RE.match(data, p)
                 if not m:
                     errors.append(PdfError("xref.bad_entry", p, obj=(start + k, 0)))
                     break
-                f1, f2, kind = int(m.group(1)), int(m.group(2)), m.group(3)
-                if kind == b"n":
+                f1, f2, fk = int(m.group(1)), int(m.group(2)), m.group(3)
+                if fk == b"n":
                     entries.append(XrefEntry(start + k, f2, "inuse", offset=f1))
                 else:
                     entries.append(XrefEntry(start + k, f2, "free"))
@@ -116,17 +114,51 @@ def parse_classic_xref(
                     p += 1
                     if strict:
                         errors.append(PdfError("xref.entry_eol", p))
-            lx.pos = p
-            ts.buf.clear()
-        elif tok[0] == "kw" and tok[1] == "trailer":
-            trailer = parse_object(ts, errors, strict=strict)
+            pos = p
+        elif kind == KW and start == b"trailer":
+            trailer, end = parse_object(data, pos, errors, strict=strict)
+            end = _section_end(data, pos, end, trailer, strict, errors)
             if not isinstance(trailer, dict):
-                errors.append(PdfError("xref.bad_trailer", tok[2]))
+                errors.append(PdfError("xref.bad_trailer", at))
                 trailer = None
-            return entries, trailer, lx.pos
+            return entries, trailer, end
         else:
-            errors.append(PdfError("xref.missing_trailer", tok[2]))
-            return entries, None, tok[2]
+            errors.append(PdfError("xref.missing_trailer", at))
+            return entries, None, at
+
+
+def _section_end(
+    data: bytes, pos: int, end: int, trailer, strict: bool, errors: list
+) -> int:
+    """Where a classic section's claimed interval stops.  The hole map
+    (``n_holes``/``hole_bytes``, pinned in goldens and pdfacts) counts it
+    as the trailer's end plus the tokens an `int int R` reader has lexed
+    by then: a foreign keyword that stopped the parse, and two tokens
+    past a final integer value.  So a trailer ending ``/Prev 123 >>``
+    claims the ``startxref`` keyword, and its offset and ``%%EOF`` count
+    as a hole.  Those extra tokens' lex errors are recorded too."""
+    n = len(data)
+    toks = [(k, v) for k, v, _, _ in tokens(data, pos, end)]
+    if trailer is _UNEXPECTED or (
+        trailer is None and end < n and toks != [(KW, b"null")]
+    ):
+        # the parse stopped at a foreign keyword
+        k, v, _, end = next_token(data, end, n, strict, errors)
+        toks.append((k, v))
+    last = len(toks) - 1
+    if last >= 0 and toks[last][0] == INT:
+        extra = 2
+    elif (
+        last >= 1
+        and toks[last - 1][0] == INT
+        and not (toks[last] == (KW, b"R") and last >= 2 and toks[last - 2][0] == INT)
+    ):
+        extra = 1
+    else:
+        return end
+    for _ in range(extra):
+        _, _, _, end = next_token(data, end, n, strict, errors)
+    return end
 
 
 def parse_xref_stream(

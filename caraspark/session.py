@@ -13,6 +13,9 @@ is the one we'd ship to a 1000-executor cluster too:
                                Python workers; a small maxRecordsPerBatch plus
                                the byte-budget logic in extract.py bounds the
                                per-batch footprint (SURVEY.md §4.3).
+* driver heap                — min(24g, half the host's physical memory),
+                               so two sessions fit on one machine;
+                               $CARASPARK_DRIVER_MEM overrides it.
 * caraspark.workerd daemon   — forks Python workers that skip the per-task
                                zip-directory rescan (≈0.1-0.2 s of CPU per
                                task; see workerd.py). It starts before any
@@ -34,6 +37,20 @@ ARROW_BATCH_ROWS = 1024
 
 # The directory (or zip) that ``import caraspark`` resolved from.
 _IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+MAX_DRIVER_MEM_MB = 24 * 1024
+
+
+def default_driver_memory() -> str:
+    """``$CARASPARK_DRIVER_MEM``, else min(24g, half the physical memory)."""
+    env = os.environ.get("CARASPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(MAX_DRIVER_MEM_MB, phys // 2 // 2**20)}m"
 
 
 def get_spark(
@@ -74,7 +91,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
         )
         .config("spark.sql.execution.arrow.useLargeVarTypes", "true")
-        .config("spark.driver.memory", os.environ.get("CARASPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.daemon.module", "caraspark.workerd")

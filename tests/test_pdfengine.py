@@ -13,9 +13,9 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from caraspark.pdfengine import process_document
-from caraspark.pdfengine.lexer import Lexer
+from caraspark.pdfengine.lexer import KIND_NAMES, tokens
 from caraspark.pdfengine.model import Name, Real, Ref, canonical_json, from_canonical, to_canonical
-from caraspark.pdfengine.parser import TokenStream, parse_object
+from caraspark.pdfengine.parser import parse_object
 from caraspark.pdfengine.filters import _run_length, decode_stream
 from caraspark.synth import HTML_RECIPES, PDF_RECIPES
 from oracle import oracle_extract
@@ -104,14 +104,14 @@ def test_valid_docs_are_valid():
 # --- layer 1: unit ----------------------------------------------------------
 
 
-def _lex_all(data: bytes):
-    lx = Lexer(data)
-    out = []
-    while True:
-        t = lx.next_token()
-        if t[0] == "eof":
-            return out, lx.errors
-        out.append(t)
+def _lex_all(data: bytes, strict: bool = False):
+    """Every token as (kind name, value, start), plus the lex errors."""
+    errors: list = []
+    out = [
+        (KIND_NAMES[kind], v, start)
+        for kind, v, start, _ in tokens(data, strict=strict, errors=errors)
+    ]
+    return out, errors
 
 
 def test_lexer_tokens():
@@ -141,14 +141,156 @@ def test_lexer_int_overflow():
 
 def test_parse_nested():
     errors = []
-    ts = TokenStream(Lexer(b"<< /A [1 2 (x)] /B << /C 3 0 R >> /D null >>"))
-    obj = parse_object(ts, errors)
+    obj, _ = parse_object(b"<< /A [1 2 (x)] /B << /C 3 0 R >> /D null >>", 0, errors)
     assert obj == {
         "A": [1, 2, b"x"],
         "B": {"C": Ref(3, 0)},
         "D": None,
     }
     assert not errors
+
+
+def test_lexer_nested_and_escaped_strings_fold_eols():
+    toks, errs = _lex_all(b"(a(b)c) (x\\)y) (l1\rl2\r\nl3\nl4) (p\\\r\nq)")
+    assert [t[1] for t in toks] == [b"a(b)c", b"x)y", b"l1\nl2\nl3\nl4", b"pq"]
+    assert [t[0] for t in toks] == ["str"] * 4
+    assert [t[2] for t in toks] == [0, 8, 15, 30]
+    assert not errs
+
+
+def test_lexer_odd_hex_with_whitespace_is_strict_only_error():
+    for data in (b"<48 6\n>", b"<486>"):
+        toks, errs = _lex_all(data, strict=True)
+        assert toks == [("hexstr", b"\x48\x60", 0)]
+        assert [(e.code, e.pos) for e in errs] == [("lex.hexstring_odd", 0)]
+        assert _lex_all(data)[1] == []
+    toks, errs = _lex_all(b"<4z8>")
+    assert toks == [("hexstr", b"\x48", 0)]
+    assert [(e.code, e.pos) for e in errs] == [("lex.hexstring_bad_char", 2)]
+
+
+def test_lexer_stray_paren_and_gt_are_keywords():
+    toks, errs = _lex_all(b") > >>")
+    assert toks == [("kw", b")", 0), ("kw", b">", 2), (">>", None, 4)]
+    assert [(e.code, e.pos) for e in errs] == [
+        ("lex.unbalanced_paren", 0),
+        ("lex.stray_gt", 2),
+    ]
+
+
+def test_int_int_r_split_by_comments():
+    obj, end = parse_object(b"[1 % one\n0 %zero\n R 7]", 0, [])
+    assert obj == [Ref(1, 0), 7]
+    assert end == 22
+
+
+def test_name_hex_escapes():
+    toks, errs = _lex_all(b"/A#42C /Sp#20ace /Bad#zz /End#")
+    assert [t[1] for t in toks] == ["ABC", "Sp ace", "Bad#zz", "End#"]
+    # a bad escape is kept literally; a final '#' is no escape at all
+    assert [(e.code, e.pos) for e in errs] == [("lex.name_bad_escape", 21)]
+
+
+def test_object_ends_at_its_endobj_not_at_the_lookahead():
+    """``int int R`` lookahead must neither extend the object past
+    ``endobj`` nor record lex errors for bytes outside it."""
+    from caraspark.pdfengine.parser import parse_indirect_object
+
+    errors = []
+    num, gen, body, end = parse_indirect_object(b"1 0 obj 5 endobj\n)junk", 0, errors)
+    assert (num, gen, body, end) == (1, 0, 5, 16)
+    assert errors == []
+
+
+@pytest.mark.parametrize("length_last", [True, False])
+def test_integer_length_object_is_no_overlap(length_last):
+    """A stream whose /Length is an indirect integer object: valid and
+    strict, whether that object comes last or before another object."""
+    from caraspark.synth import _assemble, _obj
+
+    content = b"BT (Hello World) Tj ET"
+    length_num, stream_num = (5, 4) if length_last else (4, 5)
+    bodies = {
+        1: _obj(1, b"<< /Type /Catalog /Pages 2 0 R >>"),
+        2: _obj(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>"),
+        3: _obj(
+            3,
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            b"/Contents %d 0 R >>" % stream_num,
+        ),
+        stream_num: b"%d 0 obj\n<< /Length %d 0 R >>\nstream\n%s\nendstream\nendobj\n"
+        % (stream_num, length_num, content),
+        length_num: _obj(length_num, b"%d" % len(content)),
+    }
+    r = process_document(_assemble(bodies))
+    assert not any(e.code == "file.overlap" for e in r.errors), r.errors_as_rows()
+    assert r.valid and r.strict, r.errors_as_rows()
+    assert r.text == b"Hello World"
+
+
+def test_missing_endobj_lexes_only_to_the_next_header(monkeypatch):
+    """Tokenizing stops at the first keyword the body grammar cannot
+    consume: an object without ``endobj`` reads up to the next header,
+    not through the 10^4 objects after it."""
+    from caraspark.pdfengine import lexer
+    from caraspark.pdfengine.parser import parse_indirect_object
+
+    class CountingRegex:
+        def __init__(self, rx):
+            self.rx, self.n = rx, 0
+
+        def match(self, *args):
+            self.n += 1
+            return self.rx.match(*args)
+
+    data = b"1 0 obj << /A 1 >>\n" + b"".join(
+        b"%d 0 obj << /B %d >> endobj\n" % (k, k) for k in range(2, 10_002)
+    )
+    counting = CountingRegex(lexer.TOKEN_RE)
+    monkeypatch.setattr(lexer, "TOKEN_RE", counting)
+    errors = []
+    num, gen, body, end = parse_indirect_object(data, 0, errors)
+    assert (num, gen, body) == (1, 0, {"A": 1})
+    assert end == data.index(b"2 0 obj")
+    assert [e.code for e in errors] == ["obj.missing_endobj"]
+    assert counting.n <= 10
+
+
+_INLINE_IMAGE_CONTENT = (
+    b"BT (before) Tj ET\n"
+    b"BI /W 4 /H 1 /BPC 8 /CS /G ID \x01(Tj) Tj)EIx EI\n"
+    b"BT (after) Tj ET"
+)
+
+
+def test_inline_image_bytes_skipped_by_text_machine():
+    from caraspark.pdfengine.textextract import extract_page_text
+    from oracle.text_oracle import _page_text
+
+    text = extract_page_text(_INLINE_IMAGE_CONTENT, [])
+    assert text == "before\nafter"
+    assert text == _page_text(_INLINE_IMAGE_CONTENT)
+
+
+def test_inline_image_bytes_skipped_by_op_histogram():
+    from caraspark.pdfengine.document import load_document
+    from caraspark.pdfengine.textextract import content_op_histogram
+    from caraspark.synth import _assemble, _base_objects
+
+    doc = load_document(_assemble(_base_objects(_INLINE_IMAGE_CONTENT)))
+    hist = {row["op"]: row["n"] for row in content_op_histogram(doc)}
+    assert hist == {"BT": 2, "ET": 2, "Tj": 2, "BI": 1, "ID": 1, "EI": 1}
+
+
+def test_real_tj_kern_is_a_space():
+    """A real-valued TJ kern past the threshold opens a space like an
+    integer one (SPEC: "a numeric kern element")."""
+    from caraspark.pdfengine.textextract import extract_page_text
+    from oracle.text_oracle import _page_text
+
+    content = b"BT [(a) -250.5 (b) -250 (c) -.5 (d)] TJ ET"
+    assert extract_page_text(content, []) == "a b cd"
+    assert _page_text(content) == "a b cd"
 
 
 def test_canonical_roundtrip():
@@ -428,12 +570,32 @@ def test_legacy_u_validation_still_accepts_fixtures():
 # --- differential property: engine vs oracle on random content streams -----
 
 
+# a show string as (serialization, bytes): octal-escaped (any bytes), a
+# plain literal (no paren, backslash or EOL inside) or a hex string
+_show_strategy = st.one_of(
+    st.tuples(st.just("octal"), st.binary(max_size=8)),
+    st.tuples(
+        st.just("literal"),
+        st.binary(max_size=8).map(lambda b: b.translate(None, b"()\\\r\n")),
+    ),
+    st.tuples(st.just("hex"), st.binary(max_size=8)),
+)
+# a TJ kern lexeme: an integer, or a real in PDF's forms (-250.5 -.5 250.)
+_kern_strategy = st.one_of(
+    st.integers(-500, 100).map(str),
+    st.tuples(st.integers(-500, 100), st.integers(0, 9)).map(
+        lambda t: f"{t[0]}.{t[1]}"
+    ),
+    st.integers(0, 9).map(lambda d: f"-.{d}"),
+    st.integers(-500, 100).map(lambda k: f"{k}."),
+)
+
 _ops_strategy = st.lists(
     st.one_of(
-        st.tuples(st.just("Tj"), st.binary(max_size=12)),
-        st.tuples(st.just("'"), st.binary(max_size=8)),
+        st.tuples(st.just("Tj"), _show_strategy),
+        st.tuples(st.just("'"), _show_strategy),
         st.tuples(st.just("TJ"), st.lists(
-            st.one_of(st.binary(max_size=6), st.integers(-500, 100)),
+            st.one_of(_show_strategy, _kern_strategy),
             max_size=5,
         )),
         st.tuples(st.just("Td"), st.tuples(st.integers(-5, 5), st.integers(-5, 5))),
@@ -445,9 +607,13 @@ _ops_strategy = st.lists(
 )
 
 
-def _ser_str(b: bytes) -> bytes:
-    # serialize via octal escapes — valid for any byte content
-    return b"(" + "".join(f"\\{c:03o}" for c in b).encode() + b")"
+def _ser_str(show) -> bytes:
+    form, b = show
+    if form == "octal":  # valid for any byte content
+        return b"(" + "".join(f"\\{c:03o}" for c in b).encode() + b")"
+    if form == "literal":
+        return b"(" + b + b")"
+    return b"<" + b.hex().encode() + b">"
 
 
 @settings(max_examples=200, deadline=None)
@@ -464,8 +630,7 @@ def test_engine_and_oracle_agree_on_random_content_streams(ops):
             parts.append(_ser_str(arg) + b" " + op.encode())
         elif op == "TJ":
             el = b" ".join(
-                _ser_str(x) if isinstance(x, bytes) else str(x).encode()
-                for x in arg
+                x.encode() if isinstance(x, str) else _ser_str(x) for x in arg
             )
             parts.append(b"[" + el + b"] TJ")
         elif op == "Td":
@@ -510,8 +675,7 @@ def test_container_in_dict_key_position_is_taxonomy():
     cos.dict_key_not_name and never store a None key (hypothesis find:
     None keys later crashed sorted() in graph building)."""
     errors = []
-    ts = TokenStream(Lexer(b"<< [1 2] /X 1 >>"))
-    obj = parse_object(ts, errors)
+    obj, _ = parse_object(b"<< [1 2] /X 1 >>", 0, errors)
     assert None not in obj
     assert obj.get("X") == 1
     assert any(e.code == "cos.dict_key_not_name" for e in errors)
