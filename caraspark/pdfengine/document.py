@@ -15,7 +15,7 @@ from dataclasses import dataclass, field
 from caraspark.pdfengine.filters import decode_stream
 from caraspark.pdfengine.lexer import INT, next_token
 from caraspark.pdfengine.model import Name, PdfError, Ref, Stream
-from caraspark.pdfengine.parser import parse_indirect_object, parse_object
+from caraspark.pdfengine.parser import _UNEXPECTED, parse_indirect_object, parse_object
 from caraspark.pdfengine.xref import (
     XrefEntry,
     check_header,
@@ -295,6 +295,9 @@ def _explode_objstm(
         obj, _ = parse_object(payload, at, errs, strict=strict)
         # members are lexed relaxed: an odd hex-digit count is no error here
         errors.extend(e for e in errs if e.code != "lex.hexstring_odd")
+        if obj is _UNEXPECTED:  # a bare keyword where the member's value belongs
+            errors.append(PdfError("objstm.empty_member", obj=(onum, 0)))
+            continue
         if isinstance(obj, Stream):  # embedded objects may not be streams
             errors.append(PdfError("objstm.stream_inside", obj=(onum, 0)))
             continue
@@ -425,6 +428,50 @@ def _resolve(doc: Document, v):
     if isinstance(v, Ref):
         v = doc.objects.get((v.num, v.gen))
     return v.d if isinstance(v, Stream) else v
+
+
+def _pages(doc: Document) -> list[dict]:
+    """Page dicts in page-tree order: a /Kids DFS from the catalog's
+    /Pages, depth-capped and cycle-guarded by node identity, so a direct
+    (inline) kid counts too. ``textextract._page_order`` is another walk:
+    it follows only indirect kids and dedups by object key."""
+    cat = _resolve(doc, doc.trailer.get("Root"))
+    if not isinstance(cat, dict):
+        return []
+    pages: list = []
+    stack = [(_resolve(doc, cat.get("Pages")), 0)]
+    seen: set[int] = set()
+    while stack:
+        node, depth = stack.pop()
+        if not isinstance(node, dict) or depth > 64 or id(node) in seen:
+            continue
+        seen.add(id(node))
+        t = node.get("Type")
+        if isinstance(t, Name) and t.v == "Page":
+            pages.append(node)
+            continue
+        kids = _resolve(doc, node.get("Kids"))
+        if isinstance(kids, list):
+            for kid in reversed(kids):
+                stack.append((_resolve(doc, kid), depth + 1))
+    return pages
+
+
+def _name_tree_items(doc: Document, node, depth: int = 0):
+    """(key, value) pairs of a name tree [PDF17 §7.9.6] in tree order:
+    a node's /Names pairs, then its /Kids, depth-capped at 32. Pairs whose
+    key is not a string are skipped; values are yielded unresolved."""
+    if not isinstance(node, dict) or depth > 32:
+        return
+    arr = _resolve(doc, node.get("Names"))
+    if isinstance(arr, list):
+        for i in range(0, len(arr) - 1, 2):
+            if isinstance(arr[i], bytes):
+                yield arr[i], arr[i + 1]
+    kids = _resolve(doc, node.get("Kids"))
+    if isinstance(kids, list):
+        for kid in kids:
+            yield from _name_tree_items(doc, _resolve(doc, kid), depth + 1)
 
 
 def _check_outlines(doc: Document, root_key: tuple, errors: list) -> None:
@@ -617,38 +664,26 @@ def extract_attachments(doc: Document) -> list[dict]:
     if not isinstance(names, dict):
         return out
     tree = _resolve(doc, names.get("EmbeddedFiles"))
-
-    def walk(node, depth: int) -> None:
-        if not isinstance(node, dict) or depth > 32:
-            return
-        arr = _resolve(doc, node.get("Names"))
-        if isinstance(arr, list):
-            for i in range(0, len(arr) - 1, 2):
-                key, fs = arr[i], _resolve(doc, arr[i + 1])
-                if not isinstance(key, bytes) or not isinstance(fs, dict):
-                    continue
-                ef = _resolve(doc, fs.get("EF"))
-                if not isinstance(ef, dict):
-                    continue
-                stm = ef.get("F", ef.get("UF"))
-                if isinstance(stm, Ref):
-                    stm = doc.objects.get((stm.num, stm.gen))
-                if not isinstance(stm, Stream):
-                    continue
-                payload = stm.decoded
-                out.append(
-                    {
-                        "name": decode_pdf_string(key),
-                        "size": -1 if payload is None else len(payload),
-                        "payload": payload,
-                    }
-                )
-        kids = _resolve(doc, node.get("Kids"))
-        if isinstance(kids, list):
-            for kid in kids:
-                walk(_resolve(doc, kid), depth + 1)
-
-    walk(tree, 0)
+    for key, v in _name_tree_items(doc, tree):
+        fs = _resolve(doc, v)
+        if not isinstance(fs, dict):
+            continue
+        ef = _resolve(doc, fs.get("EF"))
+        if not isinstance(ef, dict):
+            continue
+        stm = ef.get("F", ef.get("UF"))
+        if isinstance(stm, Ref):
+            stm = doc.objects.get((stm.num, stm.gen))
+        if not isinstance(stm, Stream):
+            continue
+        payload = stm.decoded
+        out.append(
+            {
+                "name": decode_pdf_string(key),
+                "size": -1 if payload is None else len(payload),
+                "payload": payload,
+            }
+        )
     return out
 
 
@@ -660,24 +695,18 @@ def extract_fonts(doc: Document) -> list[dict]:
     Type0 font means CMap-mediated text). Rows: {"obj", "subtype",
     "base_font", "embedded"} — ``embedded`` is True when the font (or its
     descendant, for Type0) carries a descriptor with any /FontFile*."""
-    from caraspark.pdfengine.model import Name, Ref, Stream
     from caraspark.pdfengine.typecheck import check_types
 
-    def deref(v):
-        if isinstance(v, Ref):
-            v = doc.objects.get((v.num, v.gen))
-        return v.d if isinstance(v, Stream) else v
-
     def has_fontfile(font: dict) -> bool:
-        fd = deref(font.get("FontDescriptor"))
+        fd = _resolve(doc, font.get("FontDescriptor"))
         if isinstance(fd, dict) and any(
             k in fd for k in ("FontFile", "FontFile2", "FontFile3")
         ):
             return True
-        desc = deref(font.get("DescendantFonts"))
+        desc = _resolve(doc, font.get("DescendantFonts"))
         if isinstance(desc, list):
             for df in desc:
-                df = deref(df)
+                df = _resolve(doc, df)
                 if isinstance(df, dict) and has_fontfile(df):
                     return True
         return False
@@ -715,27 +744,21 @@ def extract_signatures(doc: Document, file_len: int) -> list[dict]:
     over a signed revision: legitimate in a counter-signature workflow,
     the classic signature-defeating content swap otherwise — pair with
     ``extract_revisions``' n_won to see WHAT the update touched."""
-    from caraspark.pdfengine.model import Name, Ref, Stream
     from caraspark.pdfengine.typecheck import check_types
-
-    def deref(v):
-        if isinstance(v, Ref):
-            v = doc.objects.get((v.num, v.gen))
-        return v.d if isinstance(v, Stream) else v
 
     tres = check_types(doc)
     rows: list[dict] = []
     for key in sorted(doc.objects):
         if tres.assignments.get(key) != "sig":
             continue
-        d = deref(doc.objects[key])
+        d = _resolve(doc, doc.objects[key])
         if not isinstance(d, dict):
             continue
-        br = deref(d.get("ByteRange"))
+        br = _resolve(doc, d.get("ByteRange"))
         ranges: list[tuple[int, int]] = []
         if isinstance(br, list):
             vals = [
-                v for v in (deref(x) for x in br) if isinstance(v, int)
+                v for v in (_resolve(doc, x) for x in br) if isinstance(v, int)
             ]
             ranges = list(zip(vals[0::2], vals[1::2]))
         filt = d.get("Filter")
@@ -1020,46 +1043,11 @@ def _iter_actions(doc: Document):
     names = _resolve(doc, cat.get("Names"))
     if isinstance(names, dict):
         tree = _resolve(doc, names.get("JavaScript"))
+        for key, v in _name_tree_items(doc, tree):
+            walk_action(f"Names:{decode_pdf_string(key)}", v, 0)
 
-        def walk_tree(node, depth: int) -> None:
-            if not isinstance(node, dict) or depth > 32:
-                return
-            arr = _resolve(doc, node.get("Names"))
-            if isinstance(arr, list):
-                for i in range(0, len(arr) - 1, 2):
-                    key = arr[i]
-                    if isinstance(key, bytes):
-                        walk_action(
-                            f"Names:{decode_pdf_string(key)}",
-                            arr[i + 1],
-                            0,
-                        )
-            kids = _resolve(doc, node.get("Kids"))
-            if isinstance(kids, list):
-                for kid in kids:
-                    walk_tree(_resolve(doc, kid), depth + 1)
-
-        walk_tree(tree, 0)
-
-    # page annotations, in page-tree order (same traversal the text
-    # extractor uses: /Kids DFS, cycle-guarded)
-    pages: list = []
-    stack = [(_resolve(doc, cat.get("Pages")), 0)]
-    seen_pages: set[int] = set()
-    while stack:
-        node, depth = stack.pop()
-        if not isinstance(node, dict) or depth > 64 or id(node) in seen_pages:
-            continue
-        seen_pages.add(id(node))
-        t = node.get("Type")
-        if isinstance(t, Name) and t.v == "Page":
-            pages.append(node)
-            continue
-        kids = _resolve(doc, node.get("Kids"))
-        if isinstance(kids, list):
-            for kid in reversed(kids):
-                stack.append((_resolve(doc, kid), depth + 1))
-    for pi, page in enumerate(pages):
+    # page annotations, in page-tree order
+    for pi, page in enumerate(_pages(doc)):
         annots = _resolve(doc, page.get("Annots"))
         if not isinstance(annots, list):
             continue
@@ -1075,10 +1063,10 @@ def _iter_actions(doc: Document):
     root = _resolve(doc, cat.get("Outlines"))
     if isinstance(root, dict):
         seen_items: set[int] = set()
-        stack2 = [(_resolve(doc, root.get("First")), 0)]
+        stack = [(_resolve(doc, root.get("First")), 0)]
         oi = 0
-        while stack2:
-            item, depth = stack2.pop()
+        while stack:
+            item, depth = stack.pop()
             if (
                 not isinstance(item, dict)
                 or depth > 64
@@ -1090,10 +1078,10 @@ def _iter_actions(doc: Document):
             oi += 1
             nxt = _resolve(doc, item.get("Next"))
             if isinstance(nxt, dict):
-                stack2.append((nxt, depth))
+                stack.append((nxt, depth))
             first = _resolve(doc, item.get("First"))
             if isinstance(first, dict):
-                stack2.append((first, depth + 1))
+                stack.append((first, depth + 1))
     return out
 
 
@@ -1198,62 +1186,6 @@ def extract_actions(doc: Document) -> list[dict]:
             }
         )
     return out
-    walk_action("OpenAction", cat.get("OpenAction"), 0)
-    walk_aa("AA", cat.get("AA"))
-
-    names = _resolve(doc, cat.get("Names"))
-    if isinstance(names, dict):
-        tree = _resolve(doc, names.get("JavaScript"))
-
-        def walk_tree(node, depth: int) -> None:
-            if not isinstance(node, dict) or depth > 32:
-                return
-            arr = _resolve(doc, node.get("Names"))
-            if isinstance(arr, list):
-                for i in range(0, len(arr) - 1, 2):
-                    key = arr[i]
-                    if isinstance(key, bytes):
-                        walk_action(
-                            f"Names:{decode_pdf_string(key)}",
-                            arr[i + 1],
-                            0,
-                        )
-            kids = _resolve(doc, node.get("Kids"))
-            if isinstance(kids, list):
-                for kid in kids:
-                    walk_tree(_resolve(doc, kid), depth + 1)
-
-        walk_tree(tree, 0)
-
-    # page annotations, in page-tree order (same traversal the text
-    # extractor uses: /Kids DFS, cycle-guarded)
-    pages: list = []
-    stack = [(_resolve(doc, cat.get("Pages")), 0)]
-    seen_pages: set[int] = set()
-    while stack:
-        node, depth = stack.pop()
-        if not isinstance(node, dict) or depth > 64 or id(node) in seen_pages:
-            continue
-        seen_pages.add(id(node))
-        t = node.get("Type")
-        if isinstance(t, Name) and t.v == "Page":
-            pages.append(node)
-            continue
-        kids = _resolve(doc, node.get("Kids"))
-        if isinstance(kids, list):
-            for kid in reversed(kids):
-                stack.append((_resolve(doc, kid), depth + 1))
-    for pi, page in enumerate(pages):
-        annots = _resolve(doc, page.get("Annots"))
-        if not isinstance(annots, list):
-            continue
-        for ai, av in enumerate(annots):
-            annot = _resolve(doc, av)
-            if not isinstance(annot, dict):
-                continue
-            walk_action(f"Annot:{pi}.{ai}:A", annot.get("A"), 0)
-            walk_aa(f"Annot:{pi}.{ai}:AA", annot.get("AA"))
-    return out
 
 
 # --- xref-free object scavenging (recovery parse) --------------------------
@@ -1349,29 +1281,10 @@ def extract_annotations(doc: Document) -> list[dict]:
     Rows: {"pos", "page_idx", "subtype", "has_action", "has_aa",
     "has_appearance"}; subtype None when /Subtype is missing or not a
     name (the typechecker flags it; the census still counts the row).
-    The page walk is the same cycle-guarded /Kids DFS the text extractor
-    and action census use, so a malformed page tree cannot loop it."""
-    cat = _resolve(doc, doc.trailer.get("Root"))
+    The page walk (``_pages``) is the cycle-guarded /Kids DFS the action
+    census uses, so a malformed page tree cannot loop it."""
     out: list[dict] = []
-    if not isinstance(cat, dict):
-        return out
-    pages: list = []
-    stack = [(_resolve(doc, cat.get("Pages")), 0)]
-    seen_pages: set[int] = set()
-    while stack:
-        node, depth = stack.pop()
-        if not isinstance(node, dict) or depth > 64 or id(node) in seen_pages:
-            continue
-        seen_pages.add(id(node))
-        t = node.get("Type")
-        if isinstance(t, Name) and t.v == "Page":
-            pages.append(node)
-            continue
-        kids = _resolve(doc, node.get("Kids"))
-        if isinstance(kids, list):
-            for kid in reversed(kids):
-                stack.append((_resolve(doc, kid), depth + 1))
-    for pi, page in enumerate(pages):
+    for pi, page in enumerate(_pages(doc)):
         annots = _resolve(doc, page.get("Annots"))
         if not isinstance(annots, list):
             continue

@@ -12,10 +12,24 @@ references, records per-object assignments, and reports
 
 The typedef table is data, not code: coverage grows by adding rows
 (caradoc's own strategy — its type corpus is ~2k LoC of definitions).
+Entries that many classes share are declared once, as ordered entry
+groups that a class spreads where they sit in its spec table: the
+annotation entries of PDF17 Table 164 (``_ANNOT_BASE``/``_ANNOT_COMMON``),
+the markup entries of Table 170 (``_MARKUP``) and the shading entries of
+Table 78 (``_SHADING_COMMON``).
+
+The engine checks a value against a type expression with one
+side-effect-free shape predicate, ``_fits``: it is the leaf check for
+primitives and constants, and it picks a union's alternative (the first
+that fits; its full check then runs). It reports nothing and follows no
+reference — a ``Ref`` fits a class, primitive or union and is checked
+when the worklist reaches its object — so a rejected alternative leaves
+no trace.
 """
 
 from __future__ import annotations
 
+from collections import deque
 from dataclasses import dataclass, field as dc_field
 
 from caraspark.pdfengine.model import Name, PdfError, Real, Ref, Stream
@@ -27,15 +41,24 @@ from caraspark.pdfengine.model import Name, PdfError, Real, Ref, Stream
 class Prim:
     kind: str  # bool int number string name null any dict array stream
 
+    def __str__(self):
+        return self.kind
+
 
 @dataclass(frozen=True, slots=True)
 class Exact:
     name: str  # a /Name constant, e.g. Exact("Catalog")
 
+    def __str__(self):
+        return f"/{self.name}"
+
 
 @dataclass(frozen=True, slots=True)
 class ExactInt:
     n: int  # an integer constant discriminator, e.g. /PatternType 1
+
+    def __str__(self):
+        return str(self.n)
 
 
 @dataclass(frozen=True, slots=True)
@@ -174,6 +197,54 @@ COLORSPACE = OneOf(
     )
 )
 
+# --- entry groups: runs of entries many classes declare alike. A class
+# spreads a group where the entries sit in its table (``{"Type": …,
+# **_ANNOT_COMMON, **_MARKUP, "BS": …}``), so its key order stays the
+# spec's: check_class checks entries in that order, which decides which
+# referrer assigns a shared object first and what a type.conflict says.
+
+# PDF17 Table 164: entries common to all annotation dictionaries. The
+# trap-network, printer's-mark, 3D and rich-media classes carry only the
+# head (_ANNOT_BASE); the generic class puts /A and /Dest before
+# /StructParent.
+_ANNOT_BASE = {
+    "Rect": Entry(RECT, required=True),
+    "Contents": Entry(STRING),
+    "P": Entry(DICT),
+    "NM": Entry(STRING),
+    "M": Entry(STRING),
+    "F": Entry(INT),
+    "AP": Entry(Class("appearance")),
+    "AS": Entry(NAME),
+}
+_ANNOT_COMMON = {
+    **_ANNOT_BASE,
+    "Border": Entry(ARRAY),
+    "C": Entry(ArrayOf(NUMBER)),
+    "StructParent": Entry(INT),
+}
+
+# PDF17 Table 170 (§12.5.6.2): entries common to markup annotations.
+_MARKUP = {
+    "T": Entry(STRING),
+    "Popup": Entry(Class("annot_popup")),
+    "CA": Entry(NUMBER),
+    "RC": Entry(OneOf((STRING, STREAM))),
+    "CreationDate": Entry(STRING),
+    "Subj": Entry(STRING),
+    "IRT": Entry(DICT),
+    "RT": Entry(NAME),
+    "IT": Entry(NAME),
+}
+
+# PDF17 Table 78 (§8.7.4.5.1): entries common to all shading dictionaries.
+_SHADING_COMMON = {
+    "ColorSpace": Entry(COLORSPACE, required=True),
+    "Background": Entry(ArrayOf(NUMBER)),
+    "BBox": Entry(RECT),
+    "AntiAlias": Entry(BOOL),
+}
+
 TYPEDEFS: dict[str, ClassDef] = {
     "catalog": ClassDef(
         {
@@ -301,14 +372,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(NAME, required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
+            **_ANNOT_BASE,
             "Border": Entry(ARRAY),
             "C": Entry(ArrayOf(NUMBER)),
             "A": Entry(ACTION),
@@ -474,17 +538,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("Link"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
+            **_ANNOT_COMMON,
             "A": Entry(ACTION),
             "Dest": Entry(OneOf((ARRAY, NAME, STRING))),
             "H": Entry(NAME),
@@ -497,17 +551,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("Text"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
+            **_ANNOT_COMMON,
             "Open": Entry(BOOL),
             "Name": Entry(NAME),
             "State": Entry(STRING),
@@ -520,17 +564,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("Widget"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
+            **_ANNOT_COMMON,
             "H": Entry(NAME),
             "MK": Entry(DICT),
             "A": Entry(ACTION),
@@ -555,17 +589,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("FreeText"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
+            **_ANNOT_COMMON,
             "DA": Entry(STRING, required=True),
             "Q": Entry(INT),
             "RC": Entry(OneOf((STRING, STREAM))),
@@ -585,27 +609,8 @@ TYPEDEFS: dict[str, ClassDef] = {
     "annot_line": ClassDef(
         {
             "Type": Entry(Exact("Annot")),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
-            # §12.5.6.2 markup-annotation common entries
-            "T": Entry(STRING),
-            "Popup": Entry(Class("annot_popup")),
-            "CA": Entry(NUMBER),
-            "RC": Entry(OneOf((STRING, STREAM))),
-            "CreationDate": Entry(STRING),
-            "Subj": Entry(STRING),
-            "IRT": Entry(DICT),
-            "RT": Entry(NAME),
-            "IT": Entry(NAME),
+            **_ANNOT_COMMON,
+            **_MARKUP,
             "BS": Entry(Class("border_style")),
             "Subtype": Entry(Exact("Line"), required=True),
             "L": Entry(ArrayOf(NUMBER), required=True),
@@ -623,27 +628,8 @@ TYPEDEFS: dict[str, ClassDef] = {
     "annot_geom": ClassDef(
         {
             "Type": Entry(Exact("Annot")),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
-            # §12.5.6.2 markup-annotation common entries
-            "T": Entry(STRING),
-            "Popup": Entry(Class("annot_popup")),
-            "CA": Entry(NUMBER),
-            "RC": Entry(OneOf((STRING, STREAM))),
-            "CreationDate": Entry(STRING),
-            "Subj": Entry(STRING),
-            "IRT": Entry(DICT),
-            "RT": Entry(NAME),
-            "IT": Entry(NAME),
+            **_ANNOT_COMMON,
+            **_MARKUP,
             "BS": Entry(Class("border_style")),
             # Square and Circle share every entry (§12.5.6.8)
             "Subtype": Entry(
@@ -657,27 +643,8 @@ TYPEDEFS: dict[str, ClassDef] = {
     "annot_textmarkup": ClassDef(
         {
             "Type": Entry(Exact("Annot")),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
-            # §12.5.6.2 markup-annotation common entries
-            "T": Entry(STRING),
-            "Popup": Entry(Class("annot_popup")),
-            "CA": Entry(NUMBER),
-            "RC": Entry(OneOf((STRING, STREAM))),
-            "CreationDate": Entry(STRING),
-            "Subj": Entry(STRING),
-            "IRT": Entry(DICT),
-            "RT": Entry(NAME),
-            "IT": Entry(NAME),
+            **_ANNOT_COMMON,
+            **_MARKUP,
             "BS": Entry(Class("border_style")),
             # Highlight/Underline/Squiggly/StrikeOut (§12.5.6.10)
             "Subtype": Entry(
@@ -693,27 +660,8 @@ TYPEDEFS: dict[str, ClassDef] = {
     "annot_ink": ClassDef(
         {
             "Type": Entry(Exact("Annot")),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
-            # §12.5.6.2 markup-annotation common entries
-            "T": Entry(STRING),
-            "Popup": Entry(Class("annot_popup")),
-            "CA": Entry(NUMBER),
-            "RC": Entry(OneOf((STRING, STREAM))),
-            "CreationDate": Entry(STRING),
-            "Subj": Entry(STRING),
-            "IRT": Entry(DICT),
-            "RT": Entry(NAME),
-            "IT": Entry(NAME),
+            **_ANNOT_COMMON,
+            **_MARKUP,
             "BS": Entry(Class("border_style")),
             "Subtype": Entry(Exact("Ink"), required=True),
             "InkList": Entry(ArrayOf(ArrayOf(NUMBER)), required=True),
@@ -722,27 +670,8 @@ TYPEDEFS: dict[str, ClassDef] = {
     "annot_poly": ClassDef(
         {
             "Type": Entry(Exact("Annot")),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
-            # §12.5.6.2 markup-annotation common entries
-            "T": Entry(STRING),
-            "Popup": Entry(Class("annot_popup")),
-            "CA": Entry(NUMBER),
-            "RC": Entry(OneOf((STRING, STREAM))),
-            "CreationDate": Entry(STRING),
-            "Subj": Entry(STRING),
-            "IRT": Entry(DICT),
-            "RT": Entry(NAME),
-            "IT": Entry(NAME),
+            **_ANNOT_COMMON,
+            **_MARKUP,
             "BS": Entry(Class("border_style")),
             # Polygon and PolyLine share /Vertices (§12.5.6.9)
             "Subtype": Entry(
@@ -758,27 +687,8 @@ TYPEDEFS: dict[str, ClassDef] = {
     "annot_stamp": ClassDef(
         {
             "Type": Entry(Exact("Annot")),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
-            # §12.5.6.2 markup-annotation common entries
-            "T": Entry(STRING),
-            "Popup": Entry(Class("annot_popup")),
-            "CA": Entry(NUMBER),
-            "RC": Entry(OneOf((STRING, STREAM))),
-            "CreationDate": Entry(STRING),
-            "Subj": Entry(STRING),
-            "IRT": Entry(DICT),
-            "RT": Entry(NAME),
-            "IT": Entry(NAME),
+            **_ANNOT_COMMON,
+            **_MARKUP,
             "BS": Entry(Class("border_style")),
             "Subtype": Entry(Exact("Stamp"), required=True),
             "Name": Entry(NAME),
@@ -787,27 +697,8 @@ TYPEDEFS: dict[str, ClassDef] = {
     "annot_fileattachment": ClassDef(
         {
             "Type": Entry(Exact("Annot")),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
-            # §12.5.6.2 markup-annotation common entries
-            "T": Entry(STRING),
-            "Popup": Entry(Class("annot_popup")),
-            "CA": Entry(NUMBER),
-            "RC": Entry(OneOf((STRING, STREAM))),
-            "CreationDate": Entry(STRING),
-            "Subj": Entry(STRING),
-            "IRT": Entry(DICT),
-            "RT": Entry(NAME),
-            "IT": Entry(NAME),
+            **_ANNOT_COMMON,
+            **_MARKUP,
             "BS": Entry(Class("border_style")),
             "Subtype": Entry(Exact("FileAttachment"), required=True),
             "FS": Entry(Class("filespec"), required=True),
@@ -817,27 +708,8 @@ TYPEDEFS: dict[str, ClassDef] = {
     "annot_sound": ClassDef(
         {
             "Type": Entry(Exact("Annot")),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
-            # §12.5.6.2 markup-annotation common entries
-            "T": Entry(STRING),
-            "Popup": Entry(Class("annot_popup")),
-            "CA": Entry(NUMBER),
-            "RC": Entry(OneOf((STRING, STREAM))),
-            "CreationDate": Entry(STRING),
-            "Subj": Entry(STRING),
-            "IRT": Entry(DICT),
-            "RT": Entry(NAME),
-            "IT": Entry(NAME),
+            **_ANNOT_COMMON,
+            **_MARKUP,
             "BS": Entry(Class("border_style")),
             "Subtype": Entry(Exact("Sound"), required=True),
             "Sound": Entry(Class("sound_stream"), required=True),
@@ -848,17 +720,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("Popup"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
+            **_ANNOT_COMMON,
             "Parent": Entry(DICT),
             "Open": Entry(BOOL),
         }
@@ -868,17 +730,7 @@ TYPEDEFS: dict[str, ClassDef] = {
             # §12.5.6.18: region of a page for playing media renditions
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("Screen"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
+            **_ANNOT_COMMON,
             "T": Entry(STRING),
             "MK": Entry(DICT),
             "A": Entry(ACTION),
@@ -890,17 +742,7 @@ TYPEDEFS: dict[str, ClassDef] = {
             # §13.4 movie annotation (deprecated in 2.0, present in crawls)
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("Movie"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
+            **_ANNOT_COMMON,
             "T": Entry(STRING),
             "Movie": Entry(Class("movie"), required=True),
             "A": Entry(OneOf((BOOL, Class("movie_activation")))),
@@ -1065,10 +907,7 @@ TYPEDEFS: dict[str, ClassDef] = {
     "shading_fnbased": ClassDef(
         {
             "ShadingType": Entry(ExactInt(1), required=True),
-            "ColorSpace": Entry(COLORSPACE, required=True),
-            "Background": Entry(ArrayOf(NUMBER)),
-            "BBox": Entry(RECT),
-            "AntiAlias": Entry(BOOL),
+            **_SHADING_COMMON,
             "Domain": Entry(ArrayOf(NUMBER)),
             "Matrix": Entry(ArrayOf(NUMBER)),
             "Function": Entry(_FUNC_OR_ARRAY, required=True),
@@ -1077,10 +916,7 @@ TYPEDEFS: dict[str, ClassDef] = {
     "shading_axial": ClassDef(
         {
             "ShadingType": Entry(ExactInt(2), required=True),
-            "ColorSpace": Entry(COLORSPACE, required=True),
-            "Background": Entry(ArrayOf(NUMBER)),
-            "BBox": Entry(RECT),
-            "AntiAlias": Entry(BOOL),
+            **_SHADING_COMMON,
             "Domain": Entry(ArrayOf(NUMBER)),
             "Coords": Entry(
                 Tuple((NUMBER, NUMBER, NUMBER, NUMBER)), required=True
@@ -1092,10 +928,7 @@ TYPEDEFS: dict[str, ClassDef] = {
     "shading_radial": ClassDef(
         {
             "ShadingType": Entry(ExactInt(3), required=True),
-            "ColorSpace": Entry(COLORSPACE, required=True),
-            "Background": Entry(ArrayOf(NUMBER)),
-            "BBox": Entry(RECT),
-            "AntiAlias": Entry(BOOL),
+            **_SHADING_COMMON,
             "Domain": Entry(ArrayOf(NUMBER)),
             "Coords": Entry(
                 Tuple((NUMBER, NUMBER, NUMBER, NUMBER, NUMBER, NUMBER)),
@@ -1108,10 +941,7 @@ TYPEDEFS: dict[str, ClassDef] = {
     "shading_lattice": ClassDef(
         {
             "ShadingType": Entry(ExactInt(5), required=True),
-            "ColorSpace": Entry(COLORSPACE, required=True),
-            "Background": Entry(ArrayOf(NUMBER)),
-            "BBox": Entry(RECT),
-            "AntiAlias": Entry(BOOL),
+            **_SHADING_COMMON,
             "BitsPerCoordinate": Entry(INT, required=True),
             "BitsPerComponent": Entry(INT, required=True),
             "VerticesPerRow": Entry(INT, required=True),
@@ -1126,10 +956,7 @@ TYPEDEFS: dict[str, ClassDef] = {
                 OneOf((ExactInt(4), ExactInt(6), ExactInt(7))),
                 required=True,
             ),
-            "ColorSpace": Entry(COLORSPACE, required=True),
-            "Background": Entry(ArrayOf(NUMBER)),
-            "BBox": Entry(RECT),
-            "AntiAlias": Entry(BOOL),
+            **_SHADING_COMMON,
             "BitsPerCoordinate": Entry(INT, required=True),
             "BitsPerComponent": Entry(INT, required=True),
             "BitsPerFlag": Entry(INT, required=True),
@@ -1973,26 +1800,8 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("Redact"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
-            "T": Entry(STRING),
-            "Popup": Entry(Class("annot_popup")),
-            "CA": Entry(NUMBER),
-            "RC": Entry(OneOf((STRING, STREAM))),
-            "CreationDate": Entry(STRING),
-            "Subj": Entry(STRING),
-            "IRT": Entry(DICT),
-            "RT": Entry(NAME),
-            "IT": Entry(NAME),
+            **_ANNOT_COMMON,
+            **_MARKUP,
             "QuadPoints": Entry(ArrayOf(NUMBER)),
             "IC": Entry(ArrayOf(NUMBER)),
             "RO": Entry(Class("xobject_form")),
@@ -2006,26 +1815,8 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("Caret"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
-            "T": Entry(STRING),
-            "Popup": Entry(Class("annot_popup")),
-            "CA": Entry(NUMBER),
-            "RC": Entry(OneOf((STRING, STREAM))),
-            "CreationDate": Entry(STRING),
-            "Subj": Entry(STRING),
-            "IRT": Entry(DICT),
-            "RT": Entry(NAME),
-            "IT": Entry(NAME),
+            **_ANNOT_COMMON,
+            **_MARKUP,
             "RD": Entry(ArrayOf(NUMBER)),
             "Sy": Entry(NAME),
         }
@@ -2034,17 +1825,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("Watermark"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
-            "Border": Entry(ARRAY),
-            "C": Entry(ArrayOf(NUMBER)),
-            "StructParent": Entry(INT),
+            **_ANNOT_COMMON,
             "FixedPrint": Entry(Class("fixed_print")),
         }
     ),
@@ -2213,14 +1994,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("TrapNet"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
+            **_ANNOT_BASE,
             "LastModified": Entry(STRING),
             "Version": Entry(ARRAY),
             "AnnotStates": Entry(ArrayOf(NAME)),
@@ -2231,14 +2005,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("PrinterMark"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
+            **_ANNOT_BASE,
             "MN": Entry(NAME),
         }
     ),
@@ -2247,14 +2014,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("3D"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
+            **_ANNOT_BASE,
             "3DD": Entry(
                 OneOf((Class("threed_stream"), Class("threed_ref"))),
                 required=True,
@@ -2270,14 +2030,7 @@ TYPEDEFS: dict[str, ClassDef] = {
         {
             "Type": Entry(Exact("Annot")),
             "Subtype": Entry(Exact("RichMedia"), required=True),
-            "Rect": Entry(RECT, required=True),
-            "Contents": Entry(STRING),
-            "P": Entry(DICT),
-            "NM": Entry(STRING),
-            "M": Entry(STRING),
-            "F": Entry(INT),
-            "AP": Entry(Class("appearance")),
-            "AS": Entry(NAME),
+            **_ANNOT_BASE,
             "RichMediaContent": Entry(
                 Class("richmedia_content"), required=True
             ),
@@ -3015,7 +2768,7 @@ class TypeResult:
     strict_ok: bool = True
 
 
-def _matches_prim(v, kind: str, doc) -> bool:
+def _matches_prim(v, kind: str) -> bool:
     if kind == "any":
         return True
     if kind == "bool":
@@ -3039,10 +2792,83 @@ def _matches_prim(v, kind: str, doc) -> bool:
     return False
 
 
+def _constant_alts(t) -> tuple:
+    """The constants a discriminating entry type allows: one for an
+    ``Exact``/``ExactInt``, the set of a union of constants (mesh
+    /ShadingType in {4,6,7}), none for any other type."""
+    if isinstance(t, (Exact, ExactInt)):
+        return (t,)
+    if isinstance(t, OneOf) and t.alts and all(
+        isinstance(a, (Exact, ExactInt)) for a in t.alts
+    ):
+        return t.alts
+    return ()
+
+
+# per class, its constant entries (/Type, /Subtype, /PatternType, …) as
+# (key, required, allowed constants): how a union of classes (image vs
+# form xobject, annotation families, pattern kinds) picks its alternative
+# without backtracking
+_DISCRIMINATORS = {
+    name: tuple(
+        (k, e.required, alts)
+        for k, e in cd.entries.items()
+        if (alts := _constant_alts(e.t))
+    )
+    for name, cd in TYPEDEFS.items()
+}
+
+
+def _fits(v, texpr) -> bool:
+    """Does ``v`` have the shape of ``texpr``? Reports nothing and
+    follows no reference: a ``Ref`` fits a class, primitive or union (the
+    referent is checked when the worklist reaches it) and nothing else.
+    ``check_value`` uses it for leaf types and to pick a union's
+    alternative, whose full check then runs."""
+    if isinstance(v, Ref):
+        return isinstance(texpr, (Class, Prim, OneOf))
+    if isinstance(texpr, Prim):
+        return _matches_prim(v, texpr.kind)
+    if isinstance(texpr, Exact):
+        return isinstance(v, Name) and v.v == texpr.name
+    if isinstance(texpr, ExactInt):
+        return isinstance(v, int) and not isinstance(v, bool) and v == texpr.n
+    if isinstance(texpr, ArrayOf):
+        return isinstance(v, list) and all(_fits(x, texpr.elem) for x in v)
+    if isinstance(texpr, Tuple):
+        return (
+            isinstance(v, list)
+            and len(v) == len(texpr.elems)
+            and all(map(_fits, v, texpr.elems))
+        )
+    if isinstance(texpr, OneOf):
+        return any(_fits(v, a) for a in texpr.alts)
+    body = v.d if isinstance(v, Stream) else v
+    if isinstance(texpr, DictOf):
+        return isinstance(body, dict)
+    if not isinstance(texpr, Class) or not isinstance(body, dict):
+        return False
+    cd = TYPEDEFS[texpr.name]
+    if cd.is_stream and not isinstance(v, Stream):
+        return False
+    # a closed class declares its entries exhaustively, so an undeclared
+    # key rules the alternative out — this lets unions of same-shape
+    # param dicts (signature transform params) discriminate by key set
+    # when no constant entry distinguishes them
+    if cd.closed and any(k not in cd.entries for k in body):
+        return False
+    for k, required, alts in _DISCRIMINATORS[texpr.name]:
+        if required or k in body:
+            got = body.get(k)
+            if not any(_fits(got, a) for a in alts):
+                return False
+    return True
+
+
 def check_types(doc, strict: bool = False) -> TypeResult:
     """Worklist BFS from the trailer; see module docstring."""
     res = TypeResult()
-    worklist: list[tuple[tuple[int, int], object, str]] = []
+    worklist: deque[tuple[tuple[int, int], object, str]] = deque()
     # type expressions are frozen dataclasses: hashable, equal iff same shape
     enqueued: set[tuple[tuple[int, int], object]] = set()
 
@@ -3060,21 +2886,9 @@ def check_types(doc, strict: bool = False) -> TypeResult:
         if isinstance(v, Ref):
             enqueue((v.num, v.gen), texpr, path)
             return
-        if isinstance(texpr, Prim):
-            if not _matches_prim(v, texpr.kind, doc):
-                err("type.mismatch", path, objkey, f"expected {texpr.kind}")
-            return
-        if isinstance(texpr, Exact):
-            if not (isinstance(v, Name) and v.v == texpr.name):
-                err("type.mismatch", path, objkey, f"expected /{texpr.name}")
-            return
-        if isinstance(texpr, ExactInt):
-            if not (
-                isinstance(v, int)
-                and not isinstance(v, bool)
-                and v == texpr.n
-            ):
-                err("type.mismatch", path, objkey, f"expected {texpr.n}")
+        if isinstance(texpr, (Prim, Exact, ExactInt)):
+            if not _fits(v, texpr):
+                err("type.mismatch", path, objkey, f"expected {texpr}")
             return
         if isinstance(texpr, ArrayOf):
             if not isinstance(v, list):
@@ -3099,11 +2913,10 @@ def check_types(doc, strict: bool = False) -> TypeResult:
                 check_value(x, t, f"{path}[{i}]", objkey)
             return
         if isinstance(texpr, OneOf):
-            # structural probe picks the alternative; then a full check of
+            # the shape probe picks the alternative; then a full check of
             # the winner runs (class entries, assignments, nested types)
             for alt in texpr.alts:
-                sub = TypeResult()
-                if _try_match(v, alt, doc, sub, enqueue, path, objkey):
+                if _fits(v, alt):
                     check_value(v, alt, path, objkey)
                     return
             err("type.mismatch", path, objkey, "no union alternative matched")
@@ -3166,7 +2979,7 @@ def check_types(doc, strict: bool = False) -> TypeResult:
         guard = 0
         while worklist and guard < 1_000_000:
             guard += 1
-            key, texpr, path = worklist.pop(0)
+            key, texpr, path = worklist.popleft()
             obj = doc.objects.get(key)
             if obj is None:
                 # dangling refs are already reported by the graph pass
@@ -3221,89 +3034,3 @@ def _class_compatible(a: str, b: str) -> bool:
     return (a, b) in _COMPATIBLE or (
         a.startswith("annot") and b.startswith("annot")
     )
-
-
-def _try_match(v, texpr, doc, sub, enqueue, path, objkey) -> bool:
-    """Non-reporting structural probe used by OneOf."""
-    if isinstance(v, Ref):
-        # can't see through without committing; accept and defer — classes
-        # and prims enqueue directly, a nested union enqueues whole and is
-        # re-probed at drain time against the resolved object (the same
-        # deferral check_value applies to refs)
-        if isinstance(texpr, (Class, Prim, OneOf)):
-            enqueue((v.num, v.gen), texpr, path)
-            return True
-        return False
-    if isinstance(texpr, Prim):
-        return _matches_prim(v, texpr.kind, doc)
-    if isinstance(texpr, Exact):
-        return isinstance(v, Name) and v.v == texpr.name
-    if isinstance(texpr, ExactInt):
-        return (
-            isinstance(v, int) and not isinstance(v, bool) and v == texpr.n
-        )
-    if isinstance(texpr, ArrayOf):
-        if not isinstance(v, list):
-            return False
-        return all(
-            _try_match(x, texpr.elem, doc, sub, enqueue, f"{path}[{i}]", objkey)
-            for i, x in enumerate(v)
-        )
-    if isinstance(texpr, Tuple):
-        return (
-            isinstance(v, list)
-            and len(v) == len(texpr.elems)
-            and all(
-                _try_match(x, t, doc, sub, enqueue, f"{path}[{i}]", objkey)
-                for i, (x, t) in enumerate(zip(v, texpr.elems))
-            )
-        )
-    if isinstance(texpr, OneOf):
-        return any(
-            _try_match(v, a, doc, sub, enqueue, path, objkey) for a in texpr.alts
-        )
-    if isinstance(texpr, DictOf):
-        body = v.d if isinstance(v, Stream) else v
-        return isinstance(body, dict)
-    if isinstance(texpr, Class):
-        body = v.d if isinstance(v, Stream) else v
-        if not isinstance(body, dict):
-            return False
-        cd = TYPEDEFS[texpr.name]
-        if cd.is_stream and not isinstance(v, Stream):
-            return False
-        # a closed class declares its entries exhaustively, so an
-        # undeclared key rules the alternative out — this lets unions of
-        # same-shape param dicts (signature transform params) discriminate
-        # by key-set when no constant entry distinguishes them
-        if cd.closed and any(k not in cd.entries for k in body):
-            return False
-        # discriminate on declared constant entries (/Type, /Subtype,
-        # /PatternType, …) — this is how unions of stream classes (image
-        # vs form xobject), annotation families, and pattern kinds resolve
-        # without backtracking
-        def _const_ok(got, t) -> bool:
-            if isinstance(t, Exact):
-                return isinstance(got, Name) and got.v == t.name
-            return (
-                isinstance(got, int)
-                and not isinstance(got, bool)
-                and got == t.n
-            )
-
-        for disc, want in cd.entries.items():
-            if isinstance(want.t, (Exact, ExactInt)):
-                if want.required or disc in body:
-                    if not _const_ok(body.get(disc), want.t):
-                        return False
-            elif isinstance(want.t, OneOf) and want.t.alts and all(
-                isinstance(a, (Exact, ExactInt)) for a in want.t.alts
-            ):
-                # a constant-set discriminator (e.g. mesh /ShadingType in
-                # {4,6,7}) resolves the union exactly like a single constant
-                if want.required or disc in body:
-                    got = body.get(disc)
-                    if not any(_const_ok(got, a) for a in want.t.alts):
-                        return False
-        return True
-    return False

@@ -2584,3 +2584,25 @@ def test_html_raw_bytes_total_and_identical(blob):
     from oracle.text_oracle import oracle_extract_full
 
     assert extract_html(blob) == oracle_extract_full(blob)
+
+
+def test_objstm_member_that_is_a_bare_keyword_stores_no_object():
+    """An object-stream member that parses to nothing (here /Pages is
+    overwritten in place by ``endobj``) is an ``objstm.empty_member``
+    error and no object: the catalog's /Pages then dangles, and every
+    entry point that serialises objects still returns."""
+    from caraspark.sidetables import CLEANUP, OBJECTS, REPAIR
+    from caraspark.synth import _xref_stream_pdf
+
+    pages = b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>"
+    blob = _xref_stream_pdf(objstm=True)
+    assert blob.count(pages) == 1
+    blob = blob.replace(pages, b"endobj".ljust(len(pages)))
+    r = process_document(blob, want_objects=True)
+    errs = {(e.code, e.obj) for e in r.errors}
+    assert ("objstm.empty_member", (2, 0)) in errs
+    assert ("graph.dangling_ref", (2, 0)) in errs
+    assert not r.valid and "2.0" not in r.objects_json
+    assert [row["num"] for row in OBJECTS.rows("u", blob)] == [1, 3, 4, 5, 6]
+    assert len(CLEANUP.rows("u", blob)) == 1
+    assert REPAIR.rows("u", blob)[0]["repaired_valid"] is False

@@ -3259,3 +3259,41 @@ def test_oc_usage_application_and_xfa_typed():
         {},
     )
     assert not process_document(bad2).strict
+
+
+# --- the union probe and the table itself ----------------------------------
+
+
+def test_rejected_union_alternative_types_no_reference():
+    """Picking a union alternative has no side effect: a reference inside
+    an alternative that is then rejected is not checked against it. Here
+    the /Indexed tuple fails on /x (not an int), so the content stream 4 0
+    R it holds as the base space is typed by nothing but the page."""
+    blob = _doc(
+        {},
+        page_extra=b" /Resources << /ColorSpace << /CS0 [/Indexed 4 0 R /x <00>] >> >>",
+    )
+    r = process_document(blob)
+    mismatches = [e for e in r.errors_as_rows() if e["code"] == "type.mismatch"]
+    assert [e["path"].rsplit("/", 1)[-1] for e in mismatches] == ["CS0"], mismatches
+    assert mismatches[0]["msg"] == "no union alternative matched"
+
+
+# sha256 of repr([(name, list(cd.entries.items()), cd.closed, cd.is_stream,
+# cd.rest)]) over TYPEDEFS in table order: class order, each class's entry
+# order and types, and its closed/is_stream/rest flags. check_class checks
+# entries in order, so a reordering can move assignments and messages.
+_TYPEDEFS_SHA256 = "b26cd4fd9cf08331f749f537a79d9a07da1544a1209cdfb99c815f43427f1d41"
+
+
+def test_typedefs_table_is_pinned():
+    import hashlib
+
+    from caraspark.pdfengine.typecheck import TYPEDEFS
+
+    rows = [
+        (name, list(cd.entries.items()), cd.closed, cd.is_stream, cd.rest)
+        for name, cd in TYPEDEFS.items()
+    ]
+    assert len(rows) == 196
+    assert hashlib.sha256(repr(rows).encode()).hexdigest() == _TYPEDEFS_SHA256
