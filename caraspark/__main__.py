@@ -123,7 +123,7 @@ def cmd_findref(args) -> int:
     doc = load_document(_load(args.file))
     target = (args.num, args.gen)
     hits = sorted(
-        {src for src, dst, _path in doc.edges if dst == target and src}
+        {src for src, dsts in doc.links.items() if target in dsts and src}
     )
     for num, gen in hits:
         print(f"{num} {gen}")

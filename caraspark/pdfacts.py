@@ -81,7 +81,7 @@ def doc_facts(url: str, blob: bytes) -> dict:
     from caraspark.pdfengine.api import FATAL_CODES, is_pdf
     from caraspark.pdfengine.document import load_document
     from caraspark.pdfengine.lexer import HEX, INT, NAME, STR, tokens
-    from caraspark.pdfengine.model import Name, Stream
+    from caraspark.pdfengine.model import Name
     from caraspark.pdfengine.textextract import extract_text
     from caraspark.pdfengine.typecheck import check_types
 
@@ -121,27 +121,23 @@ def doc_facts(url: str, blob: bytes) -> dict:
         kinds[e.kind] += 1
 
     filters: set[str] = set()
-    for o in doc.objects.values():
-        if isinstance(o, Stream):
-            fl = o.d.get("Filter")
-            if isinstance(fl, Name):
-                filters.add(fl.v)
-            elif isinstance(fl, list):
-                filters.update(x.v for x in fl if isinstance(x, Name))
+    for o in doc.streams.values():
+        fl = o.d.get("Filter")
+        if isinstance(fl, Name):
+            filters.add(fl.v)
+        elif isinstance(fl, list):
+            filters.update(x.v for x in fl if isinstance(x, Name))
 
     # reachability from the trailer (C21 corpus metric)
-    adj: dict = {}
-    for src, dst, _ in doc.edges:
-        adj.setdefault(src, []).append(dst)
     seen: set = set()
-    frontier = [d for d in adj.get(None, []) if d in doc.objects]
+    frontier = [d for d in doc.links.get(None, []) if d in doc.objects]
     while frontier:
         k = frontier.pop()
         if k in seen:
             continue
         seen.add(k)
         frontier.extend(
-            d for d in adj.get(k, []) if d in doc.objects and d not in seen
+            d for d in doc.links.get(k, []) if d in doc.objects and d not in seen
         )
 
     return dict(

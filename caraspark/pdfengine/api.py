@@ -258,13 +258,9 @@ def _process_pdf(
             (o["pos"], o["level"] + 1) for o in extract_outline(doc)
         ]
 
-    n_streams = 0
-    bytes_decoded = 0
-    for obj in doc.objects.values():
-        if isinstance(obj, Stream):
-            n_streams += 1
-            if obj.decoded is not None:
-                bytes_decoded += len(obj.decoded)
+    bytes_decoded = sum(
+        len(s.decoded) for s in doc.streams.values() if s.decoded is not None
+    )
 
     res = ExtractResult(
         kind="pdf",
@@ -272,7 +268,7 @@ def _process_pdf(
         version=doc.version,
         n_objects=len(doc.objects),
         n_updates=doc.n_updates,
-        n_streams=n_streams,
+        n_streams=len(doc.streams),
         n_holes=doc.n_holes,
         bytes_decoded=bytes_decoded,
         encrypted=doc.encrypted,

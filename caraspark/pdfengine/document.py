@@ -6,16 +6,33 @@ Capability parity: caradoc ``src/parser/fetchimpl.ml`` / ``fetchcomp.ml``
 (byte-coverage holes/overlaps) and the fetch recursion guards of
 ``fetchcommon.ml`` [P]. All per-document, allocation-bounded, throw-free:
 every anomaly lands in the error taxonomy instead of an exception.
+
+What later passes look for in the objects is noted once, as each object is
+stored (``_store``): the streams, and the structural objects the xref
+machinery reaches (/Type /XRef or /ObjStm, or a /Linearized dict) — the
+linearization probe, the reachability frontier and the type checker's
+seeding read that, not the whole table.
+
+The reference graph (``_build_graph``) keeps edges as path-free pairs,
+``Document.links`` (source → referenced keys, the trailer as source None),
+collected without sorting dict keys. A reference's path is rendered only
+where it is read: for a ``graph.dangling_ref``/``graph.gen_mismatch``
+error, by walking just the object holding it again in sorted-key order,
+and in ``Document.edges``, which renders (src, dst, path) on demand for
+the ``pdf_edges`` side table. Byte-interval owners are object keys until
+an overlap message names one.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from operator import itemgetter
 
 from caraspark.pdfengine.filters import decode_stream
 from caraspark.pdfengine.lexer import INT, next_token
 from caraspark.pdfengine.model import Name, PdfError, Ref, Stream
 from caraspark.pdfengine.parser import _UNEXPECTED, parse_indirect_object, parse_object
+from caraspark.pdfengine.textextract import _page_order
 from caraspark.pdfengine.xref import (
     XrefEntry,
     check_header,
@@ -33,8 +50,17 @@ class Document:
     xref_table: dict = field(default_factory=dict)  # num → XrefEntry
     trailers: list = field(default_factory=list)  # newest first
     errors: list = field(default_factory=list)
-    intervals: list = field(default_factory=list)  # (lo, hi, owner)
-    edges: list = field(default_factory=list)  # (src (num,gen)|None, dst, path)
+    # (lo, hi, owner): owner is a label ("header", "xref", "eof") or the
+    # (num, gen) of an object, rendered "obj:num.gen" only by a message
+    intervals: list = field(default_factory=list)
+    # src (num,gen) | None (the trailer) → [dst (num,gen), …], one per Ref
+    links: dict = field(default_factory=dict)
+    # noted once, when an object is stored (``_store``): the objects the
+    # xref machinery reaches, not the graph, by what marks them ("XRef",
+    # "ObjStm" for their /Type, else "Linearized"), and the streams in
+    # object order
+    structural: dict = field(default_factory=dict)  # (num,gen) → mark
+    streams: dict = field(default_factory=dict)  # (num,gen) → Stream
     n_updates: int = 0
     hybrid: bool = False
     linearized: bool = False
@@ -45,6 +71,20 @@ class Document:
     @property
     def trailer(self) -> dict:
         return self.trailers[0] if self.trailers else {}
+
+    @property
+    def edges(self) -> list:
+        """(src (num,gen) | None, dst, path) for every reference: objects in
+        table order, then the trailer; within one, sorted-key DFS order.
+        The paths are rendered here, on demand — ``links`` holds the
+        pairs."""
+        out = []
+        for key, obj in self.objects.items():
+            for path, ref in _walk_refs(obj.d if obj.__class__ is Stream else obj, ""):
+                out.append((key, (ref.num, ref.gen), path))
+        for path, ref in _walk_refs(self.trailer, "trailer"):
+            out.append((None, (ref.num, ref.gen), path))
+        return out
 
 
 def load_document(
@@ -137,8 +177,8 @@ def load_document(
             )
             continue
         num, gen, obj, end = r
-        doc.objects[(e.num, e.gen)] = obj
-        doc.intervals.append((e.offset, end, f"obj:{e.num}.{e.gen}"))
+        _store(doc, (e.num, e.gen), obj)
+        doc.intervals.append((e.offset, end, (e.num, e.gen)))
 
     # --- decrypt (C18) before object-stream explode and filter decode:
     # objstm payloads are encrypted as streams; their embedded objects are
@@ -162,24 +202,42 @@ def load_document(
     def stream_resolver(ref: Ref):
         return doc.objects.get((ref.num, ref.gen))
 
-    for key, obj in doc.objects.items():
-        if isinstance(obj, Stream) and obj.decoded is None:
+    for key, obj in doc.streams.items():
+        if obj.decoded is None:
             obj.decoded = decode_stream(
                 obj.raw, obj.d, errors, objkey=key, resolver=stream_resolver
             )
 
     # --- linearization flag: first object carrying /Linearized
-    for key in sorted(doc.objects):
-        o = doc.objects[key]
-        d = o.d if isinstance(o, Stream) else o
-        if isinstance(d, dict) and "Linearized" in d:
-            doc.linearized = True
-            _linearization_check(doc, key, d, data, errors)
-            break
+    lin = [k for k in doc.structural if "Linearized" in _resolve(doc, Ref(*k))]
+    if lin:
+        doc.linearized = True
+        key = min(lin)
+        _linearization_check(doc, key, _resolve(doc, Ref(*key)), data, errors)
 
     _interval_check(doc, data, errors)
     _build_graph(doc, errors)
     return doc
+
+
+def _store(doc: Document, key: tuple, obj) -> None:
+    """Put an object in the table and note once what later passes look
+    for: whether it is a stream, and whether it is structural (/Type /XRef
+    or /ObjStm, else a /Linearized dict)."""
+    if key in doc.objects:  # an object stream restating a fetched object
+        doc.structural.pop(key, None)
+        doc.streams.pop(key, None)
+    doc.objects[key] = obj
+    body = obj
+    if obj.__class__ is Stream:
+        doc.streams[key] = obj
+        body = obj.d
+    if body.__class__ is dict:
+        t = body.get("Type")
+        if t.__class__ is Name and t.v in ("XRef", "ObjStm"):
+            doc.structural[key] = t.v
+        elif "Linearized" in body:
+            doc.structural[key] = "Linearized"
 
 
 def _linearization_check(doc, lin_key, lin, data, errors) -> None:
@@ -307,23 +365,24 @@ def _explode_objstm(
         # xref may reference only a subset; expose exactly what xref names,
         # but tolerate (relaxed) the container defining extras
         if e is not None or not strict:
-            doc.objects[(onum, 0)] = obj
+            _store(doc, (onum, 0), obj)
 
 
 def _interval_check(doc: Document, data: bytes, errors: list) -> None:
     """C19: byte-coverage — overlapping owners are an error; non-whitespace
     unclaimed gaps are holes (pure EOL padding between constructs isn't)."""
-    ivs = sorted(i for i in doc.intervals if i[0] < i[1])
+    ivs = sorted((i for i in doc.intervals if i[0] < i[1]), key=_SPAN)
     prev_hi = 0
     holes = 0
     hole_bytes = 0
+    overlaps = []  # (pos, owner)
 
     def is_hole(lo: int, hi: int) -> bool:
         return bool(data[lo:hi].strip(b"\x00\t\n\x0c\r "))
 
     for lo, hi, owner in ivs:
         if lo < prev_hi:
-            errors.append(PdfError("file.overlap", pos=lo, msg=owner))
+            overlaps.append((lo, owner))
         elif lo > prev_hi and is_hole(prev_hi, lo):
             holes += 1
             hole_bytes += lo - prev_hi
@@ -331,12 +390,29 @@ def _interval_check(doc: Document, data: bytes, errors: list) -> None:
     if prev_hi < len(data) and is_hole(prev_hi, len(data)):
         holes += 1
         hole_bytes += len(data) - prev_hi
+    if overlaps and len(set(map(_SPAN, ivs))) < len(ivs):
+        # owners of one span: the first by label is the one not overlapping
+        prev_hi, overlaps = 0, []
+        for lo, hi, owner in sorted((lo, hi, _owner(o)) for lo, hi, o in ivs):
+            if lo < prev_hi:
+                overlaps.append((lo, owner))
+            prev_hi = max(prev_hi, hi)
+    for lo, owner in overlaps:
+        errors.append(PdfError("file.overlap", pos=lo, msg=_owner(owner)))
     doc.n_holes = holes
     doc.hole_bytes = hole_bytes
 
 
-def _walk_refs(obj, path: str, out: list) -> None:
-    """Collect (path, Ref) pairs from a DirectObject tree, iteratively."""
+_SPAN = itemgetter(0, 1)
+
+
+def _owner(owner) -> str:
+    return owner if owner.__class__ is str else f"obj:{owner[0]}.{owner[1]}"
+
+
+def _walk_refs(obj, path: str) -> list:
+    """(path, Ref) pairs of a DirectObject tree in sorted-key DFS order."""
+    out = []
     stack = [(obj, path)]
     while stack:
         o, p = stack.pop()
@@ -348,60 +424,65 @@ def _walk_refs(obj, path: str, out: list) -> None:
         elif isinstance(o, dict):
             for k in sorted(o, reverse=True):
                 stack.append((o[k], f"{p}/{k}"))
+    return out
+
+
+def _ref_keys(obj) -> list:
+    """The (num, gen) of every Ref in a DirectObject tree, in no set order."""
+    if obj.__class__ is Ref:
+        return [(obj.num, obj.gen)]
+    if obj.__class__ is not dict and obj.__class__ is not list:
+        return []
+    out, stack = [], [obj]
+    while stack:
+        o = stack.pop()
+        for v in o.values() if o.__class__ is dict else o:
+            c = v.__class__
+            if c is Ref:
+                out.append((v.num, v.gen))
+            elif c is dict or c is list:
+                stack.append(v)
+    return out
 
 
 def _build_graph(doc: Document, errors: list) -> None:
     """C20/C21: edges, dangling refs, reachability, page-tree cycles."""
-    edges = doc.edges
-    for key, obj in doc.objects.items():
-        body = obj.d if isinstance(obj, Stream) else obj
-        refs: list = []
-        _walk_refs(body, "", refs)
-        for path, ref in refs:
-            edges.append((key, (ref.num, ref.gen), path))
-    trailer_refs: list = []
-    _walk_refs(doc.trailer, "trailer", trailer_refs)
-    for path, ref in trailer_refs:
-        edges.append((None, (ref.num, ref.gen), path))
+    objects, links = doc.objects, doc.links
+    holders = []  # (body, root path) of each holder of a dangling ref
+    for key, obj in objects.items():
+        body = obj.d if obj.__class__ is Stream else obj
+        dsts = links[key] = _ref_keys(body)
+        if not all(map(objects.__contains__, dsts)):
+            holders.append((body, ""))
+    dsts = links[None] = _ref_keys(doc.trailer)
+    if not all(map(objects.__contains__, dsts)):
+        holders.append((doc.trailer, "trailer"))
 
-    # dangling: target missing or free (C21) — the anti-join shape
-    known = set(doc.objects)
-    for src, dst, path in edges:
-        if dst not in known:
-            e = doc.xref_table.get(dst[0])
-            code = (
-                "graph.gen_mismatch"
-                if (e is not None and e.kind == "inuse" and e.gen != dst[1])
-                else "graph.dangling_ref"
-            )
-            errors.append(PdfError(code, obj=dst, path=path))
+    # dangling: target missing or free (C21) — the anti-join shape. Only a
+    # holder is walked again, in sorted-key order, to render error paths.
+    for body, root in holders:
+        for path, ref in _walk_refs(body, root):
+            dst = (ref.num, ref.gen)
+            if dst not in objects:
+                e = doc.xref_table.get(dst[0])
+                code = (
+                    "graph.gen_mismatch"
+                    if (e is not None and e.kind == "inuse" and e.gen != dst[1])
+                    else "graph.dangling_ref"
+                )
+                errors.append(PdfError(code, obj=dst, path=path))
 
-    # reachability from the trailer root (BFS). Structural objects — xref
+    # reachability from the trailer root. Structural objects — xref
     # streams, object-stream containers, the linearization dict — are
     # reachable by construction, not through the object graph.
-    adj: dict = {}
-    for src, dst, _ in edges:
-        adj.setdefault(src, []).append(dst)
     seen: set = set()
-    frontier = [d for d in adj.get(None, []) if d in known]
-    for key, o in doc.objects.items():
-        d = o.d if isinstance(o, Stream) else o
-        if isinstance(d, dict) and (
-            d.get("Type") in (Name("XRef"), Name("ObjStm"))
-            or "Linearized" in d
-        ):
-            frontier.append(key)
-    while frontier:
-        nxt = []
-        for k in frontier:
-            if k in seen:
-                continue
+    stack = [d for d in links[None] if d in objects] + list(doc.structural)
+    while stack:
+        k = stack.pop()
+        if k not in seen:
             seen.add(k)
-            for d in adj.get(k, []):
-                if d in known and d not in seen:
-                    nxt.append(d)
-        frontier = nxt
-    for key in sorted(known - seen):
+            stack.extend(links.get(k, ()))
+    for key in sorted(objects.keys() - seen):
         errors.append(PdfError("graph.unreachable", obj=key))
 
     # page-tree acyclicity via /Kids (C21): DFS with an on-path set
@@ -428,33 +509,6 @@ def _resolve(doc: Document, v):
     if isinstance(v, Ref):
         v = doc.objects.get((v.num, v.gen))
     return v.d if isinstance(v, Stream) else v
-
-
-def _pages(doc: Document) -> list[dict]:
-    """Page dicts in page-tree order: a /Kids DFS from the catalog's
-    /Pages, depth-capped and cycle-guarded by node identity, so a direct
-    (inline) kid counts too. ``textextract._page_order`` is another walk:
-    it follows only indirect kids and dedups by object key."""
-    cat = _resolve(doc, doc.trailer.get("Root"))
-    if not isinstance(cat, dict):
-        return []
-    pages: list = []
-    stack = [(_resolve(doc, cat.get("Pages")), 0)]
-    seen: set[int] = set()
-    while stack:
-        node, depth = stack.pop()
-        if not isinstance(node, dict) or depth > 64 or id(node) in seen:
-            continue
-        seen.add(id(node))
-        t = node.get("Type")
-        if isinstance(t, Name) and t.v == "Page":
-            pages.append(node)
-            continue
-        kids = _resolve(doc, node.get("Kids"))
-        if isinstance(kids, list):
-            for kid in reversed(kids):
-                stack.append((_resolve(doc, kid), depth + 1))
-    return pages
 
 
 def _name_tree_items(doc: Document, node, depth: int = 0):
@@ -573,29 +627,28 @@ def _check_page_tree(doc: Document, start: tuple, errors: list) -> None:
     """Acyclicity + caradoc's consistency rules: every Kid's /Parent must
     back-link its parent node, and every Pages /Count must equal the number
     of leaf pages actually in its subtree [PDF17 §7.7.3.2]."""
-    on_path: set = set()
+    objects = doc.objects
+    on_path: set = {start}
     done: set = set()
     leafcount: dict = {}
 
     def body_of(key):
-        o = doc.objects.get(key)
-        o = o.d if isinstance(o, Stream) else o
-        return o if isinstance(o, dict) else None
+        o = objects.get(key)
+        o = o.d if o.__class__ is Stream else o
+        return o if o.__class__ is dict else None
 
     def kids_of(key):
-        o = body_of(key)
-        if o is None:
+        kids = (body_of(key) or {}).get("Kids")
+        if kids.__class__ is not list:
             return []
-        kids = o.get("Kids")
-        if not isinstance(kids, list):
-            return []
-        return [(k.num, k.gen) for k in kids if isinstance(k, Ref)]
+        return [(k.num, k.gen) for k in kids if k.__class__ is Ref]
 
     def on_pop(node, kids):
         body = body_of(node)
         if body is None:
             return
-        if body.get("Type") == Name("Page"):
+        t = body.get("Type")
+        if t.__class__ is Name and t.v == "Page":
             leafcount[node] = 1
             return
         n = sum(leafcount.get(c, 0) for c in kids)
@@ -616,31 +669,29 @@ def _check_page_tree(doc: Document, start: tuple, errors: list) -> None:
                 continue
             par = cb.get("Parent")
             if not (
-                isinstance(par, Ref) and (par.num, par.gen) == node
+                par.__class__ is Ref and (par.num, par.gen) == node
             ):
                 errors.append(
                     PdfError("tree.parent_mismatch", obj=c, path="/Parent")
                 )
 
-    stack = [(start, 0, kids_of(start))]
-    on_path.add(start)
+    kids = kids_of(start)
+    stack = [(start, kids, iter(kids))]
     while stack:
-        node, i, kids = stack[-1]
-        if i >= len(kids):
+        node, kids, todo = stack[-1]
+        for child in todo:
+            if child in on_path:
+                errors.append(PdfError("graph.cycle", obj=child, path="/Kids"))
+            elif child not in done and child in objects:
+                on_path.add(child)
+                ck = kids_of(child)
+                stack.append((child, ck, iter(ck)))
+                break
+        else:
             stack.pop()
             on_path.discard(node)
             done.add(node)
             on_pop(node, kids)
-            continue
-        stack[-1] = (node, i + 1, kids)
-        child = kids[i]
-        if child in on_path:
-            errors.append(PdfError("graph.cycle", obj=child, path="/Kids"))
-            continue
-        if child in done or child not in doc.objects:
-            continue
-        on_path.add(child)
-        stack.append((child, 0, kids_of(child)))
 
 
 def extract_attachments(doc: Document) -> list[dict]:
@@ -1047,8 +1098,8 @@ def _iter_actions(doc: Document):
             walk_action(f"Names:{decode_pdf_string(key)}", v, 0)
 
     # page annotations, in page-tree order
-    for pi, page in enumerate(_pages(doc)):
-        annots = _resolve(doc, page.get("Annots"))
+    for pi, key in enumerate(_page_order(doc)):
+        annots = _resolve(doc, _resolve(doc, Ref(*key)).get("Annots"))
         if not isinstance(annots, list):
             continue
         for ai, av in enumerate(annots):
@@ -1281,11 +1332,12 @@ def extract_annotations(doc: Document) -> list[dict]:
     Rows: {"pos", "page_idx", "subtype", "has_action", "has_aa",
     "has_appearance"}; subtype None when /Subtype is missing or not a
     name (the typechecker flags it; the census still counts the row).
-    The page walk (``_pages``) is the cycle-guarded /Kids DFS the action
-    census uses, so a malformed page tree cannot loop it."""
+    Pages are numbered by the text extractor's cycle-guarded page walk
+    (``textextract._page_order``), as in the action census, so
+    ``page_idx`` joins the text spans' pages."""
     out: list[dict] = []
-    for pi, page in enumerate(_pages(doc)):
-        annots = _resolve(doc, page.get("Annots"))
+    for pi, key in enumerate(_page_order(doc)):
+        annots = _resolve(doc, _resolve(doc, Ref(*key)).get("Annots"))
         if not isinstance(annots, list):
             continue
         for av in annots:

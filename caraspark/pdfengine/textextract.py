@@ -139,7 +139,9 @@ def decode_pdf_string(b: bytes) -> str:
 
 
 def _page_order(doc) -> list[tuple[int, int]]:
-    """Page keys in tree order (DFS over Kids, cycle-guarded)."""
+    """Page keys in tree order (DFS over Kids, cycle-guarded): the one page
+    walk, shared by text, page, annotation and action extraction. It
+    follows only indirect kids and visits each object once."""
     root = doc.trailer.get("Root")
     if not isinstance(root, Ref):
         return []

@@ -18,13 +18,20 @@ annotation entries of PDF17 Table 164 (``_ANNOT_BASE``/``_ANNOT_COMMON``),
 the markup entries of Table 170 (``_MARKUP``) and the shading entries of
 Table 78 (``_SHADING_COMMON``).
 
-The engine checks a value against a type expression with one
-side-effect-free shape predicate, ``_fits``: it is the leaf check for
-primitives and constants, and it picks a union's alternative (the first
-that fits; its full check then runs). It reports nothing and follows no
-reference — a ``Ref`` fits a class, primitive or union and is checked
-when the worklist reaches its object — so a rejected alternative leaves
-no trace.
+Each type expression is compiled once, at import, into a pair of closures
+memoised on the (frozen, hashable) expression: ``fits(v)``, a
+side-effect-free shape predicate, and ``check``, the full check. A union's
+check probes its alternatives with their ``fits`` and fully checks the
+first that fits; ``fits`` reports nothing and follows no reference — a
+``Ref`` fits a class, primitive or union and is checked when the worklist
+reaches its object — so a rejected alternative leaves no trace. A class's
+check runs its entries' compiled checks in entry order and its ``fits``
+tests its constant entries (/Type, /Subtype, …), derived once.
+
+Paths are lazy: a value's path travels as (parent, segment) pairs — a dict
+key, an array index, or a root label like ``trailer/Root`` — and is
+rendered as text (``trailer/Root/Pages/Kids[0]``) only when an error is
+recorded.
 """
 
 from __future__ import annotations
@@ -200,8 +207,8 @@ COLORSPACE = OneOf(
 # --- entry groups: runs of entries many classes declare alike. A class
 # spreads a group where the entries sit in its table (``{"Type": …,
 # **_ANNOT_COMMON, **_MARKUP, "BS": …}``), so its key order stays the
-# spec's: check_class checks entries in that order, which decides which
-# referrer assigns a shared object first and what a type.conflict says.
+# spec's: a class's check runs its entries in that order, which decides
+# which referrer assigns a shared object first and what a type.conflict says.
 
 # PDF17 Table 164: entries common to all annotation dictionaries. The
 # trap-network, printer's-mark, 3D and rich-media classes carry only the
@@ -2768,254 +2775,251 @@ class TypeResult:
     strict_ok: bool = True
 
 
-def _matches_prim(v, kind: str) -> bool:
-    if kind == "any":
-        return True
-    if kind == "bool":
-        return isinstance(v, bool)
-    if kind == "int":
-        return isinstance(v, int) and not isinstance(v, bool)
-    if kind == "number":
-        return (isinstance(v, int) and not isinstance(v, bool)) or isinstance(v, Real)
-    if kind == "string":
-        return isinstance(v, bytes)
-    if kind == "name":
-        return isinstance(v, Name)
-    if kind == "null":
-        return v is None
-    if kind == "dict":
-        return isinstance(v, (dict, Stream))
-    if kind == "array":
-        return isinstance(v, list)
-    if kind == "stream":
-        return isinstance(v, Stream)
-    return False
+def _render(parent, seg) -> str:
+    """A lazy path as text: ``_render(((None, "trailer/Root"), "Kids"), 0)``
+    is ``"trailer/Root/Kids[0]"``."""
+    segs = []
+    while parent is not None:
+        segs.append(f"[{seg}]" if seg.__class__ is int else f"/{seg}")
+        parent, seg = parent
+    return seg + "".join(reversed(segs))
 
 
-def _constant_alts(t) -> tuple:
-    """The constants a discriminating entry type allows: one for an
-    ``Exact``/``ExactInt``, the set of a union of constants (mesh
-    /ShadingType in {4,6,7}), none for any other type."""
-    if isinstance(t, (Exact, ExactInt)):
-        return (t,)
-    if isinstance(t, OneOf) and t.alts and all(
-        isinstance(a, (Exact, ExactInt)) for a in t.alts
-    ):
-        return t.alts
-    return ()
+class _Run:
+    """One ``check_types`` run: what compiled checks report into."""
+
+    __slots__ = ("objects", "strict", "res", "worklist", "enqueued")
+
+    def __init__(self, objects, strict):
+        self.objects, self.strict, self.res = objects, strict, TypeResult()
+        self.worklist, self.enqueued = deque(), set()
+
+    def enqueue(self, key, check, cls, path):
+        if (key, check) not in self.enqueued:  # one check per type expression
+            self.enqueued.add((key, check))
+            self.worklist.append((key, check, cls, path))
+
+    def err(self, code, parent, seg, key, msg):
+        path = _render(parent, seg)
+        self.res.errors.append(PdfError(code, obj=key, path=path, msg=msg))
+        self.res.strict_ok = False
+
+    def miss(self, v, check, cls, parent, seg, key, msg):
+        """Off shape: a Ref is enqueued under this check, anything else mismatches."""
+        if v.__class__ is Ref:
+            self.enqueue((v.num, v.gen), check, cls, (parent, seg))
+        else:
+            self.err("type.mismatch", parent, seg, key, msg)
 
 
-# per class, its constant entries (/Type, /Subtype, /PatternType, …) as
-# (key, required, allowed constants): how a union of classes (image vs
-# form xobject, annotation families, pattern kinds) picks its alternative
-# without backtracking
-_DISCRIMINATORS = {
-    name: tuple(
-        (k, e.required, alts)
-        for k, e in cd.entries.items()
-        if (alts := _constant_alts(e.t))
-    )
-    for name, cd in TYPEDEFS.items()
+class _AllButRef(frozenset):
+    def __contains__(self, cls):
+        return cls is not Ref
+
+
+# value classes per primitive kind; parsed values are exactly these classes
+# (no subclasses, and bool is not int), so a class test stands in for isinstance
+_PRIM_TYPES = {
+    "any": _AllButRef(), "bool": {bool}, "int": {int}, "number": {int, Real},
+    "string": {bytes}, "name": {Name}, "null": {type(None)},
+    "dict": {dict, Stream}, "array": {list}, "stream": {Stream},
 }
+_COMPILED: dict = {}  # type expression → (fits, check)
 
 
-def _fits(v, texpr) -> bool:
-    """Does ``v`` have the shape of ``texpr``? Reports nothing and
-    follows no reference: a ``Ref`` fits a class, primitive or union (the
-    referent is checked when the worklist reaches it) and nothing else.
-    ``check_value`` uses it for leaf types and to pick a union's
-    alternative, whose full check then runs."""
-    if isinstance(v, Ref):
-        return isinstance(texpr, (Class, Prim, OneOf))
-    if isinstance(texpr, Prim):
-        return _matches_prim(v, texpr.kind)
-    if isinstance(texpr, Exact):
-        return isinstance(v, Name) and v.v == texpr.name
-    if isinstance(texpr, ExactInt):
-        return isinstance(v, int) and not isinstance(v, bool) and v == texpr.n
-    if isinstance(texpr, ArrayOf):
-        return isinstance(v, list) and all(_fits(x, texpr.elem) for x in v)
-    if isinstance(texpr, Tuple):
-        return (
-            isinstance(v, list)
-            and len(v) == len(texpr.elems)
-            and all(map(_fits, v, texpr.elems))
-        )
-    if isinstance(texpr, OneOf):
-        return any(_fits(v, a) for a in texpr.alts)
-    body = v.d if isinstance(v, Stream) else v
-    if isinstance(texpr, DictOf):
-        return isinstance(body, dict)
-    if not isinstance(texpr, Class) or not isinstance(body, dict):
-        return False
-    cd = TYPEDEFS[texpr.name]
-    if cd.is_stream and not isinstance(v, Stream):
-        return False
-    # a closed class declares its entries exhaustively, so an undeclared
-    # key rules the alternative out — this lets unions of same-shape
-    # param dicts (signature transform params) discriminate by key set
-    # when no constant entry distinguishes them
-    if cd.closed and any(k not in cd.entries for k in body):
-        return False
-    for k, required, alts in _DISCRIMINATORS[texpr.name]:
-        if required or k in body:
-            got = body.get(k)
-            if not any(_fits(got, a) for a in alts):
+def _compiled(t) -> tuple:
+    return _COMPILED[t] if t in _COMPILED else _COMPILED.setdefault(t, _compile(t))
+
+
+def _consts(alts):
+    """Is a value one of these ``Exact``/``ExactInt`` constants?"""
+    names = {a.name for a in alts if isinstance(a, Exact)}
+    ints = {a.n for a in alts if isinstance(a, ExactInt)}
+    return lambda v: (
+        v.v in names if v.__class__ is Name else v.__class__ is int and v in ints
+    )
+
+
+def _compile(t) -> tuple:
+    """``t`` as (fits, check): ``fits(v)`` is the pure shape predicate a union
+    probes its alternatives with (a Ref fits a class, primitive or union and
+    nothing else); ``check(v, parent, seg, objkey, run)`` checks ``v`` fully."""
+    if isinstance(t, Prim):
+        types, msg = _PRIM_TYPES.get(t.kind, ()), f"expected {t}"
+
+        def check(v, parent, seg, key, run):
+            if v.__class__ not in types:
+                run.miss(v, check, None, parent, seg, key, msg)
+        return (lambda v: v.__class__ in types or v.__class__ is Ref), check
+    if isinstance(t, (Exact, ExactInt)):
+        ok, msg = _consts((t,)), f"expected {t}"
+
+        def check(v, parent, seg, key, run):
+            if not ok(v):
+                run.miss(v, check, None, parent, seg, key, msg)
+        return ok, check
+    if isinstance(t, (ArrayOf, DictOf)):
+        efits, echeck = _compiled(t.elem)
+        shape = list if isinstance(t, ArrayOf) else dict
+        msg = "expected array" if shape is list else "expected dict"
+
+        def check(v, parent, seg, key, run):
+            body = v.d if v.__class__ is Stream else v
+            if body.__class__ is not shape:
+                return run.miss(v, check, None, parent, seg, key, msg)
+            path = (parent, seg)
+            for k, x in enumerate(body) if shape is list else body.items():
+                echeck(x, path, k, key, run)
+        if shape is list:
+            return (lambda v: v.__class__ is list and all(map(efits, v))), check
+        return (lambda v: v.__class__ in (dict, Stream)), check
+    if isinstance(t, Tuple):
+        fs, cs = zip(*map(_compiled, t.elems))
+        n, msg = len(cs), f"expected {len(cs)}-tuple"
+
+        def check(v, parent, seg, key, run):
+            if v.__class__ is not list or len(v) != n:
+                return run.miss(v, check, None, parent, seg, key, msg)
+            path = (parent, seg)
+            for i, (c, x) in enumerate(zip(cs, v)):
+                c(x, path, i, key, run)
+        return (lambda v: v.__class__ is list and len(v) == n
+                and all(f(x) for f, x in zip(fs, v))), check
+    if isinstance(t, OneOf):
+        alts = [_compiled(a) for a in t.alts]
+
+        def check(v, parent, seg, key, run):
+            # a Ref waits for the worklist; else the first alternative that fits
+            if v.__class__ is Ref:
+                return run.miss(v, check, None, parent, seg, key, "")
+            for f, c in alts:
+                if f(v):
+                    return c(v, parent, seg, key, run)
+            run.err("type.mismatch", parent, seg, key, "no union alternative matched")
+        return (lambda v: v.__class__ is Ref or any(f(v) for f, _ in alts)), check
+    if isinstance(t, Class):
+        return _compile_class(t.name)
+    raise TypeError(f"not a type expression: {t!r}")
+
+
+def _compile_class(name: str) -> tuple:
+    cd = TYPEDEFS[name]
+    names, closed, is_stream = set(cd.entries), cd.closed, cd.is_stream
+    # its constant entries (/Type, /Subtype, /PatternType, …; a union of
+    # constants like mesh /ShadingType {4,6,7}): how a union of classes
+    # picks its alternative without backtracking
+    discs = []
+    for k, e in cd.entries.items():
+        alts = e.t.alts if isinstance(e.t, OneOf) else (e.t,)
+        if alts and all(isinstance(a, (Exact, ExactInt)) for a in alts):
+            discs.append((k, e.required, _consts(alts)))
+
+    def fits(v):
+        if v.__class__ is Ref:
+            return True
+        body = v.d if v.__class__ is Stream else v
+        if body.__class__ is not dict or (is_stream and v.__class__ is not Stream):
+            return False
+        # a closed class declares its entries exhaustively, so an
+        # undeclared key rules the alternative out — this lets unions of
+        # same-shape param dicts (signature transform params) discriminate
+        # by key set when no constant entry distinguishes them
+        if closed and not names.issuperset(body):
+            return False
+        for k, required, const in discs:
+            if (required or k in body) and not const(body.get(k)):
                 return False
-    return True
+        return True
+
+    def check(v, parent, seg, key, run):
+        body = v.d if v.__class__ is Stream else v
+        if body.__class__ is not dict:
+            return run.miss(v, check, name, parent, seg, key, f"expected {name} dict")
+        # record the assignment when v is the root of an indirect object
+        if key is not None and run.objects.get(key) is v:
+            prev = run.res.assignments.setdefault(key, name)
+            if prev != name and not _class_compatible(prev, name):
+                return run.err("type.conflict", parent, seg, key, f"{prev} vs {name}")
+        if is_stream and v.__class__ is not Stream:
+            run.err("type.mismatch", parent, seg, key, f"{name} must be a stream")
+        path = (parent, seg)
+        missing = required and not body.keys() >= required
+        for k, c in checks.items():
+            if k in body:
+                c(body[k], path, k, key, run)
+            elif missing and k in required:
+                run.err("type.missing_required", path, k, key, name)
+        if rest is not None or (closed and run.strict):
+            for k in [k for k in body if k not in names]:
+                if rest is not None:
+                    rest(body[k], path, k, key, run)
+                else:
+                    run.err("type.unknown_entry", path, k, key, name)
+
+    # memoised before its entries compile: classes refer to each other
+    _COMPILED[Class(name)] = fits, check
+    checks = {k: _compiled(e.t)[1] for k, e in cd.entries.items()}
+    required = {k for k, e in cd.entries.items() if e.required}
+    rest = None if cd.rest is None else _compiled(cd.rest)[1]
+    return fits, check
+
+
+_CHECK = {name: _compiled(Class(name))[1] for name in TYPEDEFS}
+_ID_CHECK = _compiled(Tuple((STRING, STRING)))[1]
+# a structural object's class and the root of its path, by what marks it
+_STRUCTURAL = {
+    "XRef": ("xref_stream", "xref/XRef"), "ObjStm": ("objstm", "xref/ObjStm"),
+    "Linearized": ("linearized", "linearized"),
+}
 
 
 def check_types(doc, strict: bool = False) -> TypeResult:
     """Worklist BFS from the trailer; see module docstring."""
-    res = TypeResult()
-    worklist: deque[tuple[tuple[int, int], object, str]] = deque()
-    # type expressions are frozen dataclasses: hashable, equal iff same shape
-    enqueued: set[tuple[tuple[int, int], object]] = set()
-
-    def enqueue(key, texpr, path):
-        tag = (key, texpr)
-        if tag not in enqueued:
-            enqueued.add(tag)
-            worklist.append((key, texpr, path))
-
-    def err(code, path, objkey=None, msg=""):
-        res.errors.append(PdfError(code, obj=objkey, path=path, msg=msg))
-        res.strict_ok = False
-
-    def check_value(v, texpr, path, objkey):
-        if isinstance(v, Ref):
-            enqueue((v.num, v.gen), texpr, path)
-            return
-        if isinstance(texpr, (Prim, Exact, ExactInt)):
-            if not _fits(v, texpr):
-                err("type.mismatch", path, objkey, f"expected {texpr}")
-            return
-        if isinstance(texpr, ArrayOf):
-            if not isinstance(v, list):
-                err("type.mismatch", path, objkey, "expected array")
-                return
-            for i, x in enumerate(v):
-                check_value(x, texpr.elem, f"{path}[{i}]", objkey)
-            return
-        if isinstance(texpr, DictOf):
-            body = v.d if isinstance(v, Stream) else v
-            if not isinstance(body, dict):
-                err("type.mismatch", path, objkey, "expected dict")
-                return
-            for k, x in body.items():
-                check_value(x, texpr.elem, f"{path}/{k}", objkey)
-            return
-        if isinstance(texpr, Tuple):
-            if not isinstance(v, list) or len(v) != len(texpr.elems):
-                err("type.mismatch", path, objkey, f"expected {len(texpr.elems)}-tuple")
-                return
-            for i, (x, t) in enumerate(zip(v, texpr.elems)):
-                check_value(x, t, f"{path}[{i}]", objkey)
-            return
-        if isinstance(texpr, OneOf):
-            # the shape probe picks the alternative; then a full check of
-            # the winner runs (class entries, assignments, nested types)
-            for alt in texpr.alts:
-                if _fits(v, alt):
-                    check_value(v, alt, path, objkey)
-                    return
-            err("type.mismatch", path, objkey, "no union alternative matched")
-            return
-        if isinstance(texpr, Class):
-            check_class(v, texpr.name, path, objkey)
-            return
-        err("type.internal", path, objkey, repr(texpr))
-
-    def check_class(v, cls_name, path, objkey):
-        cd = TYPEDEFS[cls_name]
-        body = v.d if isinstance(v, Stream) else v
-        if not isinstance(body, dict):
-            err("type.mismatch", path, objkey, f"expected {cls_name} dict")
-            return
-        # record the assignment when v is the root of an indirect object
-        if objkey is not None and doc.objects.get(objkey) is v:
-            prev = res.assignments.get(objkey)
-            if prev is None:
-                res.assignments[objkey] = cls_name
-            elif prev != cls_name and not _class_compatible(prev, cls_name):
-                err("type.conflict", path, objkey, f"{prev} vs {cls_name}")
-                return
-        if cd.is_stream and not isinstance(v, Stream):
-            err("type.mismatch", path, objkey, f"{cls_name} must be a stream")
-        for k, entry in cd.entries.items():
-            if k in body:
-                check_value(body[k], entry.t, f"{path}/{k}", objkey)
-            elif entry.required:
-                err("type.missing_required", f"{path}/{k}", objkey, cls_name)
-        if cd.rest is not None:
-            for k in body:
-                if k not in cd.entries:
-                    check_value(body[k], cd.rest, f"{path}/{k}", objkey)
-        if strict and cd.closed:
-            for k in body:
-                if k not in cd.entries:
-                    err("type.unknown_entry", f"{path}/{k}", objkey, cls_name)
-
+    run = _Run(doc.objects, strict)
     # seed from the trailer (the virtual root, as in caradoc's checker)
     trailer = doc.trailer
-    root = trailer.get("Root")
-    if isinstance(root, Ref):
-        enqueue((root.num, root.gen), Class("catalog"), "trailer/Root")
-    else:
-        err("type.missing_required", "trailer/Root", None, "catalog")
-    info = trailer.get("Info")
-    if isinstance(info, Ref):
-        enqueue((info.num, info.gen), Class("info"), "trailer/Info")
-    enc = trailer.get("Encrypt")
-    if isinstance(enc, Ref):
-        enqueue((enc.num, enc.gen), Class("encrypt"), "trailer/Encrypt")
-    elif isinstance(enc, dict):
-        check_value(enc, Class("encrypt"), "trailer/Encrypt", None)
-    fid = trailer.get("ID")
-    if fid is not None:
-        check_value(fid, Tuple((STRING, STRING)), "trailer/ID", None)
-
-    def drain():
-        guard = 0
-        while worklist and guard < 1_000_000:
-            guard += 1
-            key, texpr, path = worklist.popleft()
-            obj = doc.objects.get(key)
-            if obj is None:
-                # dangling refs are already reported by the graph pass
-                continue
-            if isinstance(texpr, Class):
-                prev = res.assignments.get(key)
-                if prev is not None and prev != texpr.name:
-                    # two referrers disagree — caradoc intersects; we report
-                    if not _class_compatible(prev, texpr.name):
-                        err("type.conflict", path, key, f"{prev} vs {texpr.name}")
-                    continue
-                res.assignments[key] = texpr.name
-            check_value(obj, texpr, path, key)
-
-    drain()
+    for k, cls in (("Root", "catalog"), ("Info", "info"), ("Encrypt", "encrypt")):
+        v = trailer.get(k)
+        if v.__class__ is Ref:
+            run.enqueue((v.num, v.gen), _CHECK[cls], cls, (None, f"trailer/{k}"))
+        elif k == "Root":
+            run.err("type.missing_required", None, "trailer/Root", None, "catalog")
+        elif k == "Encrypt" and v.__class__ is dict:
+            _CHECK[cls](v, None, "trailer/Encrypt", None, run)
+    if trailer.get("ID") is not None:
+        _ID_CHECK(trailer["ID"], None, "trailer/ID", None, run)
+    _drain(run)
 
     # structural stream dicts (xref streams, object streams) are reached
     # through the xref machinery, not the object graph — the BFS never
     # visits them, but caradoc types them all the same
-    for key in sorted(doc.objects):
-        if key in res.assignments:
+    for key in sorted(doc.structural):
+        if key not in run.res.assignments:
+            cls, root = _STRUCTURAL[doc.structural[key]]
+            run.enqueue(key, _CHECK[cls], cls, (None, root))
+    _drain(run)
+    return run.res
+
+
+def _drain(run) -> None:
+    worklist, objects, assignments = run.worklist, run.objects, run.res.assignments
+    guard = 0
+    while worklist and guard < 1_000_000:
+        guard += 1
+        key, check, cls, (parent, seg) = worklist.popleft()
+        obj = objects.get(key)
+        if obj is None:
+            # dangling refs are already reported by the graph pass
             continue
-        obj = doc.objects[key]
-        body = obj.d if isinstance(obj, Stream) else obj
-        if isinstance(body, dict):
-            t = body.get("Type")
-            if isinstance(t, Name) and t.v in _STRUCTURAL_CLASSES:
-                enqueue(key, Class(_STRUCTURAL_CLASSES[t.v]), f"xref/{t.v}")
-            elif "Linearized" in body:
-                enqueue(key, Class("linearized"), "linearized")
-    drain()
-
-    return res
-
-
-_STRUCTURAL_CLASSES = {"ObjStm": "objstm", "XRef": "xref_stream"}
+        if cls is not None:
+            prev = assignments.get(key)
+            if prev is not None and prev != cls:
+                # two referrers disagree — caradoc intersects; we report
+                if not _class_compatible(prev, cls):
+                    run.err("type.conflict", parent, seg, key, f"{prev} vs {cls}")
+                continue
+            assignments[key] = cls
+        check(obj, parent, seg, key, run)
 
 
 _COMPATIBLE = {

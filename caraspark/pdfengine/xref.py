@@ -18,9 +18,9 @@ from dataclasses import dataclass
 import numpy as np
 
 from caraspark.pdfengine.filters import decode_stream
-from caraspark.pdfengine.lexer import INT, KW, next_token, tokens
+from caraspark.pdfengine.lexer import INT, KW, next_token
 from caraspark.pdfengine.model import Name, PdfError, Ref, Stream
-from caraspark.pdfengine.parser import _UNEXPECTED, parse_indirect_object, parse_object
+from caraspark.pdfengine.parser import parse_indirect_object, parse_object
 
 _HEADER_RE = re.compile(rb"%PDF-(\d)\.(\d)")
 _XREF_ENTRY_RE = re.compile(rb"(\d{10}) (\d{5}) ([nf])")
@@ -116,8 +116,8 @@ def parse_classic_xref(
                         errors.append(PdfError("xref.entry_eol", p))
             pos = p
         elif kind == KW and start == b"trailer":
+            # the section ends where the trailer's parse ends
             trailer, end = parse_object(data, pos, errors, strict=strict)
-            end = _section_end(data, pos, end, trailer, strict, errors)
             if not isinstance(trailer, dict):
                 errors.append(PdfError("xref.bad_trailer", at))
                 trailer = None
@@ -125,40 +125,6 @@ def parse_classic_xref(
         else:
             errors.append(PdfError("xref.missing_trailer", at))
             return entries, None, at
-
-
-def _section_end(
-    data: bytes, pos: int, end: int, trailer, strict: bool, errors: list
-) -> int:
-    """Where a classic section's claimed interval stops.  The hole map
-    (``n_holes``/``hole_bytes``, pinned in goldens and pdfacts) counts it
-    as the trailer's end plus the tokens an `int int R` reader has lexed
-    by then: a foreign keyword that stopped the parse, and two tokens
-    past a final integer value.  So a trailer ending ``/Prev 123 >>``
-    claims the ``startxref`` keyword, and its offset and ``%%EOF`` count
-    as a hole.  Those extra tokens' lex errors are recorded too."""
-    n = len(data)
-    toks = [(k, v) for k, v, _, _ in tokens(data, pos, end)]
-    if trailer is _UNEXPECTED or (
-        trailer is None and end < n and toks != [(KW, b"null")]
-    ):
-        # the parse stopped at a foreign keyword
-        k, v, _, end = next_token(data, end, n, strict, errors)
-        toks.append((k, v))
-    last = len(toks) - 1
-    if last >= 0 and toks[last][0] == INT:
-        extra = 2
-    elif (
-        last >= 1
-        and toks[last - 1][0] == INT
-        and not (toks[last] == (KW, b"R") and last >= 2 and toks[last - 2][0] == INT)
-    ):
-        extra = 1
-    else:
-        return end
-    for _ in range(extra):
-        _, _, _, end = next_token(data, end, n, strict, errors)
-    return end
 
 
 def parse_xref_stream(

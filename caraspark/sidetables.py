@@ -171,7 +171,7 @@ def _edge_rows(doc):
 
 def _object_rows(doc):
     types = check_types(doc).assignments
-    n_refs = Counter(dst for _src, dst, _path in doc.edges)
+    n_refs = Counter(dst for dsts in doc.links.values() for dst in dsts)
     for key in sorted(doc.objects):
         o = doc.objects[key]
         body = o.d if isinstance(o, Stream) else o

@@ -2466,6 +2466,61 @@ def test_extract_annotations_census():
     assert "Widget" in subtypes and "Link" in subtypes
 
 
+def test_annotation_pages_are_the_text_pages():
+    """An inline page dict in /Kids is no page to the page walk, so the
+    annotation and action censuses number pages as text extraction does:
+    object 3 is page 0 for all three, and the inline page's Link is not
+    counted."""
+    from caraspark.pdfengine.document import (
+        extract_actions,
+        extract_annotations,
+        load_document,
+    )
+    from caraspark.pdfengine.textextract import extract_pages
+    from caraspark.synth import _assemble, _obj, _stream_obj
+
+    blob = _assemble(
+        {
+            1: _obj(1, b"<< /Type /Catalog /Pages 2 0 R >>"),
+            2: _obj(
+                2,
+                b"<< /Type /Pages /Count 2 /Kids [<< /Type /Page /Parent 2 0 R "
+                b"/MediaBox [0 0 612 792] /Annots [<< /Type /Annot /Subtype /Link "
+                b"/Rect [0 0 9 9] >>] >> 3 0 R] >>",
+            ),
+            3: _obj(
+                3,
+                b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+                b"/Contents 4 0 R /Annots [<< /Type /Annot /Subtype /Text "
+                b"/Rect [0 0 9 9] /A << /S /URI /URI (https://a.example/) >> >>] >>",
+            ),
+            4: _stream_obj(4, b"", b"BT (Hello) Tj ET"),
+        }
+    )
+    doc = load_document(blob)
+    assert [p["obj"] for p in extract_pages(doc)] == ["3.0"]
+    assert [(a["subtype"], a["page_idx"]) for a in extract_annotations(doc)] == [
+        ("Text", 0)
+    ]
+    assert [a["source"] for a in extract_actions(doc)] == ["Annot:0.0:A"]
+
+
+def test_overlap_between_equal_spans_names_the_later_label():
+    """Two xref entries at one offset give two objects the same byte span:
+    the owner whose label sorts first ("obj:10.0" < "obj:5.0") holds the
+    span and the other is reported, whatever the fetch order."""
+    from caraspark.synth import CONTENT_HELLO, _assemble, _base_objects, _obj
+
+    bodies = _base_objects(CONTENT_HELLO)
+    bodies[5] = _obj(5, b"<< /Shared true >>")
+    bodies[10] = _obj(10, b"<< /Other true >>")
+    plain = _assemble(bodies)
+    off5, off10 = (plain.index(b"\n%d 0 obj" % n) for n in (5, 10))
+    r = process_document(_assemble(bodies, offset_tweak={10: off5 - off10}))
+    overlaps = [e for e in r.errors_as_rows() if e["code"] == "file.overlap"]
+    assert [(e["pos"], e["msg"]) for e in overlaps] == [(off5 + 1, "obj:5.0")]
+
+
 def test_content_op_histogram_text_ops_match_extraction():
     """Recipes whose extraction produces text must show text-show
     operators; inline-image payload bytes never lex into junk ops."""

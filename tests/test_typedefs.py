@@ -3281,8 +3281,9 @@ def test_rejected_union_alternative_types_no_reference():
 
 # sha256 of repr([(name, list(cd.entries.items()), cd.closed, cd.is_stream,
 # cd.rest)]) over TYPEDEFS in table order: class order, each class's entry
-# order and types, and its closed/is_stream/rest flags. check_class checks
-# entries in order, so a reordering can move assignments and messages.
+# order and types, and its closed/is_stream/rest flags. A class's compiled
+# check runs its entries in order, so a reordering can move assignments and
+# messages.
 _TYPEDEFS_SHA256 = "b26cd4fd9cf08331f749f537a79d9a07da1544a1209cdfb99c815f43427f1d41"
 
 
