@@ -110,8 +110,13 @@ def sf_of(sf_dir: str) -> float:
     return float(m.group(1)) if m else 0.01
 
 
+# synth corpus rows per scale factor; any other scale gets DEFAULT_ROWS
+CORPUS_ROWS = {0.001: 128, 0.01: 384, 0.1: 1536}
+DEFAULT_ROWS = 256
+
+
 def corpus_rows_for_sf(sf_dir: str) -> int:
-    return {0.001: 128, 0.01: 384, 0.1: 1536}.get(sf_of(sf_dir), 256)
+    return CORPUS_ROWS.get(sf_of(sf_dir), DEFAULT_ROWS)
 
 
 def html_docs(docs: DataFrame, *parts, url=None) -> DataFrame:

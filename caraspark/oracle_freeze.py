@@ -4,23 +4,49 @@ The synth corpus is closed-form (idx → recipe, PDF blobs byte-identical per
 recipe, HTML facts frozen per idx), so DuckDB oracles for the PDF-internal
 qkeys are plain SQL over VALUES lists pinned in ``pdfacts_expected``
 (generated by tools/gen_pdfacts_expected.py). Shared here so
-``pdfacts``, ``extract_queries`` and ``sidetables`` build their oracles
-from one corpus CTE.
+``pdfacts``, ``extract_queries``, ``sidetables`` and ``streaming_queries``
+build their oracles from one corpus CTE.
+
+The frozen lists are of two kinds:
+
+* a table's own rows. Each side table in ``FROZEN_TABLES`` is frozen by
+  running its own row function over every PDF recipe (``SIDE_ROWS``), and
+  ``frozen_cte`` takes the columns from the same ``DocTable``, so each
+  column is stated once; the qkey's hand-written oracle ``SELECT`` over
+  them is the check. The facts table (``pdfacts.FACTS``) is frozen the
+  same way, from ``doc_facts``.
+* independent references. The per-recipe extras (through the
+  generator's ``_*_facts`` signature mirrors) and the type, object-kind,
+  variant and findref aggregations are computed from the engine's
+  results on their own, not through the tables they check, so their
+  columns stay written out here. So do the per-idx HTML surface rows',
+  named clear of SQL keywords (``tbl``, ``trow``, …).
 """
 
 from __future__ import annotations
 
+from caraspark.corpus import CORPUS_ROWS, DEFAULT_ROWS
 from caraspark.pdfacts_expected import (
     FINDREF_ROWS,
     HTML_IDX,
     OBJKIND_ROWS,
     RECIPE_EXTRAS,
     RECIPE_FACTS,
+    SIDE_ROWS,
     TYPES_ROWS,
     VARIANT_ROWS,
 )
 
 N_RECIPES = len(RECIPE_FACTS)
+
+# The side tables frozen from their own rows, by their names in
+# ``sidetables``. EDGES, OBJECTS and CLEANUP are checked through the
+# extras and the aggregations instead.
+FROZEN_TABLES = (
+    "ATTACHMENTS", "OUTLINE", "FORMFIELDS", "JAVASCRIPT", "ACTIONS",
+    "REVISIONS", "PAGES", "FONTS", "SIGS", "XMP", "SCAVENGE", "REPAIR",
+    "ANNOTS", "CONTENT_OPS", "STREAM_STATS",
+)
 
 
 def sql_lit(v) -> str:
@@ -47,25 +73,22 @@ def values_cte(name: str, cols: list[str], rows) -> str:
     return f"{name} ({', '.join(cols)}) AS (VALUES\n    {body})"
 
 
-# corpus size per scale factor, derived from the sf-scaled customer table
-# (the documents table has the same count at sf0.001 and sf0.01) — single
-# source shared by every frozen-corpus oracle incl. pdfacts._facts_cte
-NROWS_CTE = """nrows AS (
-  SELECT CASE (SELECT count(*) FROM customer)
-         WHEN 150 THEN 128 WHEN 1500 THEN 384 WHEN 15000 THEN 1536
-         ELSE 256 END AS n
-)"""
-
-
 def corpus_cte() -> str:
     """idx series sized from the sf-scaled customer table + recipe names →
-    one row per synth document with its url."""
+    one row per synth document with its url. The customer table's
+    150,000 × sf rows tell the scales of ``corpus.CORPUS_ROWS`` apart (the
+    documents table has the same count at sf0.001 and sf0.01)."""
+    when = " ".join(
+        f"WHEN {round(150_000 * sf)} THEN {n}" for sf, n in CORPUS_ROWS.items()
+    )
     names = values_cte(
         "rec_names",
         ["rid", "name", "kind"],
         [(r["rid"], r["name"], r["kind"]) for r in RECIPE_FACTS],
     )
-    return f"""{NROWS_CTE},
+    return f"""nrows AS (
+  SELECT CASE (SELECT count(*) FROM customer) {when} ELSE {DEFAULT_ROWS} END AS n
+),
 {names},
 docs AS (
   SELECT t.range AS idx, CAST(t.range % {N_RECIPES} AS INT) AS rid,
@@ -123,58 +146,14 @@ def variant_cte() -> str:
     )
 
 
-def attach_cte() -> str:
-    from caraspark.pdfacts_expected import ATTACH_ROWS
+def frozen_cte(alias: str, table: str) -> str:
+    """``alias (rid, …)`` over the frozen rows of the side table named
+    ``table`` in ``FROZEN_TABLES``: the recipe id, then the table's own
+    columns after ``url``."""
+    from caraspark import sidetables  # which imports this module
 
-    return values_cte(
-        "att", ["rid", "att_name", "att_md5", "att_size"], ATTACH_ROWS
-    )
-
-
-def revision_cte() -> str:
-    from caraspark.pdfacts_expected import REVISION_ROWS
-
-    return values_cte(
-        "rv",
-        ["rid", "rev", "rkind", "rsize", "has_prev", "has_xrefstm",
-         "n_won"],
-        REVISION_ROWS,
-    )
-
-
-def pages_cte() -> str:
-    from caraspark.pdfacts_expected import PAGE_ROWS
-
-    return values_cte(
-        "pg",
-        ["rid", "page", "pobj", "content_bytes", "text_len", "text_md5"],
-        PAGE_ROWS,
-    )
-
-
-def fonts_cte() -> str:
-    from caraspark.pdfacts_expected import FONT_ROWS
-
-    return values_cte(
-        "ft", ["rid", "fobj", "subtype", "base_font", "embedded"],
-        FONT_ROWS,
-    )
-
-
-def outline_cte() -> str:
-    from caraspark.pdfacts_expected import OUTLINE_ROWS
-
-    return values_cte(
-        "ol", ["rid", "pos", "level", "title"], OUTLINE_ROWS
-    )
-
-
-def formfield_cte() -> str:
-    from caraspark.pdfacts_expected import FORMFIELD_ROWS
-
-    return values_cte(
-        "ff", ["rid", "pos", "fname", "ft", "fvalue"], FORMFIELD_ROWS
-    )
+    cols = getattr(sidetables, table).schema.names[1:]
+    return values_cte(alias, ["rid", *cols], SIDE_ROWS[table])
 
 
 def tables_cte() -> str:
@@ -237,22 +216,6 @@ perdoc AS (
 )"""
 
 
-def js_cte() -> str:
-    from caraspark.pdfacts_expected import JS_ROWS
-
-    return values_cte(
-        "js", ["rid", "pos", "source", "js_len", "js_md5", "js_head"], JS_ROWS
-    )
-
-
-def actions_cte() -> str:
-    from caraspark.pdfacts_expected import ACTION_ROWS
-
-    return values_cte(
-        "act", ["rid", "pos", "source", "s", "target"], ACTION_ROWS
-    )
-
-
 def alt_cte() -> str:
     from caraspark.pdfacts_expected import ALT_ROWS
 
@@ -279,73 +242,7 @@ def rd_cte() -> str:
     )
 
 
-def sigs_cte() -> str:
-    from caraspark.pdfacts_expected import SIG_ROWS
-
-    return values_cte(
-        "sg",
-        ["rid", "sobj", "filter", "subfilter", "n_ranges",
-         "starts_at_zero", "unsigned_tail"],
-        SIG_ROWS,
-    )
 
 
-def scav_cte() -> str:
-    from caraspark.pdfacts_expected import SCAV_ROWS
-
-    return values_cte(
-        "sv",
-        ["rid", "n_markers", "n_parsed", "n_confirmed", "n_shadow",
-         "n_xref_inuse"],
-        SCAV_ROWS,
-    )
 
 
-def repair_cte() -> str:
-    from caraspark.pdfacts_expected import REPAIR_ROWS
-
-    return values_cte(
-        "rp",
-        ["rid", "repaired_bytes", "repaired_md5", "n_objects",
-         "repaired_valid"],
-        REPAIR_ROWS,
-    )
-
-
-def xmp_cte() -> str:
-    from caraspark.pdfacts_expected import XMP_ROWS
-
-    return values_cte(
-        "xm",
-        ["rid", "xobj", "xmp_title", "xmp_creator", "create_date",
-         "info_title", "title_match"],
-        XMP_ROWS,
-    )
-
-
-def annot_cte() -> str:
-    from caraspark.pdfacts_expected import ANNOT_ROWS
-
-    return values_cte(
-        "an",
-        ["rid", "pos", "page_idx", "subtype",
-         "has_action", "has_aa", "has_appearance"],
-        ANNOT_ROWS,
-    )
-
-
-def contentop_cte() -> str:
-    from caraspark.pdfacts_expected import CONTENTOP_ROWS
-
-    return values_cte("co", ["rid", "op", "n"], CONTENTOP_ROWS)
-
-
-def streamstat_cte() -> str:
-    from caraspark.pdfacts_expected import STREAMSTAT_ROWS
-
-    return values_cte(
-        "ss",
-        ["rid", "num", "gen", "decoded", "n_bytes", "n_distinct",
-         "top_permille"],
-        STREAMSTAT_ROWS,
-    )

@@ -9,9 +9,12 @@ a row too.
 SQL oracles: the synth corpus is deterministic per recipe position
 (``idx % R`` → recipe; every PDF blob byte-identical across idx, every
 HTML fact column constant), so the whole facts table is closed-form —
-an R-row frozen per-recipe lookup (``pdfacts_expected.RECIPE_FACTS``,
-generated once by tools/gen_pdfacts_expected.py and pinned in git)
-cross-joined with a generated idx series. Each qkey's oracle is plain SQL
+an R-row frozen per-recipe lookup joined onto the corpus's ``docs``
+(``oracle_freeze.corpus_cte``). The lookup
+(``pdfacts_expected.RECIPE_FACTS``, generated once by
+tools/gen_pdfacts_expected.py and pinned in git) is the table's own
+rows: ``doc_facts`` per recipe, under the columns of ``FACTS``, like the
+side tables frozen from their own rows. Each qkey's oracle is plain SQL
 over that reconstruction, which hash-verifies the full distributed
 pipeline against the frozen per-recipe engine behavior. Byte-level ground
 truth stays independently pinned by tests/golden/.
@@ -57,19 +60,14 @@ _REC_COLS = ["rid", "name", *FACTS.schema.names[1:]]
 
 
 def _facts_cte() -> str:
-    """DuckDB CTE reconstructing the facts table in closed form: corpus
-    size derived from the sf-scaled customer table (shared NROWS_CTE),
-    recipe assignment is idx % R, per-recipe values from the frozen
-    lookup (shared VALUES builder in oracle_freeze)."""
-    from caraspark.oracle_freeze import NROWS_CTE, values_cte
+    """DuckDB CTE reconstructing the facts table in closed form: the synth
+    corpus's ``docs`` (``oracle_freeze.corpus_cte``: idx series, recipe
+    ``idx % R``, url) joined with the frozen per-recipe lookup."""
+    from caraspark.oracle_freeze import corpus_cte, values_cte
 
-    return f"""WITH {NROWS_CTE},
+    return f"""WITH {corpus_cte()},
 {values_cte("rec", _REC_COLS, RECIPE_FACTS)},
-facts AS (
-  SELECT 'https://synth.example/' || r.name || '/' || t.range AS url, r.*
-  FROM range(0, 4096) t, rec r, nrows
-  WHERE t.range < nrows.n AND r.rid = t.range % {len(RECIPE_FACTS)}
-)"""
+facts AS (SELECT d.url, r.* FROM docs d JOIN rec r ON r.rid = d.rid)"""
 
 
 def doc_facts(url: str, blob: bytes) -> dict:

@@ -18,9 +18,14 @@ ops on top. ``pdfacts`` declares its facts table the same way.
 Each qkey hash-verifies against a closed-form DuckDB oracle over the
 frozen per-recipe corpus reconstruction (caraspark/oracle_freeze.py):
 PDF parsing itself isn't SQL-expressible, but the synth corpus is
-deterministic per recipe, so the expected edge/object/type/cleanup rows
-are pinned in git and any drift in the distributed pipeline breaks the
-value hash. Byte-level anchors remain the pytest golden suite.
+deterministic per recipe, so the expected rows are pinned in git and any
+drift in the distributed pipeline breaks the value hash. The 15
+per-feature tables (``oracle_freeze.FROZEN_TABLES``) are frozen from
+their own rows, and ``frozen_cte`` reads their columns from the
+``DocTable`` here; EDGES, OBJECTS and CLEANUP are checked against
+independent references instead (the per-recipe extras and the type,
+object-kind, variant and findref aggregations). Byte-level anchors
+remain the pytest golden suite.
 """
 
 from __future__ import annotations
@@ -36,24 +41,10 @@ from pyspark.sql.types import StructType
 
 from caraspark.corpus import corpus_rows_for_sf, synth_df
 from caraspark.oracle_freeze import (
-    actions_cte,
-    annot_cte,
-    contentop_cte,
-    streamstat_cte,
-    attach_cte,
     corpus_cte,
-    formfield_cte,
-    js_cte,
-    fonts_cte,
-    repair_cte,
-    scav_cte,
-    sigs_cte,
-    xmp_cte,
-    outline_cte,
-    pages_cte,
-    revision_cte,
     extras_cte,
     findref_cte,
+    frozen_cte,
     objkind_cte,
     types_cte,
     variant_cte,
@@ -450,7 +441,7 @@ ATTACHMENTS = doc_table(
 @_q(
     "pdf_attachments",
     f"""WITH {corpus_cte()},
-{attach_cte()}
+{frozen_cte("att", "ATTACHMENTS")}
 SELECT d.url, a.att_name, a.att_md5, CAST(a.att_size AS BIGINT) AS att_size
 FROM docs d JOIN att a ON a.rid = d.rid""",
 )
@@ -472,7 +463,7 @@ OUTLINE = doc_table(
 @_q(
     "pdf_outline",
     f"""WITH {corpus_cte()},
-{outline_cte()}
+{frozen_cte("ol", "OUTLINE")}
 SELECT d.url, CAST(o.pos AS INT) AS pos, CAST(o.level AS INT) AS level,
        o.title
 FROM docs d JOIN ol o ON o.rid = d.rid""",
@@ -506,7 +497,7 @@ FORMFIELDS = doc_table(
 @_q(
     "pdf_formfields",
     f"""WITH {corpus_cte()},
-{formfield_cte()}
+{frozen_cte("ff", "FORMFIELDS")}
 SELECT d.url, CAST(f.pos AS INT) AS pos, f.fname, f.ft, f.fvalue
 FROM docs d JOIN ff f ON f.rid = d.rid""",
 )
@@ -559,7 +550,7 @@ JAVASCRIPT = doc_table(
 @_q(
     "pdf_javascript",
     f"""WITH {corpus_cte()},
-{js_cte()}
+{frozen_cte("js", "JAVASCRIPT")}
 SELECT d.url, j.pos, j.source, j.js_len, j.js_md5, j.js_head
 FROM docs d JOIN js j ON j.rid = d.rid""",
 )
@@ -596,7 +587,7 @@ ACTIONS = doc_table(
 @_q(
     "pdf_actions",
     f"""WITH {corpus_cte()},
-{actions_cte()}
+{frozen_cte("act", "ACTIONS")}
 SELECT d.url, CAST(a.pos AS INT) AS pos, a.source, a.s, a.target
 FROM docs d JOIN act a ON a.rid = d.rid""",
 )
@@ -627,9 +618,9 @@ REVISIONS = doc_table(
 @_q(
     "pdf_revisions",
     f"""WITH {corpus_cte()},
-{revision_cte()}
-SELECT d.url, CAST(r.rev AS INT) AS rev, r.rkind AS kind,
-       CAST(r.rsize AS INT) AS size, r.has_prev, r.has_xrefstm,
+{frozen_cte("rv", "REVISIONS")}
+SELECT d.url, CAST(r.rev AS INT) AS rev, r.kind,
+       CAST(r.size AS INT) AS size, r.has_prev, r.has_xrefstm,
        CAST(r.n_won AS INT) AS n_won
 FROM docs d JOIN rv r ON r.rid = d.rid""",
 )
@@ -658,8 +649,8 @@ PAGES = doc_table(
 @_q(
     "pdf_pages",
     f"""WITH {corpus_cte()},
-{pages_cte()}
-SELECT d.url, CAST(p.page AS INT) AS page, p.pobj AS obj,
+{frozen_cte("pg", "PAGES")}
+SELECT d.url, CAST(p.page AS INT) AS page, p.obj,
        CAST(p.content_bytes AS INT) AS content_bytes,
        CAST(p.text_len AS INT) AS text_len, p.text_md5
 FROM docs d JOIN pg p ON p.rid = d.rid""",
@@ -687,8 +678,8 @@ FONTS = doc_table(
 @_q(
     "pdf_fonts",
     f"""WITH {corpus_cte()},
-{fonts_cte()}
-SELECT d.url, f.fobj AS obj, f.subtype, f.base_font, f.embedded
+{frozen_cte("ft", "FONTS")}
+SELECT d.url, f.obj, f.subtype, f.base_font, f.embedded
 FROM docs d JOIN ft f ON f.rid = d.rid""",
 )
 def pdf_fonts(spark, sf):
@@ -720,8 +711,8 @@ SIGS = doc_table(
 @_q(
     "pdf_sigs",
     f"""WITH {corpus_cte()},
-{sigs_cte()}
-SELECT d.url, s.sobj AS obj, s.filter, s.subfilter,
+{frozen_cte("sg", "SIGS")}
+SELECT d.url, s.obj, s.filter, s.subfilter,
        CAST(s.n_ranges AS INT) AS n_ranges, s.starts_at_zero,
        CAST(s.unsigned_tail AS INT) AS unsigned_tail
 FROM docs d JOIN sg s ON s.rid = d.rid""",
@@ -751,8 +742,8 @@ XMP = doc_table(
 @_q(
     "pdf_xmp",
     f"""WITH {corpus_cte()},
-{xmp_cte()}
-SELECT d.url, x.xobj AS obj, x.xmp_title, x.xmp_creator, x.create_date,
+{frozen_cte("xm", "XMP")}
+SELECT d.url, x.obj, x.xmp_title, x.xmp_creator, x.create_date,
        x.info_title, x.title_match
 FROM docs d JOIN xm x ON x.rid = d.rid""",
 )
@@ -780,7 +771,7 @@ SCAVENGE = doc_table(
 @_q(
     "pdf_scavenge",
     f"""WITH {corpus_cte()},
-{scav_cte()}
+{frozen_cte("sv", "SCAVENGE")}
 SELECT d.url, CAST(s.n_markers AS INT) AS n_markers,
        CAST(s.n_parsed AS INT) AS n_parsed,
        CAST(s.n_confirmed AS INT) AS n_confirmed,
@@ -831,7 +822,7 @@ REPAIR = doc_table(
 @_q(
     "pdf_repair",
     f"""WITH {corpus_cte()},
-{repair_cte()}
+{frozen_cte("rp", "REPAIR")}
 SELECT d.url, CAST(r.repaired_bytes AS BIGINT) AS repaired_bytes,
        r.repaired_md5, CAST(r.n_objects AS INT) AS n_objects,
        r.repaired_valid
@@ -867,7 +858,7 @@ ANNOTS = doc_table(
 @_q(
     "pdf_annots",
     f"""WITH {corpus_cte()},
-{annot_cte()}
+{frozen_cte("an", "ANNOTS")}
 SELECT d.url, CAST(a.pos AS INT) AS pos, CAST(a.page_idx AS INT) AS page_idx,
        a.subtype, a.has_action, a.has_aa, a.has_appearance
 FROM docs d JOIN an a ON a.rid = d.rid""",
@@ -891,7 +882,7 @@ CONTENT_OPS = doc_table(_pdf(content_op_histogram), op=STRING, n=INT)
 @_q(
     "pdf_content_ops",
     f"""WITH {corpus_cte()},
-{contentop_cte()}
+{frozen_cte("co", "CONTENT_OPS")}
 SELECT d.url, c.op, CAST(c.n AS INT) AS n
 FROM docs d JOIN co c ON c.rid = d.rid""",
 )
@@ -923,7 +914,7 @@ STREAM_STATS = doc_table(
 @_q(
     "pdf_stream_stats",
     f"""WITH {corpus_cte()},
-{streamstat_cte()}
+{frozen_cte("ss", "STREAM_STATS")}
 SELECT d.url, CAST(s.num AS INT) AS num, CAST(s.gen AS INT) AS gen,
        s.decoded, CAST(s.n_bytes AS BIGINT) AS n_bytes,
        CAST(s.n_distinct AS INT) AS n_distinct,

@@ -893,10 +893,10 @@ def stream_heavy_hitters(spark, sf):
 
 
 def _stream_annots_sql() -> str:
-    from caraspark.oracle_freeze import annot_cte, corpus_cte
+    from caraspark.oracle_freeze import corpus_cte, frozen_cte
 
     return f"""WITH {corpus_cte()},
-{annot_cte()}
+{frozen_cte("an", "ANNOTS")}
 SELECT a.subtype,
        CAST(count(*) AS BIGINT) AS n_annots,
        CAST(sum(CASE WHEN a.has_action THEN 1 ELSE 0 END) AS BIGINT)
@@ -932,10 +932,10 @@ def stream_annots(spark, sf):
 
 
 def _stream_content_ops_sql() -> str:
-    from caraspark.oracle_freeze import contentop_cte, corpus_cte
+    from caraspark.oracle_freeze import corpus_cte, frozen_cte
 
     return f"""WITH {corpus_cte()},
-{contentop_cte()}
+{frozen_cte("co", "CONTENT_OPS")}
 SELECT c.op,
        CAST(sum(c.n) AS BIGINT) AS n_ops,
        CAST(count(*) AS BIGINT) AS n_docs

@@ -120,3 +120,29 @@ def test_registering_a_name_twice_raises():
     assert registry["k"].sql is None
     with pytest.raises(KeyError, match="pdf_edges"):
         sidetables._q("pdf_edges", None)(lambda spark, sf: None)
+
+
+def test_registry_size_is_pinned():
+    # A pack that fails to import only prints to stderr and its keys drop
+    # out, while the parity tests run over whatever remains: a stale
+    # pdfacts_expected.py breaks sidetables' import and would take its
+    # qkeys with it. Pin the counts so that shows.
+    assert (len(ent.queries()), len(ent.oracle_sql())) == (400, 398)
+
+
+def test_oracle_corpus_size_matches_the_spark_corpus(sf_smoke):
+    # The oracles size the synth corpus from the customer table, the Spark
+    # side from the scale in the directory name: both must agree at every
+    # scale in the test data.
+    from caraspark.corpus import corpus_rows_for_sf
+    from caraspark.oracle_compare import duck_connection
+    from caraspark.oracle_freeze import corpus_cte
+
+    dirs = sorted(glob.glob(os.path.join(os.path.dirname(sf_smoke), "sf*")))
+    assert dirs
+    sql = f"WITH {corpus_cte()} SELECT count(*), max(idx) FROM docs"
+    for sf_dir in dirs:
+        with duck_connection(sf_dir) as con:
+            n, last = con.execute(sql).fetchone()
+        want = corpus_rows_for_sf(sf_dir)
+        assert (n, last) == (want, want - 1), sf_dir

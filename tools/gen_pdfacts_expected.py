@@ -4,18 +4,29 @@ The synth corpus is deterministic per recipe position: document ``idx``
 maps to recipe ``idx % R`` and every PDF recipe's blob is byte-identical
 across idx (HTML blobs vary with idx, but every HTML fact column is a
 constant). So the full facts table is a closed form over ``idx`` plus a
-47-row per-recipe lookup — exactly what a DuckDB oracle can express.
+79-row per-recipe lookup — exactly what a DuckDB oracle can express.
 
 This tool runs the engine over one instance of each recipe and writes the
-lookup as ``caraspark/pdfacts_expected.py``. The values are then FROZEN in
-git: the oracle comparison catches any future drift in lexer/parser/xref/
-filter/crypto/extraction behavior, and any distribution nondeterminism in
-the Spark pipeline. (Byte-level ground truth is pinned independently by
-tests/golden/; this freeze is a regression oracle, not an independent
-reimplementation.)
+lookups as ``caraspark/pdfacts_expected.py``. Two kinds of freeze go in:
+
+* a table's own rows: ``RECIPE_FACTS`` is ``pdfacts.doc_facts`` per
+  recipe, and ``SIDE_ROWS`` holds, for each side table in
+  ``oracle_freeze.FROZEN_TABLES``, that table's own ``rows`` over every
+  PDF recipe, projected onto its columns after ``url``, ``rid`` first;
+* independent references: ``RECIPE_EXTRAS`` (through the ``_*_facts``
+  signature mirrors below, which never import ``extract_queries``), the
+  type, object-kind, variant and findref aggregations, and the per-idx
+  HTML surface rows, each computed here from the engine's results.
+
+The values are then FROZEN in git: the oracle comparison catches any
+future drift in lexer/parser/xref/filter/crypto/extraction behavior, and
+any distribution nondeterminism in the Spark pipeline. (Byte-level ground
+truth is pinned independently by tests/golden/; this freeze is a
+regression oracle, not an independent reimplementation.)
 
 Rerun (only after an INTENDED behavior change, with golden diffs reviewed):
     python tools/gen_pdfacts_expected.py
+A rerun on unchanged code rewrites the file byte for byte.
 """
 
 from __future__ import annotations
@@ -27,29 +38,27 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
+from caraspark.corpus import CORPUS_ROWS  # noqa: E402
 from caraspark.pdfacts import doc_facts  # noqa: E402
-from caraspark.synth import HTML_RECIPES, PDF_RECIPES  # noqa: E402
+from caraspark.synth import _corpus_recipes as recipe_list, corpus_row  # noqa: E402
 
-
-def recipe_list():
-    """Same order as caraspark.synth.corpus_row: PDF recipes then sorted HTML."""
-    return list(PDF_RECIPES.items()) + [(k, None) for k in sorted(HTML_RECIPES)]
+# the oracles reconstruct corpus rows below this idx at every scale
+MAX_ROWS = max(CORPUS_ROWS.values())
 
 
 def build_expected() -> list[dict]:
-    import random
-
     out = []
-    for rid, (name, fn_) in enumerate(recipe_list()):
+    recipes = recipe_list()
+    for rid, (name, fn_) in enumerate(recipes):
         if fn_ is None:
-            # HTML: blob varies with idx but every fact column is constant —
-            # verify that on two instances before freezing
-            f1 = doc_facts("u", HTML_RECIPES[name](random.Random(f"42:{rid}")))
-            f2 = doc_facts(
-                "u", HTML_RECIPES[name](random.Random(f"42:{rid + 47}"))
+            # HTML: the blob varies with idx but every fact column is
+            # constant — check that on every corpus row of the recipe
+            # the oracles reconstruct before freezing it
+            facts, *rest = (
+                doc_facts("u", corpus_row(idx)["html"])
+                for idx in range(rid, MAX_ROWS, len(recipes))
             )
-            assert f1 == f2, (name, f1, f2)
-            facts = f1
+            assert all(f == facts for f in rest), name
         else:
             facts = doc_facts("u", fn_())
         facts.pop("url")
@@ -57,16 +66,32 @@ def build_expected() -> list[dict]:
     return out
 
 
+def build_side_rows() -> dict[str, list[tuple]]:
+    """Each frozen side table's own rows over every PDF recipe, as
+    ``(rid, *columns after url)``."""
+    from caraspark import sidetables
+    from caraspark.oracle_freeze import FROZEN_TABLES
+
+    pdfs = [(rid, fn_()) for rid, (_, fn_) in enumerate(recipe_list()) if fn_]
+    out = {}
+    for name in FROZEN_TABLES:
+        table = getattr(sidetables, name)
+        cols = table.schema.names[1:]
+        out[name] = [
+            (rid, *(row[c] for c in cols))
+            for rid, blob in pdfs
+            for row in table.rows("u", blob)
+        ]
+    return out
+
+
 def build_extras():
     """Per-recipe extraction/edge/object/cleanup extras (PDF recipes), the
     object-kind/type/variant/findref row freezes, and per-idx HTML
-    extraction results (HTML blobs vary per idx; 1536 idx covers every sf
-    the driver uses)."""
-    import hashlib
-
+    extraction results (HTML blobs vary per idx), keyed by constant name."""
     from caraspark.pdfengine.api import process_document
     from caraspark.pdfengine.cleanup import cleanup
-    from caraspark.pdfengine.document import extract_revisions, load_document
+    from caraspark.pdfengine.document import load_document
     from caraspark.pdfengine.model import Stream, canonical_json
     from caraspark.pdfengine.typecheck import check_types
 
@@ -74,21 +99,6 @@ def build_extras():
     extras, types_rows, objkind_rows, variant_rows, findref_rows = (
         [], [], [], [], []
     )
-    attach_rows = []
-    scav_rows = []
-    repair_rows = []
-    revision_rows = []
-    page_rows = []
-    font_rows = []
-    sig_rows = []
-    xmp_rows = []
-    outline_rows = []
-    formfield_rows = []
-    js_rows = []
-    action_rows = []
-    annot_rows = []
-    contentop_rows = []
-    streamstat_rows = []
     anchor_rows = []
     table_rows = []
     list_rows = []
@@ -190,124 +200,12 @@ def build_extras():
                 findref_rows.append(
                     (rid, s[0] if s else None, s[1] if s else None, p)
                 )
-        from caraspark.pdfengine.document import (
-            extract_actions,
-            extract_attachments,
-            extract_form_fields,
-            extract_javascript,
-            extract_outline,
-        )
-
-        from caraspark.pdfengine.document import scavenge_summary
-
-        scav_rows.append((rid, *scavenge_summary(blob)))
-
-        from caraspark.pdfengine.cleanup import repair_document
-
-        rep = repair_document(blob)
-        repair_rows.append(
-            (
-                rid,
-                len(rep),
-                hashlib.md5(rep).hexdigest(),
-                len(load_document(rep).objects),
-                process_document(rep).valid,
-            )
-        )
-
-        for a in extract_attachments(doc):
-            attach_rows.append(
-                (
-                    rid,
-                    a["name"],
-                    None
-                    if a["payload"] is None
-                    else hashlib.md5(a["payload"]).hexdigest(),
-                    a["size"],
-                )
-            )
-        for o in extract_outline(doc):
-            outline_rows.append((rid, o["pos"], o["level"], o["title"]))
-        for ffld in extract_form_fields(doc):
-            formfield_rows.append(
-                (rid, ffld["pos"], ffld["name"], ffld["ft"], ffld["value"])
-            )
-        for j in extract_javascript(doc):
-            js_rows.append(
-                (
-                    rid, j["pos"], j["source"], j["js_len"], j["js_md5"],
-                    j["js_head"],
-                )
-            )
-        for act in extract_actions(doc):
-            action_rows.append(
-                (rid, act["pos"], act["source"], act["s"], act["target"])
-            )
-        from caraspark.pdfengine.textextract import content_op_histogram
-
-        for co in content_op_histogram(doc):
-            contentop_rows.append((rid, co["op"], co["n"]))
-
-        from caraspark.pdfengine.document import stream_stats
-
-        for ss in stream_stats(doc):
-            streamstat_rows.append(
-                (rid, ss["num"], ss["gen"], ss["decoded"], ss["n_bytes"],
-                 ss["n_distinct"], ss["top_permille"])
-            )
-
-        from caraspark.pdfengine.document import extract_annotations
-
-        for an in extract_annotations(doc):
-            annot_rows.append(
-                (
-                    rid, an["pos"], an["page_idx"], an["subtype"],
-                    an["has_action"], an["has_aa"], an["has_appearance"],
-                )
-            )
-        for rv in extract_revisions(doc):
-            revision_rows.append(
-                (rid, rv["rev"], rv["kind"], rv["size"],
-                 rv["has_prev"], rv["has_xrefstm"], rv["n_won"])
-            )
-        from caraspark.pdfengine.textextract import extract_pages
-
-        for pg in extract_pages(doc):
-            page_rows.append(
-                (rid, pg["page"], pg["obj"], pg["content_bytes"],
-                 pg["text_len"], pg["text_md5"])
-            )
-        from caraspark.pdfengine.document import extract_fonts
-
-        for ft in extract_fonts(doc):
-            font_rows.append(
-                (rid, ft["obj"], ft["subtype"], ft["base_font"],
-                 ft["embedded"])
-            )
-        from caraspark.pdfengine.document import extract_signatures
-
-        for sg in extract_signatures(doc, len(blob)):
-            sig_rows.append(
-                (rid, sg["obj"], sg["filter"], sg["subfilter"],
-                 sg["n_ranges"], sg["starts_at_zero"],
-                 sg["unsigned_tail"])
-            )
-        from caraspark.pdfengine.document import extract_xmp
-
-        for xr in extract_xmp(doc):
-            xmp_rows.append(
-                (rid, xr["obj"], xr["xmp_title"], xr["xmp_creator"],
-                 xr["create_date"], xr["info_title"], xr["title_match"])
-            )
-
-    import random
 
     html_idx = []
-    for idx in range(1536):
-        name, fn_ = recipes[idx % len(recipes)]
-        if fn_ is not None:
+    for idx in range(MAX_ROWS):
+        if recipes[idx % len(recipes)][1] is not None:
             continue
-        blob = HTML_RECIPES[name](random.Random(f"42:{idx}"))
+        blob = corpus_row(idx)["html"]
         res = process_document(blob)
         for pos, (href, anchor) in enumerate(
             zip(res.outlinks, res.anchors)
@@ -359,14 +257,22 @@ def build_extras():
                 **_title_facts(res),
             }
         )
-    return (
-        extras, types_rows, objkind_rows, variant_rows, findref_rows,
-        html_idx, attach_rows, outline_rows, formfield_rows, anchor_rows,
-        table_rows, list_rows, img_rows, jsonld_rows, js_rows, alt_rows,
-        action_rows, annot_rows, contentop_rows, streamstat_rows,
-        revision_rows, page_rows, font_rows, sig_rows, xmp_rows, md_rows,
-        rd_rows, scav_rows, repair_rows,
-    )
+    return {
+        "RECIPE_EXTRAS": extras,
+        "TYPES_ROWS": types_rows,
+        "OBJKIND_ROWS": objkind_rows,
+        "VARIANT_ROWS": variant_rows,
+        "FINDREF_ROWS": findref_rows,
+        "HTML_IDX": html_idx,
+        "ANCHOR_ROWS": anchor_rows,
+        "TABLE_ROWS": table_rows,
+        "LIST_ROWS": list_rows,
+        "IMG_ROWS": img_rows,
+        "JSONLD_ROWS": jsonld_rows,
+        "ALT_ROWS": alt_rows,
+        "MD_ROWS": md_rows,
+        "RDFA_ROWS": rd_rows,
+    }
 
 
 def _img_facts(res) -> dict:
@@ -560,7 +466,6 @@ def _text_metrics(text: bytes | None) -> dict:
     """Mirror corpus_pipeline's JVM expressions exactly: utf-8 decode (cast
     binary->string), whitespace-split token count on the trimmed string,
     [A-Za-z]-only char count, sha256 of the string's utf-8 bytes."""
-    import hashlib
     import re
 
     if text is None:
@@ -578,81 +483,27 @@ def _text_metrics(text: bytes | None) -> dict:
 
 
 def main() -> None:
-    rows = build_expected()
-    (
-        extras, types_rows, objkind_rows, variant_rows, findref_rows,
-        html_idx, attach_rows, outline_rows, formfield_rows, anchor_rows,
-        table_rows, list_rows, img_rows, jsonld_rows, js_rows, alt_rows,
-        action_rows, annot_rows, contentop_rows, streamstat_rows,
-        revision_rows, page_rows, font_rows, sig_rows, xmp_rows, md_rows,
-        rd_rows, scav_rows, repair_rows,
-    ) = build_extras()
+    consts = {
+        "RECIPE_FACTS": build_expected(),
+        **build_extras(),
+        "SIDE_ROWS": build_side_rows(),
+    }
     path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "..",
         "caraspark", "pdfacts_expected.py",
     )
-
-    def fmt(v):
-        return pprint.pformat(v, width=78, sort_dicts=False)
-
     with open(path, "w") as f:
         f.write(
             '"""FROZEN per-recipe expected facts (generated by\n'
             "tools/gen_pdfacts_expected.py — regenerate only after an intended\n"
             'behavior change; see that tool\'s docstring)."""\n\n'
-            f"RECIPE_FACTS = {fmt(rows)}\n\n"
-            f"RECIPE_EXTRAS = {fmt(extras)}\n\n"
-            f"TYPES_ROWS = {fmt(types_rows)}\n\n"
-            f"OBJKIND_ROWS = {fmt(objkind_rows)}\n\n"
-            f"VARIANT_ROWS = {fmt(variant_rows)}\n\n"
-            f"FINDREF_ROWS = {fmt(findref_rows)}\n\n"
-            f"HTML_IDX = {fmt(html_idx)}\n\n"
-            f"ATTACH_ROWS = {fmt(attach_rows)}\n\n"
-            f"OUTLINE_ROWS = {fmt(outline_rows)}\n\n"
-            f"FORMFIELD_ROWS = {fmt(formfield_rows)}\n\n"
-            f"ANCHOR_ROWS = {fmt(anchor_rows)}\n\n"
-            f"TABLE_ROWS = {fmt(table_rows)}\n\n"
-            f"LIST_ROWS = {fmt(list_rows)}\n\n"
-            f"IMG_ROWS = {fmt(img_rows)}\n\n"
-            f"JSONLD_ROWS = {fmt(jsonld_rows)}\n\n"
-            f"JS_ROWS = {fmt(js_rows)}\n\n"
-            f"ACTION_ROWS = {fmt(action_rows)}\n\n"
-            f"ANNOT_ROWS = {fmt(annot_rows)}\n\n"
-            f"CONTENTOP_ROWS = {fmt(contentop_rows)}\n\n"
-            f"STREAMSTAT_ROWS = {fmt(streamstat_rows)}\n\n"
-            f"ALT_ROWS = {fmt(alt_rows)}\n\n"
-            f"REVISION_ROWS = {fmt(revision_rows)}\n\n"
-            f"PAGE_ROWS = {fmt(page_rows)}\n\n"
-            f"FONT_ROWS = {fmt(font_rows)}\n\n"
-            f"SIG_ROWS = {fmt(sig_rows)}\n\n"
-            f"XMP_ROWS = {fmt(xmp_rows)}\n\n"
-            f"MD_ROWS = {fmt(md_rows)}\n\n"
-            f"RDFA_ROWS = {fmt(rd_rows)}\n\n"
-            f"SCAV_ROWS = {fmt(scav_rows)}\n\n"
-            f"REPAIR_ROWS = {fmt(repair_rows)}\n"
+            + "\n\n".join(
+                f"{k} = {pprint.pformat(v, width=78, sort_dicts=False)}"
+                for k, v in consts.items()
+            )
+            + "\n"
         )
-    print(
-        f"wrote {len(rows)} recipes, {len(extras)} extras, "
-        f"{len(types_rows)} type rows, {len(objkind_rows)} objkinds, "
-        f"{len(variant_rows)} variants, {len(findref_rows)} findrefs, "
-        f"{len(html_idx)} html idx, {len(attach_rows)} attachments, "
-        f"{len(outline_rows)} outline rows, "
-        f"{len(formfield_rows)} form fields, "
-        f"{len(anchor_rows)} anchor rows, "
-        f"{len(table_rows)} table rows, "
-        f"{len(list_rows)} list rows, "
-        f"{len(img_rows)} img rows, "
-        f"{len(jsonld_rows)} jsonld rows, "
-        f"{len(js_rows)} js rows, "
-        f"{len(action_rows)} action rows, "
-        f"{len(alt_rows)} alternate rows, "
-        f"{len(revision_rows)} revision rows, "
-        f"{len(page_rows)} page rows, "
-        f"{len(font_rows)} font rows, "
-        f"{len(sig_rows)} signature rows, "
-        f"{len(xmp_rows)} xmp rows, "
-        f"{len(md_rows)} microdata rows -> {path}"
-    )
+    print(", ".join(f"{len(v)} {k}" for k, v in consts.items()), "->", path)
 
 
 if __name__ == "__main__":
