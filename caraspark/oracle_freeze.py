@@ -60,12 +60,13 @@ def sql_lit(v) -> str:
 
 
 def values_cte(name: str, cols: list[str], rows) -> str:
-    """``name (c1, c2, …) AS (VALUES (…), …)`` from tuples or dicts."""
+    """``name (c1, c2, …) AS (VALUES (…), …)`` from dicts (their ``cols``)
+    or tuples, written as stored: a stale freeze whose tuples are shorter
+    than ``cols`` fails when DuckDB runs the CTE, not here."""
     body = ",\n    ".join(
         "("
         + ", ".join(
-            sql_lit(r[c] if isinstance(r, dict) else r[i])
-            for i, c in enumerate(cols)
+            map(sql_lit, (r[c] for c in cols) if isinstance(r, dict) else r)
         )
         + ")"
         for r in rows
@@ -149,11 +150,12 @@ def variant_cte() -> str:
 def frozen_cte(alias: str, table: str) -> str:
     """``alias (rid, …)`` over the frozen rows of the side table named
     ``table`` in ``FROZEN_TABLES``: the recipe id, then the table's own
-    columns after ``url``."""
+    columns after ``url``. A table missing from the freeze has no rows,
+    so a stale freeze fails the oracles that read it, not the import."""
     from caraspark import sidetables  # which imports this module
 
     cols = getattr(sidetables, table).schema.names[1:]
-    return values_cte(alias, ["rid", *cols], SIDE_ROWS[table])
+    return values_cte(alias, ["rid", *cols], SIDE_ROWS.get(table, ()))
 
 
 def tables_cte() -> str:

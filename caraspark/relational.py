@@ -4333,42 +4333,39 @@ def events_abtest(spark, sf):
     fixed-width rows.  The integer cross-multiplication holds to ~10^4
     users per cell in BIGINT; beyond that production moves the product
     to DECIMAL(38) — the gate inequality is unchanged."""
-    u = (
-        load(spark, sf, "events")
-        .groupBy("user_id")
-        .agg(
-            (
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                )
-                >= 14
-            )
-            .cast("int")
-            .alias("converted")
-        )
-        .select(
-            (F.col("user_id") % 2).cast("int").alias("variant"),
-            F.expr("CAST((user_id DIV 2) % 5 AS INT)").alias("cohort"),
-            "converted",
-        )
+    return abtest_cells(converted_users(load(spark, sf, "events")))
+
+
+def converted_users(events: DataFrame) -> DataFrame:
+    """``(user_id, converted)`` of an events table: 1 for a user with at
+    least 14 purchase events, else 0."""
+    purchases = F.sum(
+        F.when(F.col("event_type") == "purchase", 1).otherwise(0)
+    )
+    return events.groupBy("user_id").agg(
+        (purchases >= 14).cast("int").alias("converted")
+    )
+
+
+def abtest_cells(users: DataFrame) -> DataFrame:
+    """The per-cohort 2×2 contingency of ``converted_users`` rows —
+    a/b converted/not in variant 0, c/d in variant 1 — with its χ² in
+    centi-units and the integer p<0.05 gate; cohorts with an empty
+    margin are left out."""
+    u = users.select(
+        (F.col("user_id") % 2).cast("int").alias("variant"),
+        F.expr("CAST((user_id DIV 2) % 5 AS INT)").alias("cohort"),
+        "converted",
     )
     cells = u.groupBy("cohort").agg(
-        F.sum(
-            F.when((F.col("variant") == 0) & (F.col("converted") == 1), 1)
-            .otherwise(0)
-        ).cast("bigint").alias("a"),
-        F.sum(
-            F.when((F.col("variant") == 0) & (F.col("converted") == 0), 1)
-            .otherwise(0)
-        ).cast("bigint").alias("b"),
-        F.sum(
-            F.when((F.col("variant") == 1) & (F.col("converted") == 1), 1)
-            .otherwise(0)
-        ).cast("bigint").alias("c"),
-        F.sum(
-            F.when((F.col("variant") == 1) & (F.col("converted") == 0), 1)
-            .otherwise(0)
-        ).cast("bigint").alias("d"),
+        *(
+            F.sum(
+                F.when((F.col("variant") == v) & (F.col("converted") == c), 1)
+                .otherwise(0)
+            ).cast("bigint").alias(name)
+            for name, v, c in
+            (("a", 0, 1), ("b", 0, 0), ("c", 1, 1), ("d", 1, 0))
+        )
     )
     chi_num = F.expr(
         "100 * (a + b + c + d) * (a * d - b * c) * (a * d - b * c)"

@@ -12,9 +12,9 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from caraspark import curation, streaming as S
+from caraspark import curation, multimodal, relational as R, streaming as S
 from caraspark.corpus import html_docs
-from caraspark.relational import Q, registrar
+from caraspark.relational import Q, map_rows, registrar
 
 REGISTRY: dict[str, Q] = {}
 _q = registrar(REGISTRY)
@@ -1000,34 +1000,17 @@ def stream_datacard(spark, sf):
 
 @_q(
     "stream_shots",
-    """WITH vid AS (
-  SELECT vec_id AS media_id,
-         CAST(16 + vec_id % 16 AS BIGINT) * CAST(8 + vec_id % 8 AS BIGINT)
-             AS wh,
-         CAST(4 + vec_id % 6 AS BIGINT) AS nf
-  FROM embeddings WHERE vec_id % 3 = 2
-),
-pair AS (
-  SELECT media_id, wh,
-         CAST(list_aggregate(list_transform(
-             range(0, wh),
-             p -> abs(((f.t * wh + p) * (media_id + 11)) % 256
-                      - (((f.t - 1) * wh + p) * (media_id + 11)) % 256)),
-           'sum') AS BIGINT) AS diff
-  FROM vid, unnest(range(1, nf)) AS f(t)
-)
-SELECT media_id,
+    f"""SELECT media_id,
        CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(sum(CASE WHEN 3 * diff > 256 * wh THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_cuts,
+       CAST(sum(CASE WHEN is_cut THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
        CAST(max(diff) AS BIGINT) AS max_diff
-FROM pair GROUP BY media_id""",
+FROM ({multimodal.REGISTRY["video_shots"].sql}) GROUP BY media_id""",
 )
 def stream_shots(spark, sf):
     """Streaming multimodal monitor: media ids arrive as micro-batches,
     each batch re-derives payloads through the SAME deterministic codec
     and runs the SAME vectorized frame-diff walker the batch census uses
-    (``shot_diff_batches``), and a per-clip stateful aggregation
+    (``multimodal.shot_rows``), and a per-clip stateful aggregation
     maintains the live motion profile (pair count, cut count, peak
     diff) — the ingest-side screen for static/broken clips (n_cuts = 0,
     tiny max_diff) before they reach frame sampling.  Complete mode;
@@ -1036,13 +1019,11 @@ def stream_shots(spark, sf):
     Scale: state is 3 BIGINTs per clip; payloads die inside the Arrow
     stage of their own micro-batch — only (media_id, pair stats) cross
     the stream."""
-    from caraspark.multimodal import _SHOT_DDL, encode_batches, shot_diff_batches
-
     ids = S.replay_embeddings_stream(spark, sf).select(
         F.col("vec_id").alias("media_id")
     )
-    media = ids.mapInPandas(encode_batches, "media_id bigint, payload binary")
-    shots = media.mapInPandas(shot_diff_batches, _SHOT_DDL)
+    media = map_rows(ids, multimodal.media_rows, multimodal.MEDIA)
+    shots = map_rows(media, multimodal.shot_rows, multimodal.SHOTS)
     out = shots.groupBy("media_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.sum(F.when(F.col("is_cut"), 1).otherwise(0))
@@ -1118,32 +1099,8 @@ def stream_mutual_links(spark, sf):
 
 @_q(
     "stream_abtest",
-    """WITH users AS (
-  SELECT user_id,
-         CAST(user_id % 2 AS INT) AS variant,
-         CAST((user_id // 2) % 5 AS INT) AS cohort,
-         CASE WHEN sum(CASE WHEN event_type = 'purchase'
-                       THEN 1 ELSE 0 END) >= 14
-              THEN 1 ELSE 0 END AS converted
-  FROM events GROUP BY user_id
-),
-cells AS (
-  SELECT cohort,
-         CAST(sum(CASE WHEN variant = 0 AND converted = 1
-                       THEN 1 ELSE 0 END) AS BIGINT) AS a,
-         CAST(sum(CASE WHEN variant = 0 AND converted = 0
-                       THEN 1 ELSE 0 END) AS BIGINT) AS b,
-         CAST(sum(CASE WHEN variant = 1 AND converted = 1
-                       THEN 1 ELSE 0 END) AS BIGINT) AS c,
-         CAST(sum(CASE WHEN variant = 1 AND converted = 0
-                       THEN 1 ELSE 0 END) AS BIGINT) AS d
-  FROM users GROUP BY cohort
-)
-SELECT cohort, a, b, c, d,
-       100 * (a + b + c + d) * (a * d - b * c) * (a * d - b * c)
-           > 384 * (a + b) * (c + d) * (a + c) * (b + d) AS significant
-FROM cells
-WHERE (a + b) > 0 AND (c + d) > 0 AND (a + c) > 0 AND (b + d) > 0""",
+    f"""SELECT cohort, a, b, c, d, significant
+FROM ({R.REGISTRY["events_abtest"].sql})""",
 )
 def stream_abtest(spark, sf):
     """Live experiment monitor: the exact cross-multiplied χ²
@@ -1160,53 +1117,10 @@ def stream_abtest(spark, sf):
 
     Scale: state is one counter per user (the contraction), then
     |cohorts| fixed-width cells; events die in their micro-batch."""
-    ev = S.replay_events_stream(spark, sf)
-    users = ev.groupBy("user_id").agg(
-        (
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            )
-            >= 14
-        )
-        .cast("int")
-        .alias("converted")
-    )
+    users = R.converted_users(S.replay_events_stream(spark, sf))
     live = S.run_to_memory(users, mode="complete")
-    cells = live.select(
-        (F.col("user_id") % 2).cast("int").alias("variant"),
-        F.expr("CAST((user_id DIV 2) % 5 AS INT)").alias("cohort"),
-        "converted",
-    ).groupBy("cohort").agg(
-        F.sum(
-            F.when((F.col("variant") == 0) & (F.col("converted") == 1), 1)
-            .otherwise(0)
-        ).cast("bigint").alias("a"),
-        F.sum(
-            F.when((F.col("variant") == 0) & (F.col("converted") == 0), 1)
-            .otherwise(0)
-        ).cast("bigint").alias("b"),
-        F.sum(
-            F.when((F.col("variant") == 1) & (F.col("converted") == 1), 1)
-            .otherwise(0)
-        ).cast("bigint").alias("c"),
-        F.sum(
-            F.when((F.col("variant") == 1) & (F.col("converted") == 0), 1)
-            .otherwise(0)
-        ).cast("bigint").alias("d"),
-    )
-    chi_num = F.expr(
-        "100 * (a + b + c + d) * (a * d - b * c) * (a * d - b * c)"
-    )
-    denom = F.expr("(a + b) * (c + d) * (a + c) * (b + d)")
-    return (
-        cells.filter(
-            (F.expr("a + b") > 0)
-            & (F.expr("c + d") > 0)
-            & (F.expr("a + c") > 0)
-            & (F.expr("b + d") > 0)
-        )
-        .select("cohort", "a", "b", "c", "d",
-                (chi_num > 384 * denom).alias("significant"))
+    return R.abtest_cells(live).select(
+        "cohort", "a", "b", "c", "d", "significant"
     )
 
 

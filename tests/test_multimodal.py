@@ -2,25 +2,57 @@
 
 def test_media_parsers_total_on_truncated_payloads():
     """Hostile/truncated media bytes must classify unknown or be skipped,
-    never raise out of the decode UDFs."""
+    never raise out of the decode UDFs: every row function runs over the
+    same cut and corrupted payloads, and one that reads a body gives rows
+    only where ``decode_media`` gave a body."""
     import random
 
-    from caraspark.multimodal import encode_media, parse_header
+    from caraspark import multimodal as mm
 
-    assert parse_header(b"")["kind"] == "unknown"
-    assert parse_header(b"FIMG")["kind"] == "unknown"
-    assert parse_header(b"FAUD\x00\x01")["kind"] == "unknown"
-    assert parse_header(b"FVID\x00")["kind"] == "unknown"
-    rng = random.Random(9)
+    assert mm.parse_header(b"")["kind"] == "unknown"
+    assert mm.parse_header(b"FIMG")["kind"] == "unknown"
+    assert mm.parse_header(b"FAUD\x00\x01")["kind"] == "unknown"
+    assert mm.parse_header(b"FVID\x00")["kind"] == "unknown"
+    body_rows = (mm.feature_rows, mm.resize_rows, mm.frame_rows,
+                 mm.ahash_rows, mm.energy_rows, mm.shot_rows)
+    # encode → decode round trip, every kind
+    for mid in range(6):
+        p, full = mm.media_params(mid), mm.encode_media(mid)
+        fmt = mm._FORMATS[p["kind"]]
+        kind, header, body = mm.decode_media(full)
+        assert (kind, header) == (p["kind"], {f: p[f] for f in fmt.fields})
+        assert body.shape == tuple(p[d] for d in fmt.shape)
+        assert fmt.magic + fmt.layout.pack(*header.values()) \
+            + body.tobytes() == full
+        assert mm.meta_rows(mid, full)[0]["kind"] == kind
+        assert [f for f in body_rows if list(f(mid, full))]
+    # cut and corrupted payloads, and headers with a zero dimension
+    rng, payloads = random.Random(9), []
     for mid in range(12):
-        full = encode_media(mid)
+        full = mm.encode_media(mid)
         for _ in range(40):
-            cut = rng.randrange(len(full) + 1)
+            cut = rng.choice([len(full), rng.randrange(len(full) + 1)])
             b = bytearray(full[:cut])
             if b and rng.random() < 0.5:
                 b[rng.randrange(len(b))] = rng.randrange(256)
-            r = parse_header(bytes(b))
-            assert r["kind"] in ("image", "audio", "video", "unknown")
+            if rng.random() < 0.2:  # another kind's magic on this body
+                b[:4] = rng.choice([f.magic for f in mm._FORMATS.values()])
+            payloads.append((mid, bytes(b)))
+    for f in mm._FORMATS.values():
+        for j in range(len(f.fields)):
+            dims = (0 if i == j else 3 for i in range(len(f.fields)))
+            payloads.append((0, f.magic + f.layout.pack(*dims) + bytes(64)))
+    n_bodies = 0
+    for mid, b in payloads:
+        r = mm.parse_header(b)
+        assert r["kind"] in ("image", "audio", "video", "unknown")
+        assert list(mm.meta_rows(mid, b))[0]["n_bytes"] == len(b)
+        _, _, body = mm.decode_media(b)
+        n_bodies += body is not None
+        for f in body_rows:
+            rows = list(f(mid, b))
+            assert body is not None or not rows, f.__name__
+    assert n_bodies > 40
 
 
 def test_media_shard_layout_budget_and_contiguity(spark, sf_smoke):

@@ -146,3 +146,29 @@ def test_oracle_corpus_size_matches_the_spark_corpus(sf_smoke):
             n, last = con.execute(sql).fetchone()
         want = corpus_rows_for_sf(sf_dir)
         assert (n, last) == (want, want - 1), sf_dir
+
+
+def test_a_stale_freeze_fails_its_oracles_not_the_import(monkeypatch):
+    # A side table missing from pdfacts_expected.py, or frozen before it
+    # gained a column, must not raise while the oracles are built: the
+    # pack's import would fail, its qkeys drop out, and
+    # tools/gen_pdfacts_expected.py (which imports it) could not
+    # regenerate the freeze. DuckDB rejects the stale CTE instead, so
+    # only the oracles that read it fail parity.
+    import duckdb
+
+    from caraspark import oracle_freeze
+
+    stale = dict(oracle_freeze.SIDE_ROWS)
+    del stale["ANNOTS"]
+    stale["FONTS"] = [r[:-1] for r in stale["FONTS"]]
+    assert stale["FONTS"]
+    monkeypatch.setattr(oracle_freeze, "SIDE_ROWS", stale)
+    con = duckdb.connect()
+    for table in ("ANNOTS", "FONTS"):
+        cte = oracle_freeze.frozen_cte("t", table)
+        with pytest.raises(duckdb.Error):
+            con.execute(f"WITH {cte} SELECT * FROM t")
+    cte = oracle_freeze.frozen_cte("t", "PAGES")
+    rows = con.execute(f"WITH {cte} SELECT * FROM t").fetchall()
+    assert len(rows) == len(stale["PAGES"])
