@@ -4101,7 +4101,15 @@ def sitemap_entries(spark, sf):
     with sequence+transform and PARSED back with parse_sitemap — the
     oracle generates the expected rows closed-form, so the whole
     regex-parse chain is pinned end-to-end."""
-    docs = load(spark, sf, "documents")
+    return parse_sitemap(sitemap_docs(load(spark, sf, "documents")))
+
+
+def sitemap_docs(docs: DataFrame) -> DataFrame:
+    """The (url, xml) sitemap document of each ``doc_id`` in ``docs``:
+    every fourth a <sitemapindex> of doc_id % 3 + 2 child sitemaps, the
+    rest a <urlset> of as many urls, each <loc> padded and every even
+    entry carrying a <lastmod>. Stateless, so it builds the batch
+    ``sitemap_entries`` and the streamed ``stream_sitemap`` alike."""
     did = F.col("doc_id")
     kind = F.when(did % 4 == 0, F.lit("sitemap")).otherwise(F.lit("url"))
     n = (did % 3 + 2).cast("int")
@@ -4138,8 +4146,7 @@ def sitemap_entries(spark, sf):
         F.concat_ws("", F.transform(F.sequence(F.lit(0), n - 1), entry)),
         F.lit("</"), root, F.lit(">"),
     )
-    raw = docs.select(did.cast("string").alias("url"), xml.alias("xml"))
-    return parse_sitemap(raw)
+    return docs.select(did.cast("string").alias("url"), xml.alias("xml"))
 
 
 def _robots_sitemaps_sql() -> str:
@@ -4299,7 +4306,14 @@ def feed_entries(spark, sf):
     NULL path); even RSS titles arrive CDATA-wrapped and must unwrap.
     The XML is BUILT with sequence+transform and PARSED back with
     parse_feed, so the whole chain is pinned against the generator."""
-    docs = load(spark, sf, "documents")
+    return parse_feed(feed_docs(load(spark, sf, "documents")))
+
+
+def feed_docs(docs: DataFrame) -> DataFrame:
+    """The (url, xml) feed document of each ``doc_id`` in ``docs``: every
+    third an Atom feed, the rest RSS, with doc_id % 4 + 1 entries.
+    Stateless, so it builds the batch ``feed_entries`` and the streamed
+    ``stream_feed`` alike."""
     did = F.col("doc_id")
     is_atom = did % 3 == 0
     n = (did % 4 + 1).cast("int")
@@ -4354,8 +4368,7 @@ def feed_entries(spark, sf):
             body, F.lit("</channel></rss>"),
         )
     )
-    raw = docs.select(did.cast("string").alias("url"), xml.alias("xml"))
-    return parse_feed(raw)
+    return docs.select(did.cast("string").alias("url"), xml.alias("xml"))
 
 
 def _schedule_sql() -> str:
@@ -5581,7 +5594,16 @@ def crawl_validators(spark, sf):
     max-age values including 0 (max_age extracts but the hint is
     'revalidate now'). The oracle derives validator class, max_age,
     and the conditional-refetch flag arithmetically."""
-    d = load(spark, sf, "documents")
+    return classify_validators(
+        validator_pages(load(spark, sf, "documents"))
+    ).select("doc_id", "validator", "max_age", "conditional_ok")
+
+
+def validator_pages(docs: DataFrame) -> DataFrame:
+    """The (doc_id, etag, last_modified, cache_control) response headers
+    of each ``doc_id`` in ``docs``, by residue. Stateless, so it builds
+    the batch ``crawl_validators`` and the streamed ``stream_validators``
+    alike."""
     did = F.col("doc_id")
     etag = (
         F.when(did % 3 == 0,
@@ -5598,12 +5620,9 @@ def crawl_validators(spark, sf):
         F.concat(F.lit("public, max-age="),
                  (3600 * (did % 24)).cast("string")),
     ).otherwise(F.lit(None).cast("string"))
-    pages = d.select(
+    return docs.select(
         "doc_id", etag.alias("etag"), lastmod.alias("last_modified"),
         cc.alias("cache_control"),
-    )
-    return classify_validators(pages).select(
-        "doc_id", "validator", "max_age", "conditional_ok"
     )
 
 

@@ -59,18 +59,22 @@ def sql_lit(v) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
-def values_cte(name: str, cols: list[str], rows) -> str:
+def values_cte(name: str, cols: list[str], rows, table: str = "") -> str:
     """``name (c1, c2, …) AS (VALUES (…), …)`` from dicts (their ``cols``)
-    or tuples, written as stored: a stale freeze whose tuples are shorter
-    than ``cols`` fails when DuckDB runs the CTE, not here."""
-    body = ",\n    ".join(
-        "("
-        + ", ".join(
-            map(sql_lit, (r[c] for c in cols) if isinstance(r, dict) else r)
-        )
-        + ")"
+    or tuples. A stale freeze — no rows, or tuples narrower or wider than
+    ``cols`` — gives a CTE over a table named for the mismatch: DuckDB
+    fails it, naming ``table`` (default ``name``), when it binds the
+    query, and the import does not fail."""
+    rows = [
+        tuple(r[c] for c in cols) if isinstance(r, dict) else tuple(r)
         for r in rows
-    )
+    ]
+    widths = sorted({len(r) for r in rows})
+    if widths != [len(cols)]:
+        why = (f"stale freeze: {table or name} has {len(cols)} columns, "
+               f"rows of width {widths}")
+        return f'{name} ({", ".join(cols)}) AS (SELECT * FROM "{why}")'
+    body = ",\n    ".join("(" + ", ".join(map(sql_lit, r)) + ")" for r in rows)
     return f"{name} ({', '.join(cols)}) AS (VALUES\n    {body})"
 
 
@@ -155,7 +159,7 @@ def frozen_cte(alias: str, table: str) -> str:
     from caraspark import sidetables  # which imports this module
 
     cols = getattr(sidetables, table).schema.names[1:]
-    return values_cte(alias, ["rid", *cols], SIDE_ROWS.get(table, ()))
+    return values_cte(alias, ["rid", *cols], SIDE_ROWS.get(table, ()), table)
 
 
 def tables_cte() -> str:

@@ -3,6 +3,9 @@ query to completion (memory sink, processAllAvailable) and returns the
 result. Every key has DuckDB oracle SQL: its batch-equivalent result,
 written relationally where the streaming operator has no SQL twin (a
 session window as gaps-and-islands, a stateful fold as its final state).
+A stream twin of a batch key builds its input with the batch key's own
+builder (``curation.sitemap_docs``, ``feed_docs``, ``validator_pages``,
+``quality_features``), and its oracle aggregates the batch key's oracle.
 The per-surface rollups over in-stream extraction are one ``_Rollup`` row
 each, built by ``_rollup``."""
 
@@ -565,29 +568,14 @@ for _name, _r in _ROLLUPS.items():
 
 @_q(
     "stream_quality",
-    f"""WITH f AS (
-  SELECT doc_id, lang,
-         len(string_split(text,' ')) AS n_tok,
-         len(list_filter(string_split(lower(text),' '),
-             x -> list_contains(['the','a','of','and','to','in','is','on','for','it'], x))) AS stop_cnt,
-         length(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit,
-         length(regexp_replace(text, '[^A-Z]', '', 'g')) AS n_upper,
-         len(list_filter(string_split(text,' '), x -> length(x) > 12)) AS n_long,
-         length(text) AS l
-  FROM documents WHERE length(text) > 0
-),
-s AS (
-  SELECT lang,
-         6*(stop_cnt*1000 // n_tok) - 4*(n_digit*1000 // l)
-         - 3*(n_upper*1000 // l) - 40*n_long + n_tok AS score
-  FROM f
-)
-SELECT lang, score >= {curation._QL_THRESH} AS keep,
+    f"""SELECT d.lang, q.keep,
        CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(score) AS BIGINT) AS score_sum,
-       CAST(min(score) AS BIGINT) AS score_min,
-       CAST(max(score) AS BIGINT) AS score_max
-FROM s GROUP BY lang, keep""",
+       CAST(sum(q.score) AS BIGINT) AS score_sum,
+       CAST(min(q.score) AS BIGINT) AS score_min,
+       CAST(max(q.score) AS BIGINT) AS score_max
+FROM ({curation.REGISTRY["quality_logit"].sql}) q
+JOIN documents d ON d.doc_id = q.doc_id
+GROUP BY d.lang, q.keep""",
 )
 def stream_quality(spark, sf):
     """Streaming quality-filter monitor: documents arrive as file-source
@@ -595,10 +583,10 @@ def stream_quality(spark, sf):
     statelessly (the same column expressions — ``quality_features`` is
     shared code, not a re-implementation), and a stateful aggregation
     keyed by (lang, keep) maintains the running accept/reject mix a
-    production ingest pipeline alarms on (complete mode).  DuckDB
-    predicts every row closed-form from the batch-equivalent SQL —
-    streaming a stateless projection then folding commutative aggregates
-    is order-insensitive by construction.
+    production ingest pipeline alarms on (complete mode).  The oracle
+    folds ``quality_logit``'s oracle by (lang, keep) — streaming a
+    stateless projection then folding commutative aggregates is
+    order-insensitive by construction.
 
     Scale: state is |langs|×2 fixed-width rows; the shuffle carries
     (lang, bool, BIGINT) partial aggregates only — documents never leave
@@ -617,59 +605,22 @@ def stream_quality(spark, sf):
 
 @_q(
     "stream_sitemap",
-    """WITH m AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 4 = 0 THEN 'sitemap' ELSE 'url' END AS kind,
-         doc_id % 3 + 2 AS n
-  FROM documents
-)
-SELECT kind, CAST(sum(n) AS BIGINT) AS n_entries,
-       CAST(count(*) AS BIGINT) AS n_sitemaps
-FROM m GROUP BY kind""",
+    f"""SELECT kind, CAST(count(*) AS BIGINT) AS n_entries,
+       CAST(sum(CASE WHEN pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_sitemaps
+FROM ({curation.REGISTRY["sitemap_entries"].sql}) GROUP BY kind""",
 )
 def stream_sitemap(spark, sf):
     """Streaming sitemap-ingest monitor: sitemap documents arrive as
-    micro-batches (the sitemap_entries class matrix — every fourth doc a
-    recursive <sitemapindex>), parsed IN-STREAM by the same scan-stage
-    regex chain the batch path uses, rolled up to live per-kind entry
-    and document counts — the queue-depth view a crawl planner watches
-    while sitemap discovery is running. Complete mode, two fixed-width
-    state rows."""
-    from caraspark.curation import parse_sitemap
-
-    docs = S.replay_documents_stream(spark, sf)
-    did = F.col("doc_id")
-    kind = F.when(did % 4 == 0, F.lit("sitemap")).otherwise(F.lit("url"))
-    n = (did % 3 + 2).cast("int")
-    site = F.concat(F.lit("https://site"), (did % 5).cast("string"),
-                    F.lit(".example/"))
-
-    def entry(j):
-        loc = F.when(
-            kind == "url",
-            F.concat(site, F.lit("u"), did.cast("string"), F.lit("/"),
-                     j.cast("string")),
-        ).otherwise(
-            F.concat(site, F.lit("sm"), did.cast("string"), F.lit("_"),
-                     j.cast("string"), F.lit(".xml"))
-        )
-        tag = F.when(kind == "url", F.lit("url")).otherwise(F.lit("sitemap"))
-        return F.concat(F.lit("<"), tag, F.lit("><loc>"), loc,
-                        F.lit("</loc></"), tag, F.lit(">"))
-
-    root = F.when(kind == "sitemap", F.lit("sitemapindex")).otherwise(
-        F.lit("urlset")
-    )
-    xml = F.concat(
-        F.lit("<"), root, F.lit(">"),
-        F.concat_ws("", F.transform(F.sequence(F.lit(0), n - 1), entry)),
-        F.lit("</"), root, F.lit(">"),
-    )
-    raw = docs.select(did.cast("string").alias("url"), xml.alias("xml"))
-    entries = parse_sitemap(raw)
+    micro-batches (``curation.sitemap_docs``, the sitemap_entries class
+    matrix — every fourth doc a recursive <sitemapindex>), parsed
+    IN-STREAM by the same scan-stage regex chain the batch path uses,
+    rolled up to live per-kind entry and document counts — the
+    queue-depth view a crawl planner watches while sitemap discovery is
+    running. Complete mode, two fixed-width state rows."""
+    raw = curation.sitemap_docs(S.replay_documents_stream(spark, sf))
     # streaming forbids COUNT(DISTINCT): count each sitemap once via its
     # pos=0 entry instead (every doc in the matrix has >= 2 entries)
-    out = entries.groupBy("kind").agg(
+    out = curation.parse_sitemap(raw).groupBy("kind").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_entries"),
         F.sum(F.when(F.col("pos") == 0, 1).otherwise(0))
         .cast("bigint")
@@ -680,49 +631,18 @@ def stream_sitemap(spark, sf):
 
 @_q(
     "stream_feed",
-    """WITH m AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0 THEN 'atom' ELSE 'rss' END AS kind,
-         doc_id % 4 + 1 AS n
-  FROM documents
-)
-SELECT kind, CAST(sum(n) AS BIGINT) AS n_entries,
-       CAST(count(*) AS BIGINT) AS n_feeds
-FROM m GROUP BY kind""",
+    f"""SELECT kind, CAST(count(*) AS BIGINT) AS n_entries,
+       CAST(sum(CASE WHEN pos = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_feeds
+FROM ({curation.REGISTRY["feed_entries"].sql}) GROUP BY kind""",
 )
 def stream_feed(spark, sf):
     """Streaming feed-ingest monitor: RSS/Atom documents arrive as
-    micro-batches (the feed_entries class matrix), parsed IN-STREAM by
-    the batch parse_feed chain, rolled up to live per-kind entry and
-    feed counts (pos=0 counting, the stream_sitemap stance). Complete
-    mode, two fixed-width state rows."""
-    from caraspark.curation import parse_feed
-
-    docs = S.replay_documents_stream(spark, sf)
-    did = F.col("doc_id")
-    is_atom = did % 3 == 0
-    n = (did % 4 + 1).cast("int")
-
-    def entry(j):
-        return F.when(
-            is_atom,
-            F.concat(F.lit("<entry><title>p"), j.cast("string"),
-                     F.lit("</title><link href='/"), j.cast("string"),
-                     F.lit("'/></entry>")),
-        ).otherwise(
-            F.concat(F.lit("<item><title>p"), j.cast("string"),
-                     F.lit("</title><link>/"), j.cast("string"),
-                     F.lit("</link></item>")),
-        )
-
-    body = F.concat_ws("", F.transform(F.sequence(F.lit(0), n - 1), entry))
-    xml = F.when(
-        is_atom, F.concat(F.lit("<feed>"), body, F.lit("</feed>"))
-    ).otherwise(
-        F.concat(F.lit("<rss><channel>"), body, F.lit("</channel></rss>"))
-    )
-    raw = docs.select(did.cast("string").alias("url"), xml.alias("xml"))
-    out = parse_feed(raw).groupBy("kind").agg(
+    micro-batches (``curation.feed_docs``, the feed_entries class
+    matrix), parsed IN-STREAM by the batch parse_feed chain, rolled up
+    to live per-kind entry and feed counts (pos=0 counting, the
+    stream_sitemap stance). Complete mode, two fixed-width state rows."""
+    raw = curation.feed_docs(S.replay_documents_stream(spark, sf))
+    out = curation.parse_feed(raw).groupBy("kind").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_entries"),
         F.sum(F.when(F.col("pos") == 0, 1).otherwise(0))
         .cast("bigint")
@@ -791,43 +711,20 @@ def stream_revisit(spark, sf):
 
 @_q(
     "stream_validators",
-    """SELECT CASE WHEN doc_id % 3 = 0 THEN 'etag'
-            WHEN doc_id % 3 = 1 THEN 'weak_etag'
-            WHEN doc_id % 4 = 0 THEN 'last_modified'
-            ELSE 'none' END AS validator,
-       CAST(count(*) AS BIGINT) AS n
-FROM documents
-GROUP BY 1""",
+    f"""SELECT validator, CAST(count(*) AS BIGINT) AS n
+FROM ({curation.REGISTRY["crawl_validators"].sql}) GROUP BY validator""",
 )
 def stream_validators(spark, sf):
     """Live cache-validator census over the crawl ingest stream: every
     arriving fetch classifies by the strongest revalidation signal its
-    origin offers (same residue synthesis as the batch
-    ``crawl_validators``), aggregated to per-class counts — the
+    origin offers (the batch ``crawl_validators``' headers,
+    ``curation.validator_pages``), aggregated to per-class counts — the
     dashboard number that says what fraction of the refetch budget can
     go conditional. Complete mode, ≤4 fixed state rows; classification
     is scan-stage JVM so the only state is the tiny census itself."""
-    from caraspark.curation import classify_validators
-
-    docs = S.replay_documents_stream(spark, sf)
-    did = F.col("doc_id")
-    etag = (
-        F.when(did % 3 == 0,
-               F.concat(F.lit('"v'), did.cast("string"), F.lit('"')))
-        .when(did % 3 == 1,
-              F.concat(F.lit('W/"v'), did.cast("string"), F.lit('"')))
-        .otherwise(F.lit(None).cast("string"))
-    )
-    lastmod = F.when(
-        did % 4 == 0, F.lit("Tue, 01 Jan 2024 00:00:00 GMT")
-    ).otherwise(F.lit(None).cast("string"))
-    fetches = docs.select(
-        etag.alias("etag"),
-        lastmod.alias("last_modified"),
-        F.lit(None).cast("string").alias("cache_control"),
-    )
+    pages = curation.validator_pages(S.replay_documents_stream(spark, sf))
     out = (
-        classify_validators(fetches)
+        curation.classify_validators(pages)
         .groupBy("validator")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -968,12 +865,8 @@ def stream_content_ops(spark, sf):
 
 @_q(
     "stream_datacard",
-    """SELECT lang,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS n_chars,
-       CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT) AS n_tokens
-FROM documents WHERE length(text) > 0
-GROUP BY lang""",
+    f"""SELECT lang, n_docs, n_chars, n_tokens
+FROM ({curation.REGISTRY["corpus_datacard"].sql})""",
 )
 def stream_datacard(spark, sf):
     """Streaming data-card monitor: the per-language release census
@@ -981,8 +874,8 @@ def stream_datacard(spark, sf):
     — the ingest dashboard a curation pipeline alarms on (a language's
     share drifting mid-crawl is the classic upstream-change symptom),
     converging to exactly the batch card's totals (`corpus_datacard`'s
-    census columns).  Complete mode; DuckDB predicts every row from the
-    same table the stream replays.
+    census columns).  Complete mode; the oracle reads those columns off
+    ``corpus_datacard``'s oracle.
 
     Scale: |langs| fixed-width state rows; each micro-batch contributes
     (lang, three BIGINTs) partials — token counting is a stateless

@@ -949,6 +949,63 @@ def _cos_sql(a: str, b: str) -> str:
     )
 
 
+def _l2_sql(a: str, b: str) -> str:
+    return (
+        f"list_aggregate(list_transform(list_zip({a}, {b}), "
+        f"p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * "
+        f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))), 'sum')"
+    )
+
+
+def _sum(arr):
+    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _dot(x, y):
+    """x · y in double, element by element — ``_dot_sql``'s arithmetic."""
+    return _sum(
+        F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double"))
+    )
+
+
+def _cos(x, y):
+    return _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
+
+
+def _l2(x, y):
+    """Squared L2 distance in double — ``_l2_sql``'s arithmetic."""
+    return _sum(F.zip_with(
+        x, y,
+        lambda a, b: (a.cast("double") - b.cast("double"))
+        * (a.cast("double") - b.cast("double")),
+    ))
+
+
+def _queries(e, *cols) -> DataFrame:
+    """The query set (q_id, qv, *cols): vec_id < _NQ."""
+    return e.filter(F.col("vec_id") < _NQ).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"), *cols
+    )
+
+
+def _corpus(e, *cols) -> DataFrame:
+    """The searched side (n_id, nv, *cols): every vector."""
+    return e.select(
+        F.col("vec_id").alias("n_id"), F.col("embedding").alias("nv"), *cols
+    )
+
+
+def _topk(scored: DataFrame, score, first: int = _TOPK) -> DataFrame:
+    """The ``first`` rows per q_id by ``score`` (an ordering), ties on the
+    lowest n_id — the oracle's row_number window."""
+    w = W.partitionBy("q_id").orderBy(score, F.asc("n_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= first)
+        .drop("rn")
+    )
+
+
 @_q(
     "ann_brute",
     f"""SELECT q_id, n_id, cos FROM (
@@ -968,31 +1025,11 @@ def ann_brute(spark, sf):
     top-k window. At 100 TB the pattern is identical: queries broadcast,
     corpus never shuffles."""
     e = load(spark, sf, "embeddings")
-    q = e.filter(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
+    j = _corpus(e).join(
+        F.broadcast(_queries(e)), F.col("n_id") != F.col("q_id")
     )
-    n = e.select(F.col("vec_id").alias("n_id"), F.col("embedding").alias("nv"))
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    j = n.join(F.broadcast(q), F.col("n_id") != F.col("q_id"))
-    cos = F.round(
-        dot(F.col("qv"), F.col("nv"))
-        / (F.sqrt(dot(F.col("qv"), F.col("qv"))) * F.sqrt(dot(F.col("nv"), F.col("nv")))),
-        6,
-    )
-    scored = j.select("q_id", "n_id", cos.alias("cos"))
-    w = W.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOPK)
-        .select("q_id", "n_id", "cos")
-    )
+    cos = F.round(_cos(F.col("qv"), F.col("nv")), 6)
+    return _topk(j.select("q_id", "n_id", cos.alias("cos")), F.desc("cos"))
 
 
 _N_PLANES = 8
@@ -1012,13 +1049,24 @@ def _planes(n: int = None) -> list[list[float]]:
     return planes
 
 
-def _lsh_sql() -> str:
-    planes = _planes()
+def _sign_bits(n: int):
+    """The n-bit hyperplane signature of ``embedding``: bit j is '1' iff
+    embedding · plane j >= 0."""
+    return F.concat(*[
+        F.when(_dot(F.col("embedding"), F.array(*map(F.lit, p))) >= 0, "1")
+        .otherwise("0")
+        for p in _planes(n)
+    ])
+
+
+def _sign_bits_sql(n: int) -> str:
+    """CTEs ending in ``sig(vec_id, bits)``: ``_sign_bits(n)`` in SQL."""
     rows = ",".join(
-        f"({j},{d},{w:.1f})" for j, p in enumerate(planes) for d, w in enumerate(p)
+        f"({j},{d},{w:.1f})"
+        for j, p in enumerate(_planes(n))
+        for d, w in enumerate(p)
     )
-    return f"""
-WITH planes(j, d, w) AS (VALUES {rows}),
+    return f"""planes(j, d, w) AS (VALUES {rows}),
 comps AS (
   SELECT vec_id, u.x AS x, u.d AS d
   FROM embeddings,
@@ -1030,15 +1078,20 @@ dots AS (
   FROM comps c JOIN planes p ON p.d = c.d - 1
   GROUP BY c.vec_id, p.j
 ),
-bits AS (
+sig AS (
   SELECT vec_id,
          string_agg(CASE WHEN dp >= 0 THEN '1' ELSE '0' END, '' ORDER BY j)
-           AS bucket
+           AS bits
   FROM dots GROUP BY vec_id
-)
-SELECT bucket, CAST(count(*) AS BIGINT) AS n_vecs,
+)"""
+
+
+def _lsh_sql() -> str:
+    return f"""
+WITH {_sign_bits_sql(_N_PLANES)}
+SELECT bits AS bucket, CAST(count(*) AS BIGINT) AS n_vecs,
        CAST(min(vec_id) AS BIGINT) AS min_vec
-FROM bits GROUP BY bucket
+FROM sig GROUP BY bits
 """
 
 
@@ -1050,24 +1103,7 @@ def ann_lsh(spark, sf):
     bucket-count groupBy. The scale path for ANN: candidates come from a
     bucket equi-join instead of the all-pairs cross join."""
     e = load(spark, sf, "embeddings")
-    planes = _planes()
-
-    def dot_plane(p: list[float]):
-        arr = F.array(*[F.lit(w) for w in p])
-        return F.aggregate(
-            F.zip_with(
-                F.col("embedding"), arr, lambda a, b: a.cast("double") * b
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    bits = [
-        F.when(dot_plane(p) >= 0, "1").otherwise("0") for p in planes
-    ]
-    bucketed = e.select(
-        "vec_id", F.concat(*bits).alias("bucket")
-    )
+    bucketed = e.select("vec_id", _sign_bits(_N_PLANES).alias("bucket"))
     return bucketed.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.min("vec_id").alias("min_vec"),
@@ -1078,34 +1114,42 @@ _NPROBE = 2
 _IVF_MOD = 97  # centroid sample: vec_id % 97 == 0 (deterministic coarse quantizer)
 
 
-def _ivf_sql() -> str:
+def _ivf_lists_sql() -> str:
+    """CTEs ending in ``probes(q_id, c_id)`` — each query's _NPROBE
+    nearest lists — and ``lists(n_id, c_id)`` — each vector's list."""
     cos_ec = _cos_sql("e.embedding", "c.cv")
-    cos_pl = _cos_sql("p.qv", "l.nv")
-    return f"""
-WITH cents AS (
+    return f"""cents AS (
   SELECT vec_id AS c_id, embedding AS cv FROM embeddings
   WHERE vec_id % {_IVF_MOD} = 0
 ),
 assign AS (
-  SELECT e.vec_id, e.embedding, c.c_id,
+  SELECT e.vec_id, c.c_id,
          row_number() OVER (
            PARTITION BY e.vec_id
            ORDER BY round({cos_ec}, 6) DESC, c.c_id) AS rn
   FROM embeddings e CROSS JOIN cents c
 ),
 probes AS (
-  SELECT vec_id AS q_id, embedding AS qv, c_id FROM assign
+  SELECT vec_id AS q_id, c_id FROM assign
   WHERE vec_id < {_NQ} AND rn <= {_NPROBE}
 ),
 lists AS (
-  SELECT vec_id AS n_id, embedding AS nv, c_id FROM assign WHERE rn = 1
-),
+  SELECT vec_id AS n_id, c_id FROM assign WHERE rn = 1
+)"""
+
+
+def _ivf_sql() -> str:
+    cos_qn = _cos_sql("qe.embedding", "ne.embedding")
+    return f"""
+WITH {_ivf_lists_sql()},
 scored AS (
-  SELECT p.q_id, l.n_id, round({cos_pl}, 6) AS cos,
+  SELECT p.q_id, l.n_id, round({cos_qn}, 6) AS cos,
          row_number() OVER (
            PARTITION BY p.q_id
-           ORDER BY round({cos_pl}, 6) DESC, l.n_id) AS rn
+           ORDER BY round({cos_qn}, 6) DESC, l.n_id) AS rn
   FROM probes p JOIN lists l ON l.c_id = p.c_id AND l.n_id <> p.q_id
+  JOIN embeddings qe ON qe.vec_id = p.q_id
+  JOIN embeddings ne ON ne.vec_id = l.n_id
 )
 SELECT q_id, n_id, cos FROM scored WHERE rn <= {_TOPK}
 """
@@ -1152,6 +1196,19 @@ def ivf_quantizer_udfs(spark, centroids, c_ids, nprobe: int = _NPROBE):
     return assign, probe
 
 
+def _ivf_quantizer(spark, e):
+    """(assign, probe) over the sampled coarse quantizer, collected to the
+    driver (small by construction)."""
+    rows = (
+        e.filter(F.col("vec_id") % _IVF_MOD == 0)
+        .select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv"))
+        .collect()
+    )
+    return ivf_quantizer_udfs(
+        spark, [r["cv"] for r in rows], [r["c_id"] for r in rows]
+    )
+
+
 @_q("ann_ivf", _ivf_sql())
 def ann_ivf(spark, sf):
     """IVF-style ANN: a deterministic sampled coarse quantizer (vec_id %
@@ -1168,55 +1225,17 @@ def ann_ivf(spark, sf):
     the whole plan is the final tiny top-k. At 10^12 vectors the
     per-query work is |corpus|/K * nprobe instead of |corpus|."""
     e = load(spark, sf, "embeddings")
-    cent_rows = (
-        e.filter(F.col("vec_id") % _IVF_MOD == 0)
-        .select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv"))
-        .collect()
-    )
-    assign_udf, probe_udf = ivf_quantizer_udfs(
-        spark,
-        [r["cv"] for r in cent_rows],
-        [r["c_id"] for r in cent_rows],
-    )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def cosine(x, y):
-        return F.round(
-            dot(x, y) / (F.sqrt(dot(x, x)) * F.sqrt(dot(y, y))), 6
-        )
-
-    lists = e.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("nv"),
-        assign_udf(F.col("embedding")).alias("c_id"),
-    )
-    probes = (
-        e.filter(F.col("vec_id") < _NQ)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qv"),
-            F.explode(probe_udf(F.col("embedding"))).alias("pc_id"),
-        )
+    assign_udf, probe_udf = _ivf_quantizer(spark, e)
+    lists = _corpus(e, assign_udf(F.col("embedding")).alias("c_id"))
+    probes = _queries(
+        e, F.explode(probe_udf(F.col("embedding"))).alias("pc_id")
     )
     cands = lists.join(
         F.broadcast(probes),
         (F.col("c_id") == F.col("pc_id")) & (F.col("n_id") != F.col("q_id")),
     )
-    scored = cands.select(
-        "q_id", "n_id", cosine(F.col("qv"), F.col("nv")).alias("cos")
-    )
-    wk = W.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= _TOPK)
-        .select("q_id", "n_id", "cos")
-    )
+    cos = F.round(_cos(F.col("qv"), F.col("nv")), 6)
+    return _topk(cands.select("q_id", "n_id", cos.alias("cos")), F.desc("cos"))
 
 
 @_q(
@@ -1239,20 +1258,9 @@ def dedup_embed(spark, sf):
         F.col("vec_id").alias("id_b"),
         F.col("embedding").alias("vb"),
     )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    cos = dot(F.col("va"), F.col("vb")) / (
-        F.sqrt(dot(F.col("va"), F.col("va"))) * F.sqrt(dot(F.col("vb"), F.col("vb")))
-    )
     return (
         a.join(b, (a.label == b.label_b) & (a.id_a < b.id_b))
-        .withColumn("cos_raw", cos)
+        .withColumn("cos_raw", _cos(F.col("va"), F.col("vb")))
         .filter(F.col("cos_raw") >= 0.35)
         .select("label", "id_a", "id_b", F.round("cos_raw", 6).alias("cos"))
     )
@@ -1263,33 +1271,9 @@ _EMB_BITS_PER_BAND = 4  # signature bits per table
 
 
 def _embed_lsh_sql() -> str:
-    nplanes = _EMB_BANDS * _EMB_BITS_PER_BAND
-    planes = _planes(nplanes)
-    rows = ",".join(
-        f"({j},{d},{w:.1f})"
-        for j, p in enumerate(planes)
-        for d, w in enumerate(p)
-    )
     cos = _cos_sql("ea.embedding", "eb.embedding")
     return f"""
-WITH planes(j, d, w) AS (VALUES {rows}),
-comps AS (
-  SELECT vec_id, u.x AS x, u.d AS d
-  FROM embeddings,
-       LATERAL (SELECT unnest(embedding) AS x,
-                       generate_subscripts(embedding, 1) AS d) u
-),
-dots AS (
-  SELECT c.vec_id, p.j, sum(CAST(c.x AS DOUBLE) * p.w) AS dp
-  FROM comps c JOIN planes p ON p.d = c.d - 1
-  GROUP BY c.vec_id, p.j
-),
-sig AS (
-  SELECT vec_id,
-         string_agg(CASE WHEN dp >= 0 THEN '1' ELSE '0' END, '' ORDER BY j)
-           AS bits
-  FROM dots GROUP BY vec_id
-),
+WITH {_sign_bits_sql(_EMB_BANDS * _EMB_BITS_PER_BAND)},
 bands AS (
   SELECT vec_id, t.b AS band_id,
          substring(bits, t.b * {_EMB_BITS_PER_BAND} + 1,
@@ -1320,20 +1304,9 @@ def dedup_embed_lsh(spark, sf):
     are data-independent md5 constants, so the oracle rebuilds the
     identical signatures."""
     e = load(spark, sf, "embeddings")
-    planes = _planes(_EMB_BANDS * _EMB_BITS_PER_BAND)
-
-    def dot_plane(p):
-        arr = F.array(*[F.lit(w) for w in p])
-        return F.aggregate(
-            F.zip_with(
-                F.col("embedding"), arr, lambda a, b: a.cast("double") * b
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    bits = [F.when(dot_plane(p) >= 0, "1").otherwise("0") for p in planes]
-    sig = e.select("vec_id", F.concat(*bits).alias("bits"))
+    sig = e.select(
+        "vec_id", _sign_bits(_EMB_BANDS * _EMB_BITS_PER_BAND).alias("bits")
+    )
     bands = sig.select(
         "vec_id",
         F.explode(
@@ -1361,24 +1334,12 @@ def dedup_embed_lsh(spark, sf):
         .select("id_a", "id_b")
         .distinct()
     )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     ea = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     eb = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    cos = dot(F.col("va"), F.col("vb")) / (
-        F.sqrt(dot(F.col("va"), F.col("va")))
-        * F.sqrt(dot(F.col("vb"), F.col("vb")))
-    )
     return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
-        .withColumn("cos_raw", cos)
+        .withColumn("cos_raw", _cos(F.col("va"), F.col("vb")))
         .filter(F.col("cos_raw") >= 0.35)
         .select("id_a", "id_b", F.round("cos_raw", 6).alias("cos"))
     )
@@ -1717,18 +1678,12 @@ _PQ_MAX_ID = _PQ_MOD * (_PQ_K - 1)
 _PQ_SHORTLIST = 50  # ADC candidates per query before exact re-rank
 
 
-def _l2_sql(a: str, b: str) -> str:
-    return (
-        f"list_aggregate(list_transform(list_zip({a}, {b}), "
-        f"p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * "
-        f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))), 'sum')"
-    )
-
-
-def _pq_sql() -> str:
+def _pq_codes_sql() -> str:
+    """CTEs ending in ``codes(vec_id, m, j)`` — every vector's codeword id
+    per subspace — and ``qtab(q_id, m, j, d)`` — each query's M×K
+    distance table."""
     l2_code = _l2_sql("sv.v", "cw.w")
-    return f"""
-WITH ss AS (SELECT unnest(range({_PQ_M})) AS m),
+    return f"""ss AS (SELECT unnest(range({_PQ_M})) AS m),
 cw AS (
   SELECT ss.m, e.vec_id AS j,
          list_slice(e.embedding, ss.m * {_PQ_D} + 1,
@@ -1755,10 +1710,16 @@ qtab AS (
   SELECT sv.vec_id AS q_id, cw.m, cw.j, {l2_code} AS d
   FROM subv sv JOIN cw ON cw.m = sv.m
   WHERE sv.vec_id < {_NQ}
-),
-adc AS (
+)"""
+
+
+def _adc_topk_sql(pairs: str) -> str:
+    """``_adc_topk`` in SQL: the tail after ``_pq_codes_sql``'s CTEs.
+    ``pairs`` is the FROM clause that joins the candidates' ``codes c`` to
+    their queries' ``qtab qt`` on (m, j)."""
+    return f"""adc AS (
   SELECT qt.q_id, c.vec_id AS n_id, round(sum(qt.d), 6) AS adc
-  FROM codes c JOIN qtab qt ON qt.m = c.m AND qt.j = c.j
+  FROM {pairs}
   WHERE c.vec_id <> qt.q_id
   GROUP BY qt.q_id, c.vec_id
 ),
@@ -1784,6 +1745,12 @@ SELECT q_id, n_id, l2 FROM (
   FROM rerank
 ) WHERE rn <= {_TOPK}
 """
+
+
+def _pq_sql() -> str:
+    return f"""
+WITH {_pq_codes_sql()},
+{_adc_topk_sql("codes c JOIN qtab qt ON qt.m = c.m AND qt.j = c.j")}"""
 
 
 def pq_udfs(spark, codebook_vecs, codebook_ids):
@@ -1829,6 +1796,51 @@ def pq_udfs(spark, codebook_vecs, codebook_ids):
     )
 
 
+def _pq_codebook(spark, e):
+    """(encode, dtable) over the deterministically "trained" codebook,
+    collected to the driver (8 KiB)."""
+    rows = (
+        e.filter(
+            (F.col("vec_id") % _PQ_MOD == 0)
+            & (F.col("vec_id") <= _PQ_MAX_ID)
+        )
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    return pq_udfs(
+        spark, [r["embedding"] for r in rows], [r["vec_id"] for r in rows]
+    )
+
+
+def _adc_topk(e, pairs: DataFrame) -> DataFrame:
+    """ADC → shortlist → exact re-rank → top-k (q_id, n_id, l2) over the
+    candidate ``pairs`` (q_id, n_id, dt, codes): stage 1 sums the query's
+    distance table at the candidate's codes, stage 2 re-ranks each
+    query's _PQ_SHORTLIST best with exact L2 over the raw vectors, which
+    it fetches by broadcast joins."""
+    adc = F.round(
+        F.expr(
+            f"aggregate(sequence(0, {_PQ_M - 1}), CAST(0 AS DOUBLE), "
+            f"(acc, m) -> acc + dt[m * {_PQ_K} + codes[m]])"
+        ),
+        6,
+    )
+    shortlist = _topk(
+        pairs.select("q_id", "n_id", adc.alias("adc")),
+        F.asc("adc"),
+        _PQ_SHORTLIST,
+    ).select("q_id", "n_id")
+    qe = e.select(F.col("vec_id").alias("q_id"),
+                  F.col("embedding").alias("qv"))
+    rer = (
+        _corpus(e).join(F.broadcast(shortlist), "n_id")
+        .join(F.broadcast(qe), "q_id")
+        .select("q_id", "n_id", F.round(_l2(F.col("qv"), F.col("nv")), 6)
+                .alias("l2"))
+    )
+    return _topk(rer, F.asc("l2"))
+
+
 @_q("ann_pq", _pq_sql())
 def ann_pq(spark, sf):
     """Product-quantization ANN (Jégou et al.'s ADC + exact re-rank, the
@@ -1852,69 +1864,14 @@ def ann_pq(spark, sf):
     `ann_ivf`'s probed lists (IVF-PQ) — composition, not a new
     operator."""
     e = load(spark, sf, "embeddings")
-    cb_rows = (
-        e.filter(
-            (F.col("vec_id") % _PQ_MOD == 0)
-            & (F.col("vec_id") <= _PQ_MAX_ID)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    encode, dtable = pq_udfs(
-        spark,
-        [r["embedding"] for r in cb_rows],
-        [r["vec_id"] for r in cb_rows],
-    )
+    encode, dtable = _pq_codebook(spark, e)
     codes = e.select(F.col("vec_id").alias("n_id"),
                      encode("embedding").alias("codes"))
     queries = e.filter(F.col("vec_id") < _NQ).select(
         F.col("vec_id").alias("q_id"), dtable("embedding").alias("dt")
     )
-    joined = codes.join(
-        F.broadcast(queries), F.col("n_id") != F.col("q_id")
-    )
-    adc = F.round(
-        F.expr(
-            f"aggregate(sequence(0, {_PQ_M - 1}), CAST(0 AS DOUBLE), "
-            f"(acc, m) -> acc + dt[m * {_PQ_K} + codes[m]])"
-        ),
-        6,
-    )
-    wk = W.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("n_id"))
-    shortlist = (
-        joined.select("q_id", "n_id", adc.alias("adc"))
-        .withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= _PQ_SHORTLIST)
-        .select("q_id", "n_id")
-    )
-
-    def l2(x, y):
-        return F.aggregate(
-            F.zip_with(
-                x,
-                y,
-                lambda a, b: (a.cast("double") - b.cast("double"))
-                * (a.cast("double") - b.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    qe = e.select(F.col("vec_id").alias("q_id"),
-                  F.col("embedding").alias("qv"))
-    ne = e.select(F.col("vec_id").alias("n_id"),
-                  F.col("embedding").alias("nv"))
-    rer = (
-        ne.join(F.broadcast(shortlist), "n_id")
-        .join(F.broadcast(qe), "q_id")
-        .select("q_id", "n_id", F.round(l2(F.col("qv"), F.col("nv")), 6)
-                .alias("l2"))
-    )
-    wk2 = W.partitionBy("q_id").orderBy(F.asc("l2"), F.asc("n_id"))
-    return (
-        rer.withColumn("rn", F.row_number().over(wk2))
-        .filter(F.col("rn") <= _TOPK)
-        .select("q_id", "n_id", "l2")
+    return _adc_topk(
+        e, codes.join(F.broadcast(queries), F.col("n_id") != F.col("q_id"))
     )
 
 
@@ -2435,24 +2392,44 @@ def embed_quantize(spark, sf):
 # ---------------------------------------------------------------------------
 
 
-def _ann_recall_sql() -> str:
-    # compose the two frozen query definitions — the oracle evaluates the
-    # SAME brute/ivf semantics the individual qkeys pin, then joins them
+def _recall_sql(truth: str, got: str) -> str:
+    """``_recall`` in SQL over two (q_id, n_id) queries."""
     return f"""
-WITH b AS ({REGISTRY["ann_brute"].sql}),
-v AS ({_ivf_sql()})
-SELECT b.q_id,
+WITH t AS ({truth}),
+g AS ({got})
+SELECT t.q_id,
        CAST(count(*) AS BIGINT) AS k,
-       CAST(sum(CASE WHEN v.n_id IS NOT NULL THEN 1 ELSE 0 END)
+       CAST(sum(CASE WHEN g.n_id IS NOT NULL THEN 1 ELSE 0 END)
             AS BIGINT) AS n_hits,
-       CAST(sum(CASE WHEN v.n_id IS NOT NULL THEN 1 ELSE 0 END)
+       CAST(sum(CASE WHEN g.n_id IS NOT NULL THEN 1 ELSE 0 END)
             * 1000 // count(*) AS BIGINT) AS recall_permille
-FROM b LEFT JOIN v ON v.q_id = b.q_id AND v.n_id = b.n_id
-GROUP BY b.q_id
+FROM t LEFT JOIN g ON g.q_id = t.q_id AND g.n_id = t.n_id
+GROUP BY t.q_id
 """
 
 
-@_q("ann_recall", _ann_recall_sql())
+def _recall(truth: DataFrame, got: DataFrame) -> DataFrame:
+    """Per-query recall of ``got`` against ``truth`` (both keyed q_id,
+    n_id): k, hits and the exact integer per-mille hits * 1000 DIV k."""
+    g = got.select(F.col("q_id").alias("gq"), F.col("n_id").alias("gn"))
+    j = truth.join(
+        g, (truth.q_id == F.col("gq")) & (truth.n_id == F.col("gn")),
+        "left_outer",
+    )
+    return j.groupBy("q_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+        F.sum(F.when(F.col("gn").isNotNull(), 1).otherwise(0))
+        .cast("bigint").alias("n_hits"),
+        F.expr(
+            "CAST(sum(CASE WHEN gn IS NOT NULL THEN 1 ELSE 0 END)"
+            " * 1000 DIV count(*) AS BIGINT)"
+        ).alias("recall_permille"),
+    )
+
+
+# compose the two frozen query definitions — the oracle evaluates the SAME
+# brute/ivf semantics the individual qkeys pin, then joins them
+@_q("ann_recall", _recall_sql(REGISTRY["ann_brute"].sql, _ivf_sql()))
 def ann_recall(spark, sf):
     """ANN evaluation harness: per-query recall of the IVF scale path
     (`ann_ivf`) against exact brute-force ground truth (`ann_brute`) —
@@ -2466,23 +2443,8 @@ def ann_recall(spark, sf):
     O(queries x k) id pairs, negligible at any corpus size.  The same
     composition evaluates any candidate generator against any ground
     truth without touching either plan."""
-    b = ann_brute(spark, sf).select("q_id", "n_id")
-    v = ann_ivf(spark, sf).select(
-        F.col("q_id").alias("vq"), F.col("n_id").alias("vn")
-    )
-    j = b.join(
-        v, (b.q_id == F.col("vq")) & (b.n_id == F.col("vn")), "left_outer"
-    )
-    hits = F.sum(
-        F.when(F.col("vn").isNotNull(), 1).otherwise(0)
-    ).cast("bigint")
-    return j.groupBy("q_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        hits.alias("n_hits"),
-        F.expr(
-            "CAST(sum(CASE WHEN vn IS NOT NULL THEN 1 ELSE 0 END)"
-            " * 1000 DIV count(*) AS BIGINT)"
-        ).alias("recall_permille"),
+    return _recall(
+        ann_brute(spark, sf).select("q_id", "n_id"), ann_ivf(spark, sf)
     )
 
 
@@ -2492,86 +2454,13 @@ def ann_recall(spark, sf):
 
 
 def _ivfpq_sql() -> str:
-    cos_ec = _cos_sql("e.embedding", "c.cv")
-    l2_code = _l2_sql("sv.v", "cw.w")
     return f"""
-WITH cents AS (
-  SELECT vec_id AS c_id, embedding AS cv FROM embeddings
-  WHERE vec_id % {_IVF_MOD} = 0
-),
-assign AS (
-  SELECT e.vec_id, c.c_id,
-         row_number() OVER (
-           PARTITION BY e.vec_id
-           ORDER BY round({cos_ec}, 6) DESC, c.c_id) AS rn
-  FROM embeddings e CROSS JOIN cents c
-),
-probes AS (
-  SELECT vec_id AS q_id, c_id FROM assign
-  WHERE vec_id < {_NQ} AND rn <= {_NPROBE}
-),
-lists AS (
-  SELECT vec_id AS n_id, c_id FROM assign WHERE rn = 1
-),
-ss AS (SELECT unnest(range({_PQ_M})) AS m),
-cw AS (
-  SELECT ss.m, e.vec_id AS j,
-         list_slice(e.embedding, ss.m * {_PQ_D} + 1,
-                    ss.m * {_PQ_D} + {_PQ_D}) AS w
-  FROM embeddings e, ss
-  WHERE e.vec_id % {_PQ_MOD} = 0 AND e.vec_id <= {_PQ_MAX_ID}
-),
-subv AS (
-  SELECT e.vec_id, ss.m,
-         list_slice(e.embedding, ss.m * {_PQ_D} + 1,
-                    ss.m * {_PQ_D} + {_PQ_D}) AS v
-  FROM embeddings e, ss
-),
-codes AS (
-  SELECT vec_id, m, j FROM (
-    SELECT sv.vec_id, sv.m, cw.j,
-           row_number() OVER (
-             PARTITION BY sv.vec_id, sv.m
-             ORDER BY round({l2_code}, 6) ASC, cw.j ASC) AS rn
-    FROM subv sv JOIN cw ON cw.m = sv.m
-  ) WHERE rn = 1
-),
-qtab AS (
-  SELECT sv.vec_id AS q_id, cw.m, cw.j, {l2_code} AS d
-  FROM subv sv JOIN cw ON cw.m = sv.m
-  WHERE sv.vec_id < {_NQ}
-),
-adc AS (
-  SELECT qt.q_id, c.vec_id AS n_id, round(sum(qt.d), 6) AS adc
-  FROM codes c
+WITH {_ivf_lists_sql()},
+{_pq_codes_sql()},
+{_adc_topk_sql('''codes c
   JOIN lists l ON l.n_id = c.vec_id
   JOIN probes p ON p.c_id = l.c_id
-  JOIN qtab qt ON qt.q_id = p.q_id AND qt.m = c.m AND qt.j = c.j
-  WHERE c.vec_id <> qt.q_id
-  GROUP BY qt.q_id, c.vec_id
-),
-shortlist AS (
-  SELECT q_id, n_id FROM (
-    SELECT q_id, n_id,
-           row_number() OVER (
-             PARTITION BY q_id ORDER BY adc ASC, n_id ASC) AS rn
-    FROM adc
-  ) WHERE rn <= {_PQ_SHORTLIST}
-),
-rerank AS (
-  SELECT s.q_id, s.n_id,
-         round({_l2_sql("qe.embedding", "ne.embedding")}, 6) AS l2
-  FROM shortlist s
-  JOIN embeddings qe ON qe.vec_id = s.q_id
-  JOIN embeddings ne ON ne.vec_id = s.n_id
-)
-SELECT q_id, n_id, l2 FROM (
-  SELECT q_id, n_id, l2,
-         row_number() OVER (
-           PARTITION BY q_id ORDER BY l2 ASC, n_id ASC) AS rn
-  FROM rerank
-) WHERE rn <= {_TOPK}
-"""
+  JOIN qtab qt ON qt.q_id = p.q_id AND qt.m = c.m AND qt.j = c.j''')}"""
 
 
 @_q("ann_ivfpq", _ivfpq_sql())
@@ -2591,26 +2480,8 @@ def ann_ivfpq(spark, sf):
     coded corpus never shuffles for scoring; raw vectors are touched for
     only |queries| × shortlist rows via broadcast joins."""
     e = load(spark, sf, "embeddings")
-    cent_rows = (
-        e.filter(F.col("vec_id") % _IVF_MOD == 0)
-        .select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("cv"))
-        .collect()
-    )
-    assign_udf, _probe_arr = ivf_quantizer_udfs(
-        spark, [r["cv"] for r in cent_rows], [r["c_id"] for r in cent_rows]
-    )
-    cb_rows = (
-        e.filter(
-            (F.col("vec_id") % _PQ_MOD == 0) & (F.col("vec_id") <= _PQ_MAX_ID)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    encode, dtable = pq_udfs(
-        spark,
-        [r["embedding"] for r in cb_rows],
-        [r["vec_id"] for r in cb_rows],
-    )
+    assign_udf, probe_udf = _ivf_quantizer(spark, e)
+    encode, dtable = _pq_codebook(spark, e)
     coded = e.select(
         F.col("vec_id").alias("n_id"),
         assign_udf(F.col("embedding")).alias("c_id"),
@@ -2619,60 +2490,20 @@ def ann_ivfpq(spark, sf):
     qprobe = e.filter(F.col("vec_id") < _NQ).select(
         F.col("vec_id").alias("q_id"),
         dtable(F.col("embedding")).alias("dt"),
-        F.explode(_probe_arr(F.col("embedding"))).alias("c_id"),
+        F.explode(probe_udf(F.col("embedding"))).alias("c_id"),
     )
-    joined = coded.join(F.broadcast(qprobe), "c_id").filter(
-        F.col("n_id") != F.col("q_id")
-    )
-    adc = F.round(
-        F.expr(
-            f"aggregate(sequence(0, {_PQ_M - 1}), CAST(0 AS DOUBLE), "
-            f"(acc, m) -> acc + dt[m * {_PQ_K} + codes[m]])"
+    return _adc_topk(
+        e,
+        coded.join(F.broadcast(qprobe), "c_id").filter(
+            F.col("n_id") != F.col("q_id")
         ),
-        6,
-    )
-    wk = W.partitionBy("q_id").orderBy(F.asc("adc"), F.asc("n_id"))
-    shortlist = (
-        joined.select("q_id", "n_id", adc.alias("adc"))
-        .withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= _PQ_SHORTLIST)
-        .select("q_id", "n_id")
-    )
-
-    def l2(x, y):
-        return F.aggregate(
-            F.zip_with(
-                x,
-                y,
-                lambda a, b: (a.cast("double") - b.cast("double"))
-                * (a.cast("double") - b.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    qe = e.select(F.col("vec_id").alias("q_id"),
-                  F.col("embedding").alias("qv"))
-    ne = e.select(F.col("vec_id").alias("n_id"),
-                  F.col("embedding").alias("nv"))
-    rer = (
-        ne.join(F.broadcast(shortlist), "n_id")
-        .join(F.broadcast(qe), "q_id")
-        .select("q_id", "n_id", F.round(l2(F.col("qv"), F.col("nv")), 6)
-                .alias("l2"))
-    )
-    wk2 = W.partitionBy("q_id").orderBy(F.asc("l2"), F.asc("n_id"))
-    return (
-        rer.withColumn("rn", F.row_number().over(wk2))
-        .filter(F.col("rn") <= _TOPK)
-        .select("q_id", "n_id", "l2")
     )
 
 
-def _ann_recall_pq_sql() -> str:
+def _l2_truth_sql() -> str:
+    """Exact squared-L2 top-k (q_id, n_id) over the whole corpus."""
     l2_qn = _l2_sql("q.embedding", "n.embedding")
     return f"""
-WITH t AS (
   SELECT q_id, n_id FROM (
     SELECT q.vec_id AS q_id, n.vec_id AS n_id,
            row_number() OVER (
@@ -2680,21 +2511,10 @@ WITH t AS (
              ORDER BY round({l2_qn}, 6) ASC, n.vec_id ASC) AS rn
     FROM embeddings q CROSS JOIN embeddings n
     WHERE q.vec_id < {_NQ} AND n.vec_id <> q.vec_id
-  ) WHERE rn <= {_TOPK}
-),
-g AS ({_ivfpq_sql()})
-SELECT t.q_id,
-       CAST(count(*) AS BIGINT) AS k,
-       CAST(sum(CASE WHEN g.n_id IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hits,
-       CAST(sum(CASE WHEN g.n_id IS NOT NULL THEN 1 ELSE 0 END)
-            * 1000 // count(*) AS BIGINT) AS recall_permille
-FROM t LEFT JOIN g ON g.q_id = t.q_id AND g.n_id = t.n_id
-GROUP BY t.q_id
-"""
+  ) WHERE rn <= {_TOPK}"""
 
 
-@_q("ann_recall_pq", _ann_recall_pq_sql())
+@_q("ann_recall_pq", _recall_sql(_l2_truth_sql(), _ivfpq_sql()))
 def ann_recall_pq(spark, sf):
     """Recall@k of the COMPOSED IVF-PQ path (`ann_ivfpq`) against exact
     L2 brute-force ground truth — the tuning number for the two knobs
@@ -2705,51 +2525,14 @@ def ann_recall_pq(spark, sf):
     L2 + per-query window); the comparison join carries O(queries × k)
     id pairs — evaluation cost is one corpus scan regardless of index
     shape."""
-
-    def l2(x, y):
-        return F.aggregate(
-            F.zip_with(
-                x,
-                y,
-                lambda a, b: (a.cast("double") - b.cast("double"))
-                * (a.cast("double") - b.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     e = load(spark, sf, "embeddings")
-    q = e.filter(F.col("vec_id") < _NQ).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv")
-    )
-    n = e.select(F.col("vec_id").alias("n_id"),
-                 F.col("embedding").alias("nv"))
-    wk = W.partitionBy("q_id").orderBy(
-        F.asc(F.round(l2(F.col("qv"), F.col("nv")), 6)), F.asc("n_id")
-    )
-    truth = (
-        n.join(F.broadcast(q), F.col("n_id") != F.col("q_id"))
-        .withColumn("rn", F.row_number().over(wk))
-        .filter(F.col("rn") <= _TOPK)
-        .select("q_id", "n_id")
-    )
-    got = ann_ivfpq(spark, sf).select(
-        F.col("q_id").alias("gq"), F.col("n_id").alias("gn")
-    )
-    j = truth.join(
-        got,
-        (truth.q_id == F.col("gq")) & (truth.n_id == F.col("gn")),
-        "left_outer",
-    )
-    return j.groupBy("q_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum(F.when(F.col("gn").isNotNull(), 1).otherwise(0))
-        .cast("bigint").alias("n_hits"),
-        F.expr(
-            "CAST(sum(CASE WHEN gn IS NOT NULL THEN 1 ELSE 0 END)"
-            " * 1000 DIV count(*) AS BIGINT)"
-        ).alias("recall_permille"),
-    )
+    truth = _topk(
+        _corpus(e).join(
+            F.broadcast(_queries(e)), F.col("n_id") != F.col("q_id")
+        ),
+        F.asc(F.round(_l2(F.col("qv"), F.col("nv")), 6)),
+    ).select("q_id", "n_id")
+    return _recall(truth, ann_ivfpq(spark, sf))
 
 
 def _dedup_latest_sql() -> str:

@@ -159,16 +159,50 @@ def test_a_stale_freeze_fails_its_oracles_not_the_import(monkeypatch):
 
     from caraspark import oracle_freeze
 
+    # A freeze WIDER than its table (a column since dropped) must fail
+    # too: DuckDB would keep the extra value as an unnamed column and put
+    # the values after a dropped middle column under the wrong names.
     stale = dict(oracle_freeze.SIDE_ROWS)
     del stale["ANNOTS"]
     stale["FONTS"] = [r[:-1] for r in stale["FONTS"]]
-    assert stale["FONTS"]
+    stale["XMP"] = [(*r[:2], "dropped", *r[2:]) for r in stale["XMP"]]
+    assert stale["FONTS"] and stale["XMP"]
     monkeypatch.setattr(oracle_freeze, "SIDE_ROWS", stale)
     con = duckdb.connect()
-    for table in ("ANNOTS", "FONTS"):
+    for table in ("ANNOTS", "FONTS", "XMP"):
         cte = oracle_freeze.frozen_cte("t", table)
-        with pytest.raises(duckdb.Error):
+        with pytest.raises(duckdb.Error, match=table):
             con.execute(f"WITH {cte} SELECT * FROM t")
     cte = oracle_freeze.frozen_cte("t", "PAGES")
     rows = con.execute(f"WITH {cte} SELECT * FROM t").fetchall()
     assert len(rows) == len(stale["PAGES"])
+
+
+@pytest.mark.parametrize("stream, batch", [
+    ("stream_sitemap", "sitemap_entries"),
+    ("stream_feed", "feed_entries"),
+    ("stream_validators", "crawl_validators"),
+    ("stream_quality", "quality_logit"),
+    ("stream_datacard", "corpus_datacard"),
+])
+def test_stream_twin_oracle_aggregates_its_batch_twin(stream, batch):
+    # A stream twin builds its input with its batch twin's builder, so its
+    # oracle is an aggregate over the batch oracle, not a second copy of
+    # the synthesis that could drift from it.
+    merged = ent._merged()
+    assert merged[batch].sql in merged[stream].sql
+
+
+def test_check_oracle_rejects_an_unknown_key():
+    # A mistyped key must not read as "0 pass, 0 fail" and exit 0; it is
+    # refused before any JVM starts.
+    import subprocess
+
+    r = subprocess.run(
+        [sys.executable, os.path.join(HERE, "tools", "check_oracle.py"),
+         os.path.join(HERE, "no_such_sf"), "ann_brute", "ann_bruet"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 2, r
+    assert "ann_bruet" in r.stderr and "ann_brute" not in r.stderr
+    assert "log4j" not in r.stderr and "pass" not in r.stdout

@@ -4,6 +4,8 @@ Runs every ``queries()`` entry on Spark and, when an ``oracle_sql()`` entry
 exists, the same-named SQL on DuckDB over the same parquet tables.
 
 Usage:  python tools/check_oracle.py [sf_dir] [qkey ...]
+
+A qkey name that is not registered exits 2 before Spark starts.
 """
 
 from __future__ import annotations
@@ -23,13 +25,18 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as ent
+
+    qs = ent.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown qkey(s): {' '.join(unknown)}", file=sys.stderr)
+        return 2
+    oracles = ent.oracle_sql()
+
     from caraspark.session import get_spark
 
     spark = get_spark("check_oracle")
     con = duck_connection(sf_dir)
-
-    qs = ent.queries()
-    oracles = ent.oracle_sql()
     n_pass = n_fail = n_rows_only = 0
     for name, fn in qs.items():
         if only and name not in only:
